@@ -1,112 +1,153 @@
-"""Deterministic lifecycle for session-memoized checkpoint relations
-(VERDICT r13 items 1-2, guide §5).
+"""The session artifact store: every heavy intermediate the board reuses
+across registered keys lives here, under one key and one lifecycle.
 
-The r13 memo discipline (doc_shingles, MinHash signatures, the graph
-backbone family) eagerly ``localCheckpoint``s a shared relation once
-per (applicationId, sf_dir) so identical subplans stop being recomputed
-across registered keys. What it lacked was a RELEASE path: the
-checkpoint blocks were pinned for the whole session with no eviction,
-which at 100 TB is a memory/disk-spill hazard (the shingle relation is
-larger than the corpus) and, on a second sf_dir in the same session,
-doubled the pinned footprint.
+Entries are keyed ``(applicationId, sf_dir, name)`` and created by
+``get(spark, name, sf_dir, build)``, which returns the stored value or
+runs ``build()`` once. Three kinds of value share the call:
 
-This module gives every memo cache the same two lifecycle rules:
+- checkpointed / persisted relations (doc shingles, MinHash signatures,
+  trade edges, capped pair stats, the k-NN backbone);
+- catalog-table artifacts (the PQ indexes), whose builds claim their
+  tables with ``table`` and their directories with ``temp_dir``;
+- plain driver values (the fixed-k Lloyd centroid lists).
 
-- **LRU-of-one sf_dir**: inserting a new key evicts-and-unpersists any
-  other key in the same cache (a bench's 10x scaling block, or a test
-  session sweeping fixtures, never pins two corpora at once).
-- **Deterministic release**: ``release(cache, key)`` / ``release_all()``
-  unpersist the checkpoint's storage blocks NOW, not when the JVM's
-  ContextCleaner happens to collect the RDD. bench.py calls
-  ``release_all`` after the timed loop + regression gate; plancheck's
-  ``reset_plan_state`` routes through it as well.
+Lifecycle rules, the same for every entry:
 
-Mechanics: ``DataFrame.localCheckpoint`` persists an *internal* RDD
-that the returned DataFrame does not expose, so ``put`` snapshots
-``sc.getPersistentRDDs()`` around the build and records the RDD handles
-that appeared — those are exactly the blocks the checkpoint pinned
-(memo builds are driver-sequential here, like every query path). On a
-real cluster the same relations would be reliable checkpoints (HDFS) or
-written tables — ``localCheckpoint`` is lost with an executor, which is
-acceptable for a single-node bench but a recompute-impossible job
-failure at scale; see OPTIMIZATION_r14.md for the production posture.
+- **LRU-of-one sf_dir per name**: building ``name`` for a new sf_dir
+  first releases every other entry of that name, so a 10x scaling block
+  or a test sweeping fixtures never pins two corpora at once.
+- **Deterministic release**: ``release_all()`` frees every entry NOW —
+  unpersists its storage blocks, drops its catalog tables and removes
+  its directories. bench.py calls it after the timed loop,
+  ``plancheck.reset_plan_state`` before every plan render.
+- **No partial artifacts**: if ``build`` raises, the blocks, tables and
+  directories it had created are removed before the error propagates.
+
+Mechanics: ``DataFrame.localCheckpoint`` persists an *internal* RDD the
+returned DataFrame does not expose, so ``get`` snapshots
+``sc.getPersistentRDDs()`` around ``build`` and records the RDDs that
+appeared and no other entry owns — builds may nest (the signatures
+build reads the shingle memo), and each block belongs to the innermost
+entry that created it. Builds are driver-sequential, like every query
+path. On a real cluster the relations would be reliable checkpoints or
+written tables — ``localCheckpoint`` is lost with an executor; see
+OPTIMIZATION_r14.md for the production posture.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+import shutil
+import tempfile
+from dataclasses import dataclass, field
+from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-# (id(cache), key) -> list of JavaRDD handles persisted by that entry.
-_RDD_HANDLES: dict[tuple[int, object], list] = {}
-
-# Every cache dict that ever went through put(), so release_all() and
-# plancheck.reset_plan_state can sweep without each module registering
-# itself by hand.
-_KNOWN_CACHES: list[dict] = []
+V = TypeVar("V")
 
 
-def _persistent_rdds(spark):
-    """The JVM's id -> JavaRDD map of currently persisted RDDs."""
-    return spark.sparkContext._jsc.getPersistentRDDs()
+@dataclass
+class _Entry:
+    spark: SparkSession
+    value: object = None
+    rdds: dict = field(default_factory=dict)  # RDD id -> JavaRDD handle
+    tables: list = field(default_factory=list)
+    dirs: list = field(default_factory=list)
 
 
-def put(
-    spark,
-    cache: dict,
-    key: object,
-    build: Callable[[], DataFrame],
-) -> DataFrame:
-    """Build + insert a memoized relation with lifecycle tracking.
-
-    Evicts (and unpersists) every OTHER key in ``cache`` first — the
-    LRU-of-one rule — then runs ``build()`` (which is expected to end
-    in an eager ``localCheckpoint``) and records the persisted-RDD
-    handles that appeared during the build so ``release`` can free
-    them deterministically."""
-    for old in [k for k in list(cache) if k != key]:
-        release(cache, old)
-    if not any(c is cache for c in _KNOWN_CACHES):
-        _KNOWN_CACHES.append(cache)
-    jmap = _persistent_rdds(spark)
-    before = {int(i) for i in jmap.keySet().toArray()}
-    df = build()
-    jmap = _persistent_rdds(spark)
-    handles = [
-        jmap.get(i)
-        for i in jmap.keySet().toArray()
-        if int(i) not in before
-    ]
-    _RDD_HANDLES[(id(cache), key)] = [h for h in handles if h is not None]
-    cache[key] = df
-    return df
+_ENTRIES: dict[tuple[str, str, str], _Entry] = {}
+# Entries whose build is running, innermost last: ``table``/``temp_dir``
+# attach what they create to the top one.
+_BUILDING: list[_Entry] = []
 
 
-def release(cache: dict, key: object) -> None:
-    """Drop one memo entry and unpersist its storage blocks now.
+def _persistent_rdds(spark) -> dict:
+    """id -> JavaRDD of every RDD the JVM currently holds persisted."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(i): jmap.get(i) for i in jmap.keySet().toArray()}
 
-    Covers both memo styles: ``localCheckpoint`` entries free their
-    tracked internal-RDD handles; ``persist()`` entries (whose cache
-    lives in the CacheManager, invisible to the RDD snapshot) free via
-    ``DataFrame.unpersist`` — a no-op on the other style, so both are
-    always attempted."""
-    df = cache.get(key)
-    if isinstance(df, DataFrame):
+
+def get(spark, name: str, sf_dir: str, build: Callable[[], V]) -> V:
+    """The session's ``name`` artifact for ``sf_dir``, built on first use.
+
+    On a miss, releases the other ``name`` entries (LRU-of-one), runs
+    ``build()`` and records the persisted RDDs, catalog tables and
+    directories it created, so ``release_all`` can free them."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    hit = _ENTRIES.get(key)
+    if hit is not None:
+        return hit.value
+    for old in [k for k in _ENTRIES if k[2] == name]:
+        _free(_ENTRIES.pop(old))
+    entry = _Entry(spark)
+    before = set(_persistent_rdds(spark))
+    _BUILDING.append(entry)
+    try:
+        entry.value = build()
+    except BaseException:
+        entry.rdds = _new_rdds(spark, before)
+        _free(entry)
+        raise
+    finally:
+        _BUILDING.pop()
+    entry.rdds = _new_rdds(spark, before)
+    _ENTRIES[key] = entry
+    return entry.value
+
+
+def _new_rdds(spark, before: set[int]) -> dict:
+    """Persisted RDDs that appeared since ``before`` and that no stored
+    entry owns (a nested build's blocks stay with that build's entry)."""
+    owned = {i for e in _ENTRIES.values() for i in e.rdds}
+    return {
+        i: h
+        for i, h in _persistent_rdds(spark).items()
+        if i not in before and i not in owned and h is not None
+    }
+
+
+def table(name: str) -> str:
+    """Claim catalog table ``name`` for the entry being built: any stale
+    table of that name is dropped now, and the table on release."""
+    entry = _BUILDING[-1]
+    entry.spark.sql(f"DROP TABLE IF EXISTS {name}")
+    entry.tables.append(name)
+    return name
+
+
+def temp_dir(prefix: str) -> str:
+    """A fresh directory owned by the entry being built, removed with it."""
+    entry = _BUILDING[-1]
+    path = tempfile.mkdtemp(prefix=prefix)
+    entry.dirs.append(path)
+    return path
+
+
+def _free(entry: _Entry) -> None:
+    """Unpersist, drop and remove everything ``entry`` holds. Covers both
+    relation styles: ``persist()`` entries (cached in the CacheManager,
+    invisible to the RDD snapshot) free via ``DataFrame.unpersist``;
+    ``localCheckpoint`` entries via their tracked RDD handles."""
+    if isinstance(entry.value, DataFrame):
         try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — ctx gone / already cleaned
+            entry.value.unpersist()
+        except Exception:  # noqa: BLE001 — context gone / already cleaned
             pass
-    for h in _RDD_HANDLES.pop((id(cache), key), []):
+    for h in entry.rdds.values():
         try:
             h.unpersist(False)
-        except Exception:  # noqa: BLE001 — already cleaned / ctx gone
+        except Exception:  # noqa: BLE001 — context gone / already cleaned
             pass
-    cache.pop(key, None)
+    for name in entry.tables:
+        try:
+            entry.spark.sql(f"DROP TABLE IF EXISTS {name}")
+        except Exception:  # noqa: BLE001 — context gone
+            pass
+    for path in entry.dirs:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def release_all() -> None:
-    """Release every tracked memo entry in every known cache."""
-    for cache in _KNOWN_CACHES:
-        for key in list(cache):
-            release(cache, key)
+    """Release every entry in the store."""
+    while _ENTRIES:
+        _free(_ENTRIES.pop(next(iter(_ENTRIES))))

@@ -68,9 +68,6 @@ _SQL_AGREE = " + ".join(
 )
 
 
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _det_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, s0..s15): md5-permutation MinHash signatures — one
     shuffle on doc_id, map-side partial min. Engine-portable: min over
@@ -80,19 +77,11 @@ def _det_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 md5 evaluations per shingle instead of 16 (see _SQL_SIG note) —
     measured 3.2s -> 0.9s for the signature stage at sf0.1.
 
-    r13: the relation is eagerly materialized and memoized per
-    (application, sf_dir) alongside the doc_shingles checkpoint it is
-    built from — five registered keys consume this identical relation
-    and each paid the 4-md5-per-shingle aggregation again. 16×8 hex
-    chars per doc, so the pinned footprint is ~n_docs·150 B. r14
-    (ADVICE r13 item 4): the legacy ``sh`` parameter — accepted but
-    silently ignored since the r13 memoization — is removed, so a
-    caller with a filtered/derived shingle relation fails loudly
-    instead of silently getting full-corpus signatures back."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SIG_CACHE.get(key)
-    if hit is not None:
-        return hit
+    The relation is eagerly materialized and memoized per (application,
+    sf_dir) in khose_spark.memo, next to the doc_shingles checkpoint it
+    is built from: five registered keys consume it, and it is always
+    the FULL corpus's signatures. 16×8 hex chars per doc, so the pinned
+    footprint is ~n_docs·150 B."""
 
     def build() -> DataFrame:
         base = doc_shingles(spark, sf_dir)
@@ -109,11 +98,7 @@ def _det_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ).localCheckpoint()
 
-    # r14 (VERDICT items 1-2): lifecycle-tracked insert — see memo.py.
-    # doc_shingles is built first (outside the snapshot) when cold, so
-    # its blocks are tracked under ITS cache entry, not this one.
-    doc_shingles(spark, sf_dir)
-    return memo.put(spark, _SIG_CACHE, key, build)
+    return memo.get(spark, "minhash_signatures", sf_dir, build)
 
 
 def _band_candidates(sig: DataFrame) -> DataFrame:

@@ -379,10 +379,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-
-_TRADE_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (custkey, suppkey) trade edges from lineitem ⋈ orders —
     the shared bipartite edge list for the co-occurrence and
@@ -392,10 +388,6 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (application, sf_dir) so the two consumers running in
     one session share ONE cached relation instead of each persisting
     its own copy (ADVICE round 4)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TRADE_EDGES_CACHE.get(key)
-    if hit is not None:
-        return hit
 
     def build() -> DataFrame:
         li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -412,14 +404,11 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
 
-    # r14 (VERDICT item 1): lifecycle-tracked — see khose_spark/memo.py.
-    return memo.put(spark, _TRADE_EDGES_CACHE, key, build)
+    return memo.get(spark, "trade_edges", sf_dir, build)
 
 
 _COOC_DEG_CAP = 50
 _COOC_MIN_SHARED = 5
-
-_PAIR_STATS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,10 +417,10 @@ def _capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ONE capped customer-keyed pair self-join that
     q_graph_cooccurrence, q_graph_adamic_adar and the 3-NN backbone
     (via _knn_backbone, i.e. the whole LPA/k-core/clustering family)
-    each rebuilt identically per query (r14 optimization, guide §2.4:
-    two operations keyed the same way share one exchange — here three
+    would otherwise each rebuild identically per query (guide §2.4: two
+    operations keyed the same way share one exchange — here three
     operators share one pair explosion). Eagerly checkpointed and
-    memoized per (application, sf_dir), the _trade_edges discipline.
+    memoized per (application, sf_dir) in khose_spark.memo.
 
     Semantics per consumer are UNCHANGED (oracle-hash-certified):
     - n is exactly cooccurrence's n_shared / adamic_adar's n_common /
@@ -440,13 +429,6 @@ def _capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       per-pair float sum adamic_adar's own aggregation performed, with
       the same round(4) applied downstream by its consumer.
     deg >= 2 for any shared customer, so 1/ln(deg) is total."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PAIR_STATS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # Build _trade_edges first (outside the snapshot) when cold, so its
-    # blocks are tracked under ITS cache entry, not this one.
-    _trade_edges(spark, sf_dir)
 
     def build() -> DataFrame:
         edges = _trade_edges(spark, sf_dir)
@@ -482,8 +464,7 @@ def _capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    # r14 (VERDICT item 1): lifecycle-tracked — see khose_spark/memo.py.
-    return memo.put(spark, _PAIR_STATS_CACHE, key, build)
+    return memo.get(spark, "capped_pair_stats", sf_dir, build)
 
 
 @query(
@@ -524,9 +505,8 @@ def q_graph_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation; the distinct edge list is one shuffle, the pair count
     one more on (s_a, s_b), and the top-20 is TakeOrdered with
     deterministic (count desc, pair asc) ordering — no global sort."""
-    # r14: the capped pair count is the shared _capped_pair_stats memo
-    # — one pair self-join per session for cooccurrence + adamic_adar +
-    # the 3-NN backbone family, instead of one per query (guide §2.4).
+    # One pair self-join per session for cooccurrence + adamic_adar +
+    # the 3-NN backbone family: the shared _capped_pair_stats memo.
     pairs = _capped_pair_stats(spark, sf_dir).select(
         "s_a", "s_b", F.col("n").alias("n_shared")
     ).filter(F.col("n_shared") >= _COOC_MIN_SHARED)
@@ -884,8 +864,6 @@ _BACKBONE_CTES = f"""
       SELECT nbr AS node, node AS nbr FROM knn
     )"""
 
-_BACKBONE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def _knn_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized 3-NN co-occurrence backbone (node, nbr), eagerly
@@ -893,17 +871,8 @@ def _knn_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
     LPA / k-core / clustering / assortativity family so the expensive
     per-customer pair join runs once per session. Eager localCheckpoint,
     not lazy persist: the pair aggregation would otherwise re-execute
-    per consuming plan branch (measured 15.4s -> 6.0s for LPA alone)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BACKBONE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # r14: the capped pair-count relation is the shared, already-
-    # checkpointed _capped_pair_stats memo (one pair self-join per
-    # session across cooccurrence / adamic_adar / this backbone).
-    # Built first (outside the snapshot) so its blocks are tracked
-    # under ITS cache entry, not this one.
-    _capped_pair_stats(spark, sf_dir)
+    per consuming plan branch (measured 15.4s -> 6.0s for LPA alone).
+    The pair counts come from the shared _capped_pair_stats memo."""
 
     def build() -> DataFrame:
         pairs = _capped_pair_stats(spark, sf_dir).select(
@@ -934,8 +903,7 @@ def _knn_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    # r14 (VERDICT item 1): lifecycle-tracked — see khose_spark/memo.py.
-    return memo.put(spark, _BACKBONE_CACHE, key, build)
+    return memo.get(spark, "knn_backbone", sf_dir, build)
 
 
 def _lpa_oracle() -> str:

@@ -87,29 +87,21 @@ def shingle_array(words, k: int = 3):
     return F.when(n >= k, joined).otherwise(F.array().cast("array<string>"))
 
 
-_DOC_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical (doc_id, shingle) relation over the FULL documents
     table (k=3 over text), eagerly materialized and memoized per
-    (application, sf_dir) — the graph._BACKBONE_CACHE discipline (r13
-    optimization, guide §2.4): ~10 registered keys (Jaccard/containment
-    families, MinHash signatures, SimHash, contamination, bloom
-    prefilter) each re-ran the identical split+slice+explode subplan;
+    (application, sf_dir) in the khose_spark.memo store (guide §2.4):
+    ~10 registered keys (Jaccard/containment families, MinHash
+    signatures, SimHash, contamination, bloom prefilter) each re-ran the identical split+slice+explode subplan;
     one session now materializes it once and every later consumer
     starts from the checkpointed relation. Not a result cache: the
     relation is computed from the parquet input inside the first
     consumer's timed region, per process. ~40 bytes/shingle — low GBs
     at the 100× board, far below recomputation cost."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DOC_SHINGLE_CACHE.get(key)
-    if hit is not None:
-        return hit
 
     def build() -> DataFrame:
         base = t(spark, sf_dir, "documents")
-        # r14 (VERDICT item 5): the BUILD input is repartitioned to the
+        # The BUILD input is repartitioned to the
         # session's parallelism when the scan yields fewer splits than
         # cores (the sf0.1 documents table is one row-group, so the
         # explode otherwise runs single-threaded: 0.98 s measured vs
@@ -121,9 +113,7 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             base = base.repartition(par)
         return shingles(base).localCheckpoint()
 
-    # r14 (VERDICT items 1-2): lifecycle-tracked insert — LRU-of-one
-    # sf_dir, deterministic unpersist via khose_spark.memo.release_all.
-    return memo.put(spark, _DOC_SHINGLE_CACHE, key, build)
+    return memo.get(spark, "doc_shingles", sf_dir, build)
 
 
 @query(

@@ -21,7 +21,7 @@ in ``llm.py``:
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark import memo
 from khose_spark.operators.llm import _COSINE_ORACLE_CTE
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -63,6 +64,10 @@ def q_llm_cosine_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     )
+    if not qrows:  # no query vectors: nothing to rank
+        return spark.createDataFrame(
+            [], "qid long, neighbor_id long, sim double, rank int"
+        )
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     qmat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
     qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
@@ -681,67 +686,82 @@ def q_llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This single-job form re-encodes the corpus inline; the production
     two-job lifecycle (build once, search many) is
-    :func:`build_pq_index` + ``q_llm_ann_pq_indexed``."""
+    :func:`build_pq_index` over :func:`encode_pq_sampled` +
+    ``q_llm_ann_pq_indexed``."""
     sub = _pq_subvectors(t(spark, sf_dir, "embeddings"))
     cb = _pq_codebook(sub)
     return _pq_search(_pq_assign(sub, cb), _pq_lut(sub, cb))
 
 
 _PQ_BUCKETS = 8
-_PQ_INDEX_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
 
 
-def build_pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """INDEX-BUILD job of the two-job ANN lifecycle: encode the corpus
-    once and persist the search-time layout —
+def encode_pq_sampled(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(codes, codebook) of the sampled PQ contract — the encoder
+    :func:`build_pq_index` persists for the q_llm_ann_pq_* keys."""
+    sub = _pq_subvectors(t(spark, sf_dir, "embeddings"))
+    cb = _pq_codebook(sub)
+    return _pq_assign(sub, cb), cb
 
-    - ``codes``: (vec_id, sub_id, code), written as a parquet table
-      BUCKETED by vec_id (the aggregation key of every future search),
-      so the search job's (qid, vec_id) ADC aggregation needs no
-      exchange: hash-distribution on vec_id already clusters it.
-    - ``codebook``: the 8×(n/50) centroid slices, a broadcast-sized dim.
+
+def build_pq_index(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    encode: Callable[[SparkSession, str], tuple[DataFrame, DataFrame]],
+    partition_by: str | None = None,
+) -> tuple[str, str]:
+    """INDEX-BUILD job of the two-job ANN lifecycle: run ``encode(spark,
+    sf_dir) -> (codes, codebook)`` once and persist the search-time
+    layout —
+
+    - ``codes``: (vec_id, sub_id, code[, partition_by]), written as a
+      parquet table BUCKETED by vec_id (the aggregation key of every
+      future search), so the search job's (qid, vec_id) ADC aggregation
+      needs no exchange: hash-distribution on vec_id already clusters
+      it. ``partition_by`` (the IVF cell id) adds a directory level per
+      value, so a broadcast probe set prunes the scan to its cells.
+    - ``codebook``: the centroid slices, a broadcast-sized dim.
 
     This is the real 100 TB pattern: the O(corpus) encode cost is paid
     once, at write time; every query-batch job afterwards reads ONLY
     the 8-byte codes + the codebook — never the raw vectors. Returns
-    (codes_table, codebook_table) catalog names, memoized per
-    (application, sf_dir) so repeated searches in one session reuse
-    the same index."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQ_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    codes_tbl, cb_tbl = f"pq_codes_{tag}", f"pq_codebook_{tag}"
-    # EXTERNAL tables in a fresh process-scoped location: the session
-    # catalog is in-memory but a managed table's warehouse directory is
-    # not, so a second process would die with LOCATION_ALREADY_EXISTS
-    # on the leftover dir. A tempdir per build sidesteps the collision
-    # (and keeps test/bench runs from accreting into the repo
-    # warehouse); in production the location is the index's permanent
-    # object-store prefix and the catalog is shared, so overwrite
-    # semantics apply instead.
-    import tempfile
+    (codes_table, codebook_table) catalog names, a khose_spark.memo
+    entry per (application, sf_dir, name): repeated searches in one
+    session reuse the index, and ``memo.release_all`` drops its tables
+    and removes its files.
 
-    loc = tempfile.mkdtemp(prefix=f"khose_pq_{tag}_")
-    sub = _pq_subvectors(t(spark, sf_dir, "embeddings"))
-    cb = _pq_codebook(sub)
-    spark.sql(f"DROP TABLE IF EXISTS {codes_tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {cb_tbl}")
-    (
-        _pq_assign(sub, cb)
-        .write.format("parquet")
-        .bucketBy(_PQ_BUCKETS, "vec_id")
-        .option("path", f"{loc}/codes")
-        .saveAsTable(codes_tbl)
-    )
-    (
-        cb.write.format("parquet")
-        .option("path", f"{loc}/codebook")
-        .saveAsTable(cb_tbl)
-    )
-    _PQ_INDEX_CACHE[key] = (codes_tbl, cb_tbl)
-    return codes_tbl, cb_tbl
+    The tables are EXTERNAL, in a fresh directory the memo entry owns:
+    the session catalog is in-memory but a managed table's warehouse
+    directory is not, so a second process would die with
+    LOCATION_ALREADY_EXISTS on a leftover dir. In production the
+    location is the index's permanent object-store prefix and the
+    catalog is shared, so overwrite semantics apply instead."""
+
+    def build() -> tuple[str, str]:
+        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        loc = memo.temp_dir(f"khose_{name}_{tag}_")
+        codes_tbl = memo.table(f"{name}_codes_{tag}")
+        cb_tbl = memo.table(f"{name}_codebook_{tag}")
+        codes, cb = encode(spark, sf_dir)
+        writer = codes.write.format("parquet")
+        if partition_by is not None:
+            writer = writer.partitionBy(partition_by)
+        (
+            writer.bucketBy(_PQ_BUCKETS, "vec_id")
+            .option("path", f"{loc}/codes")
+            .saveAsTable(codes_tbl)
+        )
+        (
+            cb.write.format("parquet")
+            .option("path", f"{loc}/codebook")
+            .saveAsTable(cb_tbl)
+        )
+        return codes_tbl, cb_tbl
+
+    return memo.get(spark, name, sf_dir, build)
 
 
 @query("q_llm_ann_pq_indexed", oracle=_PQ_ORACLE)
@@ -757,7 +777,7 @@ def q_llm_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the (qid, vec_id) aggregation — zero shuffle before the final
     10-row per-query ranking window. At 100 TB the search job's only
     data motion is the broadcast of the per-query LUT."""
-    codes_tbl, cb_tbl = build_pq_index(spark, sf_dir)
+    codes_tbl, cb_tbl = build_pq_index(spark, sf_dir, "pq", encode_pq_sampled)
     codes = spark.table(codes_tbl)
     cb = spark.table(cb_tbl)
     qsub = _pq_subvectors(
@@ -826,14 +846,26 @@ def q_llm_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled, and only R rows per query ever leave it. At 100 TB the
     refinement step touches R x |queries| vectors total; everything
     else moves 8-byte codes."""
-    codes_tbl, cb_tbl = build_pq_index(spark, sf_dir)
-    codes = spark.table(codes_tbl)
-    cb = spark.table(cb_tbl)
+    codes_tbl, cb_tbl = build_pq_index(spark, sf_dir, "pq", encode_pq_sampled)
     e = t(spark, sf_dir, "embeddings")
+    return _exact_rerank(_rerank_pool(spark, codes_tbl, cb_tbl, e), e)
+
+
+def _rerank_pool(
+    spark: SparkSession, codes_tbl: str, cb_tbl: str, e: DataFrame
+) -> DataFrame:
+    """(qid, cand_id): each query's top-R ADC candidates off a PQ index."""
     qsub = _pq_subvectors(e.filter(F.col("vec_id") < 10))
-    cand = _pq_search(codes, _pq_lut(qsub, cb), k=_PQ_RERANK_R).select(
+    lut = _pq_lut(qsub, spark.table(cb_tbl))
+    return _pq_search(spark.table(codes_tbl), lut, k=_PQ_RERANK_R).select(
         "qid", F.col("neighbor_id").alias("cand_id")
     )
+
+
+def _exact_rerank(cand: DataFrame, e: DataFrame) -> DataFrame:
+    """Top-3 of each query's (qid, cand_id) pool by EXACT full-precision
+    L2² (zip_with fold, round-4, id tiebreak): the pool broadcasts
+    against the embeddings scan, so only R rows per query leave it."""
     dbl = F.transform("embedding", lambda x: x.cast("double"))
     base = e.select("vec_id", dbl.alias("v"))
     qv = base.filter(F.col("vec_id") < 10).select(

@@ -34,27 +34,27 @@ Keys:
 
 from __future__ import annotations
 
-import hashlib
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark import memo
 from khose_spark.operators.similarity import (
     _KM_ITERS,
-    _PQ_BUCKETS,
     _PQ_ORACLE,
     _PQ_RERANK_ORACLE,
     _PQ_RERANK_R,
     _SEMDEDUP_THRESH,
+    _exact_rerank,
     _km_oracle,
     _l2sq,
     _lloyd,
     _pq_lut,
     _pq_search,
     _pq_subvectors,
+    _rerank_pool,
     _silhouette_oracle,
     _srp_planes,
+    build_pq_index,
 )
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -449,50 +449,23 @@ def q_llm_ann_pq_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
     sub = _pq_subvectors(e)
     cb = _pq_fixed_codebook(sub)
-    # r13: corpus encode via the Arrow kernel (one pass, no exploded
-    # grid window); the 10-query LUT stays on the expression path.
+    # Corpus encode via the Arrow kernel (one pass); the 10-query LUT
+    # stays on the expression path.
     return _pq_search(
         _pq_fixed_codes_vec(e, _collect_pq_cb(cb)), _pq_lut(sub, cb)
     )
 
 
-_PQF_INDEX_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
-def build_pq_index_fixedk(
+def encode_pq_fixedk(
     spark: SparkSession, sf_dir: str
-) -> tuple[str, str]:
-    """INDEX-BUILD job for the fixed-k PQ lifecycle — same two-table
-    layout as similarity.build_pq_index (codes bucketed by vec_id so
-    the search job's ADC aggregation needs no exchange; codebook is a
-    broadcast dim), but encoding against the constant 64-code codebook,
-    which is what makes the BUILD job linear at any corpus size."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQF_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    codes_tbl, cb_tbl = f"pqf_codes_{tag}", f"pqf_codebook_{tag}"
-    loc = tempfile.mkdtemp(prefix=f"khose_pqf_{tag}_")
+) -> tuple[DataFrame, DataFrame]:
+    """(codes, codebook) against the constant 64-code codebook — the
+    encoder :func:`similarity.build_pq_index` persists as the "pqf"
+    index, which is what makes the BUILD job linear at any corpus
+    size."""
     e = t(spark, sf_dir, "embeddings")
-    sub = _pq_subvectors(e)
-    cb = _pq_fixed_codebook(sub)
-    spark.sql(f"DROP TABLE IF EXISTS {codes_tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {cb_tbl}")
-    (
-        _pq_fixed_codes_vec(e, _collect_pq_cb(cb))
-        .write.format("parquet")
-        .bucketBy(_PQ_BUCKETS, "vec_id")
-        .option("path", f"{loc}/codes")
-        .saveAsTable(codes_tbl)
-    )
-    (
-        cb.write.format("parquet")
-        .option("path", f"{loc}/codebook")
-        .saveAsTable(cb_tbl)
-    )
-    _PQF_INDEX_CACHE[key] = (codes_tbl, cb_tbl)
-    return codes_tbl, cb_tbl
+    cb = _pq_fixed_codebook(_pq_subvectors(e))
+    return _pq_fixed_codes_vec(e, _collect_pq_cb(cb)), cb
 
 
 @query("q_llm_ann_pq_indexed_fixedk", oracle=_PQ_ORACLE_FIXEDK)
@@ -502,13 +475,13 @@ def q_llm_ann_pq_indexed_fixedk(
     """SEARCH job of the fixed-k PQ lifecycle (same answer as
     q_llm_ann_pq_fixedk — the shared oracle certifies the split
     changes nothing): read the bucketed codes + 64-entry codebook
-    written by :func:`build_pq_index_fixedk`, slice only the query
+    written by the "pqf" index build, slice only the query
     vectors, broadcast-LUT ADC top-3. The codes scan carries its
     bucket distribution through the broadcast LUT join into the
     (qid, vec_id) aggregation — zero shuffle before the final ranking
     window, exactly like the sampled twin
     (tests/test_bucketing.py posture)."""
-    codes_tbl, cb_tbl = build_pq_index_fixedk(spark, sf_dir)
+    codes_tbl, cb_tbl = build_pq_index(spark, sf_dir, "pqf", encode_pq_fixedk)
     codes = spark.table(codes_tbl)
     cb = spark.table(cb_tbl)
     qsub = _pq_subvectors(
@@ -534,56 +507,14 @@ def q_llm_ann_pq_rerank_fixedk(
     Plan: zero-shuffle ADC over bucketed codes, then the R×|queries|
     candidate pool broadcasts against the embeddings scan — the corpus
     is read, never shuffled."""
-    codes_tbl, cb_tbl = build_pq_index_fixedk(spark, sf_dir)
-    codes = spark.table(codes_tbl)
-    cb = spark.table(cb_tbl)
+    codes_tbl, cb_tbl = build_pq_index(spark, sf_dir, "pqf", encode_pq_fixedk)
     e = t(spark, sf_dir, "embeddings")
-    qsub = _pq_subvectors(e.filter(F.col("vec_id") < 10))
-    cand = _pq_search(codes, _pq_lut(qsub, cb), k=_PQ_RERANK_R).select(
-        "qid", F.col("neighbor_id").alias("cand_id")
-    )
-    base = _dbl_base(e)
-    qv = base.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_vec"), F.col("v").alias("qv")
-    )
-    pool = cand.join(F.broadcast(qv), F.col("qid") == F.col("q_vec"))
-    exact_dist = F.round(
-        F.aggregate(
-            F.zip_with("qv", "v", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        4,
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.asc("exact_dist"), F.asc("neighbor_id")
-    )
-    return (
-        base.join(F.broadcast(pool), F.col("vec_id") == F.col("cand_id"))
-        .select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            exact_dist.alias("exact_dist"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .orderBy("qid", "rank")
-    )
+    return _exact_rerank(_rerank_pool(spark, codes_tbl, cb_tbl, e), e)
 
 
 # ---------------------------------------------------------------------------
 # k-means + silhouette from the fixed seeds
 # ---------------------------------------------------------------------------
-
-
-# (applicationId, sf_dir) -> (cents_assign, cents_final): the two k=64
-# centroid LISTS that reproduce the Lloyd outcome — cents_assign is the
-# codebook the FINAL assignment pass used (after _KM_ITERS-1
-# re-averages), cents_final the re-average of that assignment. ~64 KB
-# of driver-side floats per entry, so unlike the corpus-sized
-# checkpoint memos there is no §5 footprint to lifecycle; cleared by
-# plancheck.reset_plan_state like every cross-query memo.
-_FIXED_LLOYD_CACHE: dict[tuple[str, str], tuple[list, list]] = {}
 
 
 def _fixed_lloyd(spark: SparkSession, sf_dir: str):
@@ -597,55 +528,49 @@ def _fixed_lloyd(spark: SparkSession, sf_dir: str):
     count, no interpreted fold. Shares the determinism contract of
     similarity._lloyd verbatim; the sampled twins stay on _lloyd.
 
-    r14 (VERDICT item 3): two structural fixes, zero arithmetic change —
+    Two structural choices, zero arithmetic change —
     - the FINAL iteration's assignment is persisted before its
-      re-average is collected, so the consumer's follow-up pass (kmeans
-      member stats, the silhouette kernel) reads the cached assignment
-      instead of re-running the iteration-3 kernel over the corpus
-      (4 corpus passes -> 3 for the first consumer);
-    - the converged centroid lists (k=64, ~64 KB) are memoized per
-      (applicationId, sf_dir), so the SECOND consumer in a session
-      (q_ml_silhouette_fixedk after q_llm_kmeans_fixedk) rebuilds its
+      re-average is collected, so the building consumer's follow-up
+      pass (kmeans member stats, the silhouette kernel) reads the
+      cached assignment instead of re-running the iteration-3 kernel
+      over the corpus; the consumer unpersists it;
+    - the memo entry is the two k=64 centroid LISTS (~64 KB of driver
+      floats): the codebook the FINAL assignment pass used and its
+      re-average. The SECOND consumer in a session rebuilds its
       assignment with ONE deterministic kernel pass instead of
-      re-running all three Lloyd iterations (4 passes -> 1).
+      re-running all three Lloyd iterations.
     Assignment is a pure function of the codebook (round(6) argmin,
     first-min cid tiebreak), so the rebuilt relation is bit-identical
     to the one the building consumer saw — oracle hashes certify."""
     from khose_spark.operators.similarity import _KM_DIM
 
     e = t(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _FIXED_LLOYD_CACHE.get(key)
-    if hit is not None:
-        cents_assign, cents_final = hit
-        assign = _assign_min_l2_vec(e, cents_assign)
-        cent = spark.createDataFrame(
-            [(c, cv) for c, cv in cents_final],
-            "cid bigint, cv array<double>",
-        )
-        return assign, cent
+    built = []
 
-    cents = _collect_cents(fixed_seeds(_dbl_base(e)))
-    assign = None
-    for it in range(_KM_ITERS):
-        assign = _assign_min_l2_vec(e, cents)
-        if it == _KM_ITERS - 1:
-            # The consumer's next job over `assign` hits the cache the
-            # re-average collect below just materialized.
-            assign = assign.persist()
-            cents_assign = cents
-        cent_df = assign.groupBy("cid").agg(
-            F.array(
-                *[
-                    F.round(F.avg(F.element_at("v", i)), 6)
-                    for i in range(1, _KM_DIM + 1)
-                ]
-            ).alias("cv")
-        )
-        cents = _collect_cents(cent_df)
-    _FIXED_LLOYD_CACHE[key] = (cents_assign, cents)
-    cent = assign.sparkSession.createDataFrame(
-        [(c, cv) for c, cv in cents], "cid bigint, cv array<double>"
+    def build() -> tuple[list, list]:
+        cents = _collect_cents(fixed_seeds(_dbl_base(e)))
+        for it in range(_KM_ITERS):
+            assign = _assign_min_l2_vec(e, cents)
+            if it == _KM_ITERS - 1:
+                # The consumer's next job over `assign` hits the cache
+                # the re-average collect below just materialized.
+                built.append(assign.persist())
+                cents_assign = cents
+            cent_df = assign.groupBy("cid").agg(
+                F.array(
+                    *[
+                        F.round(F.avg(F.element_at("v", i)), 6)
+                        for i in range(1, _KM_DIM + 1)
+                    ]
+                ).alias("cv")
+            )
+            cents = _collect_cents(cent_df)
+        return cents_assign, cents
+
+    cents_assign, cents_final = memo.get(spark, "fixed_lloyd", sf_dir, build)
+    assign = built[0] if built else _assign_min_l2_vec(e, cents_assign)
+    cent = spark.createDataFrame(
+        [(c, cv) for c, cv in cents_final], "cid bigint, cv array<double>"
     )
     return assign, cent
 
@@ -667,9 +592,9 @@ def q_llm_kmeans_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign, cent = _fixed_lloyd(spark, sf_dir)
     assign = assign.persist()
     cent = cent.persist()
-    # r13: the member→centroid distance runs through the Arrow l2
-    # kernel (√ of the dim-sequential fold, unrounded — the round(4)
-    # stays on the avg, exactly as before).
+    # The member→centroid distance runs through the Arrow l2 kernel
+    # (√ of the dim-sequential fold, unrounded — the round(4) is on
+    # the avg).
     dist = pair_metric(
         assign.join(F.broadcast(cent), "cid").select("cid", "v", "cv"),
         ["cid"],
@@ -745,12 +670,11 @@ def q_ml_silhouette_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
         fn,
         {"v": 64},
     )
-    # r14: materialize the 64-row rollup eagerly (localCheckpoint below
-    # the final sort), then unpersist the Lloyd assignment cache that
+    # Materialize the 64-row rollup eagerly (localCheckpoint below the
+    # final sort), then unpersist the Lloyd assignment cache that
     # _fixed_lloyd pinned on a cold build — a no-op when this key runs
     # on the memo-hit single-pass path. Same release discipline as
-    # q_llm_kmeans_fixedk; rows/ordering unchanged (the orderBy stays
-    # on top of the checkpoint).
+    # q_llm_kmeans_fixedk.
     out = (
         sil.groupBy("cid")
         .agg(
@@ -1168,23 +1092,34 @@ def q_llm_ann_pq_rerank_scaled(
     the embeddings scan, and the 10 query vectors broadcast separately,
     so the corpus is read once and never shuffled and the broadcast
     stays O(|pool|) ids even at 100×."""
-    codes_tbl, cb_tbl = build_pq_index_fixedk(spark, sf_dir)
-    codes = spark.table(codes_tbl)
-    cb = spark.table(cb_tbl)
+    codes_tbl, cb_tbl = build_pq_index(spark, sf_dir, "pqf", encode_pq_fixedk)
     e = t(spark, sf_dir, "embeddings")
     qsub = _pq_subvectors(e.filter(F.col("vec_id") < 10))
-    lut = _pq_lut(qsub, cb)
-    base = _dbl_base(e)
+    lut = _pq_lut(qsub, spark.table(cb_tbl))
+    adc = (
+        spark.table(codes_tbl)
+        .join(F.broadcast(lut), ["sub_id", "code"])
+        .filter(F.col("vec_id") != F.col("qid"))
+        .groupBy("qid", "vec_id")
+        .agg(F.round(F.sum("pdist"), 4).alias("approx_dist"))
+    )
+    return _scaled_rerank(adc, _dbl_base(e))
+
+
+def _scaled_rerank(adc: DataFrame, base: DataFrame) -> DataFrame:
+    """Top-3 by exact L2² over the CORPUS-SCALED pool: cut each query's
+    (qid, vec_id, approx_dist) ADC list at R = ceil(2n/25) (round-4 ADC,
+    id tiebreak — n counted over the full corpus ``base``), then score
+    the pool through the Arrow l2sq kernel (same (x−y)² term order as
+    the zip_with fold, half-up round(4)). The (qid, cand_id) pool — ids
+    only, never vectors — and the 10 query vectors broadcast against
+    the corpus scan, so the corpus is read once and never shuffled."""
+    from khose_spark.vecexec import pair_metric
+
     r_pool = base.agg(
         F.floor((2 * F.count(F.lit(1)) + 24) / 25)
         .cast("long")
         .alias("r_pool")
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["sub_id", "code"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.round(F.sum("pdist"), 4).alias("approx_dist"))
     )
     w_pool = Window.partitionBy("qid").orderBy(
         F.asc("approx_dist"), F.asc("vec_id")
@@ -1198,11 +1133,6 @@ def q_llm_ann_pq_rerank_scaled(
     qv = base.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_vec"), F.col("v").alias("qv")
     )
-    # r13: the corpus-scaled pool (R = 2n/25 rows per query) reranks
-    # through the Arrow l2sq kernel instead of the interpreted zip_with
-    # fold — same (x−y)² term order, half-up round(4).
-    from khose_spark.vecexec import pair_metric
-
     scored = pair_metric(
         base.join(F.broadcast(cand), F.col("vec_id") == F.col("cand_id"))
         .join(F.broadcast(qv), F.col("qid") == F.col("q_vec"))
@@ -1295,15 +1225,14 @@ _PQ_PROBED_SCALED_ORACLE = _PQ_RERANK_ORACLE_SCALED.replace(
 ).replace(_ADC_FULL, _ADC_PROBED)
 
 
-_IVFPQ_INDEX_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
-def build_ivfpq_index_fixedk(
+def encode_ivfpq_fixedk(
     spark: SparkSession, sf_dir: str
-) -> tuple[str, str]:
-    """INDEX-BUILD job for the composed IVF+PQ lifecycle: the fixed-k
-    PQ codes of :func:`build_pq_index_fixedk`, now carrying each
-    vector's IVF cell id and laid out for CELL-ROUTED search —
+) -> tuple[DataFrame, DataFrame]:
+    """(codes, codebook) for the composed IVF+PQ lifecycle: the fixed-k
+    PQ codes of :func:`encode_pq_fixedk`, now carrying each vector's
+    IVF cell id. :func:`similarity.build_pq_index` persists them as the
+    "ivfpqf" index with ``partition_by="cid"``, laid out for
+    CELL-ROUTED search —
 
     - ``codes``: (cid, vec_id, sub_id, code) PARTITIONED BY cid (64
       directories) and BUCKETED by vec_id within each partition. The
@@ -1318,42 +1247,14 @@ def build_ivfpq_index_fixedk(
       dim).
 
     Cell assignment (cosine argmax over the 64 fixed seeds, round-6,
-    cid tiebreak) happens ONCE, at build time — the O(corpus) routing
-    cost is paid by the writer, and every search afterwards reads only
-    probed partitions' 8-byte codes."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVFPQ_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    codes_tbl, cb_tbl = f"ivfpqf_codes_{tag}", f"ivfpqf_cb_{tag}"
-    loc = tempfile.mkdtemp(prefix=f"khose_ivfpqf_{tag}_")
+    cid tiebreak) happens ONCE, at build time, in the same Arrow pass
+    that PQ-encodes the corpus — the O(corpus) routing cost is paid by
+    the writer, and every search afterwards reads only probed
+    partitions' 8-byte codes."""
     e = t(spark, sf_dir, "embeddings")
-    base = _dbl_base(e)
-    # r13: ONE fused Arrow pass PQ-encodes the corpus AND routes each
-    # vector to its IVF cell (cosine argmax over the 64 fixed seeds) —
-    # replacing the crossJoin fold + corpus row_number window + the
-    # codes⋈cellassign join with a single kernel scan.
-    cell_cents = _collect_cents(fixed_seeds(base))
-    sub = _pq_subvectors(e)
-    cb = _pq_fixed_codebook(sub)
-    codes = _pq_fixed_codes_vec(e, _collect_pq_cb(cb), cell_cents)
-    spark.sql(f"DROP TABLE IF EXISTS {codes_tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {cb_tbl}")
-    (
-        codes.write.format("parquet")
-        .partitionBy("cid")
-        .bucketBy(_PQ_BUCKETS, "vec_id")
-        .option("path", f"{loc}/codes")
-        .saveAsTable(codes_tbl)
-    )
-    (
-        cb.write.format("parquet")
-        .option("path", f"{loc}/codebook")
-        .saveAsTable(cb_tbl)
-    )
-    _IVFPQ_INDEX_CACHE[key] = (codes_tbl, cb_tbl)
-    return codes_tbl, cb_tbl
+    cell_cents = _collect_cents(fixed_seeds(_dbl_base(e)))
+    cb = _pq_fixed_codebook(_pq_subvectors(e))
+    return _pq_fixed_codes_vec(e, _collect_pq_cb(cb), cell_cents), cb
 
 
 @query("q_llm_ann_pq_probed_scaled", oracle=_PQ_PROBED_SCALED_ORACLE)
@@ -1370,7 +1271,7 @@ def q_llm_ann_pq_probed_scaled(
     permille at 10x).
 
     Pipeline (FAISS IVFPQ+R with nprobe=8, end to end):
-      1. BUILD (once, :func:`build_ivfpq_index_fixedk`): corpus
+      1. BUILD (once, :func:`encode_ivfpq_fixedk`): corpus
          encoded to 8-byte PQ codes + routed to its one nearest cell;
          codes land partitioned by cid, bucketed by vec_id.
       2. ROUTE: the query batch ranks the 64 broadcast seeds, keeps 8
@@ -1402,9 +1303,9 @@ def q_llm_ann_pq_probed_scaled(
     Scale: every stage is linear — 64 cosine evals/vector at build, 8
     LUT adds per probed code at search, |queries|*2n/25 exact evals at
     refine; the only corpus-sized shuffles are the build-time writes."""
-    codes_tbl, cb_tbl = build_ivfpq_index_fixedk(spark, sf_dir)
-    codes = spark.table(codes_tbl)
-    cb = spark.table(cb_tbl)
+    codes_tbl, cb_tbl = build_pq_index(
+        spark, sf_dir, "ivfpqf", encode_ivfpq_fixedk, partition_by="cid"
+    )
     e = t(spark, sf_dir, "embeddings")
     base = _dbl_base(e)
     cent = fixed_seeds(base)
@@ -1422,57 +1323,18 @@ def q_llm_ann_pq_probed_scaled(
         .select(F.col("vec_id").alias("qid"), "cid")
     )
     qsub = _pq_subvectors(e.filter(F.col("vec_id") < 10))
-    lut = _pq_lut(qsub, cb)
-    r_pool = base.agg(
-        F.floor((2 * F.count(F.lit(1)) + 24) / 25)
-        .cast("long")
-        .alias("r_pool")
-    )
+    lut = _pq_lut(qsub, spark.table(cb_tbl))
     # Probed ADC: the broadcast probe join on cid is the partition-
     # pruning filter; the LUT join then matches (qid, sub_id, code).
     adc = (
-        codes.join(F.broadcast(cellprobe), "cid")
+        spark.table(codes_tbl)
+        .join(F.broadcast(cellprobe), "cid")
         .join(F.broadcast(lut), ["qid", "sub_id", "code"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", "vec_id")
         .agg(F.round(F.sum("pdist"), 4).alias("approx_dist"))
     )
-    w_pool = Window.partitionBy("qid").orderBy(
-        F.asc("approx_dist"), F.asc("vec_id")
-    )
-    cand = (
-        adc.withColumn("rn", F.row_number().over(w_pool))
-        .crossJoin(F.broadcast(r_pool))
-        .filter(F.col("rn") <= F.col("r_pool"))
-        .select("qid", F.col("vec_id").alias("cand_id"))
-    )
-    qv = base.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_vec"), F.col("v").alias("qv")
-    )
-    # r13: the corpus-scaled pool (R = 2n/25 rows per query) reranks
-    # through the Arrow l2sq kernel instead of the interpreted zip_with
-    # fold — same (x−y)² term order, half-up round(4).
-    from khose_spark.vecexec import pair_metric
-
-    scored = pair_metric(
-        base.join(F.broadcast(cand), F.col("vec_id") == F.col("cand_id"))
-        .join(F.broadcast(qv), F.col("qid") == F.col("q_vec"))
-        .select("qid", F.col("vec_id").alias("neighbor_id"), "qv", "v"),
-        ["qid", "neighbor_id"],
-        "qv",
-        "v",
-        "l2sq",
-        4,
-        "exact_dist",
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.asc("exact_dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .orderBy("qid", "rank")
-    )
+    return _scaled_rerank(adc, base)
 
 
 # ---------------------------------------------------------------------------
@@ -1709,7 +1571,7 @@ def q_llm_ann_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus" sublinear-read claim turned into an oracle-checked
     relation the driver grades every round, instead of a docstring
     assertion. Cell occupancy is counted off the REAL persisted index
-    artifact (build_ivfpq_index_fixedk's cid-partitioned codes table),
+    artifact (the "ivfpqf" index's cid-partitioned codes table),
     so a routing or build regression that silently inflates the read
     set fails the hash, not just a bench number.
 
@@ -1721,7 +1583,9 @@ def q_llm_ann_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (memoized per dir); the audit itself is one 64-row occupancy agg
     off the codes scan + the 80-row broadcast probe relation joined
     and folded per query — nothing corpus-sized shuffles."""
-    codes_tbl, _cb_tbl = build_ivfpq_index_fixedk(spark, sf_dir)
+    codes_tbl, _cb_tbl = build_pq_index(
+        spark, sf_dir, "ivfpqf", encode_ivfpq_fixedk, partition_by="cid"
+    )
     codes = spark.table(codes_tbl)
     # The codes table holds 8 subvector rows per vector (PQ M=8);
     # occupancy counts VECTORS, so fold the sub_id=0 stripe only.

@@ -66,23 +66,16 @@ def _token(line: str) -> str | None:
 
 def reset_plan_state(spark) -> None:
     """Make the next plan render session-state-independent: drop every
-    SQL-cache entry AND the cross-query memo caches (trade edges, k-NN
-    backbone, PQ index). A memoized relation changes a consumer's plan
-    depending on whether some EARLIER query built it (fresh build
-    persists inside the plan → InMemoryRelation; a reused memo after
-    clearCache inlines the raw subtree), so both the lock generator and
-    the drift gate reset them before every key."""
+    SQL-cache entry and every session memo (khose_spark.memo). A
+    memoized relation changes a consumer's plan depending on whether
+    some EARLIER query built it (fresh build persists inside the plan →
+    InMemoryRelation; a reused memo after clearCache inlines the raw
+    subtree), so both the lock generator and the drift gate reset them
+    before every key."""
     from khose_spark import memo
-    from khose_spark.operators import similarity, similarity_fixedk
 
     spark.catalog.clearCache()
-    # r14: the checkpoint memos (trade edges, capped pair stats, k-NN
-    # backbone, doc shingles, MinHash signatures) route through
-    # khose_spark.memo, which also UNPERSISTS their storage blocks —
-    # repeated lock generation no longer accretes pinned checkpoints.
     memo.release_all()
-    similarity._PQ_INDEX_CACHE.clear()
-    similarity_fixedk._FIXED_LLOYD_CACHE.clear()
 
 
 def skeleton_tokens(plan: str) -> list[str]:

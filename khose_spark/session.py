@@ -9,8 +9,10 @@ did not create (the driver passes its own session into ``queries()``).
 from __future__ import annotations
 
 import os
+import sys
 import warnings
 
+from pyspark import cloudpickle
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs applied to every session (ours or the driver's).
@@ -60,7 +62,13 @@ def prep_session(spark: SparkSession) -> SparkSession:
     After applying, read the determinism-critical keys back and warn
     loudly if the effective value diverges (e.g. a driver-provided
     session that locks its timezone) — parity failures are otherwise
-    undiagnosable."""
+    undiagnosable.
+
+    Also ships ``khose_spark`` functions to Python workers BY VALUE:
+    the package may be importable on the driver only (its directory on
+    ``sys.path`` but not on the workers' ``PYTHONPATH``), and a kernel
+    pickled by reference would fail there with ModuleNotFoundError."""
+    cloudpickle.register_pickle_by_value(sys.modules["khose_spark"])
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)

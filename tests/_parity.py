@@ -144,6 +144,7 @@ def run_query_cache_checked(key, fn, spark, sf_dir):
     )
     assert after <= MAX_SESSION_CACHE_ENTRIES, (
         f"after {key}: {after} session-wide SQL-cache entries exceed the "
-        f"sanctioned {MAX_SESSION_CACHE_ENTRIES} (the _trade_edges memo)"
+        f"sanctioned {MAX_SESSION_CACHE_ENTRIES} (one persisted _trade_edges "
+        "memo per fixture dir, see khose_spark/memo.py)"
     )
     return df

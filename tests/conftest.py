@@ -18,8 +18,12 @@ SF_DIR = os.environ.get("KHOSE_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
+    from khose_spark import memo
+
     spark = get_spark("khose-tests")
     yield spark
+    # Drop the session memos' tables and index directories with the session.
+    memo.release_all()
 
 
 @pytest.fixture(scope="session")

@@ -90,8 +90,8 @@ def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed_tables):
     )
 
 def test_pq_index_search_is_shuffle_free(spark, sf_dir):
-    """The two-job ANN lifecycle (similarity.build_pq_index +
-    q_llm_ann_pq_indexed): the search job must aggregate ADC scores on
+    """The two-job ANN lifecycle (similarity.build_pq_index over
+    encode_pq_sampled + q_llm_ann_pq_indexed): the search job must aggregate ADC scores on
     (qid, vec_id) with ZERO shuffle — the codes table is bucketed by
     vec_id at index-build time, and hash-distribution on vec_id already
     clusters (qid, vec_id). The only allowed shuffle Exchange is the
@@ -113,9 +113,9 @@ def test_pq_index_search_is_shuffle_free(spark, sf_dir):
 
 
 def test_ivfpq_probed_search_is_pruned_and_shuffle_free(spark, sf_dir):
-    """The composed routed search (similarity_fixedk.
-    build_ivfpq_index_fixedk + q_llm_ann_pq_probed_scaled): the codes
-    table is PARTITIONED by cell id and BUCKETED by vec_id, so the
+    """The composed routed search (build_pq_index over
+    similarity_fixedk.encode_ivfpq_fixedk + q_llm_ann_pq_probed_scaled):
+    the codes table is PARTITIONED by cell id and BUCKETED by vec_id, so the
     search job must (a) prune unprobed cell directories via dynamic
     partition pruning — the FAISS inverted-list read pattern — and
     (b) aggregate ADC on (qid, vec_id) with zero shuffle, riding the

@@ -1,0 +1,80 @@
+"""The session artifact store (khose_spark.memo): releasing it leaves no
+index directory, catalog table or pinned block behind, and neither does
+a build that fails partway."""
+
+from __future__ import annotations
+
+import glob
+import os
+import tempfile
+
+import pytest
+from pyspark.sql import functions as F
+
+from khose_spark import memo
+from khose_spark.operators import dedup_audit, graph, similarity
+from khose_spark.operators import similarity_fixedk as fk
+
+_INDEX_PREFIXES = ("pq", "ivfpq")
+
+
+def _index_dirs() -> set[str]:
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "khose_*pq*")))
+
+
+def _index_tables(spark) -> set[str]:
+    return {
+        tb.name
+        for tb in spark.catalog.listTables()
+        if tb.name.startswith(_INDEX_PREFIXES)
+    }
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(memo._persistent_rdds(spark))
+
+
+def test_release_all_leaves_no_artifacts(spark, sf_dir):
+    memo.release_all()
+    dirs_before = _index_dirs()
+    build = similarity.build_pq_index
+    build(spark, sf_dir, "pq", similarity.encode_pq_sampled)
+    build(spark, sf_dir, "pqf", fk.encode_pq_fixedk)
+    build(
+        spark, sf_dir, "ivfpqf", fk.encode_ivfpq_fixedk, partition_by="cid"
+    )
+    dedup_audit._det_signatures(spark, sf_dir)
+    graph._knn_backbone(spark, sf_dir)
+    assign, _cent = fk._fixed_lloyd(spark, sf_dir)
+    assign.unpersist()  # the consumer's half of the Lloyd contract
+
+    assert len(_index_dirs() - dirs_before) == 3
+    assert len(_index_tables(spark)) == 6
+    pinned = {i for e in memo._ENTRIES.values() for i in e.rdds}
+    assert pinned, "checkpoint memos recorded no RDD blocks"
+
+    memo.release_all()
+    assert _index_dirs() - dirs_before == set()
+    assert _index_tables(spark) == set()
+    assert not pinned & _persisted_ids(spark)
+    assert not memo._ENTRIES
+
+
+def test_failed_build_leaves_nothing_behind(spark, sf_dir):
+    dirs_before = _index_dirs()
+    rdds_before = _persisted_ids(spark)
+
+    def encode(spark, sf_dir):
+        codes, cb = similarity.encode_pq_sampled(spark, sf_dir)
+        # The codes table and a checkpoint land before the codebook
+        # write fails.
+        boom = F.expr("raise_error('codebook write failed')")
+        return codes.localCheckpoint(), cb.withColumn("boom", boom)
+
+    with pytest.raises(Exception, match="codebook write failed"):
+        similarity.build_pq_index(spark, sf_dir, "pqboom", encode)
+
+    assert _index_dirs() - dirs_before == set()
+    assert not {tb for tb in _index_tables(spark) if "boom" in tb}
+    assert _persisted_ids(spark) <= rdds_before
+    assert not [k for k in memo._ENTRIES if k[2] == "pqboom"]

@@ -53,3 +53,27 @@ def test_no_complex_output_columns(key, spark, sf_dir):
         f"{key} emits complex-typed output columns the driver canon "
         f"cannot sort: {bad}"
     )
+
+
+def test_cosine_topk_blocked_without_query_vectors(spark, tmp_path):
+    """A corpus with no vec_id < 10 has no query vectors: the blocked
+    top-k returns no rows, like its oracle, instead of failing on an
+    empty query matrix."""
+    import duckdb
+
+    from khose_spark import scaling
+    from tests.conftest import SF_DIR
+
+    key = "q_llm_cosine_topk_blocked"
+    path = tmp_path / "embeddings.parquet"
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    scaling._scaled_copy(emb, "embeddings", 3).write.parquet(str(path))
+    spark_pdf = registry.QUERIES[key](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    oracle_pdf = con.sql(registry.ORACLES[key]).df()
+    con.close()
+    assert len(spark_pdf) == len(oracle_pdf) == 0
+    assert not compare(spark_pdf, oracle_pdf)

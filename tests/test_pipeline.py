@@ -103,9 +103,12 @@ def test_pq_index_build_is_memoized(spark, sf_dir):
     the second call returns the same catalog tables without rewriting."""
     import os
 
-    from khose_spark.operators.similarity import build_pq_index
+    from khose_spark.operators.similarity import (
+        build_pq_index,
+        encode_pq_sampled,
+    )
 
-    codes1, cb1 = build_pq_index(spark, sf_dir)
+    codes1, cb1 = build_pq_index(spark, sf_dir, "pq", encode_pq_sampled)
     loc1 = (
         spark.sql(f"DESCRIBE TABLE EXTENDED {codes1}")
         .filter("col_name = 'Location'")
@@ -116,7 +119,7 @@ def test_pq_index_build_is_memoized(spark, sf_dir):
         for r, _, fs in os.walk(loc1.replace("file:", ""))
         for f in fs
     )
-    codes2, cb2 = build_pq_index(spark, sf_dir)
+    codes2, cb2 = build_pq_index(spark, sf_dir, "pq", encode_pq_sampled)
     assert (codes1, cb1) == (codes2, cb2)
     mtime2 = max(
         os.path.getmtime(os.path.join(r, f))

@@ -69,3 +69,45 @@ def test_repair_fixes_timestamp_hashing(spark, sf_dir):
     # fixture events start 2024-01-01 00:xx UTC; a New-York session
     # would render 2023-12-31 19.
     assert row.d.startswith("2024-01-01"), row.d
+
+
+def test_workers_import_nothing_from_the_working_directory(sf_dir, tmp_path):
+    """Kernel keys run when the package is importable on the driver only:
+    a process whose working directory is not the repository, with the
+    repository on its own sys.path but not on PYTHONPATH, still runs an
+    Arrow-kernel key on its Python workers."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from khose_spark import memo, registry
+from khose_spark.session import get_spark
+registry.load_all()
+spark = get_spark("khose-workdir-test")
+try:
+    rows = registry.QUERIES["q_llm_kmeans_fixedk"](spark, {sf_dir!r}).collect()
+    print("ROWS", len(rows))
+finally:
+    memo.release_all()
+    spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        TMPDIR=str(tmp_path),
+        SPARK_GRAFT_CPUS="2",
+        KHOSE_DRIVER_MEMORY="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ROWS 64" in proc.stdout
