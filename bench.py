@@ -17,6 +17,7 @@ import os
 import sys
 import time
 from functools import partial
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -288,6 +289,7 @@ def run_ingest(spark, sf_dir: str) -> dict:
     }
 
 
+
 # Heavy-tail keys re-timed on the deterministic 10× materialization of
 # the bench fixture (khose_spark/scaling.py): the empirical scaling
 # proof behind the plan-shape arguments. Ordered cheapest-first so the
@@ -302,20 +304,20 @@ SCALING_KEYS = [
     "q_llm_containment",
     "q_llm_incremental_dedup",
     "q_llm_semdedup",
-    # Round-9 fixed-k / banded twins: the empirical near-linear ratios
-    # that justify retiring their sampled/all-candidate originals from
-    # the scale path (originals stay above as the superlinear controls).
+    # Fixed-k / banded twins: the empirical near-linear ratios that
+    # justify retiring their sampled/all-candidate originals from the
+    # scale path (originals stay above as the superlinear controls).
     "q_llm_ann_pq_indexed_fixedk",
-    # Round-10 probe-scaled search: the corpus-scaled rerank pool's
-    # time ratio rides next to its gated recall.
+    # Probe-scaled search: the corpus-scaled rerank pool's time ratio
+    # rides next to its gated recall.
     "q_llm_ann_pq_rerank_scaled",
-    # Round-11 composed routed search: ratio should track the probed
-    # corpus fraction (8/64 of codes + the scaled pool).
+    # Composed routed search: ratio should track the probed corpus
+    # fraction (8/64 of codes + the scaled pool).
     "q_llm_ann_pq_probed_scaled",
     "q_llm_semdedup_fixedk",
     "q_llm_neardup_jaccard_banded",
-    # Round-11: paragraph-granularity dedup — the new corpus-scale
-    # shuffle key; ratio should track the chunk-stream volume.
+    # Paragraph-granularity dedup: ratio should track the chunk-stream
+    # volume.
     "q_llm_paragraph_dedup",
     "q_graph_triangles",
     "q_graph_adamic_adar",
@@ -325,12 +327,11 @@ SCALING_KEYS = [
 SCALING_FACTOR = 10
 SCALING_BUDGET_SEC = 480.0
 
-# The fixture-truth twins DECLARED superlinear at 10× (VERDICT r13
-# item 8): each is kept in SCALING_KEYS deliberately, as the quadratic
-# control sitting next to its banded/fixed-k production sibling
-# (SURVEY §2.16; run_scaling docstring). Their ratios are real and
-# expected to exceed ~1.2× the factor; the production siblings carry
-# the linear contract the recall gates certify.
+# The fixture-truth twins DECLARED superlinear at 10×: each is kept in
+# SCALING_KEYS deliberately, as the quadratic control sitting next to
+# its banded/fixed-k production sibling (SURVEY §2.16). Their ratios
+# are real and expected to exceed ~1.2× the factor; the production
+# siblings carry the linear contract the recall gates certify.
 DECLARED_SUPERLINEAR = {
     # exact all-pairs Jaccard verifier (truth tier of the two-tier
     # pipeline; production sibling: q_llm_neardup_jaccard_banded)
@@ -346,6 +347,58 @@ DECLARED_SUPERLINEAR = {
     "q_llm_semdedup",
 }
 
+HARD_TWIN_NOISE = 0.33  # the hard clustered twin's isotropic noise:
+# the same manifold geometry as the 0.03 twin, tuned so the composed
+# probed+scaled search sits mid-band instead of saturating at 1000
+# permille (933 at registration; the transition is steep: 0.32 -> 967,
+# 0.35 -> 900, 0.45 -> 633). The fixture is md5-determined and the
+# engine deterministic, so any movement in its recall is an engine
+# change, not flake.
+
+# The routed/scaled searches: the only keys measured on the clustered
+# 10× twins, so those fixtures cost three searches, not the full ladder.
+ROUTED_KEYS = frozenset(
+    {
+        "q_llm_ann_ivf_probed",
+        "q_llm_ann_pq_rerank_scaled",
+        "q_llm_ann_pq_probed_scaled",
+    }
+)
+
+# ANN recall fixtures run_scaling measures: (payload label, source dir,
+# clustered-twin dir suffix, twin noise, key subset). The source is the
+# bench fixture ("sf") or one of its generated scale dirs ("x1",
+# "x10"). With a twin suffix, recall runs on a twin of the source whose
+# embeddings have real cluster structure; None runs the full ladder.
+#
+# Geometry: the fixture embeddings are random-ish, so pairwise distances
+# concentrate and ANY lossy quantizer (PQ ADC, IVF probe-1) has partial
+# top-3 agreement with exact search even at 1×, while the tiers whose
+# final ranking is exact hold. On the clustered twins "top-3 neighbors"
+# is quantizer-resolvable, so high recall there plus low recall on the
+# fixture is the fixture's distance concentration, not the plan.
+RECALL_FIXTURES = [
+    ("recall_1x", "x1", None, None, None),
+    ("recall_10x", "x10", None, None, None),
+    ("recall_clustered_1x", "sf", "_clustered", 0.03, None),
+    ("recall_clustered_10x", "x10", "_clustered_x10", 0.03, ROUTED_KEYS),
+    (
+        "recall_clustered_hard_10x",
+        "x10",
+        "_clustered_hard_x10",
+        HARD_TWIN_NOISE,
+        ROUTED_KEYS,
+    ),
+]
+
+
+def _scale_base(sf_dir: str) -> str:
+    """Path prefix of the scale dirs generated from ``sf_dir``, keyed by
+    the fixture name so a run at another SF never reuses a stale
+    materialization."""
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    return os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/khose_scale") + f"_{tag}"
+
 
 def run_scaling(spark, sf_dir: str) -> dict:
     """Time SCALING_KEYS at 1× and 10× volume and report the ratio.
@@ -355,18 +408,12 @@ def run_scaling(spark, sf_dir: str) -> dict:
     encoding, and cold per-dir memo state (the graph backbone / PQ
     index caches are keyed per dir) — the ratio then measures the
     query, not warm-cache asymmetry. Superlinear ratios (>~1.2×factor)
-    are the signal the plan gates can't see; q_llm_semdedup is the one
-    key documented to exceed it (fixed-k clustering contract: 10× the
-    corpus in the same k clusters makes the within-cluster pair scan
-    quadratic; production scales k with the corpus)."""
-    import shutil
+    are the signal the plan gates can't see; DECLARED_SUPERLINEAR names
+    the keys expected to exceed it. Then measures recall on every
+    RECALL_FIXTURES row."""
+    from khose_spark.scaling import ensure_clustered_dir, ensure_scale_dir
 
-    from khose_spark.scaling import ensure_scale_dir
-
-    # dest is keyed by the base fixture name so a bench run at another
-    # SF never reuses a stale materialization
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/khose_scale") + f"_{tag}"
+    base = _scale_base(sf_dir)
     t0 = time.perf_counter()
     one = ensure_scale_dir(spark, sf_dir, base + "_x1", factor=1)
     big = ensure_scale_dir(
@@ -397,126 +444,21 @@ def run_scaling(spark, sf_dir: str) -> dict:
     out = {"factor": SCALING_FACTOR, "setup_sec": round(setup_sec, 3), "keys": keys}
     if truncated:
         out["truncated"] = True  # budget hit; remaining keys dropped
-    try:
-        # Both scales, for an honest delta. Geometry note (measured r07):
-        # the fixture embeddings are random-ish, so pairwise distances
-        # concentrate — ANY lossy quantizer (PQ ADC, IVF probe-1) has
-        # near-zero/partial top-3 agreement with exact search even at 1×
-        # (PQ 0‰ @1× / 133‰ @10×, IVF 267‰ → 200‰), while the tiers
-        # whose FINAL ranking is exact hold (two-tier 1000‰ at both
-        # scales). The hash-checked oracles certify the index MECHANISM;
-        # recall on real (clustered) embeddings is a property of the
-        # data, not the plan.
-        for label, rdir in (("recall_1x", one), ("recall_10x", big)):
-            # Per-scale wrap (ADVICE r07): a failure on the 1× dir must
-            # be recorded under recall_1x, not mislabeled as the 10×'s.
-            try:
-                out[label] = run_ann_recall(spark, rdir)
-            except Exception as exc:  # noqa: BLE001 — evidence, not a gate
-                out[label] = {
-                    "error": f"{type(exc).__name__}: {exc}",
-                    "dir": rdir,
-                }
-        print(
-            f"# recall 1x: {out['recall_1x']} 10x: {out['recall_10x']}",
-            file=sys.stderr,
-        )
-        # The dispositive geometry experiment (VERDICT r07 item 4): the
-        # same IVF/PQ mechanisms measured on the CLUSTERED embedding
-        # twin, where "top-3 neighbors" is a quantizer-resolvable
-        # notion. High recall here + low recall on the random fixture
-        # = the fixture's distance concentration, not the plan.
+    sources = {"sf": sf_dir, "x1": one, "x10": big}
+    for label, source, twin, noise, only in RECALL_FIXTURES:
+        # Per-fixture wrap: a failure is recorded under its own label.
+        rdir = sources[source]
         try:
-            from khose_spark.scaling import ensure_clustered_dir
-
-            cdir = ensure_clustered_dir(
-                spark, sf_dir, base + "_clustered"
-            )
-            out["recall_clustered_1x"] = run_ann_recall(spark, cdir)
-            print(
-                f"# recall clustered: {out['recall_clustered_1x']}",
-                file=sys.stderr,
-            )
-            # Round 11 (VERDICT r10 item 1): the routed-production gate
-            # lives at CLUSTERED 10x — the composed probed+scaled key
-            # must be recall-strong where routing is resolvable AND at
-            # scale. Subset mode: only the three routed/scaled keys, so
-            # this fixture costs three searches, not the full ladder.
-        except Exception as exc:  # noqa: BLE001
-            out["recall_clustered_1x"] = {
-                "error": f"{type(exc).__name__}: {exc}"
-            }
-        try:
-            from khose_spark.scaling import ensure_clustered_dir
-
-            cdir10 = ensure_clustered_dir(
-                spark, big, base + "_clustered_x10"
-            )
-            out["recall_clustered_10x"] = run_ann_recall(
-                spark,
-                cdir10,
-                only={
-                    "q_llm_ann_ivf_probed",
-                    "q_llm_ann_pq_rerank_scaled",
-                    "q_llm_ann_pq_probed_scaled",
-                },
-            )
-            print(
-                f"# recall clustered 10x: {out['recall_clustered_10x']}",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            out["recall_clustered_10x"] = {
-                "error": f"{type(exc).__name__}: {exc}"
-            }
-        # Round 13 (VERDICT r12 item 6): the saturated 1000-permille
-        # clustered-10x gate has no drift signal, so the routed search
-        # is ALSO gated on a HARD clustered twin — same manifold
-        # geometry, isotropic noise raised 0.03 -> 0.33, tuned so the
-        # composed probed+scaled search sits mid-band (933 permille
-        # measured at registration; the transition is steep: 0.32 ->
-        # 967, 0.35 -> 900, 0.45 -> 633). The fixture is md5-determined
-        # and the engine deterministic, so any movement in this number
-        # is an engine change, not flake.
-        try:
-            from khose_spark.scaling import ensure_clustered_dir
-
-            cdir10h = ensure_clustered_dir(
-                spark,
-                big,
-                base + "_clustered_hard_x10",
-                noise=HARD_TWIN_NOISE,
-            )
-            out["recall_clustered_hard_10x"] = run_ann_recall(
-                spark,
-                cdir10h,
-                only={
-                    "q_llm_ann_ivf_probed",
-                    "q_llm_ann_pq_rerank_scaled",
-                    "q_llm_ann_pq_probed_scaled",
-                },
-            )
-            print(
-                "# recall clustered hard 10x: "
-                f"{out['recall_clustered_hard_10x']}",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            out["recall_clustered_hard_10x"] = {
-                "error": f"{type(exc).__name__}: {exc}"
-            }
-    except Exception as exc:  # noqa: BLE001 — recall is evidence, not a gate
-        out["recall_error"] = f"{type(exc).__name__}: {exc}"
-    if os.environ.get("SPARK_GRAFT_SCALE_KEEP", "1") != "1":
-        shutil.rmtree(base + "_x1", ignore_errors=True)
-        shutil.rmtree(base + f"_x{SCALING_FACTOR}", ignore_errors=True)
-        shutil.rmtree(base + "_clustered", ignore_errors=True)
-        shutil.rmtree(base + "_clustered_x10", ignore_errors=True)
-        shutil.rmtree(base + "_clustered_hard_x10", ignore_errors=True)
+            if twin:
+                rdir = ensure_clustered_dir(spark, rdir, base + twin, noise=noise)
+            out[label] = run_ann_recall(spark, rdir, only)
+        except Exception as exc:  # noqa: BLE001 — evidence; the gates read it
+            out[label] = {"error": f"{type(exc).__name__}: {exc}", "dir": rdir}
+        print(f"# {label}: {out[label]}", file=sys.stderr)
     return out
 
 
-def run_ann_recall(spark, big_dir: str, only: set | None = None) -> dict:
+def run_ann_recall(spark, big_dir: str, only: frozenset | None = None) -> dict:
     """ANN recall on the 10× corpus (VERDICT r06 item 6): the sf0.1
     recall figures were measured where neighbor geometry is the base
     fixture's; the decorrelated 10× corpus has different cell/bucket
@@ -643,11 +585,12 @@ def run_ann_recall(spark, big_dir: str, only: set | None = None) -> dict:
     return out
 
 
+
 def _bench_files_newest_first() -> list[str]:
     """BENCH_r*.json paths sorted by PARSED round number, newest first
-    (ADVICE r09 item 2: a reverse lexicographic sort of the raw name
-    breaks at round 100 — 'BENCH_r99' sorts after 'BENCH_r100' — which
-    would silently compare gates against stale rounds)."""
+    (a reverse lexicographic sort of the raw name breaks at round 100 —
+    'BENCH_r99' sorts after 'BENCH_r100' — which would silently compare
+    gates against stale rounds)."""
     import glob
     import re
 
@@ -664,44 +607,53 @@ def _bench_files_newest_first() -> list[str]:
     )
 
 
-def _prev_bench_queries(n: int = 2) -> list[tuple[str, dict[str, float]]]:
-    """Per-key timings from the newest ``n`` PARSEABLE BENCH_r*.json
-    records (compact lines carry every key above the noise floor;
-    '_'-prefixed entries are subtotals, not queries)."""
-    out: list[tuple[str, dict[str, float]]] = []
+def _bench_rounds(sf, field: str = "queries", n: int = 2) -> list[tuple[str, dict]]:
+    """(file name, body) of the newest ``n`` recorded rounds at scale
+    ``sf`` whose body carries ``field``, newest first.
+
+    A round record wraps bench's stdout line as ``parsed`` (null when
+    the line overflowed its capture); files that do not parse are
+    skipped. The sf filter comes before the cut to ``n``: timings at
+    another scale are not comparable, so such a round must never push a
+    comparable one out of the window."""
+    out: list[tuple[str, dict]] = []
     for p in _bench_files_newest_first():
         try:
-            doc = json.load(open(p))
+            with open(p) as f:
+                doc = json.load(f)
             body = doc if doc.get("queries") else (doc.get("parsed") or {})
-            q = body.get("queries") or {}
-            sf = body.get("sf")
+            if body.get("sf") != sf or not body.get(field):
+                continue
         except (OSError, ValueError, AttributeError):
             continue
-        q = {
-            k: float(v)
-            for k, v in q.items()
-            if not k.startswith("_") and isinstance(v, (int, float))
-        }
-        if q:
-            out.append((os.path.basename(p), q, sf))
+        out.append((os.path.basename(p), body))
         if len(out) == n:
             break
     return out
 
 
 def regression_gate(spark, sf_dir: str, timings: dict[str, float], sf) -> dict:
-    """Per-key bench regression gate (VERDICT r06 item 3) — encode the
-    ±40% host-noise folklore instead of eyeballing it.
+    """Per-key bench regression gate — encode the ±40% host-noise band
+    instead of eyeballing it.
 
-    Offense = common-set total >1.4× the newest parseable round, OR any
+    Offense = common-set total >1.4× the newest round at ``sf``, OR any
     single key >2× its trailing-two-round minimum (1 s absolute floor —
     sub-second keys swing multiples on host noise alone). Each offender
     gets ONE interleaved re-run (min of the two measurements replaces
     the timing — a noise spike must reproduce to fail); if a breach
     survives the re-run, the offenders are printed and bench exits
     nonzero. Thresholds documented in BASELINE.md."""
+    # '_'-prefixed entries are compact-line subtotals, not queries
     prev = [
-        (name, q) for name, q, psf in _prev_bench_queries(2) if psf == sf
+        (
+            name,
+            {
+                k: float(v)
+                for k, v in body["queries"].items()
+                if not k.startswith("_") and isinstance(v, (int, float))
+            },
+        )
+        for name, body in _bench_rounds(sf)
     ]
     if not prev:
         # Recorded rounds are at a different SF (e.g. a local sf0.001
@@ -718,14 +670,8 @@ def regression_gate(spark, sf_dir: str, timings: dict[str, float], sf) -> dict:
         return bad
 
     def _total_breach():
-        common = common_with_prev(timings)
-        # prev_file must be the sf-matched newest round (common_with_prev
-        # itself has no sf filter).
-        if (
-            common
-            and common["prev_file"] == prev[0][0]
-            and common["sec"] > 1.4 * common["prev_sec"]
-        ):
+        common = common_with_prev(timings, sf)
+        if common and common["sec"] > 1.4 * common["prev_sec"]:
             return common
         return None
 
@@ -767,230 +713,146 @@ def regression_gate(spark, sf_dir: str, timings: dict[str, float], sf) -> dict:
     return result
 
 
-RECALL_FLOOR_PERMILLE = 733  # the sampled n/50-codebook contract's
-# IVFPQ+R top-3 recall at 10× (BENCH_r09) — the bar the scale-linear
-# form must clear for the fixed-k family to be `done`, not `weak`.
-
-
-def recall_gate(scaling) -> dict:
-    """ANN recall gate (VERDICT r09 item 1: 'recall becomes a gated
-    metric, not a printout'): the corpus-scaled IVFPQ+R rerank
-    (q_llm_ann_pq_rerank_scaled) must hold ≥733‰ top-3 recall on the
-    decorrelated 10× corpus — the recall the SAMPLED (superlinear)
-    contract achieved — or the bench exits non-zero like any other
-    regression."""
-    if not scaling:
-        return {"ok": True, "reason": "scaling report skipped"}
-    rec = scaling.get("recall_10x") or {}
-    val = rec.get("ann_pq_rerank_scaled_r3_permille")
-    if not isinstance(val, int):
-        return {
-            "ok": True,
-            "reason": "no 10x recall measurement in this run",
-        }
-    gate = {
-        "ok": val >= RECALL_FLOOR_PERMILLE,
-        "floor_permille": RECALL_FLOOR_PERMILLE,
-        "measured_permille": val,
-        "key": "q_llm_ann_pq_rerank_scaled",
-    }
-    if not gate["ok"]:
-        print("# RECALL GATE FAILED: " + json.dumps(gate), file=sys.stderr)
-    return gate
-
-
-HARD_TWIN_NOISE = 0.33  # the round-13 hard clustered twin's isotropic
-# noise level — tuned (see run_scaling) so the routed search's recall
-# is NON-SATURATED: 933 permille at registration, mid the 900-970 band
-# VERDICT r12 item 6 asked for, where drift is visible per-neighbor.
-
-HARD_ROUTED_RECALL_FLOOR_PERMILLE = 866  # = registration 933 minus two
-# ground-truth neighbors (30 pairs -> 33 permille each): one lost
-# neighbor is VISIBLE in the recorded number but tolerated, two fail
-# the bench. Deterministic fixture + engine => a move is a real
-# routing/rerank change, never flake.
-
-
-def recall_gate_routed_hard(scaling) -> dict:
-    """Third recall gate (round 13, VERDICT r12 item 6): the composed
-    probed+scaled search on the HARD clustered 10x twin (noise 0.33)
-    must hold >=866 permille top-3 recall. Unlike the saturated
-    clustered gate (1000 permille — no drift signal), this fixture is
-    tuned so the measurement sits mid-band (933 at registration) and
-    every lost neighbor moves it by 33."""
-    if not scaling:
-        return {"ok": True, "reason": "scaling report skipped"}
-    rec = scaling.get("recall_clustered_hard_10x") or {}
-    val = rec.get("ann_pq_probed_scaled_r3_permille")
-    if not isinstance(val, int):
-        return {
-            "ok": True,
-            "reason": "no hard-clustered-10x recall measurement in this run",
-        }
-    gate = {
-        "ok": val >= HARD_ROUTED_RECALL_FLOOR_PERMILLE,
-        "floor_permille": HARD_ROUTED_RECALL_FLOOR_PERMILLE,
-        "measured_permille": val,
-        "registration_permille": 933,
-        "key": "q_llm_ann_pq_probed_scaled",
-        "fixture": f"clustered_hard_10x (noise={HARD_TWIN_NOISE})",
-    }
-    if not gate["ok"]:
-        print(
-            "# HARD ROUTED RECALL GATE FAILED: " + json.dumps(gate),
-            file=sys.stderr,
-        )
-    return gate
-
-
-ROUTED_RECALL_FLOOR_PERMILLE = 900  # VERDICT r10 item 1's bar for the
-# composed production search. Gated on the CLUSTERED 10x corpus: cell
-# routing is information-limited on decorrelated data (any sublinear
-# reader is), so the routed gate holds where neighbor geometry is
-# quantizer-resolvable — the case real embeddings present — while the
-# UNROUTED scaled rerank keeps the decorrelated-10x gate above.
-
-
-def recall_gate_routed(scaling) -> dict:
-    """Second recall gate (round 11): the composed probed+scaled search
-    (q_llm_ann_pq_probed_scaled) must hold >=900 permille top-3 recall
-    on the CLUSTERED 10x corpus, or bench exits non-zero."""
-    if not scaling:
-        return {"ok": True, "reason": "scaling report skipped"}
-    rec = scaling.get("recall_clustered_10x") or {}
-    val = rec.get("ann_pq_probed_scaled_r3_permille")
-    if not isinstance(val, int):
-        return {
-            "ok": True,
-            "reason": "no clustered-10x recall measurement in this run",
-        }
-    gate = {
-        "ok": val >= ROUTED_RECALL_FLOOR_PERMILLE,
-        "floor_permille": ROUTED_RECALL_FLOOR_PERMILLE,
-        "measured_permille": val,
-        "key": "q_llm_ann_pq_probed_scaled",
-        "fixture": "clustered_10x",
-    }
-    if not gate["ok"]:
-        print(
-            "# ROUTED RECALL GATE FAILED: " + json.dumps(gate),
-            file=sys.stderr,
-        )
-    return gate
-
-
-def _prev_ingest_rates(n: int = 2, want_sf=None) -> list[float]:
-    """ingest rows/s from the newest ``n`` parseable BENCH_r*.json
-    records at the matching sf (compact lines carry
-    ``ingest_rows_per_sec``)."""
-    out: list[float] = []
-    for p in _bench_files_newest_first():
-        try:
-            doc = json.load(open(p))
-            body = doc if doc.get("queries") else (doc.get("parsed") or {})
-            rate = body.get("ingest_rows_per_sec")
-            sf = body.get("sf")
-        except (OSError, ValueError, AttributeError):
-            continue
-        if isinstance(rate, (int, float)) and (want_sf is None or sf == want_sf):
-            out.append(float(rate))
-        if len(out) == n:
-            break
-    return out
-
-
-def ingest_gate(spark, sf_dir: str, ing: dict, sf) -> tuple[dict, dict]:
-    """Ingest regression gate (VERDICT r08 item 5) — the queries' 40%
-    interleaved-rerun rule applied to the one metric that had none:
-    if rows/s falls below 0.6× the trailing-two-round MAX at the same
-    sf, re-run ingest once and keep the better measurement (a noise
-    spike must reproduce to count). Returns (gate_record, ing) — ing is
-    replaced by the re-run when the re-run is faster."""
-    prev = _prev_ingest_rates(2, want_sf=sf)
-    if not prev:
-        return {"ok": True, "reason": f"no prior ingest record at sf={sf}"}, ing
-    floor = 0.6 * max(prev)
-    if ing["rows_per_sec"] >= floor:
-        return {"ok": True, "prev_max": max(prev)}, ing
-    print(
-        f"# ingest gate: {ing['rows_per_sec']} < 0.6*{max(prev)} — re-running",
-        file=sys.stderr,
-    )
-    second = run_ingest(spark, sf_dir)
-    best = second if second["rows_per_sec"] > ing["rows_per_sec"] else ing
-    gate = {
-        "ok": best["rows_per_sec"] >= floor,
-        "prev_max": max(prev),
-        "first_rows_per_sec": ing["rows_per_sec"],
-        "rerun_rows_per_sec": second["rows_per_sec"],
-    }
-    if not gate["ok"]:
-        print(
-            "# INGEST GATE FAILED: " + json.dumps(gate), file=sys.stderr
-        )
-    return gate, best
-
-
-def _prev_ingest10_rates(want_sf=None) -> list[float]:
-    """Trailing 10x ingest rates (VERDICT r10 item 6): the committed
-    BENCH_DETAIL.json on disk is LAST round's full payload when this
-    runs (main reads it before overwriting); its measured ingest_10x
-    rate plus the trailing max its own gate carried forward give a
-    two-round memory without inventing a new artifact. sf-matched like
-    every other trailing comparison — a local sf0.001 dev run must not
-    set (or consume) the sf0.1 floor."""
+def _ingest10_history(sf) -> list[float]:
+    """Trailing 10× ingest rates at ``sf``. The BENCH_DETAIL.json on
+    disk is the last round's full payload when this runs (main reads it
+    before overwriting); its measured ingest_10x rate plus the trailing
+    max its own gate carried forward give a two-round memory without
+    inventing a new artifact."""
     here = os.path.dirname(os.path.abspath(__file__))
     try:
-        doc = json.load(open(os.path.join(here, "BENCH_DETAIL.json")))
+        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
+            doc = json.load(f)
     except (OSError, ValueError):
         return []
-    if want_sf is not None and doc.get("sf") != want_sf:
+    if doc.get("sf") != sf:
         return []
-    out: list[float] = []
-    rate = (doc.get("ingest_10x") or {}).get("rows_per_sec")
-    if isinstance(rate, (int, float)):
-        out.append(float(rate))
-    prev_max = (doc.get("ingest_gate_10x") or {}).get("prev_max")
-    if isinstance(prev_max, (int, float)):
-        out.append(float(prev_max))
-    return out
+    rates = [
+        (doc.get("ingest_10x") or {}).get("rows_per_sec"),
+        (doc.get("ingest_gate_10x") or {}).get("prev_max"),
+    ]
+    return [float(r) for r in rates if isinstance(r, (int, float))]
 
 
-def ingest_gate_10x(spark, ten_x_dir: str, ing10, sf=None) -> tuple[dict, dict]:
-    """The sf0.1 ingest gate's 0.6x-trailing-max rule applied at 10x
-    (VERDICT r10 item 6) — the rate was measured-but-ungated there, so
-    an ingest-path regression could hide at the scale that matters.
-    Same protocol: one re-run on breach, keep the better measurement."""
-    if not isinstance(ing10, dict) or "rows_per_sec" not in ing10:
-        return {"ok": True, "reason": "no 10x ingest measurement"}, ing10
-    prev = _prev_ingest10_rates(want_sf=sf)
-    if not prev:
-        return {"ok": True, "reason": "no prior 10x ingest record"}, ing10
-    floor = 0.6 * max(prev)
-    if ing10["rows_per_sec"] >= floor:
-        return {"ok": True, "prev_max": max(prev)}, ing10
-    print(
-        f"# ingest 10x gate: {ing10['rows_per_sec']} < 0.6*{max(prev)}"
-        " — re-running",
-        file=sys.stderr,
-    )
-    second = run_ingest(spark, ten_x_dir)
-    best = second if second["rows_per_sec"] > ing10["rows_per_sec"] else ing10
-    gate = {
-        "ok": best["rows_per_sec"] >= floor,
-        "prev_max": max(prev),
-        "first_rows_per_sec": ing10["rows_per_sec"],
-        "rerun_rows_per_sec": second["rows_per_sec"],
-    }
-    if not gate["ok"]:
-        print(
-            "# INGEST 10x GATE FAILED: " + json.dumps(gate), file=sys.stderr
-        )
-    return gate, best
+class Gate(NamedTuple):
+    """One row of GATES. The value at ``source`` (a path into the bench
+    payload) must reach ``floor``: a fixed permille floor, or, when
+    ``floor`` is a history reader ``floor(sf) -> [rates]``,
+    INGEST_FLOOR_SHARE × the max of the trailing rates. With ``rerun``,
+    a breach re-measures the payload block once with run_ingest and
+    keeps the better measurement. ``what`` names the measurement in the
+    record's skip reasons; ``record`` is copied into the record."""
+
+    source: tuple[str, ...]
+    floor: int | Callable[[object], list[float]]
+    what: str
+    rerun: bool = False
+    record: dict = {}
+
+
+INGEST_FLOOR_SHARE = 0.6
+
+# Every gate but the per-key regression gate; each breach exits 3.
+# Thresholds and fixtures are documented in BASELINE.md.
+GATES = {
+    # Ingest: the queries' interleaved-rerun rule applied to rows/s.
+    "ingest_gate": Gate(
+        ("ingest", "rows_per_sec"),
+        lambda sf: [
+            float(body["ingest_rows_per_sec"])
+            for _, body in _bench_rounds(sf, "ingest_rows_per_sec")
+        ],
+        "ingest",
+        rerun=True,
+    ),
+    "ingest_gate_10x": Gate(
+        ("ingest_10x", "rows_per_sec"), _ingest10_history, "10x ingest", rerun=True
+    ),
+    # The corpus-scaled IVFPQ+R rerank on the decorrelated 10× corpus:
+    # 733 is what the sampled n/50-codebook contract achieved there, the
+    # bar its scale-linear replacement must clear.
+    "recall_gate": Gate(
+        ("scaling", "recall_10x", "ann_pq_rerank_scaled_r3_permille"),
+        733,
+        "10x recall",
+        record={"key": "q_llm_ann_pq_rerank_scaled"},
+    ),
+    # The composed routed search on the clustered 10× twin: cell routing
+    # is information-limited on decorrelated data (any sublinear reader
+    # is), so the routed floor holds where neighbor geometry is
+    # quantizer-resolvable, the case real embeddings present.
+    "recall_gate_routed": Gate(
+        ("scaling", "recall_clustered_10x", "ann_pq_probed_scaled_r3_permille"),
+        900,
+        "clustered-10x recall",
+        record={"key": "q_llm_ann_pq_probed_scaled", "fixture": "clustered_10x"},
+    ),
+    # The same search on the hard twin, where it is not saturated: 866 is
+    # registration's 933 minus two ground-truth neighbors (30 pairs, 33
+    # permille each), so one lost neighbor shows but passes and two fail.
+    "recall_gate_routed_hard": Gate(
+        ("scaling", "recall_clustered_hard_10x", "ann_pq_probed_scaled_r3_permille"),
+        866,
+        "hard-clustered-10x recall",
+        record={
+            "key": "q_llm_ann_pq_probed_scaled",
+            "fixture": f"clustered_hard_10x (noise={HARD_TWIN_NOISE})",
+            "registration_permille": 933,
+        },
+    ),
+}
+
+
+def check_gate(name: str, payload: dict, sf, spark=None, rerun_dir=None) -> dict:
+    """Evaluate GATES[name] on ``payload`` and return its record. A
+    re-run gate's breach re-measures with run_ingest(spark, rerun_dir)
+    and puts the better measurement into ``payload`` (a noise spike must
+    reproduce to fail); the record keeps both."""
+    gate = GATES[name]
+    block, *path, field = gate.source
+    measured = payload.get(block)
+    if not measured:
+        return {"ok": True, "reason": f"{block} report skipped"}
+    for p in path:
+        measured = measured.get(p) or {}
+    value = measured.get(field)
+    if not isinstance(value, (int, float)):
+        return {"ok": True, "reason": f"no {gate.what} measurement in this run"}
+    if not callable(gate.floor):
+        rec = {
+            "ok": value >= gate.floor,
+            "floor_permille": gate.floor,
+            "measured_permille": value,
+        }
+    else:
+        prev = gate.floor(sf)
+        if not prev:
+            return {"ok": True, "reason": f"no prior {gate.what} record at sf={sf}"}
+        floor = INGEST_FLOOR_SHARE * max(prev)
+        rec = {"ok": value >= floor, "prev_max": max(prev)}
+        if not rec["ok"] and gate.rerun:
+            print(
+                f"# {name}: {value} < {INGEST_FLOOR_SHARE}*{max(prev)} — re-running",
+                file=sys.stderr,
+            )
+            second = run_ingest(spark, rerun_dir)
+            best = max(measured, second, key=lambda m: m[field])
+            payload[block] = best
+            rec.update(
+                {
+                    "ok": best[field] >= floor,
+                    "first_rows_per_sec": value,
+                    "rerun_rows_per_sec": second[field],
+                }
+            )
+    rec.update(gate.record)
+    if not rec["ok"]:
+        print(f"# {name} FAILED: " + json.dumps(rec), file=sys.stderr)
+    return rec
 
 
 # Indexed-ANN lifecycle: build step -> the registered SEARCH keys that
-# read its tables (VERDICT r11 item 2). Builds are timed first-touch and
+# read its tables. Builds are timed first-touch and
 # separately; the per-key headline numbers then measure search only.
 ANN_LIFECYCLE = [
     (
@@ -1024,17 +886,11 @@ ANN_LIFECYCLE = [
 ]
 
 
-# Dedup-family memo lifecycle (VERDICT r13 item 2 — the ann_lifecycle
-# pattern applied to the shared shingle/signature checkpoints): build
-# and time the session memos up front so the per-key headline numbers
-# for their consumers measure the CONSUMER only. In r13 the family's
-# first consumer in bench order (q_llm_simhash) carried the ~2.5 s
-# doc_shingles build inside its timed region, which kept totals honest
-# but skewed per-key attribution and would trip the per-key regression
-# gate if bench ordering around the family ever changed. The build cost
-# stays visible: timed here, printed to stderr, and recorded in the
-# payload's shingle_lifecycle block (old r13 per-key numbers are kept
-# in BENCH_r13.json / OPTIMIZATION_r13.md).
+# Dedup-family memo lifecycle: the ANN_LIFECYCLE pattern applied to the
+# shared shingle/signature memos. Built and timed up front so the
+# per-key headline numbers of their consumers measure the consumer
+# only; the build cost stays visible in the payload's shingle_lifecycle
+# block.
 SHINGLE_LIFECYCLE = [
     (
         "doc_shingles",
@@ -1100,27 +956,17 @@ def _family(name: str) -> str:
     return parts[1] if len(parts) > 1 else name
 
 
-def common_with_prev(timings: dict[str, float]) -> dict | None:
-    """Round-over-round comparability (round-4 verdict nit): subtotal
-    this run over the intersection with the NEWEST BENCH_r*.json on
-    disk, next to the same subtotal from that file — so a changed suite
-    composition can't masquerade as a perf regression/win."""
-    prev, prev_file = {}, None
-    # newest PARSEABLE round wins: a round whose stdout overflowed the
-    # driver's capture is recorded with parsed=null (r05) — skip it.
-    # Round-number sort (ADVICE r09 item 2), not raw-filename sort.
-    for prev_file in _bench_files_newest_first():
-        try:
-            doc = json.load(open(prev_file))
-            prev = (
-                doc.get("queries")
-                or (doc.get("parsed") or {}).get("queries")
-                or {}
-            )
-        except (OSError, ValueError, AttributeError):
-            prev = {}
-        if prev:
-            break
+
+def common_with_prev(timings: dict[str, float], sf) -> dict | None:
+    """Round-over-round comparability: subtotal this run over the
+    intersection with the newest recorded round at ``sf``, next to the
+    same subtotal from that round — so a changed suite composition
+    can't masquerade as a perf regression/win."""
+    rounds = _bench_rounds(sf, n=1)
+    if not rounds:
+        return None
+    prev_file, body = rounds[0]
+    prev = body["queries"]
     # "_"-prefixed entries are compact-line subtotals, not queries
     common = sorted(
         k for k in set(prev) & set(timings) if not k.startswith("_")
@@ -1128,7 +974,7 @@ def common_with_prev(timings: dict[str, float]) -> dict | None:
     if not common:
         return None
     return {
-        "prev_file": os.path.basename(prev_file),
+        "prev_file": prev_file,
         "n_queries": len(common),
         "sec": round(sum(timings[k] for k in common), 3),
         "prev_sec": round(sum(float(prev[k]) for k in common), 3),
@@ -1138,6 +984,7 @@ def common_with_prev(timings: dict[str, float]) -> dict | None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
     registry.load_all()
     spark = get_spark("khose-bench")
 
@@ -1152,7 +999,7 @@ def main() -> None:
                     "unit": "rows/sec",
                     "queries": {"ingest_drain_sec": ing["sec"]},
                     "ingest": ing,
-                    "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                    "sf": sf,
                 }
             )
         )
@@ -1168,105 +1015,78 @@ def main() -> None:
     # plan, not session startup.
     registry.QUERIES[names[0]](spark, sf_dir).count()
 
-    # VERDICT r11 item 2: run the one-time ANN index BUILDS up front and
-    # time them separately, so the headline timings for the indexed-ANN
-    # keys measure the SEARCH path only (their session index cache is
-    # hot by the time the loop reaches them) and the regression gate
-    # gates the search number — a genuine search regression can no
-    # longer hide inside build noise, and the build cost is recorded.
+    # Run the one-time ANN index builds and the dedup family's shared
+    # shingle/signature memo builds up front and time them separately:
+    # the headline timings of their consumers then measure search only,
+    # so a search regression can't hide inside build noise, and the
+    # build cost is still recorded.
     ann_lifecycle = run_ann_lifecycle(spark, sf_dir, names)
-
-    # r14 (VERDICT r13 item 2): same treatment for the dedup family's
-    # shared shingle/signature memo builds — timed up front as their
-    # own recorded lines so consumer keys measure search/consume only.
     shingle_lifecycle = run_ann_lifecycle(
         spark, sf_dir, names, lifecycle=SHINGLE_LIFECYCLE
     )
 
-    total = 0.0
     for name in names:
         t0 = time.perf_counter()
         df = registry.QUERIES[name](spark, sf_dir)
         n = df.count()
         dt = time.perf_counter() - t0
         timings[name] = round(dt, 3)
-        total += dt
         print(f"# {name}: {dt:.3f}s rows={n}", file=sys.stderr)
 
     # Regression gate BEFORE the ingest/scaling extras: offenders get
     # their interleaved re-run while the session state matches the
     # original measurement as closely as possible.
-    gate = regression_gate(
-        spark,
-        sf_dir,
-        timings,
-        float(sf) if sf.replace(".", "").isdigit() else sf,
-    )
-    total = sum(timings.values())  # re-runs may have lowered timings
+    gate = regression_gate(spark, sf_dir, timings, sf)
 
-    # r14 (VERDICT r13 items 1-2, guide §5): the headline loop and the
-    # gate's re-runs are done with the session memos — unpersist their
-    # checkpoint blocks NOW so the ingest/scaling extras below start
-    # from a clean storage footprint (the 10x block would otherwise
-    # stack a second corpus's memos on top of these via its own sf_dir).
+    # The headline loop and the gate's re-runs are done with the session
+    # memos — unpersist their blocks NOW so the ingest/scaling extras
+    # below start from a clean storage footprint (the 10x block would
+    # otherwise stack a second corpus's memos on top of these).
     from khose_spark import memo as _memo
 
     _memo.release_all()
-
-    # khose's own axis — records/s through the streaming ingest pipeline —
-    # rides along in the same single JSON line (contract: ONE line).
-    ing = run_ingest(spark, sf_dir)
-    print(f"# ingest: {ing}", file=sys.stderr)
-    ing_gate, ing = ingest_gate(
-        spark,
-        sf_dir,
-        ing,
-        float(sf) if sf.replace(".", "").isdigit() else sf,
-    )
-
-    # 10× ingest (VERDICT r07 item 5): the same pipeline over the 10×
-    # events materialization when it's on disk — throughput evidence at
-    # ~1M rows, recorded in BENCH_DETAIL next to the soak's assertions.
-    ing10 = None
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    ten_x = (
-        os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/khose_scale")
-        + f"_{tag}_x10"
-    )
-    ing10_gate = None
-    if os.path.exists(os.path.join(ten_x, "_SCALED_x10_OK")):
-        try:
-            ing10 = run_ingest(spark, ten_x)
-            print(f"# ingest 10x: {ing10}", file=sys.stderr)
-            ing10_gate, ing10 = ingest_gate_10x(
-                spark,
-                ten_x,
-                ing10,
-                sf=float(sf) if sf.replace(".", "").isdigit() else sf,
-            )
-        except Exception as exc:  # noqa: BLE001 — evidence until gated
-            ing10 = {"error": f"{type(exc).__name__}: {exc}"}
-
-    # 10× scaling proof for the heavy tail (skippable for quick local
-    # iterations: SPARK_GRAFT_SCALING=0).
-    scaling = None
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") == "1" and "--all" not in sys.argv:
-        scaling = run_scaling(spark, sf_dir)
 
     families: dict[str, float] = {}
     for name, dt in timings.items():
         fam = _family(name)
         families[fam] = round(families.get(fam, 0.0) + dt, 3)
-
     payload = {
         "metric": "full_suite_total" if "--all" in sys.argv else "headline_suite_total",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),  # after any re-runs
         "unit": "sec",
         "queries": timings,
         "families": families,
-        "ingest": ing,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf,
+        "regression_gate": gate,
     }
+
+    # khose's own axis — records/s through the streaming ingest pipeline —
+    # rides along in the same single JSON line (contract: ONE line).
+    payload["ingest"] = run_ingest(spark, sf_dir)
+    print(f"# ingest: {payload['ingest']}", file=sys.stderr)
+    payload["ingest_gate"] = check_gate("ingest_gate", payload, sf, spark, sf_dir)
+
+    # 10× ingest: the same pipeline over the 10× events materialization
+    # when it's on disk — throughput evidence at ~1M rows.
+    ten_x = _scale_base(sf_dir) + f"_x{SCALING_FACTOR}"
+    if os.path.exists(os.path.join(ten_x, f"_SCALED_x{SCALING_FACTOR}_OK")):
+        try:
+            payload["ingest_10x"] = run_ingest(spark, ten_x)
+            print(f"# ingest 10x: {payload['ingest_10x']}", file=sys.stderr)
+            payload["ingest_gate_10x"] = check_gate(
+                "ingest_gate_10x", payload, sf, spark, ten_x
+            )
+        except Exception as exc:  # noqa: BLE001 — evidence, not a crash
+            payload["ingest_10x"] = {"error": f"{type(exc).__name__}: {exc}"}
+
+    # 10× scaling proof for the heavy tail (skippable for quick local
+    # iterations: SPARK_GRAFT_SCALING=0).
+    if os.environ.get("SPARK_GRAFT_SCALING", "1") == "1" and "--all" not in sys.argv:
+        payload["scaling"] = run_scaling(spark, sf_dir)
+    for name, g in GATES.items():
+        if g.source[0] == "scaling":
+            payload[name] = check_gate(name, payload, sf)
+
     if ann_lifecycle:
         # Attach the measured search-only seconds next to each build so
         # the lifecycle reads as one block: build once, search many.
@@ -1281,48 +1101,33 @@ def main() -> None:
                 k: timings[k] for k in blk["search_keys"] if k in timings
             }
         payload["shingle_lifecycle"] = shingle_lifecycle
-    if ing10 is not None:
-        payload["ingest_10x"] = ing10
-    if scaling is not None:
-        payload["scaling"] = scaling
-    payload["regression_gate"] = gate
-    payload["ingest_gate"] = ing_gate
-    if ing10_gate is not None:
-        payload["ingest_gate_10x"] = ing10_gate
-    rec_gate = recall_gate(scaling)
-    payload["recall_gate"] = rec_gate
-    routed_gate = recall_gate_routed(scaling)
-    payload["recall_gate_routed"] = routed_gate
-    routed_hard_gate = recall_gate_routed_hard(scaling)
-    payload["recall_gate_routed_hard"] = routed_hard_gate
-    common = common_with_prev(timings)
+    common = common_with_prev(timings, sf)
     if common is not None:
         payload["common_with_prev"] = common
 
     # The driver records only the LAST ~2000 chars of stdout and parses
-    # the JSON line out of that tail — round 5's full payload overflowed
-    # it and was recorded unparsed. So: FULL payload goes to a committed
+    # the JSON line out of that tail — a full payload overflowed it and
+    # was recorded unparsed. So: FULL payload goes to a committed
     # sidecar (BENCH_DETAIL.json), stdout gets a compact line that is
     # guaranteed to fit — per-query timings at 1 decimal for every query
     # above an adaptive threshold, the noise-floor rest as one subtotal.
     here = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.path.join(here, "BENCH_DETAIL.json")
-    # Scale guard (r13): BENCH_DETAIL.json is the ROUND artifact — the
-    # trailing-record memory the sf-matched gates read next round
-    # (ingest_gate_10x lost r12's 72.8k-rows/s 10x record to two
-    # sf0.001 dev smokes that clobbered the sidecar before the real
-    # sf0.1 run). A run at any other sf keeps its full payload in a
-    # dev-scratch sidecar instead; the committed artifact only ever
-    # holds the graded scale.
+    # Scale guard: BENCH_DETAIL.json is the ROUND artifact — the
+    # trailing-record memory the sf-matched gates read next round (the
+    # 10x ingest gate once lost its sf0.1 record to sf0.001 dev smokes
+    # that clobbered the sidecar before the real sf0.1 run). A run at
+    # any other sf keeps its full payload in a dev-scratch sidecar
+    # instead; the committed artifact only ever holds the graded scale.
     committed_sf = None
     try:
         committed_sf = json.load(open(detail_path)).get("sf")
     except (OSError, ValueError):
         pass
-    if payload.get("sf") != 0.1 and committed_sf == 0.1:
+    if sf != 0.1 and committed_sf == 0.1:
         detail_path = os.path.join(here, "BENCH_DETAIL_dev.json")
         print(
-            f"# dev-sf run (sf={payload.get('sf')}): full payload -> "
+            f"# dev-sf run (sf={sf}): full payload -> "
             "BENCH_DETAIL_dev.json (committed sf0.1 sidecar preserved)",
             file=sys.stderr,
         )
@@ -1343,14 +1148,7 @@ def main() -> None:
         json.dump(payload, f, indent=1, sort_keys=True)
     print(json.dumps(_compact_line(payload), separators=(",", ":")))
     spark.stop()
-    if (
-        not gate.get("ok", True)
-        or not ing_gate.get("ok", True)
-        or not (ing10_gate or {}).get("ok", True)
-        or not rec_gate.get("ok", True)
-        or not routed_gate.get("ok", True)
-        or not routed_hard_gate.get("ok", True)
-    ):
+    if any(not payload.get(k, {}).get("ok", True) for k in ("regression_gate", *GATES)):
         sys.exit(3)  # gate breach (offenders on stderr)
 
 
@@ -1372,13 +1170,10 @@ def _compact_line(payload: dict, budget: int = 1900) -> dict:
             for v in payload["scaling"]["keys"].values()
             if v.get("ratio")
         ]
-        # r14 (VERDICT r13 item 8): max_ratio is dominated by the
-        # DECLARED superlinear fixture-truth twins (kept deliberately
-        # as the quadratic controls next to their banded/fixed-k
-        # production siblings — SURVEY §2.16). Emit that set, plus the
-        # worst ratio among the production (linear-contract) keys, so
-        # the one-line number stays interpretable without the round
-        # doc. Additions only — max_ratio keeps its old meaning.
+        # max_ratio is dominated by the DECLARED superlinear twins, so
+        # the line also names that set and the worst ratio among the
+        # production (linear-contract) keys, keeping the one-line number
+        # interpretable on its own.
         linear = [
             v["ratio"]
             for k, v in payload["scaling"]["keys"].items()
@@ -1395,27 +1190,15 @@ def _compact_line(payload: dict, budget: int = 1900) -> dict:
                 if k in DECLARED_SUPERLINEAR
             ),
         }
-        rec = payload["scaling"].get("recall_10x")
-        if rec and "error" not in rec:
-            out["scaling"]["recall_10x"] = rec
-        rec10c = payload["scaling"].get("recall_clustered_10x")
-        if rec10c and "error" not in rec10c:
-            out["scaling"]["recall_clustered_10x"] = rec10c
-        rec10h = payload["scaling"].get("recall_clustered_hard_10x")
-        if rec10h and "error" not in rec10h:
-            out["scaling"]["recall_clustered_hard_10x"] = rec10h
-    if not payload.get("regression_gate", {}).get("ok", True):
-        out["regression_gate"] = "FAILED"
-    if not payload.get("ingest_gate", {}).get("ok", True):
-        out["ingest_gate"] = "FAILED"
-    if not payload.get("ingest_gate_10x", {}).get("ok", True):
-        out["ingest_gate_10x"] = "FAILED"
-    if not payload.get("recall_gate", {}).get("ok", True):
-        out["recall_gate"] = "FAILED"
-    if not payload.get("recall_gate_routed", {}).get("ok", True):
-        out["recall_gate_routed"] = "FAILED"
-    if not payload.get("recall_gate_routed_hard", {}).get("ok", True):
-        out["recall_gate_routed_hard"] = "FAILED"
+        # the recall blocks the gates read
+        for g in GATES.values():
+            if g.source[0] == "scaling":
+                rec = payload["scaling"].get(g.source[1])
+                if rec and "error" not in rec:
+                    out["scaling"][g.source[1]] = rec
+    for k in ("regression_gate", *GATES):
+        if not payload.get(k, {}).get("ok", True):
+            out[k] = "FAILED"
     if "common_with_prev" in payload:
         out["common_with_prev"] = payload["common_with_prev"]
     for threshold in (0.5, 1.0, 2.0, 5.0, 1e9):

@@ -187,31 +187,6 @@ def test_srp_band_width_law(spark):
     )
 
 
-def test_hard_twin_gate_logic():
-    """recall_gate_routed_hard (round 13, VERDICT r12 item 6): the
-    pure gate function's contract — pass at the registration value,
-    pass (visibly) one lost neighbor down, FAIL two down, and stay
-    permissive when the measurement is absent (scaling skipped)."""
-    import importlib
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    bench = importlib.import_module("bench")
-
-    def gate(v):
-        return bench.recall_gate_routed_hard(
-            {"recall_clustered_hard_10x": {
-                "ann_pq_probed_scaled_r3_permille": v}}
-        )
-
-    assert gate(933)["ok"], "registration value must pass"
-    assert gate(900)["ok"], "one lost neighbor is visible but tolerated"
-    assert not gate(833)["ok"], "two lost neighbors must fail the bench"
-    assert bench.recall_gate_routed_hard(None)["ok"]
-    assert bench.recall_gate_routed_hard({})["ok"]
-    assert bench.HARD_ROUTED_RECALL_FLOOR_PERMILLE == 866
-
-
 def test_hard_twin_geometry(spark, sf_dir):
     """The hard clustered twin (noise=0.33) keeps REAL cluster signal
     (within-cluster cosine above cross-cluster) while blurring the
