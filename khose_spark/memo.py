@@ -3,19 +3,28 @@ across registered keys lives here, under one key and one lifecycle.
 
 Entries are keyed ``(applicationId, sf_dir, name)`` and created by
 ``get(spark, name, sf_dir, build)``, which returns the stored value or
-runs ``build()`` once. Three kinds of value share the call:
+runs ``build()`` once. Four kinds of value share the call:
 
 - checkpointed / persisted relations (doc shingles, MinHash signatures,
   trade edges, capped pair stats, the k-NN backbone);
 - catalog-table artifacts (the PQ indexes), whose builds claim their
   tables with ``table`` and their directories with ``temp_dir``;
-- plain driver values (the fixed-k Lloyd centroid lists).
+- plain driver values (the fixed-k Lloyd centroid lists);
+- fixture-table schemas (``tables.t``), named ``schema:{path}`` with a
+  file fingerprint of the path in the ``sf_dir`` slot, so a rewrite at
+  the same path is a miss that evicts the stale schema.
 
 Lifecycle rules, the same for every entry:
 
 - **LRU-of-one sf_dir per name**: building ``name`` for a new sf_dir
   first releases every other entry of that name, so a 10x scaling block
   or a test sweeping fixtures never pins two corpora at once.
+- **No stopped applications**: any miss also releases the entries of
+  every other applicationId. A process has one live SparkContext, so
+  those entries are dead, and each holds its session, which would keep
+  the stopped context's JVM objects reachable (a set-up that restarts
+  the session and reads tables through ``tables.t`` would otherwise
+  keep one context per restart).
 - **Deterministic release**: ``release_all()`` frees every entry NOW —
   unpersists its storage blocks, drops its catalog tables and removes
   its directories. bench.py calls it after the timed loop,
@@ -70,14 +79,16 @@ def _persistent_rdds(spark) -> dict:
 def get(spark, name: str, sf_dir: str, build: Callable[[], V]) -> V:
     """The session's ``name`` artifact for ``sf_dir``, built on first use.
 
-    On a miss, releases the other ``name`` entries (LRU-of-one), runs
-    ``build()`` and records the persisted RDDs, catalog tables and
-    directories it created, so ``release_all`` can free them."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    On a miss, releases the other ``name`` entries (LRU-of-one) and
+    every entry of a stopped application, runs ``build()`` and records
+    the persisted RDDs, catalog tables and directories it created, so
+    ``release_all`` can free them."""
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name)
     hit = _ENTRIES.get(key)
     if hit is not None:
         return hit.value
-    for old in [k for k in _ENTRIES if k[2] == name]:
+    for old in [k for k in _ENTRIES if k[2] == name or k[0] != app]:
         _free(_ENTRIES.pop(old))
     entry = _Entry(spark)
     before = set(_persistent_rdds(spark))

@@ -100,18 +100,21 @@ def q_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events -> immutable parquet files -> read back -> aggregate.
     This is khose's defining behavior (stream batches to parquet); the
     oracle aggregates the ORIGINAL table, so the roundtrip must be
-    lossless. repartition(4) emulates multi-writer batch output."""
+    lossless. repartition(4) emulates multi-writer batch output. The
+    read back takes the written schema (no inference on ingest)."""
     path = _scratch(sf_dir, "parquet_roundtrip")
-    t(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(path)
-    return _events_agg(spark.read.parquet(path))
+    e = t(spark, sf_dir, "events")
+    e.repartition(4).write.mode("overwrite").parquet(path)
+    return _events_agg(spark.read.schema(e.schema).parquet(path))
 
 
 @query("q_sink_orc_roundtrip", oracle=_EVENTS_AGG_ORACLE)
 def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract via ORC (BASELINE.json names ORC explicitly)."""
     path = _scratch(sf_dir, "orc_roundtrip")
-    t(spark, sf_dir, "events").repartition(4).write.mode("overwrite").orc(path)
-    return _events_agg(spark.read.orc(path))
+    e = t(spark, sf_dir, "events")
+    e.repartition(4).write.mode("overwrite").orc(path)
+    return _events_agg(spark.read.schema(e.schema).orc(path))
 
 
 @query(
@@ -192,7 +195,8 @@ def q_sink_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e.filter(half == 1).write.mode("overwrite").option(
         "compression", "snappy"
     ).parquet(snappy_dir)
-    back = spark.read.parquet(zstd_dir).unionAll(spark.read.parquet(snappy_dir))
+    read = spark.read.schema(e.schema)
+    back = read.parquet(zstd_dir).unionAll(read.parquet(snappy_dir))
     return _events_agg(back)
 
 

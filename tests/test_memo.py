@@ -78,3 +78,17 @@ def test_failed_build_leaves_nothing_behind(spark, sf_dir):
     assert not {tb for tb in _index_tables(spark) if "boom" in tb}
     assert _persisted_ids(spark) <= rdds_before
     assert not [k for k in memo._ENTRIES if k[2] == "pqboom"]
+
+
+def test_miss_frees_entries_of_a_stopped_application(spark, tmp_path):
+    # A stopped SparkContext's entries are dead, and each one holds its
+    # session, which keeps that context's JVM objects reachable.
+    stale = tmp_path / "stale"
+    stale.mkdir()
+    key = ("local-stopped", "sf", "stale")
+    memo._ENTRIES[key] = memo._Entry(spark, value=1, dirs=[str(stale)])
+
+    assert memo.get(spark, "fresh", "sf", lambda: 2) == 2
+    assert key not in memo._ENTRIES
+    assert not stale.exists()
+    memo.release_all()
