@@ -1133,9 +1133,9 @@ def main() -> None:
             "BENCH_DETAIL_dev.json (committed sf0.1 sidecar preserved)",
             file=sys.stderr,
         )
-    # Preserve side-channel blocks other tools merged into the sidecar
-    # (scripts/ab_bench.py writes interleaved A/B results as ab_vs_*) —
-    # a bench rewrite must not erase that evidence.
+    # Carry forward the recorded A/B (ab_vs_*) and evidence_* blocks
+    # already in the sidecar: no tool writes them any more, and a bench
+    # rewrite must not erase that evidence.
     try:
         prior_detail = json.load(open(detail_path))
         for k, v in prior_detail.items():

@@ -2,7 +2,7 @@
 
     python -m khose_spark list                      # every registered query
     python -m khose_spark run q_name [--sf-dir D]   # run + show a query
-    python -m khose_spark explain q_name [--sf-dir D]
+    python -m khose_spark explain q_name [--sf-dir D]  # + checkpoint interior
     python -m khose_spark ingest config.json        # run a pipeline config
 """
 
@@ -48,11 +48,18 @@ def main(argv: list[str] | None = None) -> int:
         if args.query not in registry.QUERIES:
             print(f"unknown query: {args.query} (see `list`)", file=sys.stderr)
             return 2
-        df = registry.QUERIES[args.query](spark, args.sf_dir)
-        if args.cmd == "explain":
-            df.explain("formatted")
-        else:
-            df.show(args.limit, truncate=False)
+        build = registry.QUERIES[args.query]
+        if args.cmd == "run":
+            build(spark, args.sf_dir).show(args.limit, truncate=False)
+            return 0
+        from khose_spark import plancheck
+
+        with plancheck.record_checkpoints() as rec:
+            df = build(spark, args.sf_dir)
+        txt = plancheck.formatted_plan(df)
+        if rec.last is not None:  # the work behind a bare checkpoint stub
+            txt = f"{txt}\n\n{plancheck.INTERIOR_MARK}\n\n{rec.last}"
+        print(txt)
         return 0
     finally:
         spark.stop()

@@ -32,14 +32,20 @@ Lifecycle rules, the same for every entry:
 - **No partial artifacts**: if ``build`` raises, the blocks, tables and
   directories it had created are removed before the error propagates.
 
-Mechanics: ``DataFrame.localCheckpoint`` persists an *internal* RDD the
-returned DataFrame does not expose, so ``get`` snapshots
+Mechanics: ``checkpoint(df)`` is the engine's one eager
+materialization: it hands ``df`` to every hook in ``CHECKPOINT_HOOKS``
+(``plancheck.record_checkpoints`` registers one), then returns
+``df.localCheckpoint()``. ``get`` does not rely on it to find blocks: a
+local checkpoint persists an *internal* RDD the returned DataFrame does
+not expose, and some builds (``_fixed_lloyd``) also materialize
+``persist()``-ed relations, so ``get`` snapshots
 ``sc.getPersistentRDDs()`` around ``build`` and records the RDDs that
 appeared and no other entry owns — builds may nest (the signatures
 build reads the shingle memo), and each block belongs to the innermost
 entry that created it. Builds are driver-sequential, like every query
 path. On a real cluster the relations would be reliable checkpoints or
-written tables — ``localCheckpoint`` is lost with an executor; see
+written tables — a local checkpoint is lost with an executor, and
+``checkpoint`` is the one function that choice would change; see
 OPTIMIZATION_r14.md for the production posture.
 """
 
@@ -68,6 +74,17 @@ _ENTRIES: dict[tuple[str, str, str], _Entry] = {}
 # Entries whose build is running, innermost last: ``table``/``temp_dir``
 # attach what they create to the top one.
 _BUILDING: list[_Entry] = []
+# Callables run on each DataFrame ``checkpoint`` is about to materialize.
+CHECKPOINT_HOOKS: list[Callable[[DataFrame], None]] = []
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df`` eagerly materialized. Every hook in ``CHECKPOINT_HOOKS``
+    sees ``df`` first, while its plan is still the one about to execute.
+    In method chains: ``.transform(checkpoint)``."""
+    for hook in CHECKPOINT_HOOKS:
+        hook(df)
+    return df.localCheckpoint()
 
 
 def _persistent_rdds(spark) -> dict:
@@ -138,7 +155,7 @@ def _free(entry: _Entry) -> None:
     """Unpersist, drop and remove everything ``entry`` holds. Covers both
     relation styles: ``persist()`` entries (cached in the CacheManager,
     invisible to the RDD snapshot) free via ``DataFrame.unpersist``;
-    ``localCheckpoint`` entries via their tracked RDD handles."""
+    ``checkpoint`` entries via their tracked RDD handles."""
     if isinstance(entry.value, DataFrame):
         try:
             entry.value.unpersist()

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.operators.curation import _sql_hash_bucket, hash_bucket
 from khose_spark.registry import query
 from khose_spark.sqlutil import dec_round, dec_sum, sql_dec_round, sql_dec_sum
@@ -673,7 +674,7 @@ def q_agg_countmin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     b0 = hash_bucket(F.concat(F.lit("0|"), F.col("term")), _CMS_W)
     b1 = hash_bucket(F.concat(F.lit("1|"), F.col("term")), _CMS_W)
     hashed = toks.select("term", b0.alias("b0"), b1.alias("b1"))
-    hashed = hashed.localCheckpoint()  # feeds cms0 + cms1 + exact
+    hashed = checkpoint(hashed)  # feeds cms0 + cms1 + exact
     cms0 = hashed.groupBy("b0").agg(F.count(F.lit(1)).alias("c0"))
     cms1 = hashed.groupBy("b1").agg(F.count(F.lit(1)).alias("c1"))
     exact = hashed.groupBy("term").agg(
@@ -765,7 +766,7 @@ def q_agg_quantile_bin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
         ).alias("c")
-    ).localCheckpoint()  # feeds the histogram + the exact reference
+    ).transform(checkpoint)  # feeds the histogram + the exact reference
     bands = cents.groupBy(
         F.expr(f"c DIV {_QBIN_CENTS}").alias("band")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -1280,7 +1281,7 @@ def q_agg_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     point_counts = (
         pts.groupBy("s", "c")
         .agg(F.count(F.lit(1)).alias("n_parts"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     per_size = point_counts.groupBy("s").agg(F.min("c").alias("mc"))
     # suffix min over the <=50-row size ladder: cheapest price among
@@ -1414,7 +1415,7 @@ def q_agg_cm_join_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("c"))
         )
 
-    r = sketch(rkeys).localCheckpoint()  # 2048 cells: feeds j + f2
+    r = sketch(rkeys).transform(checkpoint)  # 2048 cells: feeds j + f2
     s = sketch(skeys).withColumnRenamed("c", "cs")
     j = (
         r.join(F.broadcast(s), ["seed", "b"])

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -97,7 +98,7 @@ def q_ml_gamma_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     a = cell.alias("a")
     b = cell.alias("b")
@@ -201,7 +202,7 @@ def q_ml_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     tot = cell.agg(F.sum("n").cast("long").alias("nn"))
 
@@ -469,7 +470,7 @@ def q_ml_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     joint = (
         x.groupBy("band", "grp")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     w_below = Window.orderBy("band").rowsBetween(
         Window.unboundedPreceding, -1

@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.operators.curation_pipeline import _STOP_SQL
 from khose_spark.operators.quality_rules import (
     _MAX_MWL,
@@ -235,7 +236,7 @@ def q_llm_corpus_refresh_incremental(
             ).otherwise(0),
         )
         .select("doc_id", "lang", "n_words", "s1", "s2")
-        .localCheckpoint()
+        .transform(checkpoint)
     )
 
     def _chunks(d: DataFrame) -> DataFrame:
@@ -329,7 +330,7 @@ def q_llm_corpus_refresh_incremental(
                 + F.coalesce("accepted", F.lit(0))
             ).alias("merged_docs"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     tot = merged.agg(F.sum("merged_docs").cast("long").alias("m"))
     return (

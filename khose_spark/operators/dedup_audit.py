@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark import memo
+from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import doc_shingles, shingle_array, shingles
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -96,7 +97,7 @@ def _det_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias(f"s{i}")
                 for i in range(_N_HASHES)
             ]
-        ).localCheckpoint()
+        ).transform(checkpoint)
 
     return memo.get(spark, "minhash_signatures", sf_dir, build)
 
@@ -186,7 +187,7 @@ def q_llm_minhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 4): eagerly materialize the small candidate-pair result, then
         # release the big signature cache instead of leaving it pinned
         # in executor memory for the rest of the session.
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     return out
 
@@ -280,7 +281,7 @@ def q_llm_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executor memory across a full-suite session (ADVICE round 4).
     out = row.select(
         "n_exact", "n_candidates", "n_hit", recall.alias("recall_permille")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     for df in (sh, exact, sig, cand):
         df.unpersist()
     return out
@@ -665,7 +666,7 @@ def q_llm_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # One audit row: materialize it, release both caches (the
         # recall-audit lifecycle pattern above).
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     train_sh.unpersist()
     bloom.unpersist()
@@ -880,7 +881,7 @@ def q_er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("weight") <= _FS_T_NONLINK, "non-link")
         .otherwise("possible")
         .alias("decision"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     base.unpersist()
     return out
 
@@ -1156,7 +1157,7 @@ def q_llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("shingle"),
         )
         .distinct()
-        .localCheckpoint()  # feeds sizes + both join sides
+        .transform(checkpoint)  # feeds sizes + both join sides
     )
     sizes = ss.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -1311,7 +1312,7 @@ def q_llm_lsh_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("agree"))
         .groupBy("agree")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()  # feeds all 5 threshold sums
+        .transform(checkpoint)  # feeds all 5 threshold sums
     )
     grid = spark.createDataFrame(
         [(v,) for v in (8, 10, 12, 14, 16)], "threshold int"
@@ -1503,11 +1504,11 @@ def q_llm_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("rn", F.row_number().over(w_txt))
         .filter(F.col("rn") == 1)
         .select("doc_id")
-        .localCheckpoint()  # feeds both stage counts + the pair filter
+        .transform(checkpoint)  # feeds both stage counts + the pair filter
     )
     sig = _det_signatures(spark, sf_dir).join(
         s1, "doc_id", "left_semi"
-    ).localCheckpoint()
+    ).transform(checkpoint)
     cand = _band_candidates(sig)
     a, b = sig.alias("a"), sig.alias("b")
     agree = sum(
@@ -1842,7 +1843,7 @@ def q_llm_neardup_jaccard_banded(
         .join(sb, "id_b")
         .filter(jac >= 0.8)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     return out
 
@@ -1898,7 +1899,7 @@ def q_llm_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "id_a", "id_b", "n_common", "n_small", "containment_permille"
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     return out
 
@@ -2094,7 +2095,7 @@ def q_llm_containment_recall_audit(
     )
     out = row.select(
         "n_exact", "n_candidates", "n_hit", recall.alias("recall_permille")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     for df in (sh, exact, sig, cand):
         df.unpersist()
     return out

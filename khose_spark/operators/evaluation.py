@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.operators.curation import _sql_hash_bucket, hash_bucket
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -715,7 +716,7 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     joint = (
         pairs.groupBy("bx", "by")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
 
     def _midranks(marg: DataFrame, key: str, out: str) -> DataFrame:
@@ -1090,7 +1091,7 @@ def q_ml_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"), F.sum("pos").alias("n_pos")
         )
-        .localCheckpoint()  # feeds train probs + global + test side
+        .transform(checkpoint)  # feeds train probs + global + test side
     )
     train = cells.filter(F.col("is_train") == 1).select(
         F.col("band").alias("tband"),
@@ -1182,7 +1183,7 @@ def q_ml_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.sum(F.when(F.col("cohort") == 1, 1).otherwise(0)) + 1
         ).alias("b"),
-    ).localCheckpoint()  # feeds totals + the fold
+    ).transform(checkpoint)  # feeds totals + the fold
     tot = cells.agg(
         F.sum("a").alias("ta"), F.sum("b").alias("tb")
     )
@@ -1366,7 +1367,7 @@ def q_ml_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         labeled.groupBy("band", "is_train")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("pos").alias("n_pos"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     train = cells.filter(F.col("is_train") == 1).select(
         F.col("band").alias("tband"),
@@ -1416,7 +1417,7 @@ def q_ml_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("pred_permille") - F.col("obs_permille")
             ).alias("gap_permille"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     ece = bins.agg(
         F.lit(-1).cast("long").alias("decile"),
@@ -1544,7 +1545,7 @@ def q_ml_confusion_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         labeled.groupBy("actual", "pred")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     classes = (
         cells.select(F.col("actual").alias("label"))
@@ -1948,7 +1949,7 @@ def q_ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(1 - F.col("bad")).cast("long").alias("n_good"),
             F.sum("bad").cast("long").alias("n_bad"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     tot = per_bin.agg(
         F.sum("n_good").cast("long").alias("tg"),
@@ -2054,7 +2055,7 @@ def q_ml_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(1 - F.col("bad")).cast("long").alias("g"),
             F.sum("bad").cast("long").alias("b"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     tot = per_bin.agg(
         F.sum("g").cast("long").alias("tg"),
@@ -2357,7 +2358,7 @@ def q_ml_isotonic_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").over(w_cum).cast("long").alias("cn"),
             F.sum("n_pos").over(w_cum).cast("long").alias("cp"),
         )
-        .localCheckpoint()  # feeds the pair join twice + final join
+        .transform(checkpoint)  # feeds the pair join twice + final join
     )
     i, j = bands.alias("i"), bands.alias("j")
     pairs = i.join(
@@ -2637,7 +2638,7 @@ def q_ml_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dow7"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()  # <=35 rows; feeds marginals AND the fold
+        .transform(checkpoint)  # <=35 rows; feeds marginals AND the fold
     )
     w_r = Window.partitionBy("event_type")
     w_c = Window.partitionBy("dow7")
@@ -2764,7 +2765,7 @@ def q_ml_iptw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("s_c"),
         )
-        .localCheckpoint()  # 5 rows; feeds the ATE fold AND the output
+        .transform(checkpoint)  # 5 rows; feeds the ATE fold AND the output
     )
     tot = strata.filter(
         (F.col("n_t") > 0) & (F.col("n") - F.col("n_t") > 0)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.sqlutil import dec_sum, sql_dec_sum
 from khose_spark.tables import t
@@ -606,7 +607,7 @@ def q_ts_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
             ).alias("cents"),
         )
-        .localCheckpoint()  # feeds cohort + cells
+        .transform(checkpoint)  # feeds cohort + cells
     )
     cohort = purch.groupBy("user_id").agg(F.min("wk").alias("c_wk"))
     cells = (
@@ -1055,7 +1056,7 @@ def q_ts_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n").cast("double") * F.log2(F.col("n").cast("double"))
             ).alias("sxl"),
         )
-        .localCheckpoint()  # k rows; feeds tot, h, and the rate fold
+        .transform(checkpoint)  # k rows; feeds tot, h, and the rate fold
     )
     tot = rows_.agg(F.sum("n_trans").cast("long").alias("n_all"))
     h = rows_.crossJoin(F.broadcast(tot)).select(
@@ -1069,7 +1070,7 @@ def q_ts_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.col("sxl") / F.col("n_trans")
         ).alias("h_bits"),
         "n_all",
-    ).localCheckpoint()  # k rows; feeds the rate fold AND the output
+    ).transform(checkpoint)  # k rows; feeds the rate fold AND the output
     rate = h.agg(
         F.sum(
             F.col("n_trans").cast("double") / F.col("n_all") * F.col("h_bits")

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -212,7 +213,7 @@ def q_llm_dataset_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_chars",
         )
         # 5-row allocation: materialize, release the ranked-corpus cache.
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     ranked.unpersist()
     return out
@@ -336,7 +337,7 @@ def q_priv_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_suppressed",
         )
         # Segment-count rows only: materialize, release the level audit.
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     per_level.unpersist()
     return out
@@ -825,7 +826,7 @@ def q_llm_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("c"),
             F.sum("n_chars").cast("long").alias("chars"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     tot = per_lang.agg(
         F.sum("c").cast("long").alias("n"),
@@ -1182,7 +1183,7 @@ def q_priv_dp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("noisy_n"),
         F.row_number().over(w).alias("rank"),
-    ).localCheckpoint()  # feeds the totals fold AND the release filter
+    ).transform(checkpoint)  # feeds the totals fold AND the release filter
     sel = (F.col("rank") <= 10) & (F.col("noisy_n") >= 25)
     tot = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n_groups"),

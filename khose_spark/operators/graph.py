@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark import memo
+from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import q_llm_neardup_jaccard
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -78,13 +79,13 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     # and its LOGICAL PLAN replaced by a scan of the materialized blocks,
     # so round N's plan doesn't embed rounds 1..N-1 — without this the
     # lineage (and the plan string) grows by two joins per round.
-    sym = sym.localCheckpoint()
+    sym = checkpoint(sym)
     # Seed: min over self + direct neighbors (round 1 done in the seed).
     labels = (
         sym.groupBy("node")
         .agg(F.min("peer").alias("rep"))
         .select("node", F.least("rep", F.col("node")).alias("rep"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     for _ in range(max_rounds):
         peer_reps = (
@@ -100,7 +101,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
                     "rep", F.coalesce("peer_rep", F.col("rep"))
                 ).alias("rep"),
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
         changed = (
             new_labels.join(
@@ -352,7 +353,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     10,
                 ).alias("r"),
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
     from pyspark.sql import Window
 
@@ -372,7 +373,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", "n_out", "pagerank", "rk")
         # Eagerly materialize the 20-row answer, then release the three
         # graph-sized caches instead of pinning them for the session.
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     for df in (edges, outdeg, nodes):
         df.unpersist()
@@ -461,7 +462,7 @@ def _capped_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(1.0) / F.log(F.col("deg").cast("double"))
                 ).alias("aa"),
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
 
     return memo.get(spark, "capped_pair_stats", sf_dir, build)
@@ -699,7 +700,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.crossJoin(F.broadcast(total))
         .filter(F.col("cnt") * 1000 >= F.col("total_cnt") * _TRI_PERMILLE)
         .select("a", "b")
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     # edges is now materialized; the fact-scale flows cache has served
     # both its consumers (total + pairs) and can be released.
@@ -900,7 +901,7 @@ def _knn_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             .distinct()
-            .localCheckpoint()
+            .transform(checkpoint)
         )
 
     return memo.get(spark, "knn_backbone", sf_dir, build)
@@ -1099,14 +1100,14 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             araw = (
                 edges.groupBy("s")
                 .agg(F.count(F.lit(1)).cast("double").alias("a"))
-                .localCheckpoint()
+                .transform(checkpoint)
             )
         else:
             araw = (
                 edges.join(hubs, "c")
                 .groupBy("s")
                 .agg(F.sum("h").alias("a"))
-                .localCheckpoint()
+                .transform(checkpoint)
             )
         atot = araw.agg(F.sum("a").alias("tot"))
         auth = araw.crossJoin(F.broadcast(atot)).select(
@@ -1116,7 +1117,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges.join(auth, "s")
             .groupBy("c")
             .agg(F.sum("a").alias("h"))
-            .localCheckpoint()
+            .transform(checkpoint)
         )
         htot = hraw.agg(F.sum("h").alias("tot"))
         hubs = hraw.crossJoin(F.broadcast(htot)).select(
@@ -1215,7 +1216,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(
                 keep.withColumnRenamed("node", "nbr"), "nbr", "left_semi"
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
         n_nodes = adj.select("node").distinct().count()
         n_edges = adj.count()
@@ -1402,7 +1403,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .filter(F.col("node") % 7 == 0)
         .withColumn("hop", F.lit(0))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     visited = frontier
     for h in range(1, 4):
@@ -1414,9 +1415,9 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hop", F.lit(h))
-            .localCheckpoint()
+            .transform(checkpoint)
         )
-        visited = visited.unionAll(nxt).localCheckpoint()
+        visited = visited.unionAll(nxt).transform(checkpoint)
         frontier = nxt
     return (
         visited.groupBy("hop")
@@ -1490,7 +1491,7 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         adj.select("node")
         .distinct()
         .filter(F.col("node") % 7 == 0)
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     r = seeds.withColumn("r", F.lit(1000).cast("long"))
     for _ in range(2):
@@ -1522,7 +1523,7 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long")
                 .alias("r"),
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
     return (
         r.select(
@@ -1629,7 +1630,7 @@ def q_graph_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         hdeg.orderBy(F.col("d").desc(), F.col("node").asc())
         .limit(10)
         .select(F.col("node").alias("seed"), F.col("d").alias("degree"))
-        .localCheckpoint()  # feeds hop1, hop2, and the final join
+        .transform(checkpoint)  # feeds hop1, hop2, and the final join
     )
     hop1 = seeds.join(
         adj, seeds.seed == adj.node
@@ -1766,7 +1767,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("num"),
             (wide("m2") * F.col("m2")).cast("decimal(38,0)").alias("den"),
         )
-        .localCheckpoint()  # feeds the Q fold AND the final projection
+        .transform(checkpoint)  # feeds the Q fold AND the final projection
     )
     qfold = contrib.agg(
         F.round(
@@ -1959,7 +1960,7 @@ def q_graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "node", "a", "ki", F.coalesce("k_own", F.lit(0)).alias("k_own")
         )
-        .localCheckpoint()  # feeds candidates, scoring, and n_moved
+        .transform(checkpoint)  # feeds candidates, scoring, and n_moved
     )
     cand = (
         kic.select("node", "c", "k")
@@ -2017,7 +2018,7 @@ def q_graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("a"))
             .alias("nc"),
         )
-        .localCheckpoint()  # relabels both adj ends + the moved fold
+        .transform(checkpoint)  # relabels both adj ends + the moved fold
     )
     ch_a = chosen.select(
         F.col("node").alias("na"), F.col("nc").alias("ca")
@@ -2029,7 +2030,7 @@ def q_graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         adj.join(F.broadcast(ch_a), F.col("node") == F.col("na"))
         .join(F.broadcast(ch_b), F.col("nbr") == F.col("nb"))
         .select("node", "ca", "cb")
-        .localCheckpoint()  # feeds Q_after AND the per-community audit
+        .transform(checkpoint)  # feeds Q_after AND the per-community audit
     )
 
     def _q(labeled: DataFrame) -> DataFrame:
@@ -2166,7 +2167,7 @@ def q_graph_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("com").alias("ca"), "nbr")
         .join(F.broadcast(lab), F.col("nbr") == F.col("lnode"))
         .select("ca", F.col("com").alias("cb"))
-        .localCheckpoint()  # k-NN-bounded edges; feeds m2t AND per_c
+        .transform(checkpoint)  # k-NN-bounded edges; feeds m2t AND per_c
     )
     m2t = labeled.agg(F.count(F.lit(1)).cast("long").alias("m2"))
     nodes = (

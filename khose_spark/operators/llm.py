@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark import memo
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -111,7 +112,7 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         par = spark.sparkContext.defaultParallelism
         if base.rdd.getNumPartitions() < par:
             base = base.repartition(par)
-        return shingles(base).localCheckpoint()
+        return shingles(base).transform(checkpoint)
 
     return memo.get(spark, "doc_shingles", sf_dir, build)
 
@@ -184,7 +185,7 @@ def q_llm_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # release the corpus-scale shingle cache — the dedup cluster /
         # apply / funnel queries iterate over this result, so the
         # checkpoint also keeps the CC loop's lineage flat.
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     return out
 
@@ -239,7 +240,7 @@ def minhash_candidates(sh: DataFrame, n_hashes: int = 16, band_rows: int = 4) ->
         # Candidate pairs are a vanishing fraction of all pairs by
         # design: eagerly materialize them and release the banded
         # signature cache rather than pin it for the session.
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     bands.unpersist()
     return out
@@ -292,7 +293,7 @@ def q_llm_neardup_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nb, "id_b")
         .filter(jac >= 0.8)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     return out
 

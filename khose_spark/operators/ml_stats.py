@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import shingle_array
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -259,7 +260,7 @@ def q_llm_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rk", F.row_number().over(w).cast("int"))
         .filter(F.col("rk") <= _PMI_TOP_K)
         .select("rk", "bigram", "c_xy", "pmi")
-    ).localCheckpoint()
+    ).transform(checkpoint)
     uni_counts.unpersist()
     big_all.unpersist()
     return out
@@ -675,7 +676,7 @@ def q_ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("no-trend")
             .alias("trend"),
         )
-    ).localCheckpoint()
+    ).transform(checkpoint)
     daily.unpersist()
     return out
 
@@ -1554,7 +1555,7 @@ def q_ml_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rx2"),
         )
         # the ≤368-row band grid feeds the rank join AND the tie fold
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     folds = (
         joint.join(F.broadcast(marg.select("b", "rx2")), "b")
@@ -2320,7 +2321,7 @@ def q_ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("cents").alias("y_min"),
             F.max("cents").alias("y_max"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     glob = per_cat.agg(
         F.sum("n").cast("long").alias("ng"),
@@ -2546,7 +2547,7 @@ def q_ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = (
         labeled.groupBy("b1", "b2", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
 
     def candidates(g: DataFrame, wcol: str) -> DataFrame:
@@ -2607,7 +2608,7 @@ def q_ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("w") - F.col("err")).alias("cw"),
                 "w",
             )
-            .localCheckpoint()  # 1 row; reused by reweight + ensemble
+            .transform(checkpoint)  # 1 row; reused by reweight + ensemble
         )
 
     r1 = argmin(candidates(grid, "c"))
@@ -2641,7 +2642,7 @@ def q_ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("decimal(38,0)")
             .alias("wgt"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     r2 = argmin(candidates(g2w, "wgt"))
 
@@ -2818,7 +2819,7 @@ def q_ml_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     joint = (
         v.groupBy("band", "pri")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     w_below = Window.orderBy("band").rowsBetween(
         Window.unboundedPreceding, -1
@@ -3106,7 +3107,7 @@ def q_ml_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
             .alias("cents")
         )
-        .localCheckpoint()  # feeds k-dim, block filter, and ranks
+        .transform(checkpoint)  # feeds k-dim, block filter, and ranks
     )
     kdim = daily.agg(
         F.countDistinct("event_type").cast("long").alias("k")
@@ -3132,7 +3133,7 @@ def q_ml_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - 1
             ).cast("long").alias("mid2"),
         )
-        .localCheckpoint()  # feeds the group fold AND the total fold
+        .transform(checkpoint)  # feeds the group fold AND the total fold
     )
     grp = ranked.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_blocks"),
@@ -3705,7 +3706,7 @@ def q_ts_engle_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
         .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
-        .localCheckpoint()  # days-bounded; feeds OLS fold AND residuals
+        .transform(checkpoint)  # days-bounded; feeds OLS fold AND residuals
     )
     d38 = "decimal(38,0)"
     ols = daily.agg(
@@ -3725,7 +3726,7 @@ def q_ts_engle_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sy").cast("double") - beta * F.col("sx").cast("double"))
             / F.col("n").cast("double")
         ).alias("alpha"),
-    ).localCheckpoint()  # 1 row; feeds residuals AND the output
+    ).transform(checkpoint)  # 1 row; feeds residuals AND the output
     resid = daily.crossJoin(F.broadcast(coef)).select(
         "d",
         (

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -225,7 +226,7 @@ def q_mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
     out = cand.select(
         "id_a", "id_b", hamming.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= 3).localCheckpoint()
+    ).filter(F.col("hamming") <= 3).transform(checkpoint)
     sig.unpersist()
     return out
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -129,7 +130,7 @@ def q_ml_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         # the <=982-row grid feeds the pair cross AND the totals —
         # one fact pass (the gamma grid lifecycle)
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     a = cell.filter(F.col("grp") == 1).select("b", "n").alias("a")
     v = cell.filter(F.col("grp") == 2).select("b", "n").alias("v")
@@ -248,7 +249,7 @@ def q_ml_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("grp", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     a = cell.filter(F.col("grp") == 1).select("b", "n").alias("a")
     v = cell.filter(F.col("grp") == 2).select("b", "n").alias("v")
@@ -496,7 +497,7 @@ def q_ml_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the ~31-row day spine feeds the median scan AND the sign
         # sequence — one fact pass
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     w_rank = Window.orderBy("cents", "d")
     numbered = daily.select(
@@ -610,7 +611,7 @@ def q_ml_chisq_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.groupBy(F.col("o_orderpriority").alias("grp"))
         .agg(F.count(F.lit(1)).cast("long").alias("obs"))
         # the 5-row grid feeds the total, the deviations AND the fold
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     tot = g.agg(F.sum("obs").cast("long").alias("n"))
     dev = g.crossJoin(F.broadcast(tot)).select(
@@ -759,7 +760,7 @@ def q_ml_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         # the <=5001-band marginal feeds the cumulative locate AND the
         # prior-mass fold
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     w_cum = Window.orderBy("b").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -772,7 +773,7 @@ def q_ml_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cnt",
         F.sum("cnt").over(w_cum).alias("c"),
         F.sum("cnt").over(w_all).alias("n"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     mb = cum.filter(2 * F.col("c") >= F.col("n")).agg(
         F.min("b").alias("medband")
     )
@@ -819,7 +820,7 @@ def q_ml_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the 5-row contingency feeds the column totals, the expected
         # cells AND the X^2 fold
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     ct = counts.agg(
         F.sum("ab").cast("long").alias("ta"),
@@ -1271,7 +1272,7 @@ def q_ml_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         # the <=25005-cell grid feeds the densify, the matrix AND the
         # group sizes — one fact pass
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     bands = grid.select("b").distinct()
     grps = grid.select("g").distinct()
@@ -1292,7 +1293,7 @@ def q_ml_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("c0").over(w_below), F.lit(0))
         .cast("long")
         .alias("below"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     i = mat.alias("i")
     j = mat.alias("j")
     jt = i.join(
@@ -1403,7 +1404,7 @@ def q_ml_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
         # the <=15-cell grid feeds both margins, the total AND the fold
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     rx = cell.groupBy("x").agg(F.sum("o").cast("long").alias("r"))
     cy = cell.groupBy("y").agg(F.sum("o").cast("long").alias("c"))

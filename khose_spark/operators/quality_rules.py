@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.operators.curation import _sql_hash_bucket
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -272,7 +273,7 @@ def q_llm_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         scored.filter(F.col("containment_permille") >= _CONTAIN_PERMILLE)
         .select("id_a", "id_b", "n_common", "n_small", "containment_permille")
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     return out
 
@@ -522,7 +523,7 @@ def q_llm_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("idcg_raw", 4).alias("idcg"),
             F.round(F.col("dcg_raw") / F.col("idcg_raw"), 4).alias("ndcg"),
         )
-    ).localCheckpoint()
+    ).transform(checkpoint)
     tf.unpersist()
     topk.unpersist()
     return out

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
+
 
 LOCAL_THRESHOLD = 1_000_000
 
@@ -56,7 +58,7 @@ def with_global_rank(
     parts = num_partitions or df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"
     )
-    # localCheckpoint() pins the range boundaries: repartitionByRange
+    # checkpoint() pins the range boundaries: repartitionByRange
     # SAMPLES the data per execution, so the counts job and the
     # numbering job would otherwise see (slightly) different
     # partitionings and the offsets would be wrong (same reason
@@ -65,7 +67,7 @@ def with_global_rank(
     # session-pinned SQL-cache entry (the blocks are reclaimed when the
     # result is garbage collected), and freezes the partitioning as hard
     # RDD partitions instead of a re-executable plan.
-    sorted_df = _range_sorted(df, int(parts), *order).localCheckpoint()
+    sorted_df = _range_sorted(df, int(parts), *order).transform(checkpoint)
     pid_df = sorted_df.withColumn("__pid", F.spark_partition_id())
     counts = {
         r["__pid"]: r["cnt"]

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.sqlutil import dec_sum, sql_dec_sum
 from khose_spark.tables import t
@@ -562,7 +563,7 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("timestampFormat", fmt)
         .csv(path)
-        .localCheckpoint()  # feeds the clean agg + the corrupt count
+        .transform(checkpoint)  # feeds the clean agg + the corrupt count
     )
     n_corrupt = back.filter(
         F.col("_corrupt_record").isNotNull()

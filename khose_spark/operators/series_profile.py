@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -948,7 +949,7 @@ def q_ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         F.lag("cents", 1).over(Window.orderBy("d")).alias("z1"),
         F.lag("cents", 2).over(Window.orderBy("d")).alias("z2"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
 
     def _fold(col: str):
         diff = F.col("cents") - F.col(col)

@@ -22,6 +22,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import doc_shingles, shingles
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -166,7 +167,7 @@ def q_llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         cand.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= _MAX_HAMMING)
-        .localCheckpoint()  # near-dup pairs; release the signature cache
+        .transform(checkpoint)  # near-dup pairs; release the signature cache
     )
     sig.unpersist()
     return out

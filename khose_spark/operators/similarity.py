@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark import memo
+from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import _COSINE_ORACLE_CTE
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -1038,7 +1039,7 @@ def _lloyd(spark: SparkSession, sf_dir: str, cent: DataFrame | None = None):
         # the whole PRIOR assignment chain again — the interpreted
         # argmin fold ran ~O(iters²) times (measured 10s -> ~4s at
         # sf0.1).
-        ).localCheckpoint()
+        ).transform(checkpoint)
     return assign, cent
 
 
@@ -1091,7 +1092,7 @@ def q_llm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.element_at("cv", i), 6).alias(f"c{i}")
             for i in range(1, 5)
         ],
-    ).localCheckpoint()  # k-row audit; release both Lloyd caches
+    ).transform(checkpoint)  # k-row audit; release both Lloyd caches
     assign.unpersist()
     cent.unpersist()
     return out
@@ -1392,7 +1393,7 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_members") - F.coalesce("n_dropped", F.lit(0)))
             .alias("n_kept"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     assign.unpersist()
     return out

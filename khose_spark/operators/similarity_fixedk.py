@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark import memo
+from khose_spark.memo import checkpoint
 from khose_spark.operators.similarity import (
     _KM_ITERS,
     _PQ_ORACLE,
@@ -616,7 +617,7 @@ def q_llm_kmeans_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.element_at("cv", i), 6).alias(f"c{i}")
             for i in range(1, 5)
         ],
-    ).localCheckpoint()
+    ).transform(checkpoint)
     assign.unpersist()
     cent.unpersist()
     return out
@@ -688,7 +689,7 @@ def q_ml_silhouette_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "silhouette_avg",
             "n_negative",
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     assign.unpersist()
     return out.orderBy("cluster_id")
@@ -914,7 +915,7 @@ def q_llm_semdedup_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_members") - F.coalesce("n_dropped", F.lit(0)))
             .alias("n_kept"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     assign.unpersist()
     return out

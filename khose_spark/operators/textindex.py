@@ -18,6 +18,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark import memo
+from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import shingle_array
 from khose_spark.registry import query
 from khose_spark.tables import t
@@ -294,7 +296,9 @@ def q_llm_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "tok")
     ).select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "tok")
     out = bpe_merge_rounds(stream, _BPE_ROUNDS)
-    if _doc_count(d, sf_dir) > _BPE_COMPACT_MAX_DOCS:
+    # The mode probe is a footer-only count, memoized per sf_dir so
+    # repeat calls run no extra job.
+    if memo.get(spark, "doc_count", sf_dir, d.count) > _BPE_COMPACT_MAX_DOCS:
         return out
     compact = {
         "spark.sql.adaptive.enabled": "false",
@@ -304,27 +308,13 @@ def q_llm_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         for k, v in compact.items():
             spark.conf.set(k, v)
-        return out.localCheckpoint()  # executes under the compact confs
+        return checkpoint(out)  # executes under the compact confs
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
 
 
 _BPE_COMPACT_MAX_DOCS = 100_000
-
-# Mode-selection count memo, keyed by fixture dir. The count itself is a
-# metadata-only parquet job (rowcount from footers), but re-running it on
-# EVERY invocation was still an extra Spark job on the large path
-# (ADVICE r06 item 4); a given sf_dir's cardinality is immutable for the
-# life of the process, so one probe per dir suffices.
-_DOC_COUNT_MEMO: dict = {}
-
-
-def _doc_count(d: DataFrame, sf_dir: str) -> int:
-    if sf_dir not in _DOC_COUNT_MEMO:
-        _DOC_COUNT_MEMO[sf_dir] = d.count()
-    return _DOC_COUNT_MEMO[sf_dir]
-
 
 def bpe_merge_rounds(stream: DataFrame, rounds: int) -> DataFrame:
     """Build ``rounds`` BPE merge rounds over a (doc_id, pos, tok)
@@ -733,7 +723,7 @@ def q_ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = pred.groupBy("true_lang", "pred_lang").agg(
         F.count(F.lit(1)).alias("n_docs")
-    ).localCheckpoint()  # confusion matrix; release the token cache
+    ).transform(checkpoint)  # confusion matrix; release the token cache
     toks.unpersist()
     return out
 
@@ -902,7 +892,7 @@ def q_llm_rouge_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " DIV (2 * n_eval_bigrams) AS BIGINT)"
             ).alias("recall_permille"),
         )
-        .localCheckpoint()  # eval-set-sized; release the bigram cache
+        .transform(checkpoint)  # eval-set-sized; release the bigram cache
     )
     eval_g.unpersist()
     return out
@@ -998,7 +988,7 @@ def q_llm_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("plen", F.count(F.lit(1)).over(w_phrase))
         .filter(F.col("plen") <= _RAKE_MAX_LEN)
         .select("doc_id", "pid", "pos", "word", "plen")
-        .localCheckpoint()  # feeds the word-stat and phrase branches
+        .transform(checkpoint)  # feeds the word-stat and phrase branches
     )
     wscore = kept.groupBy("word").agg(
         F.expr(
@@ -1184,7 +1174,7 @@ def q_llm_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang_term = (
         lt.groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     term_tot = lang_term.groupBy("term").agg(
         F.sum("c").cast("long").alias("ct")

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -462,7 +463,7 @@ def q_llm_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_terms"),
         F.first("n_s").cast("long").alias("n_tokens"),
         F.round(F.sum(contrib), 4).alias("kl_vs_corpus"),
-    ).localCheckpoint()  # per-source rows; release the term-count cache
+    ).transform(checkpoint)  # per-source rows; release the term-count cache
     st.unpersist()
     return out
 
@@ -561,7 +562,7 @@ def q_llm_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.regr_slope(ln_v, ln_n), 4).alias("heaps_beta"),
         F.round(F.regr_intercept(ln_v, ln_n), 4).alias("heaps_ln_k"),
         F.round(F.regr_r2(ln_v, ln_n), 4).alias("heaps_r2"),
-    ).localCheckpoint()  # per-lang rows; release the ranked cache
+    ).transform(checkpoint)  # per-lang rows; release the ranked cache
     ranked.unpersist()
     return out
 

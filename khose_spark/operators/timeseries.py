@@ -24,6 +24,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
 from khose_spark.registry import query
 from khose_spark.sqlutil import dec_round, dec_sum, sql_dec_sum
 from khose_spark.tables import t
@@ -91,7 +92,7 @@ def q_ts_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return level(coarse, res, F.col("b"))
 
     levels = [level(hourly, "hour", F.col("h")), reagg("day"), reagg("month")]
-    out = reduce(DataFrame.unionAll, levels).localCheckpoint()
+    out = reduce(DataFrame.unionAll, levels).transform(checkpoint)
     hourly.unpersist()
     return out
 
@@ -941,7 +942,7 @@ def q_ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_pairs"),
             F.round(F.corr("a.spend", "b.spend"), 4).alias("acf"),
         )
-        .localCheckpoint()  # (type, lag) rows; release the daily rollup
+        .transform(checkpoint)  # (type, lag) rows; release the daily rollup
     )
     daily.unpersist()
     return out
@@ -1147,7 +1148,7 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type", "n_days", "n_pairs", "theil_sen_slope_cents"
         )
-        .localCheckpoint()  # per-type rows; release the daily rollup
+        .transform(checkpoint)  # per-type rows; release the daily rollup
     )
     daily.unpersist()
     return out
@@ -1513,7 +1514,7 @@ def q_ts_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("excess").desc(), F.col("day").asc())
         .limit(10)
-        .localCheckpoint()  # 10 rows; release the daily rollup
+        .transform(checkpoint)  # 10 rows; release the daily rollup
     )
     daily.unpersist()
     return out
@@ -1877,7 +1878,7 @@ def q_ts_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("d", 1).over(w).alias("d1"),
         F.lag("cents", 7).over(w).alias("snaive_hat"),
         F.lag("d", 7).over(w).alias("d7"),
-    ).localCheckpoint()  # feeds both stacked branches
+    ).transform(checkpoint)  # feeds both stacked branches
     naive = lagged.filter(
         F.col("naive_hat").isNotNull() & (F.col("d") == F.col("d1") + 1)
     ).select(
@@ -2104,7 +2105,7 @@ def q_ts_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("d"),
         )
         .distinct()
-        .localCheckpoint()  # feeds contrib, days, dau, bounds
+        .transform(checkpoint)  # feeds contrib, days, dau, bounds
     )
     days = du.select("d").distinct()
     contrib = du.select(
@@ -2511,7 +2512,7 @@ def q_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the daily rollup is the only shuffle; the CUSUM scan runs on a
     kilobyte relation. first_breach_d is NULL for types that never
     breach (both engines agree on the empty-min convention)."""
-    spine = _daily_spine(spark, sf_dir).localCheckpoint()
+    spine = _daily_spine(spark, sf_dir).transform(checkpoint)
     base = (
         spine.filter(F.col("r") <= _CUSUM_BASE_DAYS)
         .groupBy("event_type")
@@ -2636,7 +2637,7 @@ def q_ts_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     with |i-j| <= w), which drops the per-pair DP to O(nw) without
     changing this plan shape; series length is bounded by the rollup
     resolution, never by fact cardinality."""
-    spine = _daily_spine(spark, sf_dir).localCheckpoint()
+    spine = _daily_spine(spark, sf_dir).transform(checkpoint)
     s1 = spine.select(
         F.col("event_type").alias("type_a"),
         F.col("r").alias("r"),
@@ -2885,7 +2886,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number()
         .over(Window.partitionBy("event_type").orderBy("d"))
         .alias("i"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     stats = idxd.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("cents").cast("long").alias("s"),
@@ -3125,7 +3126,7 @@ def q_ts_pacf2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number()
         .over(Window.partitionBy("event_type").orderBy("d"))
         .alias("i"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     stats = idxd.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("cents").cast("long").alias("s"),
@@ -3303,7 +3304,7 @@ def q_ts_dft_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             .over(Window.partitionBy("event_type").orderBy("d"))
             - 1
         ).alias("i"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     stats = idxd.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("cents").cast("long").alias("s"),
@@ -3470,7 +3471,7 @@ def q_ts_spc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number()
         .over(Window.partitionBy("event_type").orderBy("d"))
         .alias("i"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     cdec = F.col("cents").cast("decimal(19,0)")
     base = (
         idxd.filter(F.col("i") <= 10)
@@ -3696,7 +3697,7 @@ def q_ts_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             (7 * F.col("cents") - F.col("t7")).cast("long").alias("dd"),
             (7 * F.col("cents")).cast("long").alias("x7"),
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     res = ev.groupBy("event_type", "r").agg(
         F.count(F.lit(1)).alias("nr"),
@@ -3974,7 +3975,7 @@ def q_ml_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint()
+        .transform(checkpoint)
     )
     a = daily.select(
         F.col("event_type").alias("type_a"),
@@ -4359,7 +4360,7 @@ def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("avg_rs"),
         )
-        .localCheckpoint()  # feeds the slope fold AND the pivot
+        .transform(checkpoint)  # feeds the slope fold AND the pivot
     )
     lw = F.log(F.col("w").cast("double"))
     lr = F.log("avg_rs")

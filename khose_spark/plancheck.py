@@ -16,13 +16,23 @@ moment the physical strategy does.
 `scripts/gen_planlock.py` renders every registered query's skeleton into
 `plans.lock.json`; `tests/test_plans.py::test_plan_skeleton_lock` fails
 on any drift, forcing plan changes to be explicit, reviewed commits.
+
+A query that materializes eagerly returns a bare ``Scan ExistingRDD``
+stub over its checkpoint. Every eager materialization goes through
+``memo.checkpoint``, and ``record_checkpoints`` registers a hook there
+that records the plan each checkpoint executes. The gates, the lock and
+``python -m khose_spark explain`` read the final one as the query's
+interior, after ``INTERIOR_MARK``.
 """
 
 from __future__ import annotations
 
 import re
+from typing import Callable
 
 from pyspark.sql import DataFrame
+
+from khose_spark import memo
 
 # Join types as they appear inline in plan lines.
 _JOIN_TYPES = re.compile(
@@ -72,8 +82,6 @@ def reset_plan_state(spark) -> None:
     InMemoryRelation; a reused memo after clearCache inlines the raw
     subtree), so both the lock generator and the drift gate reset them
     before every key."""
-    from khose_spark import memo
-
     spark.catalog.clearCache()
     memo.release_all()
 
@@ -92,52 +100,61 @@ def skeleton(df: DataFrame) -> list[str]:
     """Ordered operator-token skeleton of ``df``'s executed plan
     (initial AQE plan — rendered before execution, so deterministic at a
     fixed fixture)."""
-    return skeleton_tokens(df._jdf.queryExecution().executedPlan().toString())
+    return skeleton_tokens(executed_plan(df))
 
 
 # Separator between a query's returned skeleton and the recorded
-# interior (the plan its final localCheckpoint actually executed) in
+# interior (the plan its final checkpoint actually executed) in
 # plans.lock.json entries.
 INTERIOR_MARK = "@checkpoint-interior"
 
 
-class record_checkpoints:
-    """Context manager that patches ``DataFrame.localCheckpoint`` to
-    snapshot the executed-plan string of each checkpointed DataFrame —
-    rendered AT checkpoint time, while the query's caches are still
-    live and spliced in, i.e. the plan the checkpoint actually executes
-    (rendering after the query returns would re-inline the lineage the
-    release pattern has already unpersisted).
+def executed_plan(df: DataFrame) -> str:
+    """``df``'s executed-plan string: the initial AQE plan when rendered
+    before execution, so deterministic at a fixed fixture."""
+    return df._jdf.queryExecution().executedPlan().toString()
 
-    ``.last`` holds the final recorded plan string (None if the query
-    never checkpointed). Only the concrete ``classic`` DataFrame class
-    is patched — it OVERRIDES the base class in Spark 4, so patching
-    the base alone silently no-ops. The patch passes ``*args/**kwargs``
-    through so Spark 4's ``storageLevel`` parameter survives (ADVICE
-    r06 item 2), and is restored on exit even when the query raises.
+
+def formatted_plan(df: DataFrame) -> str:
+    """``df``'s plan as ``df.explain("formatted")`` prints it."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+class record_checkpoints:
+    """Context manager that records, for every ``memo.checkpoint`` run
+    inside the block, ``render(df)`` of the DataFrame being checkpointed.
+
+    The hook renders BEFORE the checkpoint executes, while the query's
+    caches are still live and spliced in: that is the plan the
+    checkpoint actually runs. Rendering after the query returns would
+    re-inline lineage the release pattern has already unpersisted, and
+    after execution AQE renders its final plan instead of the initial
+    one plans.lock.json pins.
+
+    ``.plans`` holds one rendering per checkpoint, in order; ``.last``
+    the final one (None if the block never checkpointed). The hook is
+    unregistered on exit, also when the block raises.
     """
 
+    def __init__(self, render: Callable[[DataFrame], str] = executed_plan):
+        self._render = render
+        self.plans: list[str] = []
+
+    @property
+    def last(self) -> str | None:
+        return self.plans[-1] if self.plans else None
+
+    def _record(self, df: DataFrame) -> None:
+        self.plans.append(self._render(df))
+
     def __enter__(self):
-        try:
-            from pyspark.sql.classic.dataframe import DataFrame as _CDF
-        except ImportError:  # pragma: no cover - older layout
-            from pyspark.sql import DataFrame as _CDF
-        self._cls = _CDF
-        self._orig = _CDF.localCheckpoint
-        self.last: str | None = None
-        rec, orig = self, self._orig
-
-        def recording(df_self, *args, **kwargs):
-            rec.last = (
-                df_self._jdf.queryExecution().executedPlan().toString()
-            )
-            return orig(df_self, *args, **kwargs)
-
-        _CDF.localCheckpoint = recording  # type: ignore[assignment]
+        memo.CHECKPOINT_HOOKS.append(self._record)
         return self
 
     def __exit__(self, *exc):
-        self._cls.localCheckpoint = self._orig  # type: ignore[assignment]
+        memo.CHECKPOINT_HOOKS.remove(self._record)
         return False
 
 
@@ -151,7 +168,7 @@ def audited_plan(spark, fn, sf_dir: str) -> tuple[str, str | None]:
     reset_plan_state(spark)
     with record_checkpoints() as rec:
         df = fn(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString(), rec.last
+    return executed_plan(df), rec.last
 
 
 def full_skeleton(returned: str, interior: str | None) -> list[str]:

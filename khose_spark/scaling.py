@@ -41,6 +41,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from khose_spark.memo import checkpoint
+
 DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
 FACT_KEYS = {
     "orders": ("o_orderkey",),
@@ -191,7 +193,7 @@ def ensure_clustered_dir(
         _l2_normalize(
             _hash_vec(F.concat(F.lit("dir|"), F.col("id")), dim)
         ).alias("dir"),
-    ).localCheckpoint()
+    ).transform(checkpoint)
     staged = (
         emb.withColumn(
             "cluster_id",
@@ -215,7 +217,7 @@ def ensure_clustered_dir(
                 dim,
             ),
         )
-        .localCheckpoint()  # md5 arrays now plain columns, trees stay flat
+        .transform(checkpoint)  # md5 arrays now plain columns, trees stay flat
     )
     scale = F.lit(0.08) + F.lit(0.5) * F.col("u")
     mixed = F.zip_with(
@@ -225,7 +227,7 @@ def ensure_clustered_dir(
     )
     out = (
         staged.withColumn("mixed", mixed)
-        .localCheckpoint()
+        .transform(checkpoint)
         .select(
             *emb.drop("embedding").columns,
             _l2_normalize(F.col("mixed")).cast(elem_type).alias("embedding"),

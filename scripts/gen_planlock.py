@@ -13,10 +13,11 @@ explicit, reviewed regeneration of this file:
 Queries whose registered function materializes eagerly (checkpointing
 operators) lock BOTH halves of their shape: the returned (post-
 checkpoint) plan, then an ``@checkpoint-interior`` marker, then the
-skeleton of the plan the final localCheckpoint actually executed —
-recorded at checkpoint time while the query's caches were live. So the
-drift gate covers the interior of every checkpointed operator, not just
-its `Scan ExistingRDD` stub (ADVICE r06 item 3).
+skeleton of the plan the final ``memo.checkpoint`` actually executed —
+recorded by a ``plancheck.record_checkpoints`` hook before the
+checkpoint ran, while the query's caches were live. So the drift gate
+covers the interior of every checkpointed operator, not just its
+`Scan ExistingRDD` stub (ADVICE r06 item 3).
 """
 
 from __future__ import annotations

@@ -14,6 +14,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from khose_spark import registry  # noqa: E402
+from khose_spark.plancheck import (  # noqa: E402
+    executed_plan,
+    formatted_plan,
+    record_checkpoints,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -156,65 +161,32 @@ def main() -> None:
         "",
         LAYOUT_NOTES,
     ]
-    # Operators that end in an eager localCheckpoint (the cache-
-    # lifecycle release pattern) would render as a bare ExistingRDD
-    # scan. For the AUDIT rendering, checkpoints still EXECUTE for real
-    # (so iterative loops keep their genuine checkpoint-chunked shape —
-    # a no-op here inlined q_graph_bfs to a 9000-operator artifact that
-    # never runs), but the LAST pre-checkpoint DataFrame is recorded,
-    # and when the returned plan is a bare checkpoint scan we render
-    # that recorded interior: the real plan of the query's final job.
-    # (plans.lock.json intentionally pins the registered post-checkpoint
-    # behavior instead.)
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _CDF
-    except ImportError:  # pragma: no cover - older layout
-        from pyspark.sql import DataFrame as _CDF
-
-    _orig_lcp = _CDF.localCheckpoint
-    _last_pre: dict = {}
-
-    def _recording(self, *args, **kwargs):
-        # Snapshot the FORMATTED plan now, while the query's caches are
-        # still live and spliced in — the plan the checkpoint actually
-        # executes (rendering after the query returns would re-inline
-        # the whole lineage, since the release pattern has unpersisted
-        # its intermediates by then). Signature is pass-through so
-        # Spark 4's storageLevel kwarg (and anything future) survives.
-        _last_pre["explained"] = self._sc._jvm.PythonSQLUtils.explainString(
-            self._jdf.queryExecution(), "formatted"
-        )
-        return _orig_lcp(self, *args, **kwargs)
-
-    _CDF.localCheckpoint = _recording  # type: ignore
-
-    try:
-        for key in SHOWCASE:
-            fn = registry.QUERIES[key]
-            doc = (getattr(fn, "__doc__", "") or "").strip()
-            spark.catalog.clearCache()
-            _last_pre.clear()
+    # Operators that end in an eager checkpoint (the cache-lifecycle
+    # release pattern) would render as a bare ExistingRDD scan. The
+    # checkpoints still EXECUTE for real (so iterative loops keep their
+    # genuine checkpoint-chunked shape), but each one's formatted plan
+    # is recorded before it runs, and when the returned plan is a bare
+    # checkpoint scan we render the last recorded one: the real plan of
+    # the query's final job. (plans.lock.json pins the returned plan
+    # AND the interior instead.)
+    for key in SHOWCASE:
+        fn = registry.QUERIES[key]
+        doc = (getattr(fn, "__doc__", "") or "").strip()
+        spark.catalog.clearCache()
+        with record_checkpoints(formatted_plan) as rec:
             df = fn(spark, SF_DIR)
-            final_plan = df._jdf.queryExecution().executedPlan().toString()
-            pre_explained = None
-            if "explained" in _last_pre and final_plan.count("\n") <= 3 and (
-                "ExistingRDD" in final_plan
-            ):
-                pre_explained = _last_pre["explained"]
-            plan = pre_explained or df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            out.append(f"## {key}")
+        final_plan = executed_plan(df)
+        stub = final_plan.count("\n") <= 3 and "ExistingRDD" in final_plan
+        plan = rec.last if stub and rec.last else formatted_plan(df)
+        out.append(f"## {key}")
+        out.append("")
+        if doc:
+            out.append(doc)
             out.append("")
-            if doc:
-                out.append(doc)
-                out.append("")
-            out.append("```")
-            out.append(plan.rstrip())
-            out.append("```")
-            out.append("")
-    finally:
-        _CDF.localCheckpoint = _orig_lcp  # type: ignore
+        out.append("```")
+        out.append(plan.rstrip())
+        out.append("```")
+        out.append("")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "PLANS.md"), "w") as f:
         f.write("\n".join(out))

@@ -92,7 +92,7 @@ def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[str]:
 # time, so by the time a query function RETURNS, the cache must be back
 # where it started. The one sanctioned exception is the session-wide
 # memoized trade-edge relation (graph.py _trade_edges), which the FIRST
-# graph query to need it creates and the rest share; localCheckpoint is
+# graph query to need it creates and the rest share; memo.checkpoint is
 # exempt by design (RDD-level, reclaimed by the ContextCleaner when the
 # driver-side DataFrame is garbage collected — not a pinned SQL cache).
 
@@ -139,7 +139,7 @@ def run_query_cache_checked(key, fn, spark, sf_dir):
     allowed = 1 if key in MEMO_CREATORS else 0
     assert growth <= allowed, (
         f"{key} leaked {growth} SQL-cache entr{'y' if growth == 1 else 'ies'}"
-        " (persist without unpersist before return; use the localCheckpoint-"
+        " (persist without unpersist before return; use the memo.checkpoint-"
         "then-unpersist lifecycle, tests/_parity.py gate)"
     )
     assert after <= MAX_SESSION_CACHE_ENTRIES, (

@@ -4,7 +4,9 @@ a build that fails partway."""
 
 from __future__ import annotations
 
+import ast
 import glob
+import inspect
 import os
 import tempfile
 
@@ -12,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from khose_spark import memo
-from khose_spark.operators import dedup_audit, graph, similarity
+from khose_spark.operators import dedup_audit, graph, similarity, textindex
 from khose_spark.operators import similarity_fixedk as fk
 
 _INDEX_PREFIXES = ("pq", "ivfpq")
@@ -69,7 +71,7 @@ def test_failed_build_leaves_nothing_behind(spark, sf_dir):
         # The codes table and a checkpoint land before the codebook
         # write fails.
         boom = F.expr("raise_error('codebook write failed')")
-        return codes.localCheckpoint(), cb.withColumn("boom", boom)
+        return memo.checkpoint(codes), cb.withColumn("boom", boom)
 
     with pytest.raises(Exception, match="codebook write failed"):
         similarity.build_pq_index(spark, sf_dir, "pqboom", encode)
@@ -92,3 +94,31 @@ def test_miss_frees_entries_of_a_stopped_application(spark, tmp_path):
     assert key not in memo._ENTRIES
     assert not stale.exists()
     memo.release_all()
+
+
+def test_doc_count_is_a_store_entry(spark, sf_dir):
+    memo.release_all()
+    textindex.q_llm_bpe_merges(spark, sf_dir)
+    assert [k for k in memo._ENTRIES if k[2] == "doc_count"]
+    memo.release_all()
+    assert not [k for k in memo._ENTRIES if k[2] == "doc_count"]
+
+
+def test_only_memo_checkpoint_calls_local_checkpoint():
+    """Every eager materialization goes through ``memo.checkpoint``. A
+    direct ``localCheckpoint`` would lock a bare ``Scan ExistingRDD``
+    stub with no recorded interior, and its work would slip past the
+    cartesian, BNLJ and shuffle gates."""
+    lines, start = inspect.getsourcelines(memo.checkpoint)
+    helper = range(start, start + len(lines))
+    pkg = os.path.dirname(os.path.abspath(memo.__file__))
+    refs = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint":
+                refs.append((os.path.relpath(path, pkg), node.lineno))
+    outside = [r for r in refs if r[0] != "memo.py" or r[1] not in helper]
+    assert not outside, f"call memo.checkpoint instead at {outside}"
+    assert len(refs) == 1, refs

@@ -10,6 +10,9 @@ surfacing as a 100× slowdown at scale.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from khose_spark import registry
@@ -536,11 +539,11 @@ MAX_SHUFFLES = {
                                   # EMBEDDED 3x in the plan string by its
                                   # InMemoryTableScans but executes once
                                   # (audited string count: 18)
-    "q_llm_dedup_clusters": 12,   # label propagation localCheckpoints each
+    "q_llm_dedup_clusters": 12,   # label propagation checkpoints each
                                   # round, so the final plan is scan+agg; the
                                   # headroom covers AQE variation in the
                                   # eager pair-generation stage
-    "q_graph_pagerank": 21,       # power iterations localCheckpoint each
+    "q_graph_pagerank": 21,       # power iterations checkpoint each
                                   # round; the combined audit (returned +
                                   # final-round interior, r07) sees the last
                                   # round's contrib agg + node joins with the
@@ -810,15 +813,15 @@ def _audited(spark, key: str) -> tuple[str, str | None]:
 
 
 def _plan(spark, key: str) -> str:
-    # Queries using the cache-release pattern (eager localCheckpoint of
-    # the final result) would otherwise audit as a bare ExistingRDD
+    # Queries using the cache-release pattern (an eager memo.checkpoint
+    # of the final result) would otherwise audit as a bare ExistingRDD
     # scan — and checkpoint-plus-trailing-op queries would audit only
     # the trailing stub — silently exempting their interiors from the
     # cartesian/BNLJ/shuffle gates. Checkpoints still execute for real
     # (iterative loops keep their genuine chunked shape), but the LAST
-    # pre-checkpoint plan is recorded at checkpoint time and audited
-    # ALONGSIDE the returned plan (ADVICE r06 item 3: both halves, not
-    # a bare-scan recovery heuristic).
+    # pre-checkpoint plan is recorded by a memo.checkpoint hook and
+    # audited ALONGSIDE the returned plan (ADVICE r06 item 3: both
+    # halves, not a bare-scan recovery heuristic).
     returned, interior = _audited(spark, key)
     return returned if interior is None else returned + "\n" + interior
 
@@ -1081,6 +1084,14 @@ def test_aqe_splits_skewed_join(spark, sf_dir):
             spark.conf.set(k, v)
 
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _lock() -> dict[str, list[str]]:
+    with open(os.path.join(_REPO, "plans.lock.json")) as f:
+        return json.load(f)
+
+
 def test_plan_skeleton_lock(spark):
     """Registry-wide physical-plan drift gate (plans.lock.json).
 
@@ -1095,17 +1106,9 @@ def test_plan_skeleton_lock(spark):
     plan construction is the expensive part and this keeps it to one
     pass with a full drift report at the end.
     """
-    import json
-    import os
-
     from khose_spark.plancheck import full_skeleton
 
-    lock_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans.lock.json",
-    )
-    with open(lock_path) as f:
-        lock = json.load(f)
+    lock = _lock()
     drift: list[str] = []
     for key in AUDITED:
         if key not in lock:
@@ -1131,3 +1134,63 @@ def test_plan_skeleton_lock(spark):
         "physical-plan drift (review + regenerate plans.lock.json):\n"
         + "\n".join(drift)
     )
+
+
+def test_record_checkpoints_sees_every_checkpoint(spark):
+    """The recorder keeps one plan per ``memo.checkpoint``, its last is
+    the interior plans.lock.json pins, and its hook is gone after the
+    block, also when the block raises."""
+    from khose_spark import memo
+    from khose_spark.operators import graph
+    from khose_spark.plancheck import (
+        INTERIOR_MARK,
+        record_checkpoints,
+        reset_plan_state,
+        skeleton_tokens,
+    )
+
+    key = "q_graph_pagerank"
+    reset_plan_state(spark)
+    with record_checkpoints() as rec:
+        registry.QUERIES[key](spark, SF_DIR)
+    assert memo.CHECKPOINT_HOOKS == []
+    # one checkpoint per power iteration, plus the 20-row answer
+    assert len(rec.plans) == graph._PR_ITERS + 1
+    locked = _lock()[key]
+    assert skeleton_tokens(rec.last) == locked[locked.index(INTERIOR_MARK) + 1 :]
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        with record_checkpoints():
+            raise RuntimeError("build failed")
+    assert memo.CHECKPOINT_HOOKS == []
+
+
+def test_cli_explain_prints_the_checkpoint_interior(tmp_path):
+    """``python -m khose_spark explain`` of a checkpointing key prints
+    the plan its final checkpoint executed after the returned stub. In
+    a subprocess, because the CLI stops its session."""
+    import subprocess
+    import sys
+
+    from khose_spark.plancheck import INTERIOR_MARK, skeleton_tokens
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        TMPDIR=str(tmp_path),
+        SPARK_GRAFT_CPUS="2",
+        KHOSE_DRIVER_MEMORY="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-m", "khose_spark", "explain", "q_graph_pagerank",
+         "--sf-dir", SF_DIR],
+        cwd=_REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    returned, mark, interior = proc.stdout.partition(INTERIOR_MARK)
+    assert mark, proc.stdout[-3000:]
+    assert "Scan ExistingRDD" in returned
+    assert set(skeleton_tokens(interior)) - {"Scan:ExistingRDD"}, interior
