@@ -209,11 +209,7 @@ def run_ingest(spark, sf_dir: str) -> dict:
         parse_envelope,
         stage_event_chunks,
     )
-    from khose_spark.streaming.runtime import (
-        checkpoint_dirs,
-        compact_parquet,
-        ingest_to_parquet,
-    )
+    from khose_spark.streaming.runtime import compact_parquet, ingest_to_parquet
 
     chunks = stage_event_chunks(spark, sf_dir, n_chunks=8, tag="bench_ingest")
     base = tempfile.mkdtemp(prefix="khose_bench_ingest_")
@@ -236,7 +232,7 @@ def run_ingest(spark, sf_dir: str) -> dict:
         spark, warm_sf, n_chunks=1, tag="bench_ingest_warm"
     )
     warm_base = tempfile.mkdtemp(prefix="khose_bench_ingest_warm_")
-    warm_out, warm_ckpt = checkpoint_dirs(warm_base)
+    warm_out, warm_ckpt = os.path.join(warm_base, "out"), os.path.join(warm_base, "ckpt")
     ingest_to_parquet(
         parse_envelope(kinesis_stream(spark, warm_chunks, files_per_trigger=1)),
         warm_out,
@@ -246,7 +242,7 @@ def run_ingest(spark, sf_dir: str) -> dict:
     )
     shutil.rmtree(warm_base, ignore_errors=True)
     shutil.rmtree(warm_chunks, ignore_errors=True)
-    out, ckpt = checkpoint_dirs(base)
+    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
     t0 = time.perf_counter()
     # Fixture events span ~1 month, so "month" is the rate-matched
     # partition granularity here (a day-dir would hold ~3k rows — the

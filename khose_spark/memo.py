@@ -27,10 +27,19 @@ Lifecycle rules, the same for every entry:
   keep one context per restart).
 - **Deterministic release**: ``release_all()`` frees every entry NOW —
   unpersists its storage blocks, drops its catalog tables and removes
-  its directories. bench.py calls it after the timed loop,
-  ``plancheck.reset_plan_state`` before every plan render.
+  its directories, and removes the scratch root (below). bench.py
+  calls it after the timed loop, ``plancheck.reset_plan_state`` before
+  every plan render.
 - **No partial artifacts**: if ``build`` raises, the blocks, tables and
   directories it had created are removed before the error propagates.
+
+Scratch files: ``scratch(sf_dir, name)`` names a directory under this
+process's root ``$TMPDIR/khose_scratch_<pid>`` for the files a key
+writes and reads back (sinks, staged stream chunks, landing zones).
+``release_all`` removes the root, so no caller may hold a scratch path
+across it. An ``atexit`` hook removes the root and every entry's
+directories (files only: the JVM may be gone), so a process that never
+calls ``release_all`` (the CLI, a grading driver) leaves nothing behind.
 
 Mechanics: ``checkpoint(df)`` is the engine's one eager
 materialization: it hands ``df`` to every hook in ``CHECKPOINT_HOOKS``
@@ -51,6 +60,9 @@ OPTIMIZATION_r14.md for the production posture.
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
 import shutil
 import tempfile
 from dataclasses import dataclass, field
@@ -175,7 +187,27 @@ def _free(entry: _Entry) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
+def _tmp_root() -> str:
+    return os.path.join(tempfile.gettempdir(), f"khose_scratch_{os.getpid()}")
+
+
+def scratch(sf_dir: str, name: str) -> str:
+    """Path of scratch directory ``name`` for ``sf_dir`` under this
+    process's scratch root; the caller creates and overwrites it."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    return os.path.join(_tmp_root(), f"{name}_{tag}")
+
+
 def release_all() -> None:
-    """Release every entry in the store."""
+    """Release every entry in the store and remove the scratch root."""
     while _ENTRIES:
         _free(_ENTRIES.pop(next(iter(_ENTRIES))))
+    shutil.rmtree(_tmp_root(), ignore_errors=True)
+
+
+@atexit.register
+def _remove_files_at_exit() -> None:
+    for entry in _ENTRIES.values():
+        for path in entry.dirs:
+            shutil.rmtree(path, ignore_errors=True)
+    shutil.rmtree(_tmp_root(), ignore_errors=True)

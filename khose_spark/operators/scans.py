@@ -2,43 +2,23 @@
 ingest formats in, immutable columnar files out (BASELINE.json north
 star: "streaming ingest ... to immutable storage (Parquet/ORC)").
 
-Sink queries write to a scratch dir under /tmp, read the files back and
-aggregate — the oracle runs the same aggregate on the original table, so
+Sink queries write to the session's scratch directory (``memo.scratch``),
+read the files back and aggregate — the oracle runs the same aggregate on the original table, so
 a lossy roundtrip (schema, values, partition pruning) fails the hash.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from khose_spark.memo import checkpoint
+from khose_spark.memo import checkpoint, scratch
 from khose_spark.registry import query
 from khose_spark.sqlutil import dec_sum, sql_dec_sum
-from khose_spark.tables import t
-
-_SCRATCH = os.path.join(tempfile.gettempdir(), "khose_sinks")
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(_SCRATCH, f"{name}_{tag}")
+from khose_spark.tables import EVENTS_SCHEMA, t
 
 
 _EVENTS_AGG_ORACLE = f"""
@@ -103,7 +83,7 @@ def q_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle aggregates the ORIGINAL table, so the roundtrip must be
     lossless. repartition(4) emulates multi-writer batch output. The
     read back takes the written schema (no inference on ingest)."""
-    path = _scratch(sf_dir, "parquet_roundtrip")
+    path = scratch(sf_dir, "parquet_roundtrip")
     e = t(spark, sf_dir, "events")
     e.repartition(4).write.mode("overwrite").parquet(path)
     return _events_agg(spark.read.schema(e.schema).parquet(path))
@@ -112,7 +92,7 @@ def q_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_sink_orc_roundtrip", oracle=_EVENTS_AGG_ORACLE)
 def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract via ORC (BASELINE.json names ORC explicitly)."""
-    path = _scratch(sf_dir, "orc_roundtrip")
+    path = scratch(sf_dir, "orc_roundtrip")
     e = t(spark, sf_dir, "events")
     e.repartition(4).write.mode("overwrite").orc(path)
     return _events_agg(spark.read.schema(e.schema).orc(path))
@@ -132,7 +112,7 @@ def q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned write (event_type / day) + partition-pruned read
     back: the filter on both partition columns prunes directories — at
     100 TB this is the difference between scanning one day and a year."""
-    path = _scratch(sf_dir, "partitioned")
+    path = scratch(sf_dir, "partitioned")
     e = t(spark, sf_dir, "events").withColumn("d", F.date_format("ts", "yyyy-MM-dd"))
     e.write.mode("overwrite").partitionBy("event_type", "d").parquet(path)
     back = spark.read.parquet(path).filter(
@@ -152,7 +132,7 @@ def q_source_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-format surface: events -> JSON lines -> re-read with the
     EXPLICIT schema (engine law: no inference on ingest, SURVEY.md §1.3).
     Microsecond timestamps are preserved via an explicit format."""
-    path = _scratch(sf_dir, "json_lines")
+    path = scratch(sf_dir, "json_lines")
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     t(spark, sf_dir, "events").write.mode("overwrite").option(
         "timestampFormat", fmt
@@ -164,7 +144,7 @@ def q_source_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_source_csv", oracle=_EVENTS_AGG_ORACLE)
 def q_source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same for CSV with header + explicit timestamp format parsing."""
-    path = _scratch(sf_dir, "csv")
+    path = scratch(sf_dir, "csv")
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     t(spark, sf_dir, "events").write.mode("overwrite").option("header", "true").option(
         "timestampFormat", fmt
@@ -187,8 +167,8 @@ def q_sink_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches the single-table oracle. At 100 TB codec choice is a
     per-table storage policy, not a code change — exactly this option."""
     e = t(spark, sf_dir, "events")
-    zstd_dir = _scratch(sf_dir, "codec_zstd")
-    snappy_dir = _scratch(sf_dir, "codec_snappy")
+    zstd_dir = scratch(sf_dir, "codec_zstd")
+    snappy_dir = scratch(sf_dir, "codec_snappy")
     half = F.col("event_id") % 2
     e.filter(half == 0).write.mode("overwrite").option(
         "compression", "zstd"
@@ -209,7 +189,7 @@ def q_source_jsonl_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     split (gzip is not splittable, so at 100 TB the file count IS the
     read parallelism — many medium files, never one giant archive;
     that's why the write repartitions first)."""
-    path = _scratch(sf_dir, "jsonl_gz")
+    path = scratch(sf_dir, "jsonl_gz")
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     t(spark, sf_dir, "events").repartition(4).write.mode("overwrite").option(
         "timestampFormat", fmt
@@ -247,7 +227,7 @@ def q_source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per task, no shuffle until the final aggregation); XML parsing is
     ~5-10x slower per byte than parquet, which is the point of pinning
     it as an INGEST format, not a storage format."""
-    path = _scratch(sf_dir, "xml_roundtrip")
+    path = scratch(sf_dir, "xml_roundtrip")
     ev = t(spark, sf_dir, "events").select(
         "event_type",
         "value",
@@ -299,7 +279,7 @@ def q_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema in a metastore and passes it explicitly; this operator pins
     the READER semantics those deployments rely on). The parallel
     write/read itself shuffles nothing; only the final aggregate does."""
-    path = _scratch(sf_dir, "schema_evo")
+    path = scratch(sf_dir, "schema_evo")
     ev = t(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -335,7 +315,7 @@ def q_source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     delimiter to quote, so parse is pure positional arithmetic; the
     text read is as parallel as the line count (one task per split),
     and both directions are map-side only."""
-    path = _scratch(sf_dir, "fixed_width")
+    path = scratch(sf_dir, "fixed_width")
     nation = t(spark, sf_dir, "nation")
     lines = nation.select(
         F.concat(
@@ -384,7 +364,7 @@ def q_lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from khose_spark.tables_versioned import commit_snapshot, read_snapshot
 
-    root = _scratch(sf_dir, "time_travel")
+    root = scratch(sf_dir, "time_travel")
     shutil.rmtree(root, ignore_errors=True)
     nation = t(spark, sf_dir, "nation")
     commit_snapshot(nation.filter(F.col("n_regionkey") == 0), root, "r0")
@@ -432,7 +412,7 @@ def q_sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.format("parquet")
         .bucketBy(8, "o_orderkey")
         .sortBy("o_orderkey")
-        .option("path", _scratch(sf_dir, "orders_bj"))
+        .option("path", scratch(sf_dir, "orders_bj"))
         .mode("overwrite")
         .saveAsTable(onames[0])
     )
@@ -441,7 +421,7 @@ def q_sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.format("parquet")
         .bucketBy(8, "l_orderkey")
         .sortBy("l_orderkey")
-        .option("path", _scratch(sf_dir, "lineitem_bj"))
+        .option("path", scratch(sf_dir, "lineitem_bj"))
         .mode("overwrite")
         .saveAsTable(onames[1])
     )
@@ -475,7 +455,7 @@ def q_source_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     caveat."""
     import pandas as pd
 
-    path = _scratch(sf_dir, "json_multiline")
+    path = scratch(sf_dir, "json_multiline")
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     rows_json = t(spark, sf_dir, "events").select(
         F.to_json(
@@ -529,7 +509,7 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     _corrupt_record (checked via the count); clean-row recovery uses
     the usual explicit-schema + timestamp-format laws. One pass each
     way at any scale."""
-    path = _scratch(sf_dir, "csv_malformed")
+    path = scratch(sf_dir, "csv_malformed")
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     ev = t(spark, sf_dir, "events")
     line = F.when(
@@ -626,7 +606,7 @@ def q_lake_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from khose_spark.tables_versioned import commit_snapshot, read_snapshot
 
-    root = _scratch(sf_dir, "snapshot_diff")
+    root = scratch(sf_dir, "snapshot_diff")
     shutil.rmtree(root, ignore_errors=True)
     cust = t(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -975,7 +955,7 @@ def q_lake_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    root = _scratch(sf_dir, "compaction_apply")
+    root = scratch(sf_dir, "compaction_apply")
     shutil.rmtree(root, ignore_errors=True)
     docs = t(spark, sf_dir, "documents")
     commit_snapshot(docs, root, "v1: pre-compaction corpus")
@@ -1116,7 +1096,7 @@ def q_lake_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum,
     )
 
-    root = _scratch(sf_dir, "lake_vacuum")
+    root = scratch(sf_dir, "lake_vacuum")
     shutil.rmtree(root, ignore_errors=True)
     docs = t(spark, sf_dir, "documents")
     commit_snapshot(docs.repartition(4), root, "v1: initial corpus")

@@ -7,11 +7,11 @@ curation funnel over the landed table (BASELINE.json north star:
 with the LLM curation surface).
 
 ``q_stream_curation_e2e_batchsem`` REALLY RUNS the stream (the same
-``trigger(availableNow=True)`` drain the bench ingest gate times — not
-a batch twin of it): documents are staged as a replayable 4-chunk
-stream history, wrapped in the Kinesis record envelope (JSON payload,
-shardId, sequenceNumber), drained through Spark's streaming parquet
-sink (checkpoint WAL + ``_spark_metadata`` manifest = exactly-once
+``runtime.drain`` the bench ingest gate times — not a batch twin of
+it): documents are staged as a replayable 4-chunk stream history,
+wrapped in the same Kinesis record envelope as events
+(``kinesis_stream(..., record="documents")``: JSON payload, shardId,
+sequenceNumber), drained through Spark's streaming parquet sink (checkpoint WAL + ``_spark_metadata`` manifest = exactly-once
 files) into a lang-partitioned landing zone, compacted to one file per
 closed partition, and only then curated. The audit relation prepends a
 stage-0 ``stream_ingest`` row to the funnel's six stages:
@@ -51,9 +51,7 @@ as documented in curation_pipeline.py. Nothing collects to the driver.
 
 from __future__ import annotations
 
-import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,13 +62,14 @@ from khose_spark.operators.curation_pipeline import (
     funnel_audit_rows,
     funnel_one_row,
 )
+from khose_spark.memo import scratch
 from khose_spark.registry import query
 from khose_spark.sources.kinesis_sim import (
-    document_kinesis_stream,
-    parse_document_envelope,
+    kinesis_stream,
+    parse_envelope,
     stage_document_chunks,
 )
-from khose_spark.streaming.runtime import compact_parquet
+from khose_spark.streaming.runtime import compact_parquet, drain
 
 _E2E_ORACLE = f"""
     WITH {_FUNNEL_CTES},
@@ -93,52 +92,39 @@ _E2E_ORACLE = f"""
     """
 
 
-def _zone(sf_dir: str, name: str) -> str:
-    """Per-process scratch dir for a landing/compaction zone — wiped at
-    the start of every run so a stale checkpoint can never disagree
-    with a wiped sink (the streaming-sink idempotence trap)."""
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(),
-        "khose_stream_curation",
-        f"pid{os.getpid()}",
-        f"{name}_{tag}",
-    )
-
-
 def run_corpus_refresh(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Stage → envelope → exactly-once drain → compaction; returns
     (landing_dir, compacted_dir). Shared by the registered key and the
-    layout/convergence tests."""
+    layout/convergence tests. The zones are session scratch
+    (``memo.scratch``), wiped at the start of every run so a stale
+    checkpoint can never disagree with a wiped sink (the streaming-sink
+    idempotence trap)."""
     chunks = stage_document_chunks(spark, sf_dir, n_chunks=4, tag="e2e")
-    land = _zone(sf_dir, "landing")
-    ckpt = _zone(sf_dir, "checkpoint")
-    compacted = _zone(sf_dir, "compacted")
+    land, ckpt, compacted = (
+        scratch(sf_dir, f"refresh_{zone}")
+        for zone in ("landing", "checkpoint", "compacted")
+    )
     for d in (land, ckpt, compacted):
         shutil.rmtree(d, ignore_errors=True)
-    stream = parse_document_envelope(
+    stream = parse_envelope(
         # 2 chunk files per micro-batch: two real multi-file commits
         # through the WAL/manifest protocol, amortizing per-batch fixed
         # cost exactly like the bench ingest loop.
-        document_kinesis_stream(spark, chunks, files_per_trigger=2)
+        kinesis_stream(spark, chunks, files_per_trigger=2, record="documents"),
+        record="documents",
     )
-    (
-        # r14 (VERDICT item 4, guide §2.6): no coalesce(1) — it narrowed
-        # the WHOLE micro-batch (file read + JSON envelope decode +
-        # write) onto one task. The file-stream source yields one split
-        # per chunk file, so each batch now decodes and lands on 2
-        # parallel writers. Landing file count is NOT part of the
-        # contract (stage-0 windows_out counts COMPACTED files, still
-        # one per lang); compaction remains the small-files lever.
+    # r14 (VERDICT item 4, guide §2.6): no coalesce(1) — it narrowed
+    # the WHOLE micro-batch (file read + JSON envelope decode + write)
+    # onto one task. The file-stream source yields one split per chunk
+    # file, so each batch now decodes and lands on 2 parallel writers.
+    # Landing file count is NOT part of the contract (stage-0
+    # windows_out counts COMPACTED files, still one per lang);
+    # compaction remains the small-files lever.
+    drain(
         stream.writeStream.format("parquet")
         .option("path", land)
         .option("checkpointLocation", ckpt)
         .partitionBy("lang")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
     compact_parquet(spark, land, compacted, partition_cols=("lang",))
     return land, compacted

@@ -28,7 +28,9 @@ Config schema (all strings unless noted)::
 Everything is declarative SQL expressions, so the whole pipeline stays
 inside Catalyst/WholeStageCodegen — a config can never introduce a
 Python row loop. Exactly-once delivery comes from the streaming file
-sink's manifest + checkpoint WAL, same as ``runtime.ingest_to_parquet``.
+sink's manifest + checkpoint WAL, same as ``runtime.ingest_to_parquet``;
+``run_pipeline`` drains through the same ``runtime.drain`` and returns
+its per-trigger progress records.
 """
 
 from __future__ import annotations
@@ -38,8 +40,10 @@ from typing import Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from khose_spark.sources.kinesis_sim import file_stream, kinesis_stream, parse_envelope
+from khose_spark.streaming.runtime import drain
 
 
 def load_config(path_or_dict: str | Mapping[str, Any]) -> dict:
@@ -88,10 +92,13 @@ def build_pipeline(spark: SparkSession, config: str | Mapping[str, Any]) -> Data
     return _transform(_source(spark, cfg["source"]), cfg.get("transform"))
 
 
-def run_pipeline(spark: SparkSession, config: str | Mapping[str, Any]) -> None:
+def run_pipeline(
+    spark: SparkSession, config: str | Mapping[str, Any]
+) -> list[StreamingQueryProgress]:
     """Execute the configured pipeline to completion of the available
-    backlog (``availableNow`` trigger — a long-running deployment swaps
-    in a processing-time trigger, nothing else changes)."""
+    backlog (``runtime.drain``'s ``availableNow`` trigger — a
+    long-running deployment swaps in a processing-time trigger, nothing
+    else changes); returns the drain's per-trigger progress records."""
     cfg = load_config(config)
     df = build_pipeline(spark, cfg)
     sink = cfg["sink"]
@@ -99,9 +106,7 @@ def run_pipeline(spark: SparkSession, config: str | Mapping[str, Any]) -> None:
         df.writeStream.format(sink.get("format", "parquet"))
         .option("path", sink["path"])
         .option("checkpointLocation", sink["checkpoint"])
-        .trigger(availableNow=True)
     )
     if pb := sink.get("partition_by"):
         writer = writer.partitionBy(*pb)
-    q = writer.start()
-    q.awaitTermination()
+    return drain(writer)

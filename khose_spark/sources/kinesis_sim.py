@@ -7,37 +7,28 @@ connector from the Spark-Kinesis family (e.g. the spark-sql-kinesis
 connector or Kinesis->Kafka bridging), all of which present a record
 envelope equivalent to the one simulated here.
 
-The simulator stages fixture events as ordered chunk files and replays
-them through Spark's FILE STREAM source wrapped in the Kinesis record
-envelope (shardId, sequenceNumber, data, approximateArrivalTimestamp).
-Everything downstream of the source — parse, transform, window, sink —
-is identical code for real Kinesis, real Kafka, and the simulator;
-that's the point: the envelope is the interface.
+The simulator stages fixture events or documents as ordered chunk
+files and replays them through Spark's FILE STREAM source wrapped in
+the Kinesis record envelope (shardId, sequenceNumber, data,
+approximateArrivalTimestamp). One codec serves both record kinds and
+the Kafka twin: a record kind names its schema and its sequence, shard
+and arrival-time columns, and every envelope encodes and decodes its
+JSON payload the same way. Everything downstream of the source — parse,
+transform, window, sink — is identical code for real Kinesis, real
+Kafka, and the simulator; that's the point: the envelope is the
+interface.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from khose_spark.tables import t
-
-
-def _events_schema():
-    # Lazy: operators.scans lives behind the operators package __init__,
-    # which (via stream_curation) imports this module back.  A module-
-    # level import here breaks any entry point that imports this module
-    # before the operators package (circular partial-init ImportError,
-    # e.g. `import khose_spark.pipeline` standalone).
-    from khose_spark.operators.scans import EVENTS_SCHEMA
-
-    return EVENTS_SCHEMA
-
+from khose_spark.memo import scratch
+from khose_spark.tables import DOCS_SCHEMA, EVENTS_SCHEMA, t
 
 ENVELOPE_SCHEMA = T.StructType(
     [
@@ -53,15 +44,51 @@ _N_SHARDS = 4
 # Explicit microsecond format on BOTH encode and decode — the default
 # JSON timestampFormat truncates to millis, which would silently lose
 # event-time precision through the envelope.
-_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+_JSON_OPTIONS = {"timestampFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS"}
+
+# Record kind -> (schema, sequence column, shard column, arrival-time
+# column). Columns need a SparkContext, so each entry builds them per
+# call. Documents carry no event time of their own: their arrival is a
+# deterministic function of doc_id, so replay is reproducible.
+_RECORDS = {
+    "events": lambda: (
+        EVENTS_SCHEMA, F.col("event_id"), F.col("user_id"), F.col("ts")
+    ),
+    "documents": lambda: (
+        DOCS_SCHEMA,
+        F.col("doc_id"),
+        F.col("doc_id"),
+        F.timestamp_seconds(F.col("doc_id")),
+    ),
+}
 
 
-def _stage_chunks(df, key_col: str, out: str, n_chunks: int) -> str:
-    """Write ``df`` as ``n_chunks`` key-ranged parquet files with
-    mtimes following the part index — the shared staging core of the
-    event and document stream histories."""
+def _encode(schema: T.StructType) -> Column:
+    """A row's fields as UTF-8 JSON bytes — the envelope payload."""
+    payload = F.to_json(F.struct(*schema.fieldNames()), _JSON_OPTIONS)
+    return F.encode(payload, "utf-8")
+
+
+def _decode(envelope: DataFrame, payload: str, record: str) -> DataFrame:
+    """Typed ``record`` rows back from the JSON bytes in column
+    ``payload``, through one struct column named by the kind's initial
+    ("e", "d"). JSON escaping makes text roundtrip byte-exact (no
+    newlines/quotes lost)."""
+    schema, struct = _RECORDS[record]()[0], record[0]
+    parsed = F.from_json(F.decode(payload, "utf-8"), schema, _JSON_OPTIONS)
+    return envelope.select(parsed.alias(struct)).select(f"{struct}.*")
+
+
+def _stage_chunks(
+    spark: SparkSession, sf_dir: str, record: str, n_chunks: int, tag: str
+) -> str:
+    """Write fixture table ``record`` as ``n_chunks`` sequence-ranged
+    parquet files with mtimes following the part index."""
+    out = scratch(sf_dir, f"chunks_{record}_{tag}")
+    sequence = _RECORDS[record]()[1]
     (
-        df.repartitionByRange(n_chunks, key_col)
+        t(spark, sf_dir, record)
+        .repartitionByRange(n_chunks, sequence)
         .write.mode("overwrite")
         .parquet(out)
     )
@@ -81,30 +108,13 @@ def _stage_chunks(df, key_col: str, out: str, n_chunks: int) -> str:
     return out
 
 
-def _chunk_dir(sf_dir: str, tag: str) -> str:
-    # Scope staging per PROCESS: two concurrent test/bench runs with the
-    # same (sf_dir, tag) must not overwrite each other's chunk files or
-    # race the mtime rewrite against an active file-stream reader.
-    return os.path.join(
-        tempfile.gettempdir(),
-        "khose_stream",
-        f"pid{os.getpid()}",
-        f"chunks_{hashlib.md5((sf_dir + tag).encode()).hexdigest()[:8]}",
-    )
-
-
 def stage_event_chunks(
     spark: SparkSession, sf_dir: str, n_chunks: int = 8, tag: str = ""
 ) -> str:
     """Write fixture events as ``n_chunks`` ordered parquet files — the
     replayable 'stream history'. Chunked by event_id range so replay
     order is deterministic."""
-    return _stage_chunks(
-        t(spark, sf_dir, "events"),
-        "event_id",
-        _chunk_dir(sf_dir, tag),
-        n_chunks,
-    )
+    return _stage_chunks(spark, sf_dir, "events", n_chunks, tag)
 
 
 def stage_document_chunks(
@@ -113,28 +123,34 @@ def stage_document_chunks(
     """Documents as a replayable stream history — the corpus-refresh
     ingest shape (q_stream_curation_e2e_batchsem): each chunk is one
     doc_id range, arriving in id order like a crawler's upload batches."""
-    return _stage_chunks(
-        t(spark, sf_dir, "documents"),
-        "doc_id",
-        _chunk_dir(sf_dir, "documents" + tag),
-        n_chunks,
-    )
+    return _stage_chunks(spark, sf_dir, "documents", n_chunks, tag)
 
 
-def file_stream(spark: SparkSession, chunk_dir: str, files_per_trigger: int = 1) -> DataFrame:
-    """Raw event file-stream: one micro-batch per chunk file."""
+def file_stream(
+    spark: SparkSession,
+    chunk_dir: str,
+    files_per_trigger: int = 1,
+    record: str = "events",
+) -> DataFrame:
+    """Raw ``record`` file-stream: one micro-batch per chunk file."""
     return (
-        spark.readStream.schema(_events_schema())
+        spark.readStream.schema(_RECORDS[record]()[0])
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(chunk_dir)
     )
 
 
 def kinesis_stream(
-    spark: SparkSession, chunk_dir: str, files_per_trigger: int = 1
+    spark: SparkSession,
+    chunk_dir: str,
+    files_per_trigger: int = 1,
+    record: str = "events",
 ) -> DataFrame:
-    """Streaming DataFrame in the Kinesis record envelope: each event
-    becomes (shardId, sequenceNumber, data=JSON bytes, arrival ts).
+    """Streaming DataFrame in the Kinesis record envelope
+    (ENVELOPE_SCHEMA): each ``record`` ("events" or "documents")
+    becomes (shardId, sequenceNumber, data=JSON bytes, arrival ts). A
+    corpus-refresh producer uploads documents exactly like an event
+    producer uploads events: shard by key, JSON payload, sequence = id.
 
     ``files_per_trigger`` is the throughput/latency knob: 1 replays one
     chunk per micro-batch (max batches — what the convergence tests
@@ -142,77 +158,20 @@ def kinesis_stream(
     amortize the fixed per-batch cost (incremental planning + WAL +
     manifest commit) over more rows — the setting a throughput-bound
     production ingest runs with."""
-    raw = file_stream(spark, chunk_dir, files_per_trigger=files_per_trigger)
-    payload = F.to_json(
-        F.struct("event_id", "ts", "user_id", "event_type", "value", "props"),
-        {"timestampFormat": _TS_FMT},
-    )
+    schema, sequence, shard, arrival = _RECORDS[record]()
+    raw = file_stream(spark, chunk_dir, files_per_trigger, record)
     return raw.select(
-        F.concat(F.lit("shardId-"), F.lpad((F.col("user_id") % _N_SHARDS).cast("string"), 12, "0")).alias("shardId"),
-        F.col("event_id").cast("string").alias("sequenceNumber"),
-        F.encode(payload, "utf-8").alias("data"),
-        F.col("ts").alias("approximateArrivalTimestamp"),
+        F.concat(F.lit("shardId-"), F.lpad((shard % _N_SHARDS).cast("string"), 12, "0")).alias("shardId"),
+        sequence.cast("string").alias("sequenceNumber"),
+        _encode(schema).alias("data"),
+        arrival.alias("approximateArrivalTimestamp"),
     )
 
 
-def parse_envelope(envelope: DataFrame) -> DataFrame:
-    """Decode a Kinesis-envelope stream back into typed event rows —
+def parse_envelope(envelope: DataFrame, record: str = "events") -> DataFrame:
+    """Decode a Kinesis-envelope stream back into typed ``record`` rows —
     the first stage of every khose pipeline (deserialize JSON)."""
-    parsed = F.from_json(
-        F.decode("data", "utf-8"),
-        _events_schema(),
-        {"timestampFormat": _TS_FMT},
-    )
-    return envelope.select(parsed.alias("e")).select("e.*")
-
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
-def document_kinesis_stream(
-    spark: SparkSession, chunk_dir: str, files_per_trigger: int = 1
-) -> DataFrame:
-    """Documents in the SAME Kinesis record envelope as events — a
-    corpus-refresh producer uploads document records exactly like an
-    event producer does (shard by key, JSON payload, sequence = id).
-    Arrival timestamp is a deterministic function of doc_id so replay
-    is reproducible (documents carry no event time of their own)."""
-    raw = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(chunk_dir)
-    )
-    payload = F.to_json(
-        F.struct("doc_id", "text", "lang", "source", "n_chars")
-    )
-    return raw.select(
-        F.concat(
-            F.lit("shardId-"),
-            F.lpad((F.col("doc_id") % _N_SHARDS).cast("string"), 12, "0"),
-        ).alias("shardId"),
-        F.col("doc_id").cast("string").alias("sequenceNumber"),
-        F.encode(payload, "utf-8").alias("data"),
-        F.timestamp_seconds(F.col("doc_id")).alias(
-            "approximateArrivalTimestamp"
-        ),
-    )
-
-
-def parse_document_envelope(envelope: DataFrame) -> DataFrame:
-    """Decode a Kinesis-envelope DOCUMENT stream back into typed rows —
-    the deserialize stage of the corpus-refresh pipeline. JSON escaping
-    makes the text roundtrip byte-exact (no newlines/quotes lost), which
-    the e2e key's hash check asserts end to end."""
-    parsed = F.from_json(F.decode("data", "utf-8"), DOCS_SCHEMA)
-    return envelope.select(parsed.alias("d")).select("d.*")
+    return _decode(envelope, "data", record)
 
 
 def kafka_stream(spark: SparkSession, bootstrap: str, topic: str) -> DataFrame:
@@ -261,18 +220,15 @@ def kafka_sim_stream(
     event time with timestampType=0 (CreateTime). Everything downstream
     of the source — decode_kafka_value on — is byte-identical code for
     the real source."""
-    raw = file_stream(spark, chunk_dir, files_per_trigger=files_per_trigger)
-    payload = F.to_json(
-        F.struct("event_id", "ts", "user_id", "event_type", "value", "props"),
-        {"timestampFormat": _TS_FMT},
-    )
+    schema, sequence, shard, arrival = _RECORDS["events"]()
+    raw = file_stream(spark, chunk_dir, files_per_trigger)
     return raw.select(
-        F.encode(F.col("user_id").cast("string"), "utf-8").alias("key"),
-        F.encode(payload, "utf-8").alias("value"),
+        F.encode(shard.cast("string"), "utf-8").alias("key"),
+        _encode(schema).alias("value"),
         F.lit(topic).alias("topic"),
-        (F.col("user_id") % _N_SHARDS).cast("int").alias("partition"),
-        F.col("event_id").cast("long").alias("offset"),
-        F.col("ts").alias("timestamp"),
+        (shard % _N_SHARDS).cast("int").alias("partition"),
+        sequence.cast("long").alias("offset"),
+        arrival.alias("timestamp"),
         F.lit(0).alias("timestampType"),
     )
 
@@ -281,9 +237,4 @@ def decode_kafka_value(raw: DataFrame) -> DataFrame:
     """Decode a Kafka-envelope stream's JSON value bytes into typed
     event rows — shared by the production source and the simulator, so
     the tested path IS the production path minus the socket."""
-    parsed = F.from_json(
-        F.decode("value", "utf-8"),
-        _events_schema(),
-        {"timestampFormat": _TS_FMT},
-    )
-    return raw.select(parsed.alias("e")).select("e.*")
+    return _decode(raw, "value", "events")

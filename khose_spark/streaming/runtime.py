@@ -1,13 +1,14 @@
 """Streaming runtime pieces (SURVEY.md §2.9, §3.2 EP3).
 
-Everything here runs with ``trigger(availableNow=True)`` in tests —
-drain-the-backlog-and-stop — which exercises the same incremental
-planner, state store, and commit protocol as a long-running stream.
+Every streaming query here runs through :func:`drain`:
+``trigger(availableNow=True)`` — drain the backlog and stop — which
+exercises the same incremental planner, state store, and commit
+protocol as a long-running stream, and returns the query's per-trigger
+``StreamingQueryProgress`` records (rows, phase durations, state).
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -15,10 +16,26 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 _GRANULARITY_FMT = {"day": "yyyy-MM-dd", "month": "yyyy-MM"}
+
+# Rows per written file, landing and compaction alike: coalesced
+# writers still split oversized outputs.
+_MAX_RECORDS_PER_FILE = 5_000_000
+
+
+def drain(writer: DataStreamWriter) -> list[StreamingQueryProgress]:
+    """Start ``writer``'s query with ``trigger(availableNow=True)``, wait
+    until it has processed the available backlog, and return its
+    progress records, one per trigger (``q.recentProgress``: the last
+    ``spark.sql.streaming.numRecentProgressUpdates``, default 100)."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q.recentProgress
 
 
 def ingest_to_parquet(
@@ -27,8 +44,7 @@ def ingest_to_parquet(
     checkpoint_dir: str,
     partition_granularity: str = "day",
     coalesce_to: int | None = None,
-    max_records_per_file: int = 5_000_000,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """khose's defining pipeline: stream -> immutable, hive-partitioned
     parquet, EXACTLY ONCE (BASELINE.json: "streaming ingest ... to
     immutable storage").
@@ -49,25 +65,24 @@ def ingest_to_parquet(
     - ``coalesce_to``: narrow-merge each micro-batch to N writer tasks
       (N small => one file per partition-dir per batch). Leave None for
       high-volume streams where per-task parallel writes are wanted.
-    - ``max_records_per_file``: upper bound per file, so coalesced
-      writers still split oversized outputs.
+    - every file is capped at ``_MAX_RECORDS_PER_FILE`` rows, so
+      coalesced writers still split oversized outputs.
     - For files that are ALREADY landed too small, see
       :func:`compact_parquet` — the maintenance pass that rewrites
-      closed partitions to target-sized files off the hot path."""
+      closed partitions to target-sized files off the hot path.
+
+    Returns the drain's per-trigger progress records."""
     bucket = F.date_format("ts", _GRANULARITY_FMT[partition_granularity])
     src = events_stream.withColumn("d", bucket)
     if coalesce_to is not None:
         src = src.coalesce(coalesce_to)
-    q = (
+    return drain(
         src.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
         .partitionBy("event_type", "d")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 def compact_parquet(
@@ -75,11 +90,10 @@ def compact_parquet(
     src_dir: str,
     dst_dir: str,
     partition_cols: tuple[str, ...] = ("event_type", "d"),
-    max_records_per_file: int = 5_000_000,
 ) -> None:
     """Small-files compaction: rewrite a landed (hive-partitioned)
     parquet dataset with one writer task per partition directory, each
-    file capped at ``max_records_per_file`` rows. This is the standard
+    file capped at ``_MAX_RECORDS_PER_FILE`` rows. This is the standard
     maintenance companion of any streaming file sink — the stream lands
     micro-batch-sized files with exactly-once guarantees; compaction
     later rewrites CLOSED partitions (yesterday's day-dirs) into
@@ -91,7 +105,7 @@ def compact_parquet(
         spark.read.parquet(src_dir)
         .repartition(*[F.col(c) for c in partition_cols])
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
         .partitionBy(*partition_cols)
         .parquet(dst_dir)
     )
@@ -101,17 +115,14 @@ def run_stream_to_memory(
     df: DataFrame,
     query_name: str,
     output_mode: str = "complete",
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Drain a (finite) streaming DataFrame into an in-memory table for
-    test assertions."""
-    q = (
+    test assertions; returns the drain's progress records."""
+    return drain(
         df.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
 
 _SPEND_STATE_SCHEMA = T.StructType([T.StructField("total", T.DoubleType())])
@@ -160,7 +171,3 @@ def stateful_running_spend(events_stream: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def checkpoint_dirs(base: str) -> tuple[str, str]:
-    """(out_dir, checkpoint_dir) pair under a base scratch dir."""
-    return os.path.join(base, "out"), os.path.join(base, "ckpt")

@@ -28,6 +28,29 @@ TABLES = (
     "embeddings",
 )
 
+# The typed rows the stream sources carry (sources/kinesis_sim.py) and
+# the explicit read schema of the text-format ingest keys.
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+DOCS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("source", T.StringType()),
+        T.StructField("n_chars", T.LongType()),
+    ]
+)
+
 
 def _fingerprint(path: str) -> str | None:
     """``os.stat`` of ``path`` plus the sorted (name, size, mtime_ns) of

@@ -54,12 +54,15 @@ def test_release_all_leaves_no_artifacts(spark, sf_dir):
     assert len(_index_tables(spark)) == 6
     pinned = {i for e in memo._ENTRIES.values() for i in e.rdds}
     assert pinned, "checkpoint memos recorded no RDD blocks"
+    probe = memo.scratch(sf_dir, "probe")
+    os.makedirs(probe)
 
     memo.release_all()
     assert _index_dirs() - dirs_before == set()
     assert _index_tables(spark) == set()
     assert not pinned & _persisted_ids(spark)
     assert not memo._ENTRIES
+    assert not os.path.exists(os.path.dirname(probe))
 
 
 def test_failed_build_leaves_nothing_behind(spark, sf_dir):
@@ -122,3 +125,44 @@ def test_only_memo_checkpoint_calls_local_checkpoint():
     outside = [r for r in refs if r[0] != "memo.py" or r[1] not in helper]
     assert not outside, f"call memo.checkpoint instead at {outside}"
     assert len(refs) == 1, refs
+
+
+def test_process_exit_leaves_no_scratch(sf_dir, tmp_path):
+    """A process that never calls ``release_all`` (the CLI, a grading
+    driver) still leaves no ``khose_*`` file in its temp dir: the exit
+    hook removes the scratch root (sink files, staged chunks, landing
+    zones) and every entry's directories (the PQ index)."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import os, sys
+sys.path.insert(0, {repo!r})
+from khose_spark import registry
+from khose_spark.session import get_spark
+registry.load_all()
+spark = get_spark("khose-exit-test")
+for key in ("q_llm_ann_pq_indexed_fixedk", "q_stream_curation_e2e_batchsem",
+            "q_sink_parquet_roundtrip"):
+    registry.QUERIES[key](spark, {sf_dir!r}).collect()
+print("BEFORE EXIT", sorted(n for n in os.listdir({str(tmp_path)!r})
+                            if n.startswith("khose_")))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        TMPDIR=str(tmp_path),
+        SPARK_GRAFT_CPUS="2",
+        KHOSE_DRIVER_MEMORY="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "khose_pqf_" in proc.stdout, proc.stdout  # there was something to remove
+    assert not glob.glob(os.path.join(tmp_path, "khose_*"))

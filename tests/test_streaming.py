@@ -9,6 +9,9 @@ and the custom stateful operator.
 
 from __future__ import annotations
 
+import ast
+import glob
+import inspect
 import os
 import shutil
 import tempfile
@@ -17,9 +20,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from khose_spark.operators.streaming import sessionize_batch, tumbling_hourly
-from khose_spark.sources import kinesis_stream, parse_envelope, stage_event_chunks
-from khose_spark.sources.kinesis_sim import file_stream
+from khose_spark.sources import (
+    ENVELOPE_SCHEMA,
+    kinesis_stream,
+    parse_envelope,
+    stage_event_chunks,
+)
+from khose_spark.sources.kinesis_sim import file_stream, stage_document_chunks
 from khose_spark.streaming import (
+    drain,
     ingest_to_parquet,
     run_stream_to_memory,
     stateful_running_spend,
@@ -108,7 +117,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         "props": "{}",
     }
 
-    def drain():
+    def run():
         stream = (
             spark.readStream.schema(
                 "event_id long, ts timestamp, user_id long, event_type string, "
@@ -120,27 +129,24 @@ def test_watermark_drops_late_rows(spark, tmp_path):
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.col("w.start").alias("ws"), "event_type", "n")
         )
-        q = (
+        drain(
             stream.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     # run 1: on-time rows advance event time to +300min -> wm = +180min
     # (microsecond coercion: Spark's schema-ed reader rejects NANOS)
     pd.DataFrame([mk(1, 0, "a"), mk(2, 60, "a"), mk(3, 300, "a")]).to_parquet(
         chunk_dir / "c0.parquet", coerce_timestamps="us"
     )
-    drain()
+    run()
     # run 2: a LATE row at +1min — 299min behind the persisted watermark
     pd.DataFrame([mk(4, 1, "late"), mk(5, 310, "b")]).to_parquet(
         chunk_dir / "c1.parquet", coerce_timestamps="us"
     )
-    drain()
+    run()
     out = spark.read.parquet(out_dir).toPandas()
     assert "late" not in set(out["event_type"]), out
     # the on-time rows in closed windows did get emitted
@@ -243,25 +249,96 @@ def test_exactly_once_sink_crash_recovery(spark, sf_dir, chunks):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_kinesis_envelope_roundtrip(spark, sf_dir, chunks):
-    """Envelope encode -> parse restores typed events exactly."""
-    parsed = parse_envelope(kinesis_stream(spark, chunks))
-    agg = parsed.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("event_id").alias("id_sum"),
-        F.max("ts").alias("max_ts"),
+@pytest.mark.parametrize("record", ["events", "documents"])
+def test_kinesis_envelope_roundtrip(spark, sf_dir, chunks, record):
+    """Envelope encode -> parse restores typed rows exactly, for both
+    record kinds: every column of every row, so document text
+    roundtrips byte for byte. The envelope has ENVELOPE_SCHEMA's
+    columns and types."""
+    if record == "documents":
+        chunks = stage_document_chunks(spark, sf_dir, tag="roundtrip")
+    envelope = kinesis_stream(spark, chunks, record=record)
+    assert [(f.name, f.dataType) for f in envelope.schema] == [
+        (f.name, f.dataType) for f in ENVELOPE_SCHEMA
+    ]
+    run_stream_to_memory(
+        parse_envelope(envelope, record=record), f"t_kinesis_{record}", "append"
     )
-    run_stream_to_memory(agg, "t_kinesis", "complete")
-    twin = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("event_id").alias("id_sum"),
-            F.max("ts").alias("max_ts"),
-        )
+    got = spark.table(f"t_kinesis_{record}")
+    twin = t(spark, sf_dir, record)
+    assert got.schema.simpleString() == twin.schema.simpleString()
+    assert got.count() == twin.count() > 0
+    assert got.exceptAll(twin).count() == 0, "a decoded row differs from its source"
+    assert twin.exceptAll(got).count() == 0, "a source row was not decoded"
+
+
+def test_drains_return_their_progress(spark, sf_dir, chunks, tmp_path):
+    """``ingest_to_parquet`` and ``run_pipeline`` return their drain's
+    per-trigger progress records: the input rows sum to the rows read
+    and landed, and every trigger reports its write, WAL and commit
+    phases."""
+    from khose_spark.pipeline import run_pipeline
+
+    events = t(spark, sf_dir, "events")
+    landed = str(tmp_path / "landed")
+    ingest = ingest_to_parquet(
+        parse_envelope(kinesis_stream(spark, chunks)),
+        landed,
+        str(tmp_path / "landed_ckpt"),
     )
-    assert_frames_equal(spark.table("t_kinesis"), twin, "kinesis envelope")
+    pipeline = run_pipeline(
+        spark,
+        {
+            "source": {"kind": "kinesis_sim", "path": chunks},
+            "transform": {"filter": "value > 0"},
+            "sink": {
+                "path": str(tmp_path / "pipeline"),
+                "checkpoint": str(tmp_path / "pipeline_ckpt"),
+            },
+        },
+    )
+    for progress in (ingest, pipeline):
+        assert progress
+        for p in progress:
+            assert {"addBatch", "walCommit", "commitOffsets"} <= set(p.durationMs)
+    n_events = events.count()
+    assert sum(p.numInputRows for p in ingest) == n_events
+    assert spark.read.parquet(landed).count() == n_events
+    assert sum(p.numInputRows for p in pipeline) == n_events
+    assert (
+        spark.read.parquet(str(tmp_path / "pipeline")).count()
+        == events.filter("value > 0").count()
+    )
+
+
+def test_only_drain_triggers_available_now():
+    """Every ``trigger(availableNow=True)`` in the product, the tests,
+    the scripts and bench.py is the one inside ``runtime.drain``, so
+    every drain returns its progress records."""
+    from khose_spark.streaming import runtime
+
+    lines, start = inspect.getsourcelines(drain)
+    helper = range(start, start + len(lines))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(repo, "bench.py")]
+    for pattern in ("khose_spark/**/*.py", "tests/**/*.py", "scripts/**/*.py"):
+        paths += glob.glob(os.path.join(repo, pattern), recursive=True)
+    calls = []
+    for path in sorted(paths):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "trigger"
+                and any(k.arg == "availableNow" for k in node.keywords)
+            ):
+                calls.append((os.path.relpath(path, repo), node.lineno))
+    home = os.path.relpath(runtime.__file__, repo)
+    outside = [c for c in calls if c[0] != home or c[1] not in helper]
+    assert not outside, f"drain through runtime.drain instead at {outside}"
+    assert len(calls) == 1, calls
 
 
 def test_stateful_running_spend(spark, sf_dir, chunks):
@@ -367,7 +444,7 @@ def test_stream_stream_left_join_emits_unmatched(spark, sf_dir, tmp_path):
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     SENTINEL_ID = 10**12
 
-    def drain():
+    def run():
         clicks = (
             file_stream(spark, chunks)
             .filter(F.col("event_type") == "click")
@@ -390,17 +467,14 @@ def test_stream_stream_left_join_emits_unmatched(spark, sf_dir, tmp_path):
             F.col("c.event_id").alias("click_id"),
             F.col("p.event_id").alias("purchase_id"),
         )
-        q = (
+        drain(
             joined.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
-    drain()  # run 1: inner matches emit; unmatched clicks still in state
+    run()  # run 1: inner matches emit; unmatched clicks still in state
     max_ts = t(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
 
     def sentinel_file(stage: int) -> None:
@@ -421,9 +495,9 @@ def test_stream_stream_left_join_emits_unmatched(spark, sf_dir, tmp_path):
         ).to_parquet(f"{chunks}/part-zz-s{stage}.parquet", coerce_timestamps="us")
 
     sentinel_file(0)
-    drain()  # run 2: both watermark nodes advance at batch END
+    run()  # run 2: both watermark nodes advance at batch END
     sentinel_file(1)
-    drain()  # run 3: a batch runs against the advanced watermark -> flush
+    run()  # run 3: a batch runs against the advanced watermark -> flush
 
     got = (
         spark.read.parquet(out_dir)
@@ -810,16 +884,13 @@ def _soak_body(
                     "n",
                 )
             )
-            q = (
+            wave_progress = drain(
                 agg.writeStream.format("parquet")
                 .option("path", agg_out)
                 .option("checkpointLocation", agg_ckpt)
                 .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
-            progresses.extend(_json.loads(p.json) for p in q.recentProgress)
+            progresses.extend(_json.loads(p.json) for p in wave_progress)
 
             # exactly-once partitioned ingest sink rides along (coarser
             # batching — throughput config), compacted after every wave
