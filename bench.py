@@ -202,8 +202,8 @@ def run_ingest(spark, sf_dir: str) -> dict:
     parquet sink). Staging the fixture as chunk files is setup, not
     ingest — the clock starts at stream launch."""
     import shutil
-    import tempfile
 
+    from khose_spark.memo import scratch
     from khose_spark.sources.kinesis_sim import (
         kinesis_stream,
         parse_envelope,
@@ -212,7 +212,11 @@ def run_ingest(spark, sf_dir: str) -> dict:
     from khose_spark.streaming.runtime import compact_parquet, ingest_to_parquet
 
     chunks = stage_event_chunks(spark, sf_dir, n_chunks=8, tag="bench_ingest")
-    base = tempfile.mkdtemp(prefix="khose_bench_ingest_")
+    # Scratch dirs are cleared first: the gate's rerun drains the same
+    # sf_dir again, and a reused streaming checkpoint would resume and
+    # land nothing.
+    base = scratch(sf_dir, "bench_ingest")
+    shutil.rmtree(base, ignore_errors=True)
     # Warm the STREAMING code path before the clocked drain (r12): the
     # first streaming query in a session pays one-time codegen/state-
     # store init that measured 2x-4x the whole steady-state drain
@@ -231,7 +235,8 @@ def run_ingest(spark, sf_dir: str) -> dict:
     warm_chunks = stage_event_chunks(
         spark, warm_sf, n_chunks=1, tag="bench_ingest_warm"
     )
-    warm_base = tempfile.mkdtemp(prefix="khose_bench_ingest_warm_")
+    warm_base = scratch(warm_sf, "bench_ingest_warm")
+    shutil.rmtree(warm_base, ignore_errors=True)
     warm_out, warm_ckpt = os.path.join(warm_base, "out"), os.path.join(warm_base, "ckpt")
     ingest_to_parquet(
         parse_envelope(kinesis_stream(spark, warm_chunks, files_per_trigger=1)),

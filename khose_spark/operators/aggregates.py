@@ -13,7 +13,13 @@ from pyspark.sql import functions as F
 from khose_spark.memo import checkpoint
 from khose_spark.operators.curation import _sql_hash_bucket, hash_bucket
 from khose_spark.registry import query
-from khose_spark.sqlutil import dec_round, dec_sum, sql_dec_round, sql_dec_sum
+from khose_spark.sqlutil import (
+    cents,
+    dec_round,
+    dec_sum,
+    sql_dec_round,
+    sql_dec_sum,
+)
 from khose_spark.tables import t
 
 
@@ -876,10 +882,7 @@ def q_agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")
-            ).alias("rev")
+            F.sum(cents(F.col("o_totalprice"))).alias("rev")
         )
     )
     bands = per_cust.groupBy(
@@ -973,10 +976,7 @@ def q_agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")
-            ).alias("x")
+            F.sum(cents(F.col("o_totalprice"))).alias("x")
         )
         .join(
             F.broadcast(
@@ -1064,10 +1064,7 @@ def q_agg_atkinson(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")
-            ).alias("x")
+            F.sum(cents(F.col("o_totalprice"))).alias("x")
         )
     )
     return rev.agg(

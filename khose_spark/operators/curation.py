@@ -522,6 +522,36 @@ _NEG_K = 3  # negatives per query document
 _NEG_POOL_BUCKETS = 10  # candidate pool = md5 bucket < 10 (~10% of corpus)
 
 
+def _rank_negatives(d: DataFrame, pool: DataFrame) -> DataFrame:
+    """(query_id, rk, neg_id, neg_lang): every 10th document of ``d`` is
+    a query; its _NEG_K cross-language negatives from the broadcast
+    (neg_id, neg_lang) ``pool`` rank by md5(query#candidate), id
+    tiebreak."""
+    queries = d.filter(F.col("doc_id") % 10 == 0).select(
+        F.col("doc_id").alias("query_id"), F.col("lang").alias("q_lang")
+    )
+    scored = queries.join(
+        F.broadcast(pool), F.col("neg_lang") != F.col("q_lang")
+    ).select(
+        "query_id",
+        "neg_id",
+        "neg_lang",
+        F.md5(
+            F.concat(
+                F.col("query_id").cast("string"),
+                F.lit("#"),
+                F.col("neg_id").cast("string"),
+            )
+        ).alias("h"),
+    )
+    w = Window.partitionBy("query_id").orderBy("h", "neg_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w).cast("int"))
+        .filter(F.col("rk") <= _NEG_K)
+        .select("query_id", "rk", "neg_id", "neg_lang")
+    )
+
+
 @query(
     "q_llm_negative_sampling",
     oracle=f"""
@@ -563,32 +593,10 @@ def q_llm_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a WindowGroupLimit. The hash ranking is the only compute — pure
     map-side string work."""
     d = t(spark, sf_dir, "documents")
-    queries = d.filter(F.col("doc_id") % 10 == 0).select(
-        F.col("doc_id").alias("query_id"), F.col("lang").alias("q_lang")
-    )
     pool = d.filter(
         hash_bucket(F.col("doc_id")) < _NEG_POOL_BUCKETS
     ).select(F.col("doc_id").alias("neg_id"), F.col("lang").alias("neg_lang"))
-    scored = queries.join(
-        F.broadcast(pool), F.col("neg_lang") != F.col("q_lang")
-    ).select(
-        "query_id",
-        "neg_id",
-        "neg_lang",
-        F.md5(
-            F.concat(
-                F.col("query_id").cast("string"),
-                F.lit("#"),
-                F.col("neg_id").cast("string"),
-            )
-        ).alias("h"),
-    )
-    w = Window.partitionBy("query_id").orderBy("h", "neg_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= _NEG_K)
-        .select("query_id", "rk", "neg_id", "neg_lang")
-    )
+    return _rank_negatives(d, pool)
 
 
 _NEG_FIXED_POOL = 1000  # fixed-pool twin: constant broadcastable size
@@ -642,9 +650,6 @@ def q_llm_negative_sampling_fixedpool(
     top-3 via WindowGroupLimit. At 100 TB: one scan + a ~50 KB
     broadcast + a bounded window."""
     d = t(spark, sf_dir, "documents")
-    queries = d.filter(F.col("doc_id") % 10 == 0).select(
-        F.col("doc_id").alias("query_id"), F.col("lang").alias("q_lang")
-    )
     pool = (
         d.select(
             "doc_id",
@@ -657,26 +662,7 @@ def q_llm_negative_sampling_fixedpool(
             F.col("doc_id").alias("neg_id"), F.col("lang").alias("neg_lang")
         )
     )
-    scored = queries.join(
-        F.broadcast(pool), F.col("neg_lang") != F.col("q_lang")
-    ).select(
-        "query_id",
-        "neg_id",
-        "neg_lang",
-        F.md5(
-            F.concat(
-                F.col("query_id").cast("string"),
-                F.lit("#"),
-                F.col("neg_id").cast("string"),
-            )
-        ).alias("h"),
-    )
-    w = Window.partitionBy("query_id").orderBy("h", "neg_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= _NEG_K)
-        .select("query_id", "rk", "neg_id", "neg_lang")
-    )
+    return _rank_negatives(d, pool)
 
 
 _SPAN_LEN = 3  # masked-span length (T5-style)

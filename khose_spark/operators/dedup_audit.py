@@ -19,13 +19,21 @@ MinHash→band→verify pipeline hash-checkable end to end:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark import memo
 from khose_spark.memo import checkpoint
-from khose_spark.operators.llm import doc_shingles, shingle_array, shingles
+from khose_spark.operators.llm import (
+    all_pairs_overlap,
+    doc_shingles,
+    jaccard,
+    shingle_array,
+    shingles,
+    sized_pairs,
+)
 from khose_spark.registry import query
+from khose_spark.sqlutil import cents
 from khose_spark.tables import t
 
 _N_HASHES = 16
@@ -102,12 +110,11 @@ def _det_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo.get(spark, "minhash_signatures", sf_dir, build)
 
 
-def _band_candidates(sig: DataFrame) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing at least one full band.
-    One explode to (doc, band_id, band row values) + one equi-join
-    shuffle on the band key — linear candidate generation, no all-pairs."""
+def _bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key): one row per signature band, the key
+    the band's _BAND_ROWS slots joined by "|"."""
     n_bands = _N_HASHES // _BAND_ROWS
-    bands = sig.select(
+    return sig.select(
         "doc_id",
         F.explode(
             F.array(
@@ -127,6 +134,13 @@ def _band_candidates(sig: DataFrame) -> DataFrame:
             )
         ).alias("b"),
     ).select("doc_id", "b.band_id", "b.band_key")
+
+
+def _band_candidates(sig: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing at least one full band.
+    One explode to (doc, band_id, band row values) + one equi-join
+    shuffle on the band key — linear candidate generation, no all-pairs."""
+    bands = _bands(sig)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -192,6 +206,36 @@ def q_llm_minhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def _band_recall(spark: SparkSession, sf_dir: str, truth: Column) -> DataFrame:
+    """One audit row (n_exact, n_candidates, n_hit, recall_permille):
+    how many all-pairs shingle-overlap pairs meeting ``truth`` (over
+    n_common/na/nb) the 8x2 band join proposes; 1000 when the truth set
+    is empty."""
+    sh = doc_shingles(spark, sf_dir)
+    exact = (
+        all_pairs_overlap(sh).filter(truth).select("id_a", "id_b").persist()
+    )
+    sig = _det_signatures(spark, sf_dir)
+    cand = _band_candidates(sig).persist()
+    hit = exact.join(cand, ["id_a", "id_b"], "left_semi")
+    n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
+    n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
+    n_hit = hit.agg(F.count(F.lit(1)).alias("n_hit"))
+    row = n_exact.crossJoin(F.broadcast(n_cand)).crossJoin(F.broadcast(n_hit))
+    recall = F.when(F.col("n_exact") == 0, F.lit(1000).cast("long")).otherwise(
+        F.expr("(n_hit * 2000 + n_exact) DIV (2 * n_exact)").cast("long")
+    )
+    # Eagerly collapse to the single audit row, then release all four
+    # cached intermediates — this query pinned the largest share of
+    # executor memory across a full-suite session (ADVICE round 4).
+    out = row.select(
+        "n_exact", "n_candidates", "n_hit", recall.alias("recall_permille")
+    ).transform(checkpoint)
+    for df in (sh, exact, sig, cand):
+        df.unpersist()
+    return out
+
+
 @query(
     "q_llm_lsh_recall_audit",
     oracle=f"""
@@ -242,49 +286,7 @@ def q_llm_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: truth set via shingle equi-join (the verify tier), candidates
     via the 8×2 band join — both linear-cost; the audit joins two pair
     lists and reduces to one row."""
-    d = t(spark, sf_dir, "documents")
-    sh = doc_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    exact = (
-        inter.join(sa, "id_a").join(sb, "id_b").filter(jac >= 0.8)
-        .select("id_a", "id_b")
-        .persist()
-    )
-    sig = _det_signatures(spark, sf_dir)
-    cand = _band_candidates(sig).persist()
-    hit = exact.join(cand, ["id_a", "id_b"], "left_semi")
-    n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-    n_hit = hit.agg(F.count(F.lit(1)).alias("n_hit"))
-    row = n_exact.crossJoin(F.broadcast(n_cand)).crossJoin(F.broadcast(n_hit))
-    recall = F.when(F.col("n_exact") == 0, F.lit(1000).cast("long")).otherwise(
-        F.expr("(n_hit * 2000 + n_exact) DIV (2 * n_exact)").cast("long")
-    )
-    # Eagerly collapse to the single audit row, then release all four
-    # cached intermediates — this query pinned the largest share of
-    # executor memory across a full-suite session (ADVICE round 4).
-    out = row.select(
-        "n_exact", "n_candidates", "n_hit", recall.alias("recall_permille")
-    ).transform(checkpoint)
-    for df in (sh, exact, sig, cand):
-        df.unpersist()
-    return out
+    return _band_recall(spark, sf_dir, jaccard() >= 0.8)
 
 
 _CDC_MOD = 16  # expected chunk length ~16 words
@@ -899,30 +901,6 @@ def banded_delta_flags(sig: DataFrame) -> DataFrame:
     delta_sig = sig.filter(F.col("doc_id") % 5 == 0)
     base_sig = sig.filter(F.col("doc_id") % 5 != 0)
 
-    n_bands = _N_HASHES // _BAND_ROWS
-
-    def _bands(s: DataFrame) -> DataFrame:
-        return s.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"s{b * _BAND_ROWS + r}")
-                                    for r in range(_BAND_ROWS)
-                                ],
-                            ).alias("band_key"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("b"),
-        ).select("doc_id", "b.band_id", "b.band_key")
-
     cand = (
         _bands(delta_sig)
         .alias("d")
@@ -1064,9 +1042,7 @@ def q_er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey",
         "p_brand",
         "p_size",
-        (F.col("p_retailprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("price_cents"),
+        cents(F.col("p_retailprice")).alias("price_cents"),
     )
     w = Window.partitionBy("p_name").orderBy(
         F.col("price_cents").desc(), F.col("p_partkey").asc()
@@ -1590,28 +1566,7 @@ def q_llm_band_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy-bounded, zero pair enumeration — the audit of the
     quadratic mass costs nothing quadratic itself."""
     sig = _det_signatures(spark, sf_dir)
-    n_bands = _N_HASHES // _BAND_ROWS
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"s{b * _BAND_ROWS + r}")
-                                for r in range(_BAND_ROWS)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_id", "b.band_key")
-    buckets = bands.groupBy("band_id", "band_key").agg(
+    buckets = _bands(sig).groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).alias("s")
     )
     return (
@@ -1774,12 +1729,9 @@ _SQL_CAND_INTER = """
 """
 
 
-def _candidate_intersections(
-    cand: DataFrame, sh: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(inter, sizes) computed over candidate pairs only: inter =
-    (id_a, id_b, n_common) via a candidate-scoped shingle equi-join,
-    sizes = per-doc distinct shingle counts. Mirrors _SQL_CAND_INTER."""
+def _candidate_overlap(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(id_b, id_a, n_common, na, nb) over candidate pairs only, via a
+    candidate-scoped shingle equi-join. Mirrors _SQL_CAND_INTER."""
     a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
     b = sh.select(
         F.col("doc_id").alias("b_doc"), F.col("shingle").alias("shingle_b")
@@ -1794,8 +1746,7 @@ def _candidate_intersections(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    return inter, sizes
+    return sized_pairs(inter, sh)
 
 
 @query(
@@ -1834,13 +1785,9 @@ def q_llm_neardup_jaccard_banded(
     sh = doc_shingles(spark, sf_dir)
     sig = _det_signatures(spark, sf_dir)
     cand = _band_candidates(sig)
-    inter, sizes = _candidate_intersections(cand, sh)
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
+    jac = jaccard()
     out = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _candidate_overlap(cand, sh)
         .filter(jac >= 0.8)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
         .transform(checkpoint)
@@ -1881,12 +1828,8 @@ def q_llm_containment_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = doc_shingles(spark, sf_dir)
     sig = _det_signatures(spark, sf_dir)
     cand = _band_candidates(sig)
-    inter, sizes = _candidate_intersections(cand, sh)
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
     out = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _candidate_overlap(cand, sh)
         .withColumn("n_small", F.least("na", "nb"))
         .withColumn(
             "containment_permille",
@@ -2050,52 +1993,8 @@ def q_llm_containment_recall_audit(
     8×2 band join; the audit semi-joins two pair lists and folds to
     one row. Caches released eagerly (the lsh_recall_audit lifecycle
     discipline)."""
-    d = t(spark, sf_dir, "documents")
-    sh = doc_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
     contain = F.expr(
         "CAST((2 * 1000 * n_common + least(na, nb))"
         " DIV (2 * least(na, nb)) AS BIGINT)"
     )
-    exact = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(contain >= 800)
-        .select("id_a", "id_b")
-        .persist()
-    )
-    sig = _det_signatures(spark, sf_dir)
-    cand = _band_candidates(sig).persist()
-    hit = exact.join(cand, ["id_a", "id_b"], "left_semi")
-    n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-    n_hit = hit.agg(F.count(F.lit(1)).alias("n_hit"))
-    row = n_exact.crossJoin(F.broadcast(n_cand)).crossJoin(
-        F.broadcast(n_hit)
-    )
-    recall = F.when(
-        F.col("n_exact") == 0, F.lit(1000).cast("long")
-    ).otherwise(
-        F.expr("(n_hit * 2000 + n_exact) DIV (2 * n_exact)").cast("long")
-    )
-    out = row.select(
-        "n_exact", "n_candidates", "n_hit", recall.alias("recall_permille")
-    ).transform(checkpoint)
-    for df in (sh, exact, sig, cand):
-        df.unpersist()
-    return out
+    return _band_recall(spark, sf_dir, contain >= 800)

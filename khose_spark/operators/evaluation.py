@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from khose_spark.memo import checkpoint
 from khose_spark.operators.curation import _sql_hash_bucket, hash_bucket
 from khose_spark.registry import query
+from khose_spark.sqlutil import cents
 from khose_spark.tables import t
 
 # Ranking-metric contract constants: $1,000 score bands over the order
@@ -1022,6 +1023,34 @@ def q_ml_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _split_band_cells(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(cells, train): the checkpointed (band, is_train, n, n_pos) grid
+    of orders by $_AUC_BAND_CENTS band and md5 split — one scan feeds
+    train, global and test — and the train bands' half-up permille
+    positive rate (tband, p)."""
+    labeled = t(spark, sf_dir, "orders").select(
+        F.expr(f"{_CENTS_SQL} DIV {_AUC_BAND_CENTS}").alias("band"),
+        F.when(hash_bucket(F.col("o_orderkey")) < 50, 1)
+        .otherwise(0)
+        .alias("is_train"),
+        F.when(F.col("o_orderpriority").isin(*_POS_PRIORITIES), 1)
+        .otherwise(0)
+        .alias("pos"),
+    )
+    cells = (
+        labeled.groupBy("band", "is_train")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("pos").alias("n_pos"))
+        .transform(checkpoint)
+    )
+    train = cells.filter(F.col("is_train") == 1).select(
+        F.col("band").alias("tband"),
+        F.expr("(2 * 1000 * n_pos + n) DIV (2 * n)").alias("p"),
+    )
+    return cells, train
+
+
 @query(
     "q_ml_brier",
     oracle=f"""
@@ -1077,26 +1106,7 @@ def q_ml_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one (band, split) grid aggregation serves train and test
     (the q_ml_cross_val single-scan trick), tiny joins over the band
     grid, a 1-row fold."""
-    labeled = t(spark, sf_dir, "orders").select(
-        F.expr(f"{_CENTS_SQL} DIV {_AUC_BAND_CENTS}").alias("band"),
-        F.when(hash_bucket(F.col("o_orderkey")) < 50, 1)
-        .otherwise(0)
-        .alias("is_train"),
-        F.when(F.col("o_orderpriority").isin(*_POS_PRIORITIES), 1)
-        .otherwise(0)
-        .alias("pos"),
-    )
-    cells = (
-        labeled.groupBy("band", "is_train")
-        .agg(
-            F.count(F.lit(1)).alias("n"), F.sum("pos").alias("n_pos")
-        )
-        .transform(checkpoint)  # feeds train probs + global + test side
-    )
-    train = cells.filter(F.col("is_train") == 1).select(
-        F.col("band").alias("tband"),
-        F.expr("(2 * 1000 * n_pos + n) DIV (2 * n)").alias("p"),
-    )
+    cells, train = _split_band_cells(spark, sf_dir)
     global_train = cells.filter(F.col("is_train") == 1).agg(
         F.expr(
             "CAST((2 * 1000 * sum(n_pos) + sum(n)) DIV (2 * sum(n))"
@@ -1355,24 +1365,7 @@ def q_ml_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     test (the shared cells localCheckpoint), tiny broadcast joins, a
     <=10-row decile rollup + 1-row summary union. At any scale the
     single fact scan is the only shuffle."""
-    labeled = t(spark, sf_dir, "orders").select(
-        F.expr(f"{_CENTS_SQL} DIV {_AUC_BAND_CENTS}").alias("band"),
-        F.when(hash_bucket(F.col("o_orderkey")) < 50, 1)
-        .otherwise(0)
-        .alias("is_train"),
-        F.when(F.col("o_orderpriority").isin(*_POS_PRIORITIES), 1)
-        .otherwise(0)
-        .alias("pos"),
-    )
-    cells = (
-        labeled.groupBy("band", "is_train")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("pos").alias("n_pos"))
-        .transform(checkpoint)
-    )
-    train = cells.filter(F.col("is_train") == 1).select(
-        F.col("band").alias("tband"),
-        F.expr("(2 * 1000 * n_pos + n) DIV (2 * n)").alias("p"),
-    )
+    cells, train = _split_band_cells(spark, sf_dir)
     global_train = cells.filter(F.col("is_train") == 1).agg(
         F.expr(
             "CAST((2 * 1000 * sum(n_pos) + sum(n)) DIV (2 * sum(n))"
@@ -1704,8 +1697,7 @@ def q_ml_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").select(
         (F.col("l_suppkey") % 20).alias("fold"),
         (
-            (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-            .cast("long")
+            cents(F.col("l_extendedprice"))
             * (100 - disc_pct)
         ).alias("rev_cc"),
         F.col("l_quantity").cast("long").alias("qty"),
@@ -1823,8 +1815,7 @@ def q_ml_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         (
-            (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-            .cast("long")
+            cents(F.col("l_extendedprice"))
             * (
                 100
                 - F.round(F.col("l_discount").cast("decimal(8,2)") * 100, 0)
@@ -2484,8 +2475,7 @@ def q_ml_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", F.to_date("ts").alias("d")
         )
         .agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .alias("cents")
+            F.sum(cents(F.col("value"))).alias("cents")
         )
     )
     a = daily.alias("a")
@@ -2749,9 +2739,7 @@ def q_ml_iptw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(hash_bucket(F.col("o_custkey")) < 50, 1)
         .otherwise(0)
         .alias("tr"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     strata = (
         assigned.groupBy("stratum")

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
-from khose_spark.sqlutil import dec_sum, sql_dec_sum
+from khose_spark.sqlutil import cents, dec_sum, sql_dec_sum
 from khose_spark.tables import t
 
 
@@ -694,9 +694,7 @@ def q_ts_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("last_d"),
             F.count(F.lit(1)).alias("freq"),
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("monetary"),
+            F.sum(cents(F.col("value"))).alias("monetary"),
         )
     )
     scored = purch.select(
@@ -1163,8 +1161,7 @@ def q_ts_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter((d < pre_hi) | ((d >= ev_lo) & (d <= ev_hi)))
         .groupBy("event_type", d.alias("d"))
         .agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .alias("cents")
+            F.sum(cents(F.col("value"))).alias("cents")
         )
     )
     is_pre = F.col("d") < pre_hi

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
+from khose_spark.sqlutil import cents
 from khose_spark.tables import t
 
 _KANON_K = 5
@@ -909,9 +910,7 @@ def q_priv_dp_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     clipped = t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         F.least(
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast(
-                "long"
-            ),
+            cents(F.col("o_totalprice")),
             F.lit(_DPM_CLIP),
         ).alias("cents"),
     )

@@ -7,7 +7,7 @@ fact-fact). Every join's DuckDB oracle computes the same logical join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.operators.asof import asof_join
@@ -554,55 +554,29 @@ _SQL_GEO_KM = """
 """
 
 
-@query(
-    "q_join_geo_grid",
-    oracle=f"""
-    WITH {_SQL_GEO_COORDS}, pairs AS (
-      SELECT c.c_custkey, s.s_suppkey,
-             round({_SQL_GEO_KM}, 3) AS km
-      FROM cust c CROSS JOIN supp s
-    )
-    SELECT c_custkey, s_suppkey, km
-    FROM pairs WHERE km <= {_GEO_RADIUS_KM}
-    ORDER BY km, c_custkey, s_suppkey LIMIT 15
-    """,
-)
-def q_join_geo_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid-bucketed spatial radius join — the geo sibling of the
-    banded dedup joins: customers and suppliers get deterministic
-    integer-derived coordinates (the q_fn_geo_haversine recipe), the
-    supplier side explodes to its 3x3 neighborhood of 10-degree grid
-    cells (9 rows per supplier — the SMALL side carries the fan-out)
-    and broadcasts, customers join on their single cell key, and the
-    exact haversine <= 500 km predicate prunes the candidates. The
-    10-degree cell is chosen so +/-1-cell probing provably covers the
-    radius at every fixture latitude (see module constants) — the
-    oracle certifies that losslessness by computing the same result
-    from the full cross join at fixture scale (customers/suppliers are
-    DIMENSION tables: constant cardinality at every scale factor, so
-    the quadratic oracle stays fixture-sized even at 100x).
+def _geo_point(
+    key: str, lat_mul: int, lat_off: float, lon_mul: int, lon_off: float
+) -> list[Column]:
+    """Deterministic (lat, lon) of an integer key: the q_fn_geo_haversine
+    recipe with the given multipliers and offsets."""
+    lat = ((F.col(key) * lat_mul) % 120 - 60).cast("double") + lat_off
+    lon = ((F.col(key) * lon_mul) % 340 - 170).cast("double") + lon_off
+    return [lat.alias("lat"), lon.alias("lon")]
 
-    At 100 TB the same plan is a point table map-side hashed to cells
-    against broadcast (or cell-bucketed) reference geometry — one
-    equi-join shuffle at most, candidates bounded by cell occupancy,
-    never |A| x |B|."""
+
+def _geo_within_radius(
+    spark: SparkSession, sf_dir: str, cust: tuple[int, float, int, float]
+) -> DataFrame:
+    """(c_custkey, s_suppkey, km) for every customer/supplier pair within
+    _GEO_RADIUS_KM, km the haversine rounded to 3 decimals: customers
+    placed by ``cust`` = (lat_mul, lat_off, lon_mul, lon_off), suppliers
+    by the shared 7/37 recipe; suppliers explode to their 3x3 cell
+    neighborhood and broadcast, customers join on their own cell."""
     c = t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (((F.col("c_custkey") * 7) % 120 - 60).cast("double") + 0.5).alias(
-            "lat"
-        ),
-        (((F.col("c_custkey") * 37) % 340 - 170).cast("double") + 0.25).alias(
-            "lon"
-        ),
+        "c_custkey", *_geo_point("c_custkey", *cust)
     )
     s = t(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        (((F.col("s_suppkey") * 7) % 120 - 60).cast("double") + 0.5).alias(
-            "lat"
-        ),
-        (((F.col("s_suppkey") * 37) % 340 - 170).cast("double") + 0.25).alias(
-            "lon"
-        ),
+        "s_suppkey", *_geo_point("s_suppkey", 7, 0.5, 37, 0.25)
     )
     cell = _GEO_CELL_DEG
     c_cells = c.select(
@@ -641,15 +615,50 @@ def q_join_geo_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        c_cells.join(
-            F.broadcast(s_cells), ["cell_lat", "cell_lon"]
-        )
+        c_cells.join(F.broadcast(s_cells), ["cell_lat", "cell_lon"])
         .select(
             "c_custkey",
             "s_suppkey",
             F.round(km, 3).alias("km"),
         )
         .filter(F.col("km") <= _GEO_RADIUS_KM)
+    )
+
+
+@query(
+    "q_join_geo_grid",
+    oracle=f"""
+    WITH {_SQL_GEO_COORDS}, pairs AS (
+      SELECT c.c_custkey, s.s_suppkey,
+             round({_SQL_GEO_KM}, 3) AS km
+      FROM cust c CROSS JOIN supp s
+    )
+    SELECT c_custkey, s_suppkey, km
+    FROM pairs WHERE km <= {_GEO_RADIUS_KM}
+    ORDER BY km, c_custkey, s_suppkey LIMIT 15
+    """,
+)
+def q_join_geo_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grid-bucketed spatial radius join — the geo sibling of the
+    banded dedup joins: customers and suppliers get deterministic
+    integer-derived coordinates (the q_fn_geo_haversine recipe), the
+    supplier side explodes to its 3x3 neighborhood of 10-degree grid
+    cells (9 rows per supplier — the SMALL side carries the fan-out)
+    and broadcasts, customers join on their single cell key, and the
+    exact haversine <= 500 km predicate prunes the candidates. The
+    10-degree cell is chosen so +/-1-cell probing provably covers the
+    radius at every fixture latitude (see module constants) — the
+    oracle certifies that losslessness by computing the same result
+    from the full cross join at fixture scale (customers/suppliers are
+    DIMENSION tables: constant cardinality at every scale factor, so
+    the quadratic oracle stays fixture-sized even at 100x).
+
+    At 100 TB the same plan is a point table map-side hashed to cells
+    against broadcast (or cell-bucketed) reference geometry — one
+    equi-join shuffle at most, candidates bounded by cell occupancy,
+    never |A| x |B|."""
+    return (
+        _geo_within_radius(spark, sf_dir, (7, 0.5, 37, 0.25))
         .orderBy("km", "c_custkey", "s_suppkey")
         .limit(15)
     )
@@ -724,69 +733,7 @@ def q_join_geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup of the 1-row-per-customer relation. At 100 TB: one
     equi-join against broadcast/bucketed geometry + one rollup
     shuffle of the assignment relation — never |A| x |B|."""
-    c = t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        (((F.col("c_custkey") * 11) % 120 - 60).cast("double") + 0.25).alias(
-            "lat"
-        ),
-        (((F.col("c_custkey") * 43) % 340 - 170).cast("double") + 0.5).alias(
-            "lon"
-        ),
-    )
-    s = t(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        (((F.col("s_suppkey") * 7) % 120 - 60).cast("double") + 0.5).alias(
-            "lat"
-        ),
-        (((F.col("s_suppkey") * 37) % 340 - 170).cast("double") + 0.25).alias(
-            "lon"
-        ),
-    )
-    cell = _GEO_CELL_DEG
-    c_cells = c.select(
-        "c_custkey",
-        F.col("lat").alias("c_lat"),
-        F.col("lon").alias("c_lon"),
-        F.floor(F.col("lat") / cell).alias("cell_lat"),
-        F.floor(F.col("lon") / cell).alias("cell_lon"),
-    )
-    d = spark.range(-1, 2).select(F.col("id").alias("d"))
-    s_cells = (
-        s.crossJoin(F.broadcast(d.select(F.col("d").alias("dlat"))))
-        .crossJoin(F.broadcast(d.select(F.col("d").alias("dlon"))))
-        .select(
-            "s_suppkey",
-            F.col("lat").alias("s_lat"),
-            F.col("lon").alias("s_lon"),
-            (F.floor(F.col("lat") / cell) + F.col("dlat")).alias("cell_lat"),
-            (F.floor(F.col("lon") / cell) + F.col("dlon")).alias("cell_lon"),
-        )
-    )
-    km = (
-        2
-        * 6371.0
-        * F.asin(
-            F.sqrt(
-                F.pow(
-                    F.sin(F.radians(F.col("s_lat") - F.col("c_lat")) / 2), 2
-                )
-                + F.cos(F.radians("c_lat"))
-                * F.cos(F.radians("s_lat"))
-                * F.pow(
-                    F.sin(F.radians(F.col("s_lon") - F.col("c_lon")) / 2), 2
-                )
-            )
-        )
-    )
-    scored = (
-        c_cells.join(F.broadcast(s_cells), ["cell_lat", "cell_lon"])
-        .select(
-            "c_custkey",
-            "s_suppkey",
-            F.round(km, 3).alias("km"),
-        )
-        .filter(F.col("km") <= _GEO_RADIUS_KM)
-    )
+    scored = _geo_within_radius(spark, sf_dir, (11, 0.25, 43, 0.5))
     w = Window.partitionBy("c_custkey").orderBy("km", "s_suppkey")
     nearest = (
         scored.withColumn("rn", F.row_number().over(w))

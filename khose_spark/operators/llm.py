@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark import memo
@@ -117,6 +117,39 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo.get(spark, "doc_shingles", sf_dir, build)
 
 
+def jaccard() -> Column:
+    """|A∩B| / |A∪B| of a sized pair row (n_common, na, nb)."""
+    return F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
+
+
+def sized_pairs(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """``inter``'s (id_a, id_b, n_common) rows joined with both docs'
+    distinct shingle counts ``na`` and ``nb`` from ``sh``."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def all_pairs_overlap(sh: DataFrame) -> DataFrame:
+    """(id_b, id_a, n_common, na, nb) for every doc pair id_a < id_b
+    sharing a shingle: the all-pairs shingle equi-join, sized."""
+    a = sh.alias("a")
+    b = sh.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return sized_pairs(inter, sh)
+
+
 @query(
     "q_llm_neardup_jaccard",
     oracle="""
@@ -157,28 +190,9 @@ def q_llm_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_shingles checkpoint: it feeds the size aggregate and BOTH
     self-join sides (and every other shingle consumer in the session),
     so the split+explode+distinct subplan runs once per process."""
-    sh = doc_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
+    jac = jaccard()
     out = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        all_pairs_overlap(doc_shingles(spark, sf_dir))
         .filter(jac >= 0.8)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
         # Eagerly materialize the (tiny) near-dup pair list, then
@@ -276,7 +290,6 @@ def q_llm_neardup_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (sizes + both intersection sides)."""
     sh = doc_shingles(spark, sf_dir)
     cand = minhash_candidates(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sh.select(F.col("doc_id").alias("id_a"), "shingle")
     sb = sh.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (
@@ -285,12 +298,9 @@ def q_llm_neardup_two_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
+    jac = jaccard()
     out = (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
+        sized_pairs(inter, sh)
         .filter(jac >= 0.8)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
         .transform(checkpoint)

@@ -10,18 +10,53 @@ before a single double division + ln, rounded to 4 dp.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import shingle_array
 from khose_spark.registry import query
+from khose_spark.sqlutil import cents
 from khose_spark.tables import t
 
 # Decision-stump contract constants: $25,000 candidate-threshold grid,
 # positive class = urgent/high order priority.
 _BAND_CENTS = 2_500_000
 _POS_PRIORITIES = ("1-URGENT", "2-HIGH")
+
+
+def _band_splits(labeled: DataFrame) -> DataFrame:
+    """(band, n_left, pos_left, n_total, pos_total) for every split
+    "band ≤ b" of ``labeled``'s (band, pos) rows: one partial-aggregated
+    per-band count, then cumulative and total windows over the bands."""
+    per_band = labeled.groupBy("band").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("n_pos")
+    )
+    w_cum = Window.orderBy("band").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    w_all = Window.orderBy("band").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    return per_band.select(
+        "band",
+        F.sum("n").over(w_cum).alias("n_left"),
+        F.sum("n_pos").over(w_cum).alias("pos_left"),
+        F.sum("n").over(w_all).alias("n_total"),
+        F.sum("n_pos").over(w_all).alias("pos_total"),
+    )
+
+
+def _stump_correct() -> Column:
+    """Rows a split classifies correctly: the majority label's count on
+    each side."""
+    return F.greatest(
+        F.col("pos_left"), F.col("n_left") - F.col("pos_left")
+    ) + F.greatest(
+        F.col("pos_total") - F.col("pos_left"),
+        (F.col("n_total") - F.col("n_left"))
+        - (F.col("pos_total") - F.col("pos_left")),
+    )
 
 
 @query(
@@ -87,22 +122,7 @@ def q_ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("pos"),
     )
-    per_band = labeled.groupBy("band").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("n_pos")
-    )
-    w_cum = Window.orderBy("band").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.orderBy("band").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = per_band.select(
-        "band",
-        F.sum("n").over(w_cum).alias("n_left"),
-        F.sum("n_pos").over(w_cum).alias("pos_left"),
-        F.sum("n").over(w_all).alias("n_total"),
-        F.sum("n_pos").over(w_all).alias("pos_total"),
-    )
+    cum = _band_splits(labeled)
     scored = (
         cum.filter(F.col("n_left") < F.col("n_total"))
         .select(
@@ -111,16 +131,7 @@ def q_ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_total") - F.col("n_left")).alias("n_right"),
             "pos_left",
             (F.col("pos_total") - F.col("pos_left")).alias("pos_right"),
-            (
-                F.greatest(
-                    F.col("pos_left"), F.col("n_left") - F.col("pos_left")
-                )
-                + F.greatest(
-                    F.col("pos_total") - F.col("pos_left"),
-                    (F.col("n_total") - F.col("n_left"))
-                    - (F.col("pos_total") - F.col("pos_left")),
-                )
-            ).alias("n_correct"),
+            _stump_correct().alias("n_correct"),
             "n_total",
         )
     )
@@ -374,6 +385,87 @@ def q_ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ols2_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(k, x1, x2, y) per order: line count, total quantity and the
+    rounded total price — the 2-feature OLS design of the *_2f keys."""
+    li = t(spark, sf_dir, "lineitem")
+    feats = li.groupBy(F.col("l_orderkey").alias("k")).agg(
+        F.count(F.lit(1)).alias("x1"),
+        F.expr(
+            "CAST(sum(CAST(l_quantity AS DECIMAL(18,2)) * 100 DIV 100)"
+            " AS BIGINT)"
+        ).alias("x2"),
+    )
+    orders = t(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        F.expr(
+            "CAST(round(CAST(o_totalprice AS DECIMAL(18,2)), 0) AS BIGINT)"
+        ).alias("y"),
+    )
+    return feats.join(orders, "k")
+
+
+def _ols2_sums(xy: DataFrame, *quad: Column) -> DataFrame:
+    """One-row sufficient statistics of ``xy``: n, the linear sums and
+    the int64 cross products, then the caller's ``quad`` sums."""
+    return xy.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x1").cast("long").alias("s1"),
+        F.sum("x2").cast("long").alias("s2"),
+        F.sum("y").cast("long").alias("sy"),
+        F.sum(F.col("x1") * F.col("x1")).cast("long").alias("s11"),
+        F.sum(F.col("x2") * F.col("x2")).cast("long").alias("s22"),
+        F.sum(F.col("x1") * F.col("x2")).cast("long").alias("s12"),
+        F.sum(F.col("x1") * F.col("y")).cast("long").alias("s1y"),
+        *quad,
+    )
+
+
+def _mean(s: str) -> Column:
+    """(double)S / n — every mean in the oracle's expression tree."""
+    return F.col(s).cast("double") / F.col("n")
+
+
+def _cmom(sab: str, sa: str, sb: str) -> Column:
+    """Centered moment S_ab/n - mean_a*mean_b, in the oracle's tree."""
+    return F.col(sab).cast("double") / F.col("n") - _mean(sa) * _mean(sb)
+
+
+def _ols2_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row: n, the means m1/m2/my and the centered (co)variances
+    c11..cyy of the 2-feature OLS design, mirroring the oracle's
+    expression tree exactly (every mean is (double)S / n, every
+    centered moment S/n - mean*mean)."""
+    sums = _ols2_sums(
+        _ols2_xy(spark, sf_dir),
+        # s2y/syy fold in DECIMAL(38,0) since round 10: the 1000×
+        # lineitem digest probe hit Spark's ANSI long-overflow on Σy²
+        # (per-row y² ≈ 3.6e11 stays int64; the SUM crossed 9.2e18 at
+        # n = 1.5e8 — exactly the ">sf10 moves to DECIMAL" path the
+        # docstring had promised). The other stats grow linearly per
+        # decade with ≥3 decades of int64 room at 1000×; margin-audit
+        # law linreg_syy_decimal38 tracks the widened pair.
+        F.sum((F.col("x2") * F.col("y")).cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("s2y"),
+        F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)"))
+        .cast("decimal(38,0)")
+        .alias("syy"),
+    )
+    return sums.select(
+        "n",
+        _mean("s1").alias("m1"),
+        _mean("s2").alias("m2"),
+        _mean("sy").alias("my"),
+        _cmom("s11", "s1", "s1").alias("c11"),
+        _cmom("s22", "s2", "s2").alias("c22"),
+        _cmom("s12", "s1", "s2").alias("c12"),
+        _cmom("s1y", "s1", "sy").alias("c1y"),
+        _cmom("s2y", "s2", "sy").alias("c2y"),
+        _cmom("syy", "sy", "sy").alias("cyy"),
+    )
+
+
 @query(
     "q_ml_linreg_2f",
     oracle="""
@@ -457,82 +549,7 @@ def q_ml_linreg_2f(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce. At 100 TB this is the canonical two-pass-free shape: no
     per-coefficient jobs, no gradient iterations (q_ml_logreg covers
     the iterative family)."""
-    li = t(spark, sf_dir, "lineitem")
-    feats = li.groupBy(F.col("l_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).alias("x1"),
-        F.expr(
-            "CAST(sum(CAST(l_quantity AS DECIMAL(18,2)) * 100 DIV 100)"
-            " AS BIGINT)"
-        ).alias("x2"),
-    )
-    orders = t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.expr(
-            "CAST(round(CAST(o_totalprice AS DECIMAL(18,2)), 0) AS BIGINT)"
-        ).alias("y"),
-    )
-    xy = feats.join(orders, "k")
-    sums = xy.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").cast("long").alias("s1"),
-        F.sum("x2").cast("long").alias("s2"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).cast("long").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("long").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("long").alias("s12"),
-        F.sum(F.col("x1") * F.col("y")).cast("long").alias("s1y"),
-        # s2y/syy fold in DECIMAL(38,0) since round 10: the 1000×
-        # lineitem digest probe hit Spark's ANSI long-overflow on Σy²
-        # (per-row y² ≈ 3.6e11 stays int64; the SUM crossed 9.2e18 at
-        # n = 1.5e8 — exactly the ">sf10 moves to DECIMAL" path the
-        # docstring had promised). The other stats grow linearly per
-        # decade with ≥3 decades of int64 room at 1000×; margin-audit
-        # law linreg_syy_decimal38 tracks the widened pair.
-        F.sum((F.col("x2") * F.col("y")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("s2y"),
-        F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("syy"),
-    )
-    # Mirror the oracle's expression tree exactly: every mean is
-    # (double)S / n, every centered moment is S/n - mean*mean.
-    alg = sums.select(
-        "n",
-        (F.col("s1").cast("double") / F.col("n")).alias("m1"),
-        (F.col("s2").cast("double") / F.col("n")).alias("m2"),
-        (F.col("sy").cast("double") / F.col("n")).alias("my"),
-        (
-            F.col("s11").cast("double") / F.col("n")
-            - (F.col("s1").cast("double") / F.col("n"))
-            * (F.col("s1").cast("double") / F.col("n"))
-        ).alias("c11"),
-        (
-            F.col("s22").cast("double") / F.col("n")
-            - (F.col("s2").cast("double") / F.col("n"))
-            * (F.col("s2").cast("double") / F.col("n"))
-        ).alias("c22"),
-        (
-            F.col("s12").cast("double") / F.col("n")
-            - (F.col("s1").cast("double") / F.col("n"))
-            * (F.col("s2").cast("double") / F.col("n"))
-        ).alias("c12"),
-        (
-            F.col("s1y").cast("double") / F.col("n")
-            - (F.col("s1").cast("double") / F.col("n"))
-            * (F.col("sy").cast("double") / F.col("n"))
-        ).alias("c1y"),
-        (
-            F.col("s2y").cast("double") / F.col("n")
-            - (F.col("s2").cast("double") / F.col("n"))
-            * (F.col("sy").cast("double") / F.col("n"))
-        ).alias("c2y"),
-        (
-            F.col("syy").cast("double") / F.col("n")
-            - (F.col("sy").cast("double") / F.col("n"))
-            * (F.col("sy").cast("double") / F.col("n"))
-        ).alias("cyy"),
-    )
+    alg = _ols2_moments(spark, sf_dir)
     det = F.col("c11") * F.col("c22") - F.col("c12") * F.col("c12")
     b1 = (F.col("c22") * F.col("c1y") - F.col("c12") * F.col("c2y")) / det
     b2 = (F.col("c11") * F.col("c2y") - F.col("c12") * F.col("c1y")) / det
@@ -1211,35 +1228,11 @@ def q_ml_feature_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(band_expr_spark).alias("band"),
             F.expr(_RET_POS_SQL).alias("pos"),
         )
-        per_band = labeled.groupBy("band").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("pos").alias("n_pos")
-        )
-        w_cum = Window.orderBy("band").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        w_all = Window.orderBy("band").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        cum = per_band.select(
-            "band",
-            F.sum("n").over(w_cum).alias("n_left"),
-            F.sum("n_pos").over(w_cum).alias("pos_left"),
-            F.sum("n").over(w_all).alias("n_total"),
-            F.sum("n_pos").over(w_all).alias("pos_total"),
-        )
+        cum = _band_splits(labeled)
         scored = cum.filter(F.col("n_left") < F.col("n_total")).select(
             F.lit(fname).alias("feature"),
             (F.col("band") + 1).alias("threshold_band"),
-            (
-                F.greatest(
-                    F.col("pos_left"), F.col("n_left") - F.col("pos_left")
-                )
-                + F.greatest(
-                    F.col("pos_total") - F.col("pos_left"),
-                    (F.col("n_total") - F.col("n_left"))
-                    - (F.col("pos_total") - F.col("pos_left")),
-                )
-            ).alias("n_correct"),
+            _stump_correct().alias("n_correct"),
             "n_total",
         )
         branches.append(
@@ -1709,9 +1702,7 @@ def q_ts_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select(
         "event_type",
         F.date_trunc("day", "ts").cast("date").alias("d"),
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     # Floor-consistent dollars (ADVICE r08 item 1): Spark DIV truncates
     # toward zero while DuckDB // floors, so both sides first strip the
@@ -1895,8 +1886,7 @@ def q_ml_ttest_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(1)
             .alias("yr"),
             (
-                (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-                .cast("long")
+                cents(F.col("l_extendedprice"))
                 * (
                     100
                     - F.round(
@@ -2128,51 +2118,20 @@ def q_ml_shapley_2f(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-crossed) — two passes, zero iteration, both map-side
     combined.  At 100 TB: two orderkey-keyed shuffles, nothing
     wider."""
-    li = t(spark, sf_dir, "lineitem")
-    feats = li.groupBy(F.col("l_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).alias("x1"),
-        F.expr(
-            "CAST(sum(CAST(l_quantity AS DECIMAL(18,2)) * 100 DIV 100)"
-            " AS BIGINT)"
-        ).alias("x2"),
-    )
-    orders = t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.expr(
-            "CAST(round(CAST(o_totalprice AS DECIMAL(18,2)), 0) AS BIGINT)"
-        ).alias("y"),
-    )
-    xy = feats.join(orders, "k")
-    sums = xy.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").cast("long").alias("s1"),
-        F.sum("x2").cast("long").alias("s2"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).cast("long").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("long").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("long").alias("s12"),
-        F.sum(F.col("x1") * F.col("y")).cast("long").alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).cast("long").alias("s2y"),
-    )
-    dm = lambda sjj, sj: (  # noqa: E731 — S/n - mean*mean (oracle tree)
-        F.col(sjj).cast("double") / F.col("n")
-        - (F.col(sj).cast("double") / F.col("n"))
-        * (F.col(sj).cast("double") / F.col("n"))
-    )
-    cm = lambda sab, sa, sb: (  # noqa: E731
-        F.col(sab).cast("double") / F.col("n")
-        - (F.col(sa).cast("double") / F.col("n"))
-        * (F.col(sb).cast("double") / F.col("n"))
+    xy = _ols2_xy(spark, sf_dir)
+    # s2y stays int64 here: this key folds no Σy².
+    sums = _ols2_sums(
+        xy, F.sum(F.col("x2") * F.col("y")).cast("long").alias("s2y")
     )
     alg = sums.select(
         "n",
         "s1",
         "s2",
-        dm("s11", "s1").alias("c11"),
-        dm("s22", "s2").alias("c22"),
-        cm("s12", "s1", "s2").alias("c12"),
-        cm("s1y", "s1", "sy").alias("c1y"),
-        cm("s2y", "s2", "sy").alias("c2y"),
+        _cmom("s11", "s1", "s1").alias("c11"),
+        _cmom("s22", "s2", "s2").alias("c22"),
+        _cmom("s12", "s1", "s2").alias("c12"),
+        _cmom("s1y", "s1", "sy").alias("c1y"),
+        _cmom("s2y", "s2", "sy").alias("c2y"),
     )
     det = F.col("c11") * F.col("c22") - F.col("c12") * F.col("c12")
     coef = alg.select(
@@ -2306,9 +2265,7 @@ def q_ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: one shuffle carrying 5 rows per task."""
     y = t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("cat"),
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     # The 5-row category aggregate feeds BOTH the global fold and the
     # final projection; eager-checkpoint it so the orders scan+agg
@@ -3104,8 +3061,7 @@ def q_ml_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("x"),
         )
         .agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .alias("cents")
+            F.sum(cents(F.col("value"))).alias("cents")
         )
         .transform(checkpoint)  # feeds k-dim, block filter, and ranks
     )
@@ -3266,13 +3222,13 @@ def q_ml_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from khose_spark.operators.curation import hash_bucket
 
     ev = t(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    value_cents = cents(F.col("value"))
     pre = F.to_date("ts") < F.lit("2024-01-16")
     per_user = ev.groupBy("user_id").agg(
-        F.coalesce(F.sum(F.when(pre, cents)), F.lit(0))
+        F.coalesce(F.sum(F.when(pre, value_cents)), F.lit(0))
         .cast("long")
         .alias("x"),
-        F.coalesce(F.sum(F.when(~pre, cents)), F.lit(0))
+        F.coalesce(F.sum(F.when(~pre, value_cents)), F.lit(0))
         .cast("long")
         .alias("y"),
     ).select(
@@ -3402,14 +3358,14 @@ def q_ml_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    value_cents = cents(F.col("value"))
     daily = (
         ev.groupBy(F.to_date("ts").alias("d"))
         .agg(
-            F.sum(F.when(F.col("event_type") == "click", cents))
+            F.sum(F.when(F.col("event_type") == "click", value_cents))
             .cast("long")
             .alias("c_click"),
-            F.sum(F.when(F.col("event_type") == "purchase", cents))
+            F.sum(F.when(F.col("event_type") == "purchase", value_cents))
             .cast("long")
             .alias("c_purch"),
         )
@@ -3460,6 +3416,30 @@ def q_ml_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             4,
         ).alias("z_r4"),
+    )
+
+
+def _arm_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(grp, n, sy, syy) per A/B arm: users split by content-stable md5
+    bucket (grp 0 = A), y each user's post-period int64 cents, syy in
+    DECIMAL(38,0)."""
+    from khose_spark.operators.curation import hash_bucket
+
+    ev = t(spark, sf_dir, "events")
+    value_cents = cents(F.col("value"))
+    post = F.to_date("ts") >= F.lit("2024-01-16")
+    per_user = ev.groupBy("user_id").agg(
+        F.coalesce(F.sum(F.when(post, value_cents)), F.lit(0))
+        .cast("long")
+        .alias("y"),
+    ).select(
+        F.when(hash_bucket(F.col("user_id")) < 50, 0).otherwise(1).alias("grp"),
+        "y",
+    )
+    return per_user.groupBy("grp").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("y").cast("long").alias("sy"),
+        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y")).alias("syy"),
     )
 
 
@@ -3539,24 +3519,7 @@ def q_ml_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one user-keyed conditional aggregate (the only corpus
     shuffle), a 2-row arm fold, a 1-row pivot. Constant-size past the
     first shuffle at any SF."""
-    from khose_spark.operators.curation import hash_bucket
-
-    ev = t(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    post = F.to_date("ts") >= F.lit("2024-01-16")
-    per_user = ev.groupBy("user_id").agg(
-        F.coalesce(F.sum(F.when(post, cents)), F.lit(0))
-        .cast("long")
-        .alias("y"),
-    ).select(
-        F.when(hash_bucket(F.col("user_id")) < 50, 0).otherwise(1).alias("grp"),
-        "y",
-    )
-    g = per_user.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y")).alias("syy"),
-    )
+    g = _arm_sums(spark, sf_dir)
     fold = g.agg(
         F.max(F.when(F.col("grp") == 0, F.col("n"))).alias("n_a"),
         F.max(F.when(F.col("grp") == 1, F.col("n"))).alias("n_b"),
@@ -3694,14 +3657,14 @@ def q_ts_engle_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    value_cents = cents(F.col("value"))
     daily = (
         ev.groupBy(F.to_date("ts").alias("d"))
         .agg(
-            F.sum(F.when(F.col("event_type") == "click", cents))
+            F.sum(F.when(F.col("event_type") == "click", value_cents))
             .cast("long")
             .alias("x"),
-            F.sum(F.when(F.col("event_type") == "purchase", cents))
+            F.sum(F.when(F.col("event_type") == "purchase", value_cents))
             .cast("long")
             .alias("y"),
         )
@@ -3836,24 +3799,7 @@ def q_ml_tost(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one user-keyed conditional aggregate (the only corpus
     shuffle), a 2-row arm fold, a 1-row pivot - the power_mde plan."""
-    from khose_spark.operators.curation import hash_bucket
-
-    ev = t(spark, sf_dir, "events")
-    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    post = F.to_date("ts") >= F.lit("2024-01-16")
-    per_user = ev.groupBy("user_id").agg(
-        F.coalesce(F.sum(F.when(post, cents)), F.lit(0))
-        .cast("long")
-        .alias("y"),
-    ).select(
-        F.when(hash_bucket(F.col("user_id")) < 50, 0).otherwise(1).alias("grp"),
-        "y",
-    )
-    g = per_user.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y")).alias("syy"),
-    )
+    g = _arm_sums(spark, sf_dir)
     fold = g.agg(
         F.max(F.when(F.col("grp") == 0, F.col("n"))).alias("n_a"),
         F.max(F.when(F.col("grp") == 1, F.col("n"))).alias("n_b"),
@@ -3986,73 +3932,7 @@ def q_ml_ridge_2f(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-scale shuffle), one join to orders, one 1-row reduce; the
     ridge solve is scalar algebra on the 1-row relation. No iteration,
     no driver-side solver, any corpus size."""
-    li = t(spark, sf_dir, "lineitem")
-    feats = li.groupBy(F.col("l_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).alias("x1"),
-        F.expr(
-            "CAST(sum(CAST(l_quantity AS DECIMAL(18,2)) * 100 DIV 100)"
-            " AS BIGINT)"
-        ).alias("x2"),
-    )
-    orders = t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.expr(
-            "CAST(round(CAST(o_totalprice AS DECIMAL(18,2)), 0) AS BIGINT)"
-        ).alias("y"),
-    )
-    xy = feats.join(orders, "k")
-    sums = xy.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").cast("long").alias("s1"),
-        F.sum("x2").cast("long").alias("s2"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).cast("long").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("long").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("long").alias("s12"),
-        F.sum(F.col("x1") * F.col("y")).cast("long").alias("s1y"),
-        F.sum((F.col("x2") * F.col("y")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("s2y"),
-        F.sum((F.col("y") * F.col("y")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("syy"),
-    )
-    alg = sums.select(
-        "n",
-        (F.col("s1").cast("double") / F.col("n")).alias("m1"),
-        (F.col("s2").cast("double") / F.col("n")).alias("m2"),
-        (F.col("sy").cast("double") / F.col("n")).alias("my"),
-        (
-            F.col("s11").cast("double") / F.col("n")
-            - (F.col("s1").cast("double") / F.col("n"))
-            * (F.col("s1").cast("double") / F.col("n"))
-        ).alias("c11"),
-        (
-            F.col("s22").cast("double") / F.col("n")
-            - (F.col("s2").cast("double") / F.col("n"))
-            * (F.col("s2").cast("double") / F.col("n"))
-        ).alias("c22"),
-        (
-            F.col("s12").cast("double") / F.col("n")
-            - (F.col("s1").cast("double") / F.col("n"))
-            * (F.col("s2").cast("double") / F.col("n"))
-        ).alias("c12"),
-        (
-            F.col("s1y").cast("double") / F.col("n")
-            - (F.col("s1").cast("double") / F.col("n"))
-            * (F.col("sy").cast("double") / F.col("n"))
-        ).alias("c1y"),
-        (
-            F.col("s2y").cast("double") / F.col("n")
-            - (F.col("s2").cast("double") / F.col("n"))
-            * (F.col("sy").cast("double") / F.col("n"))
-        ).alias("c2y"),
-        (
-            F.col("syy").cast("double") / F.col("n")
-            - (F.col("sy").cast("double") / F.col("n"))
-            * (F.col("sy").cast("double") / F.col("n"))
-        ).alias("cyy"),
-    )
+    alg = _ols2_moments(spark, sf_dir)
     corr = alg.select(
         "n", "m1", "m2", "my", "c11", "c22", "cyy",
         (F.col("c12") / F.sqrt(F.col("c11") * F.col("c22"))).alias("r12"),

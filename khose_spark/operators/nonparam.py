@@ -45,6 +45,43 @@ _CLIFF_SMALL, _CLIFF_MEDIUM, _CLIFF_LARGE = "0.147", "0.33", "0.474"
 _MATTR_W = 25  # MATTR window length (tokens); full windows only
 
 
+def _click_view_dollars(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(a, v, tots): whole-dollar band counts (b, n) of click events
+    (aliased a) and view events (aliased v), and the one-row group
+    sizes (n1, n2) — all off one checkpointed <=982-row grid."""
+    e = t(spark, sf_dir, "events")
+    cell = (
+        e.filter(F.col("event_type").isin("click", "view"))
+        .select(
+            F.when(F.col("event_type") == "click", 1)
+            .otherwise(2)
+            .alias("grp"),
+            F.expr(
+                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                " DIV 100"
+            ).alias("b"),
+        )
+        .groupBy("grp", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        # the <=982-row grid feeds the pair cross AND the totals —
+        # one fact pass (the gamma grid lifecycle)
+        .transform(checkpoint)
+    )
+    a = cell.filter(F.col("grp") == 1).select("b", "n").alias("a")
+    v = cell.filter(F.col("grp") == 2).select("b", "n").alias("v")
+    tots = cell.agg(
+        F.sum(F.when(F.col("grp") == 1, F.col("n")).otherwise(0))
+        .cast("long")
+        .alias("n1"),
+        F.sum(F.when(F.col("grp") == 2, F.col("n")).otherwise(0))
+        .cast("long")
+        .alias("n2"),
+    )
+    return a, v, tots
+
+
 @query(
     "q_ml_cliffs_delta",
     oracle=f"""
@@ -114,26 +151,7 @@ def q_ml_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row — group sizes, gt/lt/tie pair mass, delta,
     magnitude."""
-    e = t(spark, sf_dir, "events")
-    cell = (
-        e.filter(F.col("event_type").isin("click", "view"))
-        .select(
-            F.when(F.col("event_type") == "click", 1)
-            .otherwise(2)
-            .alias("grp"),
-            F.expr(
-                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
-                " DIV 100"
-            ).alias("b"),
-        )
-        .groupBy("grp", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        # the <=982-row grid feeds the pair cross AND the totals —
-        # one fact pass (the gamma grid lifecycle)
-        .transform(checkpoint)
-    )
-    a = cell.filter(F.col("grp") == 1).select("b", "n").alias("a")
-    v = cell.filter(F.col("grp") == 2).select("b", "n").alias("v")
+    a, v, tots = _click_view_dollars(spark, sf_dir)
     mass = F.col("a.n").cast("decimal(38,0)") * F.col("v.n")
     pairs = a.crossJoin(F.broadcast(v)).agg(
         F.sum(F.when(F.col("a.b") > F.col("v.b"), mass).otherwise(F.lit(0)))
@@ -145,14 +163,6 @@ def q_ml_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("a.b") == F.col("v.b"), mass).otherwise(F.lit(0)))
         .cast("decimal(38,0)")
         .alias("tie"),
-    )
-    tots = cell.agg(
-        F.sum(F.when(F.col("grp") == 1, F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n1"),
-        F.sum(F.when(F.col("grp") == 2, F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n2"),
     )
     # nullif(n1*n2, 0): an empty group makes the denominator an exact
     # 0.0 double — ANSI Spark CRASHES on double division by zero while
@@ -235,24 +245,7 @@ def q_ml_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row — group sizes, total pair mass, the HL shift in
     whole dollars, and the mean shift."""
-    e = t(spark, sf_dir, "events")
-    cell = (
-        e.filter(F.col("event_type").isin("click", "view"))
-        .select(
-            F.when(F.col("event_type") == "click", 1)
-            .otherwise(2)
-            .alias("grp"),
-            F.expr(
-                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
-                " DIV 100"
-            ).alias("b"),
-        )
-        .groupBy("grp", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .transform(checkpoint)
-    )
-    a = cell.filter(F.col("grp") == 1).select("b", "n").alias("a")
-    v = cell.filter(F.col("grp") == 2).select("b", "n").alias("v")
+    a, v, tots = _click_view_dollars(spark, sf_dir)
     diffs = (
         a.crossJoin(F.broadcast(v))
         .groupBy((F.col("a.b") - F.col("v.b")).alias("db"))
@@ -280,14 +273,6 @@ def q_ml_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("db").alias("hl"),
         F.max("tot").alias("tot"),
         F.max("wsum").alias("wsum"),
-    )
-    tots = cell.agg(
-        F.sum(F.when(F.col("grp") == 1, F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n1"),
-        F.sum(F.when(F.col("grp") == 2, F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n2"),
     )
     return med.crossJoin(F.broadcast(tots)).select(
         F.col("n1").alias("n_click"),

@@ -15,9 +15,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from khose_spark import memo
 from khose_spark.memo import checkpoint, scratch
 from khose_spark.registry import query
-from khose_spark.sqlutil import dec_sum, sql_dec_sum
+from khose_spark.sqlutil import cents, dec_sum, sql_dec_sum
 from khose_spark.tables import EVENTS_SCHEMA, t
 
 
@@ -286,7 +287,7 @@ def q_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = ev.filter(F.col("event_id") % 2 == 0)
     new = ev.filter(F.col("event_id") % 2 == 1).withColumn(
         "bonus_cents",
-        (F.col("value").cast("decimal(18,2)") * 100).cast("long"),
+        cents(F.col("value")),
     )
     old.repartition(2).write.mode("overwrite").parquet(path + "/batch=old")
     new.repartition(2).write.mode("overwrite").parquet(path + "/batch=new")
@@ -405,26 +406,35 @@ def q_sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout. Bucket count scales with cluster width; 8 matches the
     fixture size."""
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    onames = f"orders_bj_{tag}", f"lineitem_bj_{tag}"
+
+    def build() -> tuple[str, str]:
+        # The store drops both tables on release, with their scratch files.
+        onames = (
+            memo.table(f"orders_bj_{tag}"),
+            memo.table(f"lineitem_bj_{tag}"),
+        )
+        (
+            t(spark, sf_dir, "orders")
+            .write.format("parquet")
+            .bucketBy(8, "o_orderkey")
+            .sortBy("o_orderkey")
+            .option("path", scratch(sf_dir, "orders_bj"))
+            .mode("overwrite")
+            .saveAsTable(onames[0])
+        )
+        (
+            t(spark, sf_dir, "lineitem")
+            .write.format("parquet")
+            .bucketBy(8, "l_orderkey")
+            .sortBy("l_orderkey")
+            .option("path", scratch(sf_dir, "lineitem_bj"))
+            .mode("overwrite")
+            .saveAsTable(onames[1])
+        )
+        return onames
+
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    (
-        t(spark, sf_dir, "orders")
-        .write.format("parquet")
-        .bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey")
-        .option("path", scratch(sf_dir, "orders_bj"))
-        .mode("overwrite")
-        .saveAsTable(onames[0])
-    )
-    (
-        t(spark, sf_dir, "lineitem")
-        .write.format("parquet")
-        .bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey")
-        .option("path", scratch(sf_dir, "lineitem_bj"))
-        .mode("overwrite")
-        .saveAsTable(onames[1])
-    )
+    onames = memo.get(spark, "bucketed_join", sf_dir, build)
     o = spark.table(onames[0])
     li = spark.table(onames[1])
     return (

@@ -26,7 +26,7 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark import memo
@@ -108,6 +108,125 @@ def q_llm_cosine_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dbl_base(e: DataFrame) -> DataFrame:
+    """(vec_id, v): the embeddings with float elements widened to double."""
+    dbl = F.transform("embedding", lambda x: x.cast("double"))
+    return e.select("vec_id", dbl.alias("v"))
+
+
+def _cos(a: str, b: str) -> Column:
+    """Sequential-fold cosine of two double-array columns — one fixed
+    expression tree, so rounded values are bit-identical wherever used."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    sq = lambda c: F.aggregate(  # noqa: E731
+        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
+    )
+    return dot / (F.sqrt(sq(a)) * F.sqrt(sq(b)))
+
+
+def _top3(cell_sims: DataFrame) -> DataFrame:
+    """(qid, neighbor_id, sim, rank): each query's 3 best candidates of
+    ``cell_sims`` by sim, vec_id tiebreak."""
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return (
+        cell_sims.select(
+            "qid",
+            F.col("vec_id").alias("neighbor_id"),
+            "sim",
+            F.row_number().over(w).alias("rank"),
+        )
+        .filter(F.col("rank") <= 3)
+    )
+
+
+def _ivf_top3(base: DataFrame, cent: DataFrame) -> DataFrame:
+    """IVF search for queries vec_id < 10: every vector of ``base`` goes
+    to its nearest centroid of ``cent`` (argmax of round(cos, 6), cid
+    tiebreak); a query probes only its own cell and exact-reranks it."""
+    w_assign = Window.partitionBy("vec_id").orderBy(
+        F.desc("asim"), F.asc("cid")
+    )
+    assign = (
+        base.crossJoin(F.broadcast(cent))
+        .select(
+            "vec_id", "cid", F.round(_cos("v", "cv"), 6).alias("asim")
+        )
+        .withColumn("rn", F.row_number().over(w_assign))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cid")
+    )
+    probe = (
+        base.filter(F.col("vec_id") < 10)
+        .join(assign, "vec_id")
+        .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"), "cid")
+    )
+    members = assign.join(base, "vec_id").select("cid", "vec_id", "v")
+    cell_sims = (
+        F.broadcast(probe)
+        .join(members, "cid")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", F.round(_cos("qv", "v"), 4).alias("sim"))
+    )
+    return _top3(cell_sims)
+
+
+def _centroid_audit(stats: DataFrame, cent: DataFrame) -> DataFrame:
+    """k-means audit rows: ``stats`` per cid joined with the first four
+    centroid coordinates, each rounded to 6 decimals."""
+    return stats.join(F.broadcast(cent), "cid").select(
+        F.col("cid").alias("cluster_id"),
+        "n_members",
+        "avg_dist",
+        *[
+            F.round(F.element_at("cv", i), 6).alias(f"c{i}")
+            for i in range(1, 5)
+        ],
+    )
+
+
+def _silhouette_rollup(sil: DataFrame) -> DataFrame:
+    """Per-cluster silhouette audit of (cid, s) rows."""
+    return (
+        sil.groupBy("cid")
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.round(F.avg("s"), 4).alias("silhouette_avg"),
+            F.sum((F.col("s") < 0).cast("long")).alias("n_negative"),
+        )
+        .select(
+            F.col("cid").alias("cluster_id"),
+            "n_members",
+            "silhouette_avg",
+            "n_negative",
+        )
+    )
+
+
+def _semdedup_audit(assign: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Per-cluster dedup audit: members, duplicate pairs, dropped and
+    kept counts from (cid, vec_id) ``assign`` and (cid, id_a, id_b)
+    ``pairs``, materialized (a k-row result)."""
+    members = assign.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
+    pstats = pairs.groupBy("cid").agg(
+        F.count(F.lit(1)).alias("n_dup_pairs"),
+        F.countDistinct("id_b").alias("n_dropped"),
+    )
+    return (
+        members.join(F.broadcast(pstats), "cid", "left")
+        .select(
+            F.col("cid").alias("cluster_id"),
+            "n_members",
+            F.coalesce("n_dup_pairs", F.lit(0)).alias("n_dup_pairs"),
+            F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
+            (F.col("n_members") - F.coalesce("n_dropped", F.lit(0)))
+            .alias("n_kept"),
+        )
+        .transform(checkpoint)
+    )
+
+
 @query(
     "q_llm_ann_ivf",
     oracle="""
@@ -151,58 +270,11 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/n_cells of the corpus; recall is traded via n_probe (here 1).
     Deterministic: assignment argmax on round(sim, 6) with centroid-id
     tiebreak, so Spark and DuckDB agree bit-for-bit after rounding."""
-    e = t(spark, sf_dir, "embeddings")
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.select("vec_id", dbl.alias("v"))
+    base = _dbl_base(t(spark, sf_dir, "embeddings"))
     cent = base.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
-
-    def cos(a: str, b: str):
-        dot = F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-        sq = lambda c: F.aggregate(  # noqa: E731
-            F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-        return dot / (F.sqrt(sq(a)) * F.sqrt(sq(b)))
-
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("asim"), F.asc("cid")
-    )
-    assign = (
-        base.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "cid", F.round(cos("v", "cv"), 6).alias("asim")
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-    probe = (
-        base.filter(F.col("vec_id") < 10)
-        .join(assign, "vec_id")
-        .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"), "cid")
-    )
-    members = assign.join(
-        base, "vec_id"
-    ).select("cid", "vec_id", "v")
-    cell_sims = (
-        F.broadcast(probe)
-        .join(members, "cid")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(cos("qv", "v"), 4).alias("sim"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        cell_sims.select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            "sim",
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= 3)
-    )
+    return _ivf_top3(base, cent)
 
 
 @query(
@@ -378,8 +450,7 @@ def srp_candidates(
     constants change, never the plan shape."""
     assert 16 % band_bits == 0, band_bits
     e = t(spark, sf_dir, "embeddings")
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.select("vec_id", dbl.alias("v"))
+    base = _dbl_base(e)
     planes = spark.createDataFrame(
         [(p, hp) for p, hp in enumerate(_srp_planes())], "p int, hp array<double>"
     )
@@ -447,13 +518,7 @@ def q_llm_lsh_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand, base = srp_candidates(spark, sf_dir, band_bits=4)
     va = base.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
     vb = base.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-    cdot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    sq = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-    )
-    sim = F.round(cdot / (F.sqrt(sq("va")) * F.sqrt(sq("vb"))), 4)
+    sim = F.round(_cos("va", "vb"), 4)
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -562,8 +627,7 @@ _PQ_ORACLE = f"""
 
 def _pq_subvectors(e: DataFrame) -> DataFrame:
     """(vec_id, sub_id, sv): the 8 fixed 8-dim slices of each vector."""
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.select("vec_id", dbl.alias("v"))
+    base = _dbl_base(e)
     return base.select(
         "vec_id",
         F.explode(
@@ -867,8 +931,7 @@ def _exact_rerank(cand: DataFrame, e: DataFrame) -> DataFrame:
     """Top-3 of each query's (qid, cand_id) pool by EXACT full-precision
     L2² (zip_with fold, round-4, id tiebreak): the pool broadcasts
     against the embeddings scan, so only R rows per query leave it."""
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.select("vec_id", dbl.alias("v"))
+    base = _dbl_base(e)
     qv = base.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_vec"), F.col("v").alias("qv")
     )
@@ -986,8 +1049,7 @@ def _lloyd(spark: SparkSession, sf_dir: str, cent: DataFrame | None = None):
     neither is persisted — each caller decides its own cache
     lifecycle."""
     e = t(spark, sf_dir, "embeddings")
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.select("vec_id", dbl.alias("v"))
+    base = _dbl_base(e)
     if cent is None:
         cent = base.filter(F.col("vec_id") % 50 == 0).select(
             (F.col("vec_id") / 50).cast("long").alias("cid"),
@@ -1084,15 +1146,8 @@ def q_llm_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg(F.sqrt(l2sq("v", "cv"))), 4).alias("avg_dist"),
         )
     )
-    out = stats.join(F.broadcast(cent), "cid").select(
-        F.col("cid").alias("cluster_id"),
-        "n_members",
-        "avg_dist",
-        *[
-            F.round(F.element_at("cv", i), 6).alias(f"c{i}")
-            for i in range(1, 5)
-        ],
-    ).transform(checkpoint)  # k-row audit; release both Lloyd caches
+    # k-row audit; release both Lloyd caches
+    out = _centroid_audit(stats, cent).transform(checkpoint)
     assign.unpersist()
     cent.unpersist()
     return out
@@ -1173,21 +1228,7 @@ def q_ml_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round((b - a) / F.greatest(a, b), 6).alias("s"),
         )
     )
-    return (
-        sil.groupBy("cid")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.round(F.avg("s"), 4).alias("silhouette_avg"),
-            F.sum((F.col("s") < 0).cast("long")).alias("n_negative"),
-        )
-        .select(
-            F.col("cid").alias("cluster_id"),
-            "n_members",
-            "silhouette_avg",
-            "n_negative",
-        )
-        .orderBy("cluster_id")
-    )
+    return _silhouette_rollup(sil).orderBy("cluster_id")
 
 
 @query(
@@ -1306,8 +1347,7 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never move for the assignment itself. The oracle recomputes the
     identical pipeline as a CTE chain — hash-certified, not rows-only."""
     e = t(spark, sf_dir, "embeddings")
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    base = e.select("vec_id", dbl.alias("v"))
+    base = _dbl_base(e)
     cent = base.filter(F.col("vec_id") % 50 == 0).select(
         (F.col("vec_id") / 50).cast("long").alias("cid"),
         F.col("v").alias("cv"),
@@ -1376,25 +1416,9 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.round(cos, 4) >= _SEMDEDUP_THRESH)
         .select(F.col("p_cid").alias("cid"), "id_a", "id_b")
     )
-    members = assign.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
-    pstats = pairs.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n_dup_pairs"),
-        F.countDistinct("id_b").alias("n_dropped"),
-    )
     # k-row audit: eagerly materialize, then release the assignment
     # cache (the persist-lifecycle law from the round-4 ADVICE)
-    out = (
-        members.join(F.broadcast(pstats), "cid", "left")
-        .select(
-            F.col("cid").alias("cluster_id"),
-            "n_members",
-            F.coalesce("n_dup_pairs", F.lit(0)).alias("n_dup_pairs"),
-            F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
-            (F.col("n_members") - F.coalesce("n_dropped", F.lit(0)))
-            .alias("n_kept"),
-        )
-        .transform(checkpoint)
-    )
+    out = _semdedup_audit(assign, pairs)
     assign.unpersist()
     return out
 

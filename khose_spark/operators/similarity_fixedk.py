@@ -45,7 +45,11 @@ from khose_spark.operators.similarity import (
     _PQ_RERANK_ORACLE,
     _PQ_RERANK_R,
     _SEMDEDUP_THRESH,
+    _centroid_audit,
+    _cos,
+    _dbl_base,
     _exact_rerank,
+    _ivf_top3,
     _km_oracle,
     _l2sq,
     _lloyd,
@@ -53,8 +57,11 @@ from khose_spark.operators.similarity import (
     _pq_search,
     _pq_subvectors,
     _rerank_pool,
+    _semdedup_audit,
     _silhouette_oracle,
+    _silhouette_rollup,
     _srp_planes,
+    _top3,
     build_pq_index,
 )
 from khose_spark.registry import query
@@ -100,11 +107,6 @@ def fixed_seeds(base: DataFrame, k: int = _FIXED_K) -> DataFrame:
         (F.row_number().over(w) - 1).cast("long").alias("cid"),
         F.col("v").alias("cv"),
     )
-
-
-def _dbl_base(e: DataFrame) -> DataFrame:
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    return e.select("vec_id", dbl.alias("v"))
 
 
 def _collect_cents(cent: DataFrame) -> list[tuple[int, list[float]]]:
@@ -186,20 +188,6 @@ def _assign_max_cos_vec(e: DataFrame, cents) -> DataFrame:
     )
 
 
-def _cos(a: str, b: str):
-    """Sequential-fold cosine — identical expression tree to the IVF /
-    semdedup originals, so rounded values are bit-identical."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sq = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return dot / (F.sqrt(sq(a)) * F.sqrt(sq(b)))
-
-
 # ---------------------------------------------------------------------------
 # IVF
 # ---------------------------------------------------------------------------
@@ -255,43 +243,7 @@ def q_llm_ann_ivf_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank. At 100 TB the corpus never shuffles for assignment; the
     only shuffles carry (vec_id, cid) pairs."""
     base = _dbl_base(t(spark, sf_dir, "embeddings"))
-    cent = fixed_seeds(base)
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("asim"), F.asc("cid")
-    )
-    assign = (
-        base.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "cid", F.round(_cos("v", "cv"), 6).alias("asim")
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-    probe = (
-        base.filter(F.col("vec_id") < 10)
-        .join(assign, "vec_id")
-        .select(
-            F.col("vec_id").alias("qid"), F.col("v").alias("qv"), "cid"
-        )
-    )
-    members = assign.join(base, "vec_id").select("cid", "vec_id", "v")
-    cell_sims = (
-        F.broadcast(probe)
-        .join(members, "cid")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(_cos("qv", "v"), 4).alias("sim"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        cell_sims.select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            "sim",
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= 3)
-    )
+    return _ivf_top3(base, fixed_seeds(base))
 
 
 # ---------------------------------------------------------------------------
@@ -609,15 +561,7 @@ def q_llm_kmeans_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_members"),
         F.round(F.avg("d"), 4).alias("avg_dist"),
     )
-    out = stats.join(F.broadcast(cent), "cid").select(
-        F.col("cid").alias("cluster_id"),
-        "n_members",
-        "avg_dist",
-        *[
-            F.round(F.element_at("cv", i), 6).alias(f"c{i}")
-            for i in range(1, 5)
-        ],
-    ).transform(checkpoint)
+    out = _centroid_audit(stats, cent).transform(checkpoint)
     assign.unpersist()
     cent.unpersist()
     return out
@@ -676,21 +620,7 @@ def q_ml_silhouette_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _fixed_lloyd pinned on a cold build — a no-op when this key runs
     # on the memo-hit single-pass path. Same release discipline as
     # q_llm_kmeans_fixedk.
-    out = (
-        sil.groupBy("cid")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.round(F.avg("s"), 4).alias("silhouette_avg"),
-            F.sum((F.col("s") < 0).cast("long")).alias("n_negative"),
-        )
-        .select(
-            F.col("cid").alias("cluster_id"),
-            "n_members",
-            "silhouette_avg",
-            "n_negative",
-        )
-        .transform(checkpoint)
-    )
+    out = _silhouette_rollup(sil).transform(checkpoint)
     assign.unpersist()
     return out.orderBy("cluster_id")
 
@@ -898,25 +828,7 @@ def q_llm_semdedup_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
         verify,
         {"va": 64, "vb": 64},
     )
-    members = assign.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
-    pstats = pairs.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n_dup_pairs"),
-        F.countDistinct("id_b").alias("n_dropped"),
-    )
-    out = (
-        members.join(F.broadcast(pstats), "cid", "left")
-        .select(
-            F.col("cid").alias("cluster_id"),
-            "n_members",
-            F.coalesce("n_dup_pairs", F.lit(0)).alias("n_dup_pairs"),
-            F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
-            (F.col("n_members") - F.coalesce("n_dropped", F.lit(0)))
-            .alias("n_kept"),
-        )
-        .transform(checkpoint)
-    )
+    out = _semdedup_audit(assign, pairs)
     assign.unpersist()
     return out
 
@@ -1036,16 +948,7 @@ def q_llm_ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
         4,
         "sim",
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        cell_sims.select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            "sim",
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= 3)
-    )
+    return _top3(cell_sims)
 
 
 # Corpus-scaled rerank pool: R = ceil(2n/25) (8% of the corpus). The
@@ -1258,6 +1161,24 @@ def encode_ivfpq_fixedk(
     return _pq_fixed_codes_vec(e, _collect_pq_cb(cb), cell_cents), cb
 
 
+def _cell_probe(base: DataFrame) -> DataFrame:
+    """(qid, cid): the _IVF_PROBES fixed-seed cells each query vec_id < 10
+    probes, ranked by round(cos, 6) with cid tiebreak."""
+    w_rank = Window.partitionBy("vec_id").orderBy(
+        F.desc("asim"), F.asc("cid")
+    )
+    return (
+        base.filter(F.col("vec_id") < 10)
+        .crossJoin(F.broadcast(fixed_seeds(base)))
+        .select(
+            "vec_id", "cid", F.round(_cos("v", "cv"), 6).alias("asim")
+        )
+        .withColumn("rn", F.row_number().over(w_rank))
+        .filter(F.col("rn") <= _IVF_PROBES)
+        .select(F.col("vec_id").alias("qid"), "cid")
+    )
+
+
 @query("q_llm_ann_pq_probed_scaled", oracle=_PQ_PROBED_SCALED_ORACLE)
 def q_llm_ann_pq_probed_scaled(
     spark: SparkSession, sf_dir: str
@@ -1309,20 +1230,7 @@ def q_llm_ann_pq_probed_scaled(
     )
     e = t(spark, sf_dir, "embeddings")
     base = _dbl_base(e)
-    cent = fixed_seeds(base)
-    w_rank = Window.partitionBy("vec_id").orderBy(
-        F.desc("asim"), F.asc("cid")
-    )
-    cellprobe = (
-        base.filter(F.col("vec_id") < 10)
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "cid", F.round(_cos("v", "cv"), 6).alias("asim")
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_PROBES)
-        .select(F.col("vec_id").alias("qid"), "cid")
-    )
+    cellprobe = _cell_probe(base)
     qsub = _pq_subvectors(e.filter(F.col("vec_id") < 10))
     lut = _pq_lut(qsub, spark.table(cb_tbl))
     # Probed ADC: the broadcast probe join on cid is the partition-
@@ -1597,20 +1505,7 @@ def q_llm_ann_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = t(spark, sf_dir, "embeddings")
     base = _dbl_base(e)
-    cent = fixed_seeds(base)
-    w_rank = Window.partitionBy("vec_id").orderBy(
-        F.desc("asim"), F.asc("cid")
-    )
-    cellprobe = (
-        base.filter(F.col("vec_id") < 10)
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "cid", F.round(_cos("v", "cv"), 6).alias("asim")
-        )
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= _IVF_PROBES)
-        .select(F.col("vec_id").alias("qid"), "cid")
-    )
+    cellprobe = _cell_probe(base)
     tot = base.agg(F.count(F.lit(1)).cast("long").alias("corpus_n"))
     return (
         cellprobe.join(F.broadcast(occ), "cid")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.registry import query
-from khose_spark.sqlutil import dec_sum, sql_dec_sum
+from khose_spark.sqlutil import cents, dec_sum, sql_dec_sum
 from khose_spark.tables import t
 
 
@@ -265,9 +265,7 @@ def windowed_user_spend(events: DataFrame) -> DataFrame:
     return (
         events.groupBy(F.window("ts", "6 hours").alias("w"), "user_id")
         .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
+            F.sum(cents(F.col("value"))).alias("cents")
         )
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(

@@ -21,15 +21,59 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
-from khose_spark.sqlutil import dec_round, dec_sum, sql_dec_sum
+from khose_spark.sqlutil import cents, dec_round, dec_sum, sql_dec_sum
 from khose_spark.tables import t
 
 _DEC = "decimal(28,2)"
+
+
+def _day_idx() -> Column:
+    """Whole days from the events fixture's 2024-01-01 origin to ``ts``."""
+    return F.datediff(F.to_date("ts"), F.lit("2024-01-01")).cast("long")
+
+
+def _events_daily_cents(
+    spark: SparkSession, sf_dir: str, day: Column
+) -> DataFrame:
+    """(event_type, d, cents): exact int64 spend per event type and
+    ``day`` — the per-type rollup every daily series starts from."""
+    return (
+        t(spark, sf_dir, "events")
+        .groupBy("event_type", day.alias("d"))
+        .agg(F.sum(cents(F.col("value"))).alias("cents"))
+    )
+
+
+def _orders_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, d, cents): exact int64 order revenue per order date, with
+    ``d`` the whole days since 1992-01-01."""
+    return (
+        t(spark, sf_dir, "orders")
+        .groupBy(
+            F.col("o_orderdate").alias("day"),
+            F.datediff(F.col("o_orderdate"), F.lit("1992-01-01"))
+            .cast("long")
+            .alias("d"),
+        )
+        .agg(F.sum(cents(F.col("o_totalprice"))).alias("cents"))
+    )
+
+
+def _indexed_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, cents, i): the per-type daily series by date with
+    its 1-based observed-day index."""
+    return _events_daily_cents(spark, sf_dir, F.col("ts").cast("date")).select(
+        "event_type",
+        "cents",
+        F.row_number()
+        .over(Window.partitionBy("event_type").orderBy("d"))
+        .alias("i"),
+    )
 
 
 @query(
@@ -190,9 +234,7 @@ def q_ts_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seg = t(spark, sf_dir, "events").select(
         "user_id",
-        (F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents(F.col("value")).alias("cents"),
         (
             F.unix_timestamp(F.lead("ts").over(w))
             - F.unix_timestamp("ts")
@@ -568,8 +610,7 @@ def q_ts_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.hour("ts").cast("int").alias("hr")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-        .alias("cents"),
+        F.sum(cents(F.col("value"))).alias("cents"),
     )
     w_type = Window.partitionBy("event_type")
     shared = hourly.withColumn("tot_cents", F.sum("cents").over(w_type))
@@ -1018,7 +1059,7 @@ def q_ts_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("p95").alias("p95"),
         F.sum((F.col("value") < F.col("p05")).cast("long")).alias("n_clip_lo"),
         F.sum((F.col("value") > F.col("p95")).cast("long")).alias("n_clip_hi"),
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long")).alias(
+        F.sum(cents(F.col("value"))).alias(
             "_sum_c"
         ),
         F.sum((F.col("w").cast("decimal(18,4)") * 10000).cast("long")).alias(
@@ -1097,12 +1138,9 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.groupBy(
             "event_type",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01")).cast("long").alias("x"),
+            _day_idx().alias("x"),
         )
-        .agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .alias("cents")
-        )
+        .agg(F.sum(cents(F.col("value"))).alias("cents"))
         .persist()
     )
     a, b = daily.alias("a"), daily.alias("b")
@@ -1220,10 +1258,7 @@ def q_ts_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 3600
             )
         ).cast("long").alias("h"),
-    ).agg(
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-        .alias("cents")
-    )
+    ).agg(F.sum(cents(F.col("value"))).alias("cents"))
     spans = hourly.groupBy("event_type").agg(
         F.min("h").alias("h_lo"), F.max("h").alias("h_hi")
     )
@@ -1304,10 +1339,7 @@ def q_ts_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CAST(datediff(to_date(ts), DATE '2024-01-01') AS BIGINT) DIV 7"
         ).alias("week"),
-    ).agg(
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-        .alias("cents")
-    )
+    ).agg(F.sum(cents(F.col("value"))).alias("cents"))
     w = Window.partitionBy("event_type").orderBy("week")
     lagged = weekly.select(
         "event_type",
@@ -1451,22 +1483,7 @@ def q_ts_hampel(spark: SparkSession, sf_dir: str) -> DataFrame:
     join: one shuffle on the center key, aggregates bounded by the day
     grid. The raw fact collapses to the daily rollup first — the only
     data-sized stage at 100 TB."""
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(
-            F.col("o_orderdate").alias("day"),
-            F.datediff(F.col("o_orderdate"), F.lit("1992-01-01"))
-            .cast("long")
-            .alias("d"),
-        )
-        .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")
-            ).alias("cents")
-        )
-        .persist()
-    )
+    daily = _orders_daily_cents(spark, sf_dir).persist()
     contrib = daily.select(
         "d",
         "cents",
@@ -1560,21 +1577,7 @@ def q_ts_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     run on that tiny relation. The sequential-scan prefix structure is
     inherent to the statistic — at 100 TB the rollup is still the only
     shuffle."""
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(
-            F.col("o_orderdate").alias("day"),
-            F.datediff(F.col("o_orderdate"), F.lit("1992-01-01"))
-            .cast("long")
-            .alias("d"),
-        )
-        .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")
-            ).alias("cents")
-        )
-    )
+    daily = _orders_daily_cents(spark, sf_dir)
     w_cum = Window.orderBy("d").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1665,20 +1668,7 @@ def q_ts_ar1(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; one round-4 tail (the linreg-2f law). Plan: fact
     collapses to the per-type daily rollup, one lag window per type,
     a 5-row moment fold."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01"))
-            .cast("long")
-            .alias("d"),
-        )
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
+    daily = _events_daily_cents(spark, sf_dir, _day_idx())
     w_lag = Window.partitionBy("event_type").orderBy("d")
     lagged = daily.select(
         "event_type",
@@ -1763,20 +1753,7 @@ def q_ts_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ntile window + one row_number window per type over the ~30-row
     series, 5-row agg. The motif string is a bounded 10-char
     projection, never an unbounded concat."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01"))
-            .cast("long")
-            .alias("d"),
-        )
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
+    daily = _events_daily_cents(spark, sf_dir, _day_idx())
     w_rank = Window.partitionBy("event_type").orderBy("cents", "d")
     w_day = Window.partitionBy("event_type").orderBy("d")
     lettered = daily.select(
@@ -1855,20 +1832,7 @@ def q_ts_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: fact → per-type daily rollup, ONE lag window per type
     computing both horizons, a stacked union of the two scored views,
     and a 10-row aggregate. One data-sized stage at any scale."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01"))
-            .cast("long")
-            .alias("d"),
-        )
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
+    daily = _events_daily_cents(spark, sf_dir, _day_idx())
     w = Window.partitionBy("event_type").orderBy("d")
     lagged = daily.select(
         "event_type",
@@ -1946,21 +1910,7 @@ def q_ts_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer (cents, integer day keys); one lag/lead window over
     the tiny daily rollup. The fact scan is the only data-sized stage
     at any scale."""
-    daily = (
-        t(spark, sf_dir, "orders")
-        .groupBy(
-            F.col("o_orderdate").alias("day"),
-            F.datediff(F.col("o_orderdate"), F.lit("1992-01-01"))
-            .cast("long")
-            .alias("d"),
-        )
-        .agg(
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                .cast("long")
-            ).alias("cents")
-        )
-    )
+    daily = _orders_daily_cents(spark, sf_dir)
     w = Window.orderBy("d")
     framed = daily.select(
         "day",
@@ -2100,9 +2050,7 @@ def q_ts_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .select(
             "user_id",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01"))
-            .cast("long")
-            .alias("d"),
+            _day_idx().alias("d"),
         )
         .distinct()
         .transform(checkpoint)  # feeds contrib, days, dau, bounds
@@ -2177,10 +2125,7 @@ def q_ts_intraday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100)
-                .cast("long")
-            ).alias("cents"),
+            F.sum(cents(F.col("value"))).alias("cents"),
         )
     )
     w_type = Window.partitionBy("event_type")
@@ -2429,12 +2374,8 @@ def _daily_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily_raw = (
         e.select(
             "event_type",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01"))
-            .cast("long")
-            .alias("d"),
-            (F.col("value").cast("decimal(18,2)") * 100)
-            .cast("long")
-            .alias("cents"),
+            _day_idx().alias("d"),
+            cents(F.col("value")).alias("cents"),
         )
         .groupBy("event_type", "d")
         .agg(F.sum("cents").alias("cents"))
@@ -2792,6 +2733,56 @@ def q_ts_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _acf_rho(
+    spark: SparkSession, sf_dir: str, lags: tuple[int, ...]
+) -> DataFrame:
+    """(event_type, lag, r, n): the exact-carrier autocorrelation ρ of
+    each type's daily cents series at every lag in ``lags`` — centered
+    u = n·x − S in int64, lag products and Σu² in DECIMAL(38,0), one
+    double ratio per ρ (q_ts_ljung_box's docstring has the law)."""
+    idxd = _indexed_daily(spark, sf_dir).transform(checkpoint)
+    stats = idxd.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("cents").cast("long").alias("s"),
+    )
+    centered = idxd.join(F.broadcast(stats), "event_type").select(
+        "event_type",
+        "i",
+        (F.col("n") * F.col("cents") - F.col("s"))
+        .cast("long")
+        .alias("u"),
+        "n",
+    )
+    udec = F.col("u").cast("decimal(19,0)")
+    denom = centered.groupBy("event_type").agg(
+        F.sum(udec * udec).alias("ssu")
+    )
+    lag_dim = spark.range(1).select(
+        F.explode(F.array(*[F.lit(k) for k in lags])).alias("lag")
+    )
+    a = centered.alias("a").crossJoin(F.broadcast(lag_dim))
+    b = centered.alias("b")
+    return (
+        a.join(
+            F.broadcast(b),
+            (F.col("b.event_type") == F.col("a.event_type"))
+            & (F.col("b.i") == F.col("a.i") + F.col("lag")),
+        )
+        .join(F.broadcast(denom.alias("d")), "event_type")
+        .groupBy(F.col("a.event_type").alias("event_type"), "lag")
+        .agg(
+            (
+                F.sum(
+                    F.col("a.u").cast("decimal(19,0)")
+                    * F.col("b.u").cast("decimal(19,0)")
+                ).cast("double")
+                / F.max("d.ssu").cast("double")
+            ).alias("r"),
+            F.max("a.n").alias("n"),
+        )
+    )
+
+
 @query(
     "q_ts_ljung_box",
     oracle="""
@@ -2871,62 +2862,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     index window, u self-join on (type, i+lag) and a ≤3-row
     per-type pivot, all on the days×types-bounded rollup.  At 100 TB
     the rollup is kilobytes; everything after it broadcasts."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
-    idxd = daily.select(
-        "event_type",
-        "cents",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("d"))
-        .alias("i"),
-    ).transform(checkpoint)
-    stats = idxd.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("cents").cast("long").alias("s"),
-    )
-    centered = idxd.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "i",
-        (F.col("n") * F.col("cents") - F.col("s"))
-        .cast("long")
-        .alias("u"),
-        "n",
-    )
-    udec = F.col("u").cast("decimal(19,0)")
-    denom = centered.groupBy("event_type").agg(
-        F.sum(udec * udec).alias("ssu")
-    )
-    lags = spark.range(1).select(
-        F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("lag")
-    )
-    a = centered.alias("a").crossJoin(F.broadcast(lags))
-    b = centered.alias("b")
-    rho = (
-        a.join(
-            F.broadcast(b),
-            (F.col("b.event_type") == F.col("a.event_type"))
-            & (F.col("b.i") == F.col("a.i") + F.col("lag")),
-        )
-        .join(F.broadcast(denom.alias("d")), "event_type")
-        .groupBy(F.col("a.event_type").alias("event_type"), "lag")
-        .agg(
-            (
-                F.sum(
-                    F.col("a.u").cast("decimal(19,0)")
-                    * F.col("b.u").cast("decimal(19,0)")
-                ).cast("double")
-                / F.max("d.ssu").cast("double")
-            ).alias("r"),
-            F.max("a.n").alias("n"),
-        )
-    )
+    rho = _acf_rho(spark, sf_dir, (1, 2, 3))
     # Pivot the 3 lags to columns so the Q fold is a FIXED expression
     # tree (t1 + t2 + t3), not an order-unpinned 3-row sum().
     wide = rho.groupBy("event_type").agg(
@@ -2995,20 +2931,7 @@ def q_ts_realized_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the (type,day) rollup is the only fact-sized shuffle; lag
     window and fold run over the <=days-per-type relation. At 100 TB
     the rollup is kilobytes."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01"))
-            .cast("long")
-            .alias("d"),
-        )
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
+    daily = _events_daily_cents(spark, sf_dir, _day_idx())
     w_lag = Window.partitionBy("event_type").orderBy("d")
     lagged = daily.select(
         "event_type",
@@ -3111,62 +3034,7 @@ def q_ts_pacf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one (type,day) rollup (the only fact-sized shuffle) + index
     window + u self-join on (type, i+lag) + per-type pivot to
     one row -- everything post-rollup is days x types-bounded."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
-    idxd = daily.select(
-        "event_type",
-        "cents",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("d"))
-        .alias("i"),
-    ).transform(checkpoint)
-    stats = idxd.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("cents").cast("long").alias("s"),
-    )
-    centered = idxd.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "i",
-        (F.col("n") * F.col("cents") - F.col("s"))
-        .cast("long")
-        .alias("u"),
-        "n",
-    )
-    udec = F.col("u").cast("decimal(19,0)")
-    denom = centered.groupBy("event_type").agg(
-        F.sum(udec * udec).alias("ssu")
-    )
-    lags = spark.range(1).select(
-        F.explode(F.array(F.lit(1), F.lit(2))).alias("lag")
-    )
-    a = centered.alias("a").crossJoin(F.broadcast(lags))
-    b = centered.alias("b")
-    rho = (
-        a.join(
-            F.broadcast(b),
-            (F.col("b.event_type") == F.col("a.event_type"))
-            & (F.col("b.i") == F.col("a.i") + F.col("lag")),
-        )
-        .join(F.broadcast(denom.alias("d")), "event_type")
-        .groupBy(F.col("a.event_type").alias("event_type"), "lag")
-        .agg(
-            (
-                F.sum(
-                    F.col("a.u").cast("decimal(19,0)")
-                    * F.col("b.u").cast("decimal(19,0)")
-                ).cast("double")
-                / F.max("d.ssu").cast("double")
-            ).alias("r"),
-            F.max("a.n").alias("n"),
-        )
-    )
+    rho = _acf_rho(spark, sf_dir, (1, 2))
     wide = rho.groupBy("event_type").agg(
         F.max("n").cast("long").alias("n_days"),
         F.max(F.when(F.col("lag") == 1, F.col("r"))).alias("r1"),
@@ -3287,15 +3155,7 @@ def q_ts_dft_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one (type,day) rollup (the only fact-sized shuffle) + index
     window + one 7-bin fold over the days x types-bounded relation."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
+    daily = _events_daily_cents(spark, sf_dir, F.col("ts").cast("date"))
     idxd = daily.select(
         "event_type",
         "cents",
@@ -3456,22 +3316,7 @@ def q_ts_spc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-row baseline fold, three ROWS-frame windows over the ≤720-row
     per-type relation, one 5-row rollup. At 100 TB everything
     post-rollup is kilobytes."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
-    idxd = daily.select(
-        "event_type",
-        "cents",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("d"))
-        .alias("i"),
-    ).transform(checkpoint)
+    idxd = _indexed_daily(spark, sf_dir).transform(checkpoint)
     cdec = F.col("cents").cast("decimal(19,0)")
     base = (
         idxd.filter(F.col("i") <= 10)
@@ -3663,22 +3508,7 @@ def q_ts_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-row centered window + two bounded aggregates over the
     days×types relation + a 7-column pivot join. At 100 TB everything
     post-rollup is kilobytes."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
-    idxd = daily.select(
-        "event_type",
-        "cents",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("d"))
-        .alias("i"),
-    )
+    idxd = _indexed_daily(spark, sf_dir)
     w7 = (
         Window.partitionBy("event_type").orderBy("i").rowsBetween(-3, 3)
     )
@@ -3854,15 +3684,7 @@ def q_ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one (type,day) rollup (the only fact-sized shuffle) + two
     lead() windows over ≤720-row partitions + one 6-column fold."""
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-            ).alias("cents")
-        )
-    )
+    daily = _events_daily_cents(spark, sf_dir, F.col("ts").cast("date"))
     w = Window.partitionBy("event_type").orderBy("d")
     laged = daily.select(
         "event_type",
@@ -4282,19 +4104,7 @@ def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 3-row broadcast window dimension crossed into the days×types-
     bounded rollup (the q_ts_acf lag-dim idiom), per-chunk windows over
     ≤16-row partitions, then 15-row/5-row folds."""
-    ev = t(spark, sf_dir, "events")
-    daily = (
-        ev.groupBy(
-            "event_type",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01"))
-            .cast("long")
-            .alias("d"),
-        )
-        .agg(
-            F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-            .alias("cents")
-        )
-    )
+    daily = _events_daily_cents(spark, sf_dir, _day_idx())
     w_idx = Window.partitionBy("event_type").orderBy(F.asc("d"))
     w_n = Window.partitionBy("event_type")
     idx = daily.select(
@@ -4479,13 +4289,8 @@ def q_ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     purch = ev.groupBy(
         "user_id",
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01"))
-        .cast("long")
-        .alias("dx"),
-    ).agg(
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("long"))
-        .alias("cents")
-    )
+        _day_idx().alias("dx"),
+    ).agg(F.sum(cents(F.col("value"))).alias("cents"))
 
     def croston(pdf: pd.DataFrame) -> pd.DataFrame:
         def tdiv2(a: int) -> int:

@@ -35,6 +35,11 @@ def dec_sum(col: Column, dec_in: int = 4, dec_out: int = 2) -> Column:
     return F.round(F.sum(col.cast(f"decimal(28,{dec_in})")), dec_out).cast("double")
 
 
+def cents(col: Column) -> Column:
+    """Exact money to integer cents: decimal(18,2) * 100 -> long."""
+    return (col.cast("decimal(18,2)") * 100).cast("long")
+
+
 def sql_dec_round(expr: str, dec_in: int = 4, dec_out: int = 2) -> str:
     """DuckDB twin of :func:`dec_round`."""
     return f"CAST(round(CAST({expr} AS DECIMAL(18,{dec_in})), {dec_out}) AS DOUBLE)"

@@ -14,7 +14,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from khose_spark import memo
-from khose_spark.operators import dedup_audit, graph, similarity, textindex
+from khose_spark.operators import (
+    dedup_audit,
+    graph,
+    scans,
+    similarity,
+    textindex,
+)
 from khose_spark.operators import similarity_fixedk as fk
 
 _INDEX_PREFIXES = ("pq", "ivfpq")
@@ -49,6 +55,7 @@ def test_release_all_leaves_no_artifacts(spark, sf_dir):
     graph._knn_backbone(spark, sf_dir)
     assign, _cent = fk._fixed_lloyd(spark, sf_dir)
     assign.unpersist()  # the consumer's half of the Lloyd contract
+    scans.q_sink_bucketed_join(spark, sf_dir)
 
     assert len(_index_dirs() - dirs_before) == 3
     assert len(_index_tables(spark)) == 6
@@ -63,6 +70,10 @@ def test_release_all_leaves_no_artifacts(spark, sf_dir):
     assert not pinned & _persisted_ids(spark)
     assert not memo._ENTRIES
     assert not os.path.exists(os.path.dirname(probe))
+    # No catalog table is left over deleted scratch files.
+    assert not [
+        tb.name for tb in spark.catalog.listTables() if "_bj_" in tb.name
+    ]
 
 
 def test_failed_build_leaves_nothing_behind(spark, sf_dir):
