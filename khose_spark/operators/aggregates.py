@@ -17,6 +17,7 @@ from khose_spark.sqlutil import (
     cents,
     dec_round,
     dec_sum,
+    sql_cents,
     sql_dec_round,
     sql_dec_sum,
 )
@@ -714,7 +715,7 @@ _QBIN_QS = (500, 900, 990)
     "q_agg_quantile_bin_audit",
     oracle=f"""
     WITH cents AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      SELECT {sql_cents('o_totalprice')}
                  AS c
       FROM orders
     ), bands AS (
@@ -770,7 +771,7 @@ def q_agg_quantile_bin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile runs beside it as the (already-certified) reference."""
     cents = t(spark, sf_dir, "orders").select(
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("o_totalprice")
         ).alias("c")
     ).transform(checkpoint)  # feeds the histogram + the exact reference
     bands = cents.groupBy(
@@ -1223,10 +1224,10 @@ def q_agg_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_skyline_2d",
-    oracle="""
+    oracle=f"""
     WITH pts AS (
       SELECT p_size AS s,
-             CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('p_retailprice')}
                AS c
       FROM part
     ), flagged AS (
@@ -1271,7 +1272,7 @@ def q_agg_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = t(spark, sf_dir, "part").select(
         F.col("p_size").alias("s"),
         F.expr(
-            "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("p_retailprice")
         ).alias("c"),
     )
     # the only fact-sized shuffle: domain-bounded (size, cents) points

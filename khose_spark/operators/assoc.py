@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
+from khose_spark.sqlutil import sql_cents
 from khose_spark.tables import t
 
 # Pinned critical values (house precedent: fixed literals, no stats lib)
@@ -34,10 +35,10 @@ _D_SMALL, _D_MEDIUM, _D_LARGE = "0.2", "0.5", "0.8"  # Cohen's benchmarks
 
 @query(
     "q_ml_gamma_concordance",
-    oracle="""
+    oracle=f"""
     WITH cell AS (
       SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS x,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                // 5000000 AS y,
              CAST(count(*) AS BIGINT) AS n
       FROM orders GROUP BY 1, 2
@@ -92,7 +93,7 @@ def q_ml_gamma_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(substring(o_orderpriority, 1, 1) AS BIGINT)"
             ).alias("x"),
             F.expr(
-                "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                f"{sql_cents('o_totalprice')}"
                 " DIV 5000000"
             ).alias("y"),
         )
@@ -243,7 +244,7 @@ def q_ml_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH x AS (
       SELECT event_type AS grp,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+             {sql_cents('value')} AS cents
       FROM events WHERE event_type IN ('click', 'view')
     ), g AS (
       SELECT grp,
@@ -316,7 +317,7 @@ def q_ml_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("event_type").alias("grp"),
             F.expr(
-                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                sql_cents("value")
             ).alias("cents"),
         )
         .groupBy("grp")
@@ -387,7 +388,7 @@ def q_ml_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH x AS (
       SELECT o_orderpriority AS grp,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                // 10000 AS band
       FROM orders
     ), joint AS (
@@ -463,7 +464,7 @@ def q_ml_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = o.select(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            f"{sql_cents('o_totalprice')}"
             " DIV 10000"
         ).alias("band"),
     )

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
-from khose_spark.operators.curation_pipeline import _STOP_SQL
+from khose_spark.operators.curation_pipeline import _S1_SQL
 from khose_spark.operators.quality_rules import (
     _MAX_MWL,
     _MAX_WORDS,
@@ -73,17 +73,7 @@ _CHUNK_W = 16  # the q_llm_paragraph_dedup chunk width
     WITH delta AS (
       SELECT doc_id, lang,
              len(string_split(text, ' ')) AS n_words,
-             CASE WHEN len(string_split(text, ' '))
-                       BETWEEN {_MIN_WORDS} AND {_MAX_WORDS}
-                   AND {_MIN_MWL} * len(string_split(text, ' '))
-                       <= length(replace(text, ' ', ''))
-                   AND length(replace(text, ' ', ''))
-                       <= {_MAX_MWL} * len(string_split(text, ' '))
-                   AND 1000 * length(regexp_replace(
-                         text, '[A-Za-z0-9 ]', '', 'g'))
-                       <= {_SYM_PERMILLE} * length(text)
-                   AND ({_STOP_SQL}) >= {_MIN_STOP_HITS}
-              THEN 1 ELSE 0 END AS s1,
+             {_S1_SQL} AS s1,
              md5(text) AS grp
       FROM documents WHERE doc_id % 5 = 0
     ), basew AS (

@@ -552,15 +552,15 @@ def _rank_negatives(d: DataFrame, pool: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "q_llm_negative_sampling",
-    oracle=f"""
+def _sql_rank_negatives(pool: str) -> str:
+    """SQL twin of :func:`_rank_negatives`: every 10th document's top
+    cross-language negatives from the ``pool`` CTE body (neg_id,
+    neg_lang)."""
+    return f"""
     WITH queries AS (
       SELECT doc_id AS query_id, lang AS q_lang FROM documents
       WHERE doc_id % 10 = 0
-    ), pool AS (
-      SELECT doc_id AS neg_id, lang AS neg_lang FROM documents
-      WHERE {_sql_hash_bucket('doc_id')} < {_NEG_POOL_BUCKETS}
+    ), pool AS ({pool}
     ), scored AS (
       SELECT q.query_id, p.neg_id, p.neg_lang,
              md5(concat(CAST(q.query_id AS VARCHAR), '#',
@@ -575,7 +575,14 @@ def _rank_negatives(d: DataFrame, pool: DataFrame) -> DataFrame:
     )
     SELECT query_id, CAST(rk AS INT) AS rk, neg_id, neg_lang
     FROM ranked WHERE rk <= {_NEG_K}
-    """,
+    """
+
+
+@query(
+    "q_llm_negative_sampling",
+    oracle=_sql_rank_negatives(f"""
+      SELECT doc_id AS neg_id, lang AS neg_lang FROM documents
+      WHERE {_sql_hash_bucket('doc_id')} < {_NEG_POOL_BUCKETS}"""),
 )
 def q_llm_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling for contrastive training: every
@@ -604,31 +611,12 @@ _NEG_FIXED_POOL = 1000  # fixed-pool twin: constant broadcastable size
 
 @query(
     "q_llm_negative_sampling_fixedpool",
-    oracle=f"""
-    WITH queries AS (
-      SELECT doc_id AS query_id, lang AS q_lang FROM documents
-      WHERE doc_id % 10 = 0
-    ), pool AS (
+    oracle=_sql_rank_negatives(f"""
       SELECT doc_id AS neg_id, lang AS neg_lang FROM (
         SELECT doc_id, lang FROM documents
         ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
         LIMIT {_NEG_FIXED_POOL}
-      )
-    ), scored AS (
-      SELECT q.query_id, p.neg_id, p.neg_lang,
-             md5(concat(CAST(q.query_id AS VARCHAR), '#',
-                        CAST(p.neg_id AS VARCHAR))) AS h
-      FROM queries q JOIN pool p
-        ON p.neg_lang <> q.q_lang
-    ), ranked AS (
-      SELECT query_id, neg_id, neg_lang,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY h, neg_id) AS rk
-      FROM scored
-    )
-    SELECT query_id, CAST(rk AS INT) AS rk, neg_id, neg_lang
-    FROM ranked WHERE rk <= {_NEG_K}
-    """,
+      )"""),
 )
 def q_llm_negative_sampling_fixedpool(
     spark: SparkSession, sf_dir: str

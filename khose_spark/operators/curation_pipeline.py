@@ -83,14 +83,10 @@ _STOP_SQL = " + ".join(
     for w in _STOPWORDS
 )
 
-# The funnel's oracle, split into reusable pieces (round 13): the CTE
-# chain and the stage branches compose into _PIPELINE_ORACLE here and
-# into the stream-composed q_stream_curation_e2e_batchsem oracle
-# (operators/stream_curation.py), which prepends a stage-0 ingest row.
-_FUNNEL_CTES = f"""feats AS (
-      SELECT doc_id, source, lang,
-             len(string_split(text, ' ')) AS n_words,
-             CASE WHEN len(string_split(text, ' '))
+# Funnel stage 1, the heuristic quality gate over ``text``: 1 when the
+# word-count, mean-word-length, symbol-share and stop-word rules all
+# pass.
+_S1_SQL = f"""CASE WHEN len(string_split(text, ' '))
                        BETWEEN {_MIN_WORDS} AND {_MAX_WORDS}
                    AND {_MIN_MWL} * len(string_split(text, ' '))
                        <= length(replace(text, ' ', ''))
@@ -100,7 +96,16 @@ _FUNNEL_CTES = f"""feats AS (
                          text, '[A-Za-z0-9 ]', '', 'g'))
                        <= {_SYM_PERMILLE} * length(text)
                    AND ({_STOP_SQL}) >= {_MIN_STOP_HITS}
-              THEN 1 ELSE 0 END AS s1,
+              THEN 1 ELSE 0 END"""
+
+# The funnel's oracle, split into reusable pieces (round 13): the CTE
+# chain and the stage branches compose into _PIPELINE_ORACLE here and
+# into the stream-composed q_stream_curation_e2e_batchsem oracle
+# (operators/stream_curation.py), which prepends a stage-0 ingest row.
+_FUNNEL_CTES = f"""feats AS (
+      SELECT doc_id, source, lang,
+             len(string_split(text, ' ')) AS n_words,
+             {_S1_SQL} AS s1,
              md5(text) AS grp,
              {_sql_hash_bucket('text')} AS sb,
              md5(CAST(doc_id AS VARCHAR)) AS ordk,

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from khose_spark import memo
 from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import (
+    _SQL_ALL_PAIRS_OVERLAP,
+    _sql_shingles,
     all_pairs_overlap,
     doc_shingles,
     jaccard,
@@ -33,7 +35,7 @@ from khose_spark.operators.llm import (
     sized_pairs,
 )
 from khose_spark.registry import query
-from khose_spark.sqlutil import cents
+from khose_spark.sqlutil import cents, sql_cents
 from khose_spark.tables import t
 
 _N_HASHES = 16
@@ -44,19 +46,7 @@ _MIN_AGREE = 10  # >= 10/16 agreeing positions (est. Jaccard >= ~0.6)
 # sh/sig are re-read by multiple downstream CTEs in every consumer
 # oracle; MATERIALIZED stops DuckDB re-running the shingle explode /
 # 16-hash aggregation per reference (k-core precedent).
-_SQL_SHINGLES = """
-    words AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS MATERIALIZED (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingle
-        FROM words
-      ) WHERE len(string_split(shingle, ' ')) = 3
-    )
-"""
+_SQL_SHINGLES = _sql_shingles(cte="sh AS MATERIALIZED")
 
 # Each md5 digest (32 hex chars) yields FOUR independent 32-bit hash
 # values (non-overlapping 8-char slices), so 16 permutations cost 4
@@ -235,22 +225,17 @@ def _band_recall(spark: SparkSession, sf_dir: str, truth: Column) -> DataFrame:
         df.unpersist()
     return out
 
-
-@query(
-    "q_llm_lsh_recall_audit",
-    oracle=f"""
+def _sql_band_recall(truth: str) -> str:
+    """SQL twin of :func:`_band_recall`: the audit row for the all-pairs
+    shingle-overlap pairs meeting ``truth`` (over n_common, sa.n and
+    sb.n)."""
+    return f"""
     WITH {_SQL_SHINGLES}, {_SQL_SIG},
-    sizes AS (
-      SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-    ), inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), exact AS MATERIALIZED (
+    {_SQL_ALL_PAIRS_OVERLAP}, exact AS MATERIALIZED (
       SELECT id_a, id_b FROM inter
       JOIN sizes sa ON sa.doc_id = id_a
       JOIN sizes sb ON sb.doc_id = id_b
-      WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.8
+      WHERE {truth}
     ), cand AS MATERIALIZED (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -273,7 +258,14 @@ def _band_recall(spark: SparkSession, sf_dir: str, truth: Column) -> DataFrame:
                            + (SELECT count(*) FROM exact))
                           // (2 * (SELECT count(*) FROM exact)) AS BIGINT)
            END AS recall_permille
-    """,
+    """
+
+
+@query(
+    "q_llm_lsh_recall_audit",
+    oracle=_sql_band_recall(
+        "CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.8"
+    ),
 )
 def q_llm_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH quality gate: band-candidate recall vs the exact-Jaccard
@@ -502,17 +494,7 @@ def _sql_bloom_pos(expr: str, lo: int) -> str:
 @query(
     "q_llm_bloom_prefilter",
     oracle=f"""
-    WITH words AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingle
-        FROM words
-      ) WHERE len(string_split(shingle, ' ')) = 3
-    ), train_sh AS (
+    WITH {_sql_shingles()}, train_sh AS (
       SELECT DISTINCT shingle FROM sh WHERE doc_id >= {_BLOOM_EVAL_MAX_ID}
     ), eval_sh AS (
       SELECT DISTINCT shingle FROM sh WHERE doc_id < {_BLOOM_EVAL_MAX_ID}
@@ -998,14 +980,13 @@ def q_llm_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_er_golden_record",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
       SELECT p_name, p_partkey, p_brand, p_size,
-             CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('p_retailprice')}
                  AS price_cents,
              row_number() OVER (PARTITION BY p_name
-               ORDER BY CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100
-                             AS BIGINT) DESC, p_partkey ASC) AS rn
+               ORDER BY {sql_cents('p_retailprice')} DESC, p_partkey ASC) AS rn
       FROM part
     ), golden AS (
       SELECT p_name, p_partkey AS golden_partkey,
@@ -1076,18 +1057,8 @@ def q_er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_llm_source_overlap",
-    oracle="""
-    WITH words AS (
-      SELECT source, string_split(text, ' ') AS w FROM documents
-    ), ss AS MATERIALIZED (
-      SELECT DISTINCT source, shingle FROM (
-        SELECT source,
-               unnest(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingle
-        FROM words
-      ) WHERE len(string_split(shingle, ' ')) = 3
-    ), sizes AS (
+    oracle=f"""
+    WITH {_sql_shingles("source", "ss AS MATERIALIZED")}, sizes AS (
       SELECT source, count(*) AS n FROM ss GROUP BY source
     ), inter AS (
       SELECT a.source AS src_a, b.source AS src_b,
@@ -1931,43 +1902,10 @@ def q_er_phonetic_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_llm_containment_recall_audit",
-    oracle=f"""
-    WITH {_SQL_SHINGLES}, {_SQL_SIG},
-    sizes AS (
-      SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-    ), inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), exact AS MATERIALIZED (
-      SELECT id_a, id_b FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-      WHERE CAST((2 * 1000 * n_common + least(sa.n, sb.n))
-                 // (2 * least(sa.n, sb.n)) AS BIGINT) >= 800
-    ), cand AS MATERIALIZED (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE {" OR ".join(
-          "(" + " AND ".join(
-              f"a.s{b * _BAND_ROWS + r} = b.s{b * _BAND_ROWS + r}"
-              for r in range(_BAND_ROWS)
-          ) + ")"
-          for b in range(_N_HASHES // _BAND_ROWS)
-      )}
-    )
-    SELECT (SELECT count(*) FROM exact) AS n_exact,
-           (SELECT count(*) FROM cand) AS n_candidates,
-           (SELECT count(*) FROM exact e
-             JOIN cand c ON c.id_a = e.id_a AND c.id_b = e.id_b) AS n_hit,
-           CASE WHEN (SELECT count(*) FROM exact) = 0 THEN 1000
-                ELSE CAST(((SELECT count(*) FROM exact e
-                            JOIN cand c ON c.id_a = e.id_a
-                                       AND c.id_b = e.id_b) * 2000
-                           + (SELECT count(*) FROM exact))
-                          // (2 * (SELECT count(*) FROM exact)) AS BIGINT)
-           END AS recall_permille
-    """,
+    oracle=_sql_band_recall(
+        """CAST((2 * 1000 * n_common + least(sa.n, sb.n))
+                 // (2 * least(sa.n, sb.n)) AS BIGINT) >= 800"""
+    ),
 )
 def q_llm_containment_recall_audit(
     spark: SparkSession, sf_dir: str

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from khose_spark.memo import checkpoint
 from khose_spark.operators.curation import _sql_hash_bucket, hash_bucket
 from khose_spark.registry import query
-from khose_spark.sqlutil import cents
+from khose_spark.sqlutil import cents, sql_cents
 from khose_spark.tables import t
 
 # Ranking-metric contract constants: $1,000 score bands over the order
@@ -32,16 +32,38 @@ _AUC_BAND_CENTS = 100_000
 _POS_PRIORITIES = ("1-URGENT", "2-HIGH")
 
 _POS_SQL = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
-_CENTS_SQL = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+_CENTS_SQL = sql_cents("o_totalprice")
+
+# Orders labelled by $1,000 price band and urgent-or-high priority:
+# the ``labeled`` CTE, left open.
+_SQL_BAND_LABELED = f"""
+    WITH labeled AS (
+      SELECT {_CENTS_SQL} // {_AUC_BAND_CENTS} AS band,
+             CASE WHEN {_POS_SQL} THEN 1 ELSE 0 END AS pos
+      FROM orders"""
+
+# Orders split into two md5 customer buckets, labelled as above: the
+# ``assigned`` CTE, left open.
+_SQL_AB_ASSIGNED = f"""
+    WITH assigned AS (
+      SELECT {_sql_hash_bucket('o_custkey', 2)} AS bucket,
+             CASE WHEN {_POS_SQL} THEN 1 ELSE 0 END AS pos
+      FROM orders"""
+
+# Line items by 10-unit quantity bin with returned ('R') as the bad
+# label: the ``labeled`` CTE, left open.
+_SQL_BIN_LABELED = """
+    WITH labeled AS (
+      SELECT CAST((CAST(l_quantity AS BIGINT) - 1) // 10 AS BIGINT)
+               AS bin,
+             CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS bad
+      FROM lineitem"""
 
 
 @query(
     "q_ml_auc",
     oracle=f"""
-    WITH labeled AS (
-      SELECT {_CENTS_SQL} // {_AUC_BAND_CENTS} AS band,
-             CASE WHEN {_POS_SQL} THEN 1 ELSE 0 END AS pos
-      FROM orders
+{_SQL_BAND_LABELED}
     ), per_band AS (
       SELECT band, CAST(sum(pos) AS BIGINT) AS n_pos,
              CAST(count(*) - sum(pos) AS BIGINT) AS n_neg
@@ -129,10 +151,7 @@ def q_ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ml_gains_table",
     oracle=f"""
-    WITH labeled AS (
-      SELECT {_CENTS_SQL} // {_AUC_BAND_CENTS} AS band,
-             CASE WHEN {_POS_SQL} THEN 1 ELSE 0 END AS pos
-      FROM orders
+{_SQL_BAND_LABELED}
     ), per_band AS (
       SELECT band, count(*) AS n, CAST(sum(pos) AS BIGINT) AS n_pos
       FROM labeled GROUP BY band
@@ -245,10 +264,7 @@ def q_ml_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ml_chi2_ab",
     oracle=f"""
-    WITH assigned AS (
-      SELECT {_sql_hash_bucket('o_custkey', 2)} AS bucket,
-             CASE WHEN {_POS_SQL} THEN 1 ELSE 0 END AS pos
-      FROM orders
+{_SQL_AB_ASSIGNED}
     ), counts AS (
       SELECT
         CAST(sum(CASE WHEN bucket = 0 AND pos = 1 THEN 1 ELSE 0 END)
@@ -449,10 +465,10 @@ def q_ml_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_pca_2f",
-    oracle="""
+    oracle=f"""
     WITH feats AS (
       SELECT CAST(l_quantity AS BIGINT) AS x,
-             CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+             {sql_cents('l_discount')} AS y
       FROM lineitem
     ), moments AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
@@ -501,7 +517,7 @@ def q_ml_pca_2f(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = t(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("long").alias("x"),
         F.expr(
-            "CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("l_discount")
         ).alias("y"),
     )
     moments = feats.agg(
@@ -640,11 +656,10 @@ def q_ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_spearman",
-    oracle="""
+    oracle=f"""
     WITH pairs AS (
       SELECT CAST(l_quantity AS BIGINT) AS bx,
-             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-                  AS BIGINT) // 100000 AS by
+             {sql_cents('l_extendedprice')} // 100000 AS by
       FROM lineitem
     ), joint AS (
       SELECT bx, by, count(*) AS cnt FROM pairs GROUP BY bx, by
@@ -707,8 +722,7 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = t(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("long").alias("bx"),
         F.expr(
-            "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100"
-            " AS BIGINT) DIV 100000"
+            f"{sql_cents('l_extendedprice')} DIV 100000"
         ).alias("by"),
     )
     # Eager localCheckpoint, not lazy persist: the grid feeds THREE plan
@@ -1051,9 +1065,9 @@ def _split_band_cells(
     return cells, train
 
 
-@query(
-    "q_ml_brier",
-    oracle=f"""
+# SQL twin of :func:`_split_band_cells`: the ``labeled``, ``cells`` and
+# ``train`` CTEs, the last left open.
+_SQL_SPLIT_BAND_CELLS = f"""
     WITH labeled AS (
       SELECT {_CENTS_SQL} // {_AUC_BAND_CENTS} AS band,
              CASE WHEN {_sql_hash_bucket('o_orderkey')} < 50
@@ -1065,9 +1079,14 @@ def _split_band_cells(
              CAST(sum(pos) AS BIGINT) AS n_pos
       FROM labeled GROUP BY band, is_train
     ), train AS (
-      SELECT band,
-             (2 * 1000 * n_pos + n) // (2 * n) AS p
-      FROM cells WHERE is_train = 1
+      SELECT band, (2 * 1000 * n_pos + n) // (2 * n) AS p
+      FROM cells WHERE is_train = 1"""
+
+
+@query(
+    "q_ml_brier",
+    oracle=f"""
+{_SQL_SPLIT_BAND_CELLS}
     ), global_train AS (
       SELECT CAST((2 * 1000 * sum(n_pos) + sum(n)) // (2 * sum(n))
                   AS BIGINT) AS gp,
@@ -1217,11 +1236,10 @@ def q_ml_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_cohen_kappa",
-    oracle="""
+    oracle=f"""
     WITH rated AS (
       SELECT CASE WHEN l_quantity > 25 THEN 1 ELSE 0 END AS ra,
-             CASE WHEN CAST(CAST(l_extendedprice AS DECIMAL(18,2))
-                       * 100 AS BIGINT) > 2500000 THEN 1 ELSE 0 END
+             CASE WHEN {sql_cents('l_extendedprice')} > 2500000 THEN 1 ELSE 0 END
                  AS rb
       FROM lineitem
     ), counts AS (
@@ -1261,8 +1279,7 @@ def q_ml_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("l_quantity") > 25, 1).otherwise(0).alias("ra"),
         F.when(
             F.expr(
-                "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100"
-                " AS BIGINT)"
+                sql_cents("l_extendedprice")
             )
             > 2_500_000,
             1,
@@ -1296,19 +1313,7 @@ def q_ml_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ml_calibration",
     oracle=f"""
-    WITH labeled AS (
-      SELECT {_CENTS_SQL} // {_AUC_BAND_CENTS} AS band,
-             CASE WHEN {_sql_hash_bucket('o_orderkey')} < 50
-                  THEN 1 ELSE 0 END AS is_train,
-             CASE WHEN {_POS_SQL} THEN 1 ELSE 0 END AS pos
-      FROM orders
-    ), cells AS (
-      SELECT band, is_train, count(*) AS n,
-             CAST(sum(pos) AS BIGINT) AS n_pos
-      FROM labeled GROUP BY band, is_train
-    ), train AS (
-      SELECT band, (2 * 1000 * n_pos + n) // (2 * n) AS p
-      FROM cells WHERE is_train = 1
+{_SQL_SPLIT_BAND_CELLS}
     ), global_train AS (
       SELECT CAST((2 * 1000 * sum(n_pos) + sum(n)) // (2 * sum(n))
                   AS BIGINT) AS gp
@@ -1635,10 +1640,10 @@ def q_ml_confusion_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_jackknife",
-    oracle="""
+    oracle=f"""
     WITH li AS (
       SELECT l_suppkey % 20 AS fold,
-             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('l_extendedprice')}
                * (100 - CAST(round(CAST(l_discount AS DECIMAL(8,2)) * 100,
                                    0) AS BIGINT)) AS rev_cc,
              CAST(l_quantity AS BIGINT) AS qty
@@ -1755,7 +1760,7 @@ _BOOT_KEY = (
     oracle=f"""
     WITH li AS (
       SELECT l_orderkey, l_linenumber,
-             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('l_extendedprice')}
                * (100 - CAST(round(CAST(l_discount AS DECIMAL(8,2)) * 100,
                                    0) AS BIGINT)) AS rev_cc
       FROM lineitem
@@ -1875,12 +1880,8 @@ def q_ml_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_woe_iv",
-    oracle="""
-    WITH labeled AS (
-      SELECT CAST((CAST(l_quantity AS BIGINT) - 1) // 10 AS BIGINT)
-               AS bin,
-             CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS bad
-      FROM lineitem
+    oracle=f"""
+{_SQL_BIN_LABELED}
     ), per_bin AS (
       SELECT bin,
              CAST(sum(1 - bad) AS BIGINT) AS n_good,
@@ -1976,12 +1977,8 @@ def q_ml_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_info_gain",
-    oracle="""
-    WITH labeled AS (
-      SELECT CAST((CAST(l_quantity AS BIGINT) - 1) // 10 AS BIGINT)
-               AS bin,
-             CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS bad
-      FROM lineitem
+    oracle=f"""
+{_SQL_BIN_LABELED}
     ), per_bin AS (
       SELECT bin,
              CAST(sum(1 - bad) AS BIGINT) AS g,
@@ -2086,11 +2083,10 @@ def q_ml_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_mcnemar",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
       SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y,
-             CASE WHEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                       AS BIGINT) > 15000000 THEN 1 ELSE 0 END AS pa,
+             CASE WHEN {sql_cents('o_totalprice')} > 15000000 THEN 1 ELSE 0 END AS pa,
              CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                   THEN 1 ELSE 0 END AS pb
       FROM orders
@@ -2130,7 +2126,7 @@ def q_ml_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one map-side-combined 1-row aggregate over orders. At
     100 TB: one shuffle carrying 1 row per task."""
     cents = F.expr(
-        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+        sql_cents("o_totalprice")
     )
     scored = t(spark, sf_dir, "orders").select(
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
@@ -2268,11 +2264,7 @@ def q_ml_odds_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ml_isotonic_pav",
     oracle=f"""
-    WITH labeled AS (
-      SELECT {_CENTS_SQL} // {_AUC_BAND_CENTS} AS band,
-             CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                  THEN 1 ELSE 0 END AS pos
-      FROM orders
+{_SQL_BAND_LABELED}
     ), bands AS (
       SELECT band, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(pos) AS BIGINT) AS n_pos,
@@ -2387,9 +2379,21 @@ def q_ml_isotonic_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Standard-normal upper tail Q(|z|) of a ``z`` column (Abramowitz and
+# Stegun 26.2.17, |error| < 7.5e-8).
+_SQL_NORMAL_TAIL = """(0.3989422804014327
+    * exp(-abs(z) * abs(z) / 2.0)
+    * ((1.0 / (1.0 + 0.2316419 * abs(z)))
+       * (0.319381530 + (1.0 / (1.0 + 0.2316419 * abs(z)))
+       * (-0.356563782 + (1.0 / (1.0 + 0.2316419 * abs(z)))
+       * (1.781477937 + (1.0 / (1.0 + 0.2316419 * abs(z)))
+       * (-1.821255978 + (1.0 / (1.0 + 0.2316419 * abs(z)))
+          * 1.330274429))))))"""
+
+
 @query(
     "q_ml_bh_fdr",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(ts AS DATE) AS d,
              CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
@@ -2412,14 +2416,7 @@ def q_ml_isotonic_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM pairs
     ), pv AS (
       SELECT type_a, type_b, n, z,
-             CAST(floor(2.0 * (0.3989422804014327
-                 * exp(-abs(z) * abs(z) / 2.0)
-                 * ((1.0 / (1.0 + 0.2316419 * abs(z)))
-                    * (0.319381530 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                    * (-0.356563782 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                    * (1.781477937 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                    * (-1.821255978 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                       * 1.330274429))))))
+             CAST(floor(2.0 * {_SQL_NORMAL_TAIL}
                  * 1000000) AS BIGINT) AS p_micro
       FROM zed
     ), ranked AS (
@@ -2680,7 +2677,7 @@ def q_ml_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT o_orderpriority AS stratum,
              CASE WHEN {_sql_hash_bucket('o_custkey')} < 50
                   THEN 1 ELSE 0 END AS tr,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                  AS cents
       FROM orders
     ), strata AS (
@@ -2796,10 +2793,7 @@ def q_ml_iptw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ml_bayes_ab",
     oracle=f"""
-    WITH assigned AS (
-      SELECT {_sql_hash_bucket('o_custkey', 2)} AS bucket,
-             CASE WHEN {_POS_SQL} THEN 1 ELSE 0 END AS pos
-      FROM orders
+{_SQL_AB_ASSIGNED}
     ), counts AS (
       SELECT
         CAST(sum(CASE WHEN bucket = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -2827,21 +2821,8 @@ def q_ml_iptw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(mu_a, 6) AS post_mean_a_r6,
            round(mu_b, 6) AS post_mean_b_r6,
            round(z, 4) AS z_r4,
-           CAST(floor(1000000.0 * (CASE WHEN z < 0 THEN (0.3989422804014327
-             * exp(-abs(z) * abs(z) / 2.0)
-             * ((1.0 / (1.0 + 0.2316419 * abs(z)))
-                * (0.319381530 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                * (-0.356563782 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                * (1.781477937 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                * (-1.821255978 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                   * 1.330274429)))))) ELSE 1.0 - (0.3989422804014327
-             * exp(-abs(z) * abs(z) / 2.0)
-             * ((1.0 / (1.0 + 0.2316419 * abs(z)))
-                * (0.319381530 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                * (-0.356563782 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                * (1.781477937 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                * (-1.821255978 + (1.0 / (1.0 + 0.2316419 * abs(z)))
-                   * 1.330274429)))))) END))
+           CAST(floor(1000000.0 * (CASE WHEN z < 0 THEN {_SQL_NORMAL_TAIL}
+                                        ELSE 1.0 - {_SQL_NORMAL_TAIL} END))
                 AS BIGINT) AS p_b_beats_a_micro
     FROM zed
     """,

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
-from khose_spark.sqlutil import cents, dec_sum, sql_dec_sum
+from khose_spark.sqlutil import cents, dec_sum, sql_cents, sql_dec_sum
 from khose_spark.tables import t
 
 
@@ -485,9 +485,10 @@ def q_ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_ts_transition_matrix",
-    oracle="""
+# Each event's next event type in its user's stream (ordered by whole
+# epoch second, event_id tiebreak): the ``stamped`` and ``hops`` CTEs,
+# the last left open.
+_SQL_EVENT_HOPS = """
     WITH stamped AS (
       SELECT user_id, event_type,
              CAST(floor(epoch(ts)) AS BIGINT) AS es, event_id
@@ -496,7 +497,13 @@ def q_ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type AS src,
              lead(event_type) OVER (PARTITION BY user_id
                ORDER BY es, event_id) AS dst
-      FROM stamped
+      FROM stamped"""
+
+
+@query(
+    "q_ts_transition_matrix",
+    oracle=f"""
+{_SQL_EVENT_HOPS}
     ), counted AS (
       SELECT src, dst, count(*) AS n FROM hops
       WHERE dst IS NOT NULL GROUP BY src, dst
@@ -550,12 +557,12 @@ def q_ts_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_cohort_ltv",
-    oracle="""
+    oracle=f"""
     WITH purch AS (
       SELECT user_id,
              CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT)
                  // 7 AS wk,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+             {sql_cents('value')} AS cents
       FROM events WHERE event_type = 'purchase'
     ), cohort AS (
       SELECT user_id, min(wk) AS c_wk FROM purch GROUP BY user_id
@@ -604,7 +611,7 @@ def q_ts_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " DIV 7"
             ).alias("wk"),
             F.expr(
-                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                sql_cents("value")
             ).alias("cents"),
         )
         .transform(checkpoint)  # feeds cohort + cells
@@ -971,16 +978,8 @@ def q_evt_multitouch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_entropy_rate",
-    oracle="""
-    WITH stamped AS (
-      SELECT user_id, event_type,
-             CAST(floor(epoch(ts)) AS BIGINT) AS es, event_id
-      FROM events
-    ), hops AS (
-      SELECT event_type AS src,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY es, event_id) AS dst
-      FROM stamped
+    oracle=f"""
+{_SQL_EVENT_HOPS}
     ), counted AS (
       SELECT src, dst, CAST(count(*) AS BIGINT) AS n FROM hops
       WHERE dst IS NOT NULL GROUP BY src, dst

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.registry import query
-from khose_spark.sqlutil import dec_round, sql_dec_round
+from khose_spark.sqlutil import dec_round, sql_cents, sql_dec_round
 from khose_spark.tables import t
 
 
@@ -565,11 +565,11 @@ def q_fn_geo_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_fn_dow_portable",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
       SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1992-01-01'
                   AS BIGINT) AS epoch_day,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                  AS cents
       FROM orders
     )
@@ -596,7 +596,7 @@ def q_fn_dow_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("epoch_day"),
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("o_totalprice")
         ).alias("cents"),
     )
     return (
@@ -613,10 +613,10 @@ def q_fn_dow_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_fn_intdiv_laws",
-    oracle="""
+    oracle=f"""
     WITH cents AS (
       SELECT c_custkey,
-             CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('c_acctbal')}
                  AS bal_cents
       FROM customer
     ), extremes AS (
@@ -654,7 +654,7 @@ def q_fn_intdiv_laws(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = t(spark, sf_dir, "customer").select(
         "c_custkey",
         F.expr(
-            "CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("c_acctbal")
         ).alias("bal_cents"),
     )
     w_neg = Window.orderBy(

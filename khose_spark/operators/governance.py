@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
-from khose_spark.sqlutil import cents
+from khose_spark.sqlutil import cents, sql_cents
 from khose_spark.tables import t
 
 _KANON_K = 5
@@ -858,8 +858,7 @@ _DPM_SCALE = _DPM_CLIP // 10  # ladder step on the clipped sum (cents)
     oracle=f"""
     WITH clipped AS (
       SELECT o_orderpriority AS grp,
-             least(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                        AS BIGINT), {_DPM_CLIP}) AS cents
+             least({sql_cents('o_totalprice')}, {_DPM_CLIP}) AS cents
       FROM orders
     ), agg AS (
       SELECT grp, CAST(count(*) AS BIGINT) AS n,
@@ -1206,9 +1205,9 @@ def q_priv_dp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_priv_dp_quantile",
-    oracle="""
+    oracle=f"""
     WITH binned AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      SELECT {sql_cents('o_totalprice')}
              // 1000000 AS bin,
              count(*) AS n_b
       FROM orders GROUP BY 1
@@ -1274,7 +1273,7 @@ def q_priv_dp_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned = (
         o.select(
             F.expr(
-                "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                f"{sql_cents('o_totalprice')}"
                 " DIV 1000000"
             ).alias("bin")
         )

@@ -29,7 +29,11 @@ from pyspark.sql import functions as F
 
 from khose_spark import memo
 from khose_spark.memo import checkpoint
-from khose_spark.operators.llm import q_llm_neardup_jaccard
+from khose_spark.operators.llm import (
+    _SQL_ALL_PAIRS_OVERLAP,
+    _sql_shingles,
+    q_llm_neardup_jaccard,
+)
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -37,24 +41,8 @@ from khose_spark.tables import t
 # stops DuckDB re-evaluating the shingle explode per reference, and the
 # pair list is re-read by both directions of sym (11.3s -> ~1s at
 # sf0.1; the k-core/triangles oracle precedent).
-_JACCARD_EDGES_CTES = """
-    words AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS MATERIALIZED (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingle
-        FROM words
-      ) WHERE len(string_split(shingle, ' ')) = 3
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-    ), inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS MATERIALIZED (
+_JACCARD_EDGES_CTES = f"""{_sql_shingles(cte="sh AS MATERIALIZED")},
+    {_SQL_ALL_PAIRS_OVERLAP}, pairs AS MATERIALIZED (
       SELECT id_a, id_b
       FROM inter
       JOIN sizes sa ON sa.doc_id = id_a
@@ -116,9 +104,10 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     raise RuntimeError(f"connected_components: no fixpoint in {max_rounds} rounds")
 
 
-@query(
-    "q_llm_dedup_clusters",
-    oracle=f"""
+# SQL twin of :func:`connected_components` over the Jaccard edges:
+# every doc with a near-dup edge labelled by the minimum doc_id it
+# reaches.
+_SQL_JACCARD_LABELS = f"""
     WITH RECURSIVE {_JACCARD_EDGES_CTES},
     sym AS (
       SELECT id_a AS a, id_b AS b FROM pairs
@@ -135,7 +124,13 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     ),
     labels AS (
       SELECT a AS doc_id, min(b) AS rep FROM node_reach GROUP BY a
-    )
+    )"""
+
+
+@query(
+    "q_llm_dedup_clusters",
+    oracle=f"""
+{_SQL_JACCARD_LABELS}
     SELECT rep AS cluster_rep, count(*) AS n_docs,
            CAST(count(*) - 1 AS BIGINT) AS n_dropped
     FROM labels GROUP BY rep
@@ -158,23 +153,7 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_llm_dedup_apply",
     oracle=f"""
-    WITH RECURSIVE {_JACCARD_EDGES_CTES},
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ),
-    reach(a, b) AS (
-      SELECT a, b FROM sym
-      UNION
-      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-    ),
-    node_reach AS (
-      SELECT a, b FROM reach
-      UNION SELECT DISTINCT a, a FROM sym
-    ),
-    labels AS (
-      SELECT a AS doc_id, min(b) AS rep FROM node_reach GROUP BY a
-    ),
+{_SQL_JACCARD_LABELS},
     drops AS (
       SELECT doc_id FROM labels WHERE doc_id != rep
     )
@@ -864,6 +843,21 @@ _BACKBONE_CTES = f"""
       UNION
       SELECT nbr AS node, node AS nbr FROM knn
     )"""
+
+
+# The backbone's directed edges labelled with both endpoints' nation
+# (the community of q_graph_modularity and q_graph_conductance), and
+# their count m2; the ``m2t`` CTE is left open.
+_SQL_NATION_LABELED = f"""
+    WITH {_BACKBONE_CTES}, lab AS (
+      SELECT s_suppkey AS node, CAST(s_nationkey AS BIGINT) AS com
+      FROM supplier
+    ), labeled AS (
+      SELECT la.com AS ca, lb.com AS cb
+      FROM adj JOIN lab la ON la.node = adj.node
+               JOIN lab lb ON lb.node = adj.nbr
+    ), m2t AS (
+      SELECT CAST(count(*) AS BIGINT) AS m2 FROM labeled"""
 
 
 def _knn_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1658,15 +1652,7 @@ def q_graph_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_graph_modularity",
     oracle=f"""
-    WITH {_BACKBONE_CTES}, lab AS (
-      SELECT s_suppkey AS node, CAST(s_nationkey AS BIGINT) AS com
-      FROM supplier
-    ), labeled AS (
-      SELECT la.com AS ca, lb.com AS cb
-      FROM adj JOIN lab la ON la.node = adj.node
-               JOIN lab lb ON lb.node = adj.nbr
-    ), m2t AS (
-      SELECT CAST(count(*) AS BIGINT) AS m2 FROM labeled
+{_SQL_NATION_LABELED}
     ), nodes AS (
       SELECT la.com, CAST(count(DISTINCT adj.node) AS BIGINT) AS n_nodes
       FROM (SELECT DISTINCT node FROM adj) adj
@@ -2105,15 +2091,7 @@ def q_graph_louvain_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_graph_conductance",
     oracle=f"""
-    WITH {_BACKBONE_CTES}, lab AS (
-      SELECT s_suppkey AS node, CAST(s_nationkey AS BIGINT) AS com
-      FROM supplier
-    ), labeled AS (
-      SELECT la.com AS ca, lb.com AS cb
-      FROM adj JOIN lab la ON la.node = adj.node
-               JOIN lab lb ON lb.node = adj.nbr
-    ), m2t AS (
-      SELECT CAST(count(*) AS BIGINT) AS m2 FROM labeled
+{_SQL_NATION_LABELED}
     ), nodes AS (
       SELECT la.com, CAST(count(DISTINCT a.node) AS BIGINT) AS n_nodes
       FROM (SELECT DISTINCT node FROM adj) a

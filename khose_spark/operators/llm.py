@@ -64,6 +64,24 @@ def shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
     return df.select("doc_id", F.explode(sh).alias("shingle"))
 
 
+def _sql_shingles(key: str = "doc_id", cte: str = "sh AS") -> str:
+    """SQL twin of :func:`shingles` over ``documents``: the ``words`` CTE
+    and the ``cte`` CTE (e.g. "sh AS MATERIALIZED") of distinct 3-word
+    shingles per ``key``."""
+    return f"""
+    words AS (
+      SELECT {key}, string_split(text, ' ') AS w FROM documents
+    ), {cte} (
+      SELECT DISTINCT {key}, shingle FROM (
+        SELECT {key},
+               unnest(list_transform(
+                 range(1, greatest(len(w) - 1, 1)),
+                 i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingle
+        FROM words
+      ) WHERE len(string_split(shingle, ' ')) = 3
+    )"""
+
+
 def shingle_array(words, k: int = 3):
     """Raw k-word shingle array (duplicates preserved, empty for docs
     shorter than k words) from a word-array column.
@@ -131,6 +149,17 @@ def sized_pairs(inter: DataFrame, sh: DataFrame) -> DataFrame:
     return inter.join(sa, "id_a").join(sb, "id_b")
 
 
+# SQL twin of :func:`all_pairs_overlap` over ``sh``: the ``sizes`` and
+# ``inter`` CTEs.
+_SQL_ALL_PAIRS_OVERLAP = """sizes AS (
+      SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
+    ), inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
+
+
 def all_pairs_overlap(sh: DataFrame) -> DataFrame:
     """(id_b, id_a, n_common, na, nb) for every doc pair id_a < id_b
     sharing a shingle: the all-pairs shingle equi-join, sized."""
@@ -152,24 +181,8 @@ def all_pairs_overlap(sh: DataFrame) -> DataFrame:
 
 @query(
     "q_llm_neardup_jaccard",
-    oracle="""
-    WITH words AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingle
-        FROM words
-      ) WHERE len(string_split(shingle, ' ')) = 3
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-    ), inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_sql_shingles()}, {_SQL_ALL_PAIRS_OVERLAP}
     SELECT id_a, id_b,
            round(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 4) AS jaccard
     FROM inter

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from khose_spark.memo import checkpoint
 from khose_spark.operators.llm import shingle_array
 from khose_spark.registry import query
-from khose_spark.sqlutil import cents
+from khose_spark.sqlutil import cents, sql_cents
 from khose_spark.tables import t
 
 # Decision-stump contract constants: $25,000 candidate-threshold grid,
@@ -63,7 +63,7 @@ def _stump_correct() -> Column:
     "q_ml_decision_stump",
     oracle=f"""
     WITH labeled AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      SELECT {sql_cents('o_totalprice')}
                // {_BAND_CENTS} AS band,
              CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                   THEN 1 ELSE 0 END AS pos
@@ -115,7 +115,7 @@ def q_ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the per-band partial aggregation is map-side combined)."""
     labeled = t(spark, sf_dir, "orders").select(
         F.expr(
-            f"CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            f"{sql_cents('o_totalprice')}"
             f" DIV {_BAND_CENTS}"
         ).alias("band"),
         F.when(F.col("o_orderpriority").isin(*_POS_PRIORITIES), 1)
@@ -466,9 +466,9 @@ def _ols2_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_ml_linreg_2f",
-    oracle="""
+# SQL twin of :func:`_ols2_xy`: the ``feats`` and ``xy`` CTEs, the last
+# left open.
+_SQL_OLS2_XY = """
     WITH feats AS (
       SELECT l.l_orderkey AS k,
              count(*) AS x1,
@@ -479,7 +479,13 @@ def _ols2_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT f.x1, f.x2,
              CAST(round(CAST(o.o_totalprice AS DECIMAL(18,2)), 0)
                   AS BIGINT) AS y
-      FROM feats f JOIN orders o ON o.o_orderkey = f.k
+      FROM feats f JOIN orders o ON o.o_orderkey = f.k"""
+
+
+def _sql_ols2_sums(*quad: str) -> str:
+    """SQL twin of :func:`_ols2_sums`: the ``sums`` CTE over ``xy``, the
+    caller's ``quad`` sums last, left open."""
+    return f"""
     ), sums AS (
       SELECT count(*) AS n,
              CAST(sum(x1) AS BIGINT) AS s1,
@@ -489,28 +495,48 @@ def _ols2_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(sum(x2 * x2) AS BIGINT) AS s22,
              CAST(sum(x1 * x2) AS BIGINT) AS s12,
              CAST(sum(x1 * y) AS BIGINT) AS s1y,
-             CAST(sum(CAST(x2 * y AS DECIMAL(38,0))) AS DECIMAL(38,0))
-               AS s2y,
-             CAST(sum(CAST(y * y AS DECIMAL(38,0))) AS DECIMAL(38,0))
-               AS syy
-      FROM xy
+             {", ".join(quad)}
+      FROM xy"""
+
+
+def _sql_cmom(sab: str, sa: str, sb: str) -> str:
+    """SQL twin of :func:`_cmom`."""
+    return (
+        f"CAST({sab} AS DOUBLE) / n - (CAST({sa} AS DOUBLE) / n)"
+        f" * (CAST({sb} AS DOUBLE) / n)"
+    )
+
+
+def _sql_ols2_cmoms(k: int = 6) -> str:
+    """The first ``k`` of the centered moments c11, c22, c12, c1y, c2y,
+    cyy, comma-separated."""
+    moments = (
+        ("s11", "s1", "s1"), ("s22", "s2", "s2"), ("s12", "s1", "s2"),
+        ("s1y", "s1", "sy"), ("s2y", "s2", "sy"), ("syy", "sy", "sy"),
+    )
+    return ", ".join(
+        f"{_sql_cmom(*m)} AS c{m[0][1:]}" for m in moments[:k]
+    )
+
+
+# SQL twin of :func:`_ols2_moments`: every CTE through ``alg``, the last
+# left open.
+_SQL_OLS2_MOMENTS = _SQL_OLS2_XY + _sql_ols2_sums(
+    "CAST(sum(CAST(x2 * y AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s2y",
+    "CAST(sum(CAST(y * y AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS syy",
+) + f"""
     ), alg AS (
       SELECT n,
              CAST(s1 AS DOUBLE) / n AS m1, CAST(s2 AS DOUBLE) / n AS m2,
              CAST(sy AS DOUBLE) / n AS my,
-             CAST(s11 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(s1 AS DOUBLE) / n) AS c11,
-             CAST(s22 AS DOUBLE) / n - (CAST(s2 AS DOUBLE) / n)
-               * (CAST(s2 AS DOUBLE) / n) AS c22,
-             CAST(s12 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(s2 AS DOUBLE) / n) AS c12,
-             CAST(s1y AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS c1y,
-             CAST(s2y AS DOUBLE) / n - (CAST(s2 AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS c2y,
-             CAST(syy AS DOUBLE) / n - (CAST(sy AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS cyy
-      FROM sums
+             {_sql_ols2_cmoms()}
+      FROM sums"""
+
+
+@query(
+    "q_ml_linreg_2f",
+    oracle=f"""
+{_SQL_OLS2_MOMENTS}
     ), coef AS (
       SELECT n, m1, m2, my, c1y, c2y, cyy,
              (c22 * c1y - c12 * c2y) / (c11 * c22 - c12 * c12) AS b1,
@@ -710,7 +736,7 @@ _BENFORD_PERMILLE = {1: 301, 2: 176, 3: 125, 4: 97, 5: 79, 6: 67,
     oracle=f"""
     WITH digits AS (
       SELECT CAST(substr(CAST(
-               CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+               {sql_cents('o_totalprice')}
              AS VARCHAR), 1, 1) AS BIGINT) AS digit
       FROM orders
     ), counts AS (
@@ -746,8 +772,8 @@ def q_agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 9-row aggregation, and a 1-row total broadcast-crossed back in.
     One shuffle of 9 partial rows at any scale."""
     digit = F.expr(
-        "CAST(substring(CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100"
-        " AS BIGINT) AS STRING), 1, 1) AS BIGINT)"
+        f"CAST(substring(CAST({sql_cents('o_totalprice')}"
+        " AS STRING), 1, 1) AS BIGINT)"
     )
     counts = (
         t(spark, sf_dir, "orders")
@@ -935,10 +961,10 @@ def q_llm_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_gini",
-    oracle="""
+    oracle=f"""
     WITH cents AS (
       SELECT o_orderpriority,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                AS x
       FROM orders
     ), ranked AS (
@@ -987,7 +1013,7 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = t(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("o_totalprice")
         ).alias("x"),
     )
     w = Window.partitionBy("o_orderpriority").orderBy("x")
@@ -1156,12 +1182,12 @@ _STUMP_FEATURES = [
     ("quantity", "CAST(l_quantity AS BIGINT)"),
     (
         "discount_pct",
-        "CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT)",
+        sql_cents("l_discount"),
     ),
-    ("tax_pct", "CAST(CAST(l_tax AS DECIMAL(18,2)) * 100 AS BIGINT)"),
+    ("tax_pct", sql_cents("l_tax")),
     (
         "price_10k",
-        "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+        f"{sql_cents('l_extendedprice')}"
         " // 1000000",
     ),
 ]
@@ -1256,10 +1282,10 @@ def q_ml_feature_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_anova_f",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
       SELECT event_type,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+             {sql_cents('value')} AS c
       FROM events
     ), per_group AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -1305,7 +1331,7 @@ def q_ml_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = t(spark, sf_dir, "events").select(
         "event_type",
         F.expr(
-            "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("value")
         ).alias("c"),
     )
     per_group = obs.groupBy("event_type").agg(
@@ -1342,10 +1368,10 @@ def q_ml_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_welch_t",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
       SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS grp,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+             {sql_cents('value')} AS c
       FROM events WHERE event_type IN ('click', 'purchase')
     ), m AS (
       SELECT grp, CAST(count(*) AS BIGINT) AS n,
@@ -1405,7 +1431,7 @@ def q_ml_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(2)
             .alias("grp"),
             F.expr(
-                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                sql_cents("value")
             ).alias("c"),
         )
     )
@@ -1460,10 +1486,10 @@ def q_ml_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_mann_whitney",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
       SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS grp,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) // 100 AS b
+             {sql_cents('value')} // 100 AS b
       FROM events WHERE event_type IN ('click', 'purchase')
     ), joint AS MATERIALIZED (
       SELECT b, grp, count(*) AS cnt FROM obs GROUP BY b, grp
@@ -1529,7 +1555,7 @@ def q_ml_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(2)
             .alias("grp"),
             F.expr(
-                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) DIV 100"
+                f"{sql_cents('value')} DIV 100"
             ).alias("b"),
         )
     )
@@ -1592,10 +1618,10 @@ def q_ml_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_granger_lag1",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+             {sql_cents('value')} AS cents
       FROM events
     ), rollup AS (
       -- floor-consistent dollars: subtract the nonnegative remainder
@@ -1636,18 +1662,7 @@ def q_ml_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM pairs GROUP BY x_type, y_type
     ), alg AS (
       SELECT x_type, y_type, n,
-             CAST(s11 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(s1 AS DOUBLE) / n) AS c11,
-             CAST(s22 AS DOUBLE) / n - (CAST(s2 AS DOUBLE) / n)
-               * (CAST(s2 AS DOUBLE) / n) AS c22,
-             CAST(s12 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(s2 AS DOUBLE) / n) AS c12,
-             CAST(s1y AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS c1y,
-             CAST(s2y AS DOUBLE) / n - (CAST(s2 AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS c2y,
-             CAST(syy AS DOUBLE) / n - (CAST(sy AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS cyy
+             {_sql_ols2_cmoms()}
       FROM sums
     ), coef AS (
       SELECT x_type, y_type, n, c11, c1y, c2y, cyy,
@@ -1822,12 +1837,12 @@ def q_ts_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_ttest_paired",
-    oracle="""
+    oracle=f"""
     WITH li AS (
       SELECT l_suppkey,
              CASE WHEN l_shipdate < TIMESTAMP '1996-01-01' THEN 0
                   ELSE 1 END AS yr,
-             CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('l_extendedprice')}
                * (100 - CAST(round(CAST(l_discount AS DECIMAL(8,2)) * 100,
                                    0) AS BIGINT)) AS rev_cc
       FROM lineitem
@@ -2025,41 +2040,11 @@ def q_ml_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_shapley_2f",
-    oracle="""
-    WITH feats AS (
-      SELECT l.l_orderkey AS k,
-             count(*) AS x1,
-             CAST(sum(CAST(l.l_quantity AS DECIMAL(18,2)) * 100 // 100
-                  ) AS BIGINT) AS x2
-      FROM lineitem l GROUP BY 1
-    ), xy AS (
-      SELECT f.x1, f.x2,
-             CAST(round(CAST(o.o_totalprice AS DECIMAL(18,2)), 0)
-                  AS BIGINT) AS y
-      FROM feats f JOIN orders o ON o.o_orderkey = f.k
-    ), sums AS (
-      SELECT count(*) AS n,
-             CAST(sum(x1) AS BIGINT) AS s1,
-             CAST(sum(x2) AS BIGINT) AS s2,
-             CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x1 * x1) AS BIGINT) AS s11,
-             CAST(sum(x2 * x2) AS BIGINT) AS s22,
-             CAST(sum(x1 * x2) AS BIGINT) AS s12,
-             CAST(sum(x1 * y) AS BIGINT) AS s1y,
-             CAST(sum(x2 * y) AS BIGINT) AS s2y
-      FROM xy
+    oracle=f"""
+{_SQL_OLS2_XY}{_sql_ols2_sums("CAST(sum(x2 * y) AS BIGINT) AS s2y")}
     ), alg AS (
       SELECT n,
-             CAST(s11 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(s1 AS DOUBLE) / n) AS c11,
-             CAST(s22 AS DOUBLE) / n - (CAST(s2 AS DOUBLE) / n)
-               * (CAST(s2 AS DOUBLE) / n) AS c22,
-             CAST(s12 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(s2 AS DOUBLE) / n) AS c12,
-             CAST(s1y AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS c1y,
-             CAST(s2y AS DOUBLE) / n - (CAST(s2 AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS c2y
+             {_sql_ols2_cmoms(5)}
       FROM sums
     ), coef AS (
       SELECT n,
@@ -2205,7 +2190,7 @@ _TE_SMOOTH = 100  # smoothing pseudo-count m in (S + m*global_mean)/(n + m)
     oracle=f"""
     WITH y AS (
       SELECT o_orderpriority AS cat,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                AS cents
       FROM orders
     ), per_cat AS (
@@ -2361,7 +2346,7 @@ _BOOST_H1 = """r1.pol * (CASE WHEN
     "q_ml_boosted_stumps",
     oracle=f"""
     WITH labeled AS (
-      SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      SELECT {sql_cents('o_totalprice')}
                // {_BOOST_BAND} AS b1,
              CAST(year(o_orderdate) * 12 + month(o_orderdate)
                   AS BIGINT) AS b2,
@@ -2491,7 +2476,7 @@ def q_ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound under the widened carrier."""
     labeled = t(spark, sf_dir, "orders").select(
         F.expr(
-            f"CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            f"{sql_cents('o_totalprice')}"
             f" DIV {_BOOST_BAND}"
         ).alias("b1"),
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
@@ -2689,10 +2674,10 @@ def q_ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_kruskal_wallis",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT o_orderpriority AS pri,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                // 10000 AS band
       FROM orders
     ), joint AS (
@@ -2767,7 +2752,7 @@ def q_ml_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = t(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("pri"),
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            f"{sql_cents('o_totalprice')}"
             " DIV 10000"
         ).alias("band"),
     )
@@ -3137,7 +3122,7 @@ def q_ml_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_cuped",
-    oracle="""
+    oracle=f"""
     WITH arm AS (
       SELECT user_id,
              CASE WHEN ((
@@ -3147,10 +3132,10 @@ def q_ml_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
              + (instr('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), 4, 1)) - 1)
              ) % 100) < 50 THEN 'A' ELSE 'B' END AS arm,
              CAST(coalesce(sum(CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16'
-                   THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) END), 0)
+                   THEN {sql_cents('value')} END), 0)
                   AS BIGINT) AS x,
              CAST(coalesce(sum(CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-16'
-                   THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) END), 0)
+                   THEN {sql_cents('value')} END), 0)
                   AS BIGINT) AS y
       FROM events GROUP BY user_id
     ), g AS (
@@ -3290,14 +3275,14 @@ def q_ml_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_wilcoxon_signed",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS d,
              CAST(sum(CASE WHEN event_type = 'click'
-                  THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+                  THEN {sql_cents('value')}
                   END) AS BIGINT) AS c_click,
              CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+                  THEN {sql_cents('value')}
                   END) AS BIGINT) AS c_purch
       FROM events WHERE event_type IN ('click', 'purchase')
       GROUP BY 1
@@ -3443,9 +3428,9 @@ def _arm_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_ml_power_mde",
-    oracle="""
+# SQL twin of :func:`_arm_sums`: the ``arm`` and ``g`` CTEs, the last
+# left open.
+_SQL_ARM_SUMS = f"""
     WITH arm AS (
       SELECT CASE WHEN ((
                (instr('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) - 1) * 4096
@@ -3454,14 +3439,20 @@ def _arm_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
              + (instr('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), 4, 1)) - 1)
              ) % 100) < 50 THEN 0 ELSE 1 END AS grp,
              CAST(coalesce(sum(CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-16'
-                   THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) END), 0)
+                   THEN {sql_cents('value')} END), 0)
                   AS BIGINT) AS y
       FROM events GROUP BY user_id
     ), g AS (
       SELECT grp, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(y) AS BIGINT) AS sy,
              sum(CAST(y AS HUGEINT) * y) AS syy
-      FROM arm GROUP BY grp
+      FROM arm GROUP BY grp"""
+
+
+@query(
+    "q_ml_power_mde",
+    oracle=f"""
+{_SQL_ARM_SUMS}
     ), fold AS (
       SELECT
         max(CASE WHEN grp = 0 THEN n END) AS n_a,
@@ -3568,14 +3559,14 @@ def q_ml_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_engle_granger",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS d,
              CAST(sum(CASE WHEN event_type = 'click'
-                  THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+                  THEN {sql_cents('value')}
                   END) AS BIGINT) AS x,
              CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+                  THEN {sql_cents('value')}
                   END) AS BIGINT) AS y
       FROM events WHERE event_type IN ('click', 'purchase')
       GROUP BY 1
@@ -3730,23 +3721,8 @@ def q_ts_engle_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_tost",
-    oracle="""
-    WITH arm AS (
-      SELECT CASE WHEN ((
-               (instr('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) - 1) * 4096
-             + (instr('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), 2, 1)) - 1) * 256
-             + (instr('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), 3, 1)) - 1) * 16
-             + (instr('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), 4, 1)) - 1)
-             ) % 100) < 50 THEN 0 ELSE 1 END AS grp,
-             CAST(coalesce(sum(CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-16'
-                   THEN CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) END), 0)
-                  AS BIGINT) AS y
-      FROM events GROUP BY user_id
-    ), g AS (
-      SELECT grp, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(y) AS BIGINT) AS sy,
-             sum(CAST(y AS HUGEINT) * y) AS syy
-      FROM arm GROUP BY grp
+    oracle=f"""
+{_SQL_ARM_SUMS}
     ), fold AS (
       SELECT
         max(CASE WHEN grp = 0 THEN n END) AS n_a,
@@ -3838,49 +3814,8 @@ def q_ml_tost(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_ridge_2f",
-    oracle="""
-    WITH feats AS (
-      SELECT l.l_orderkey AS k,
-             count(*) AS x1,
-             CAST(sum(CAST(l.l_quantity AS DECIMAL(18,2)) * 100 // 100
-                  ) AS BIGINT) AS x2
-      FROM lineitem l GROUP BY 1
-    ), xy AS (
-      SELECT f.x1, f.x2,
-             CAST(round(CAST(o.o_totalprice AS DECIMAL(18,2)), 0)
-                  AS BIGINT) AS y
-      FROM feats f JOIN orders o ON o.o_orderkey = f.k
-    ), sums AS (
-      SELECT count(*) AS n,
-             CAST(sum(x1) AS BIGINT) AS s1,
-             CAST(sum(x2) AS BIGINT) AS s2,
-             CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x1 * x1) AS BIGINT) AS s11,
-             CAST(sum(x2 * x2) AS BIGINT) AS s22,
-             CAST(sum(x1 * x2) AS BIGINT) AS s12,
-             CAST(sum(x1 * y) AS BIGINT) AS s1y,
-             CAST(sum(CAST(x2 * y AS DECIMAL(38,0))) AS DECIMAL(38,0))
-               AS s2y,
-             CAST(sum(CAST(y * y AS DECIMAL(38,0))) AS DECIMAL(38,0))
-               AS syy
-      FROM xy
-    ), alg AS (
-      SELECT n,
-             CAST(s1 AS DOUBLE) / n AS m1, CAST(s2 AS DOUBLE) / n AS m2,
-             CAST(sy AS DOUBLE) / n AS my,
-             CAST(s11 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(s1 AS DOUBLE) / n) AS c11,
-             CAST(s22 AS DOUBLE) / n - (CAST(s2 AS DOUBLE) / n)
-               * (CAST(s2 AS DOUBLE) / n) AS c22,
-             CAST(s12 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(s2 AS DOUBLE) / n) AS c12,
-             CAST(s1y AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS c1y,
-             CAST(s2y AS DOUBLE) / n - (CAST(s2 AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS c2y,
-             CAST(syy AS DOUBLE) / n - (CAST(sy AS DOUBLE) / n)
-               * (CAST(sy AS DOUBLE) / n) AS cyy
-      FROM sums
+    oracle=f"""
+{_SQL_OLS2_MOMENTS}
     ), corr AS (
       SELECT n, m1, m2, my, c11, c22, cyy,
              c12 / sqrt(c11 * c22) AS r12,

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
+from khose_spark.sqlutil import sql_cents
 from khose_spark.tables import t
 
 # Pinned critical values / benchmarks (house precedent: fixed literals).
@@ -59,7 +60,7 @@ def _click_view_dollars(
             .otherwise(2)
             .alias("grp"),
             F.expr(
-                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                f"{sql_cents('value')}"
                 " DIV 100"
             ).alias("b"),
         )
@@ -82,16 +83,29 @@ def _click_view_dollars(
     return a, v, tots
 
 
-@query(
-    "q_ml_cliffs_delta",
-    oracle=f"""
+# SQL twin of :func:`_click_view_dollars`: the ``cell`` grid of
+# whole-dollar band counts per group (1 = click, 2 = view), left open,
+# and the ``tots`` CTE of the group sizes.
+_SQL_CLICK_VIEW_CELL = f"""
     WITH cell AS (
       SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS grp,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('value')}
                // 100 AS b,
              CAST(count(*) AS BIGINT) AS n
       FROM events WHERE event_type IN ('click', 'view')
-      GROUP BY 1, 2
+      GROUP BY 1, 2"""
+_SQL_CLICK_VIEW_TOTS = """
+    ), tots AS (
+      SELECT
+        CAST(sum(CASE WHEN grp = 1 THEN n ELSE 0 END) AS BIGINT) AS n1,
+        CAST(sum(CASE WHEN grp = 2 THEN n ELSE 0 END) AS BIGINT) AS n2
+      FROM cell"""
+
+
+@query(
+    "q_ml_cliffs_delta",
+    oracle=f"""
+{_SQL_CLICK_VIEW_CELL}
     ), pairs AS (
       SELECT
         CAST(sum(CASE WHEN a.b > v.b
@@ -105,11 +119,7 @@ def _click_view_dollars(
              AS DECIMAL(38,0)) AS tie
       FROM (SELECT b, n FROM cell WHERE grp = 1) a
       CROSS JOIN (SELECT b, n FROM cell WHERE grp = 2) v
-    ), tots AS (
-      SELECT
-        CAST(sum(CASE WHEN grp = 1 THEN n ELSE 0 END) AS BIGINT) AS n1,
-        CAST(sum(CASE WHEN grp = 2 THEN n ELSE 0 END) AS BIGINT) AS n2
-      FROM cell
+{_SQL_CLICK_VIEW_TOTS}
     )
     SELECT n1 AS n_click, n2 AS n_view,
            CAST(gt AS BIGINT) AS gt_pairs,
@@ -187,14 +197,8 @@ def q_ml_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_hodges_lehmann",
-    oracle="""
-    WITH cell AS (
-      SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS grp,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
-               // 100 AS b,
-             CAST(count(*) AS BIGINT) AS n
-      FROM events WHERE event_type IN ('click', 'view')
-      GROUP BY 1, 2
+    oracle=f"""
+{_SQL_CLICK_VIEW_CELL}
     ), diffs AS (
       SELECT a.b - v.b AS db,
              CAST(sum(CAST(a.n AS DECIMAL(38,0)) * v.n)
@@ -212,11 +216,7 @@ def q_ml_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), med AS (
       SELECT min(db) AS hl, max(tot) AS tot, max(wsum) AS wsum
       FROM cum WHERE 2 * c >= tot
-    ), tots AS (
-      SELECT
-        CAST(sum(CASE WHEN grp = 1 THEN n ELSE 0 END) AS BIGINT) AS n1,
-        CAST(sum(CASE WHEN grp = 2 THEN n ELSE 0 END) AS BIGINT) AS n2
-      FROM cell
+{_SQL_CLICK_VIEW_TOTS}
     )
     SELECT n1 AS n_click, n2 AS n_view,
            CAST(tot AS BIGINT) AS n_pairs,
@@ -291,11 +291,9 @@ def q_ml_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS d,
              CAST(coalesce(sum(CASE WHEN event_type = 'click'
-                  THEN CAST(CAST(value AS DECIMAL(18,2)) * 100
-                       AS BIGINT) END), 0) AS BIGINT) AS cc,
+                  THEN {sql_cents('value')} END), 0) AS BIGINT) AS cc,
              CAST(coalesce(sum(CASE WHEN event_type = 'view'
-                  THEN CAST(CAST(value AS DECIMAL(18,2)) * 100
-                       AS BIGINT) END), 0) AS BIGINT) AS vc
+                  THEN {sql_cents('value')} END), 0) AS BIGINT) AS vc
       FROM events WHERE event_type IN ('click', 'view')
       GROUP BY 1
     ), f AS (
@@ -348,8 +346,7 @@ def q_ml_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(
                         F.col("event_type") == "click",
                         F.expr(
-                            "CAST(CAST(value AS DECIMAL(18,2)) * 100"
-                            " AS BIGINT)"
+                            sql_cents("value")
                         ),
                     )
                 ),
@@ -362,8 +359,7 @@ def q_ml_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(
                         F.col("event_type") == "view",
                         F.expr(
-                            "CAST(CAST(value AS DECIMAL(18,2)) * 100"
-                            " AS BIGINT)"
+                            sql_cents("value")
                         ),
                     )
                 ),
@@ -405,8 +401,7 @@ def q_ml_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100
-                  AS BIGINT)) AS BIGINT) AS cents
+             CAST(sum({sql_cents('value')}) AS BIGINT) AS cents
       FROM events WHERE event_type = 'purchase' GROUP BY 1
     ), numbered AS (
       SELECT d, cents,
@@ -474,7 +469,7 @@ def q_ml_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(
                 F.expr(
-                    "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                    sql_cents("value")
                 )
             )
             .cast("long")
@@ -645,8 +640,7 @@ def q_ml_chisq_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH x AS (
       SELECT o_orderpriority AS grp,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                  AS BIGINT) AS cents,
+             {sql_cents('o_totalprice')} AS cents,
              o_orderkey
       FROM orders
     ), marg AS MATERIALIZED (
@@ -736,7 +730,7 @@ def q_ml_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = o.select(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("o_totalprice")
         ).alias("cents"),
         "o_orderkey",
     )
@@ -1044,8 +1038,7 @@ _Z_1SIDED_5PCT = "1.6449"  # one-sided normal 5% — JT ordered alternative
     oracle=f"""
     WITH x AS (
       SELECT o_orderpriority AS grp,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                  AS BIGINT) AS cents
+             {sql_cents('o_totalprice')} AS cents
       FROM orders
     ), g AS (
       SELECT grp,
@@ -1106,8 +1099,7 @@ def q_ml_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select(
             F.col("o_orderpriority").alias("grp"),
             F.expr(
-                "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100"
-                " AS BIGINT)"
+                sql_cents("o_totalprice")
             ).alias("cents"),
         )
         .groupBy("grp")
@@ -1171,8 +1163,7 @@ def q_ml_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH x AS (
       SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS g,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                  AS BIGINT) // 10000 AS b
+             {sql_cents('o_totalprice')} // 10000 AS b
       FROM orders
     ), grid AS MATERIALIZED (
       SELECT b, g, CAST(count(*) AS BIGINT) AS c
@@ -1248,7 +1239,7 @@ def q_ml_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(substring(o_orderpriority, 1, 1) AS BIGINT)"
         ).alias("g"),
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            f"{sql_cents('o_totalprice')}"
             " DIV 10000"
         ).alias("b"),
     )

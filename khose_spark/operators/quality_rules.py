@@ -278,16 +278,22 @@ def q_llm_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@query(
-    "q_llm_ccnet_buckets",
-    oracle="""
+# Per-language unigram counts: the ``tok``, ``vocab`` and ``totals``
+# CTEs, the last left open.
+_SQL_LANG_UNIGRAMS = """
     WITH tok AS (
       SELECT doc_id, lang, unnest(string_split(text, ' ')) AS term
       FROM documents
     ), vocab AS (
       SELECT lang, term, count(*) AS n FROM tok GROUP BY 1, 2
     ), totals AS (
-      SELECT lang, count(*) AS tot FROM tok GROUP BY 1
+      SELECT lang, count(*) AS tot FROM tok GROUP BY 1"""
+
+
+@query(
+    "q_llm_ccnet_buckets",
+    oracle=f"""
+{_SQL_LANG_UNIGRAMS}
     ), per_doc AS (
       SELECT t.doc_id, t.lang, count(*) AS n_tokens,
              round(avg(ln(CAST(s.tot AS DOUBLE) / v.n)), 4) AS score
@@ -370,13 +376,15 @@ _NDCG_K1 = 1.2
 _NDCG_B = 0.75
 
 
-@query(
-    "q_llm_ndcg",
-    oracle=f"""
+def _sql_bm25_tf(key: str = "doc_id") -> str:
+    """BM25 inputs per ``key`` (doc_id first): the ``docs``, ``dl``,
+    ``stats``, ``toks``, ``tf`` and ``df`` CTEs for the three query
+    terms, the last left open."""
+    return f"""
     WITH docs AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
+      SELECT {key}, string_split(text, ' ') AS w FROM documents
     ), dl AS (
-      SELECT doc_id, len(w) AS dl FROM docs
+      SELECT {key}, len(w) AS dl FROM docs
     ), stats AS (
       SELECT count(*) AS n_docs, avg(CAST(dl AS DOUBLE)) AS avgdl FROM dl
     ), toks AS (
@@ -386,7 +394,13 @@ _NDCG_B = 0.75
       WHERE term IN ('join', 'filter', 'window')
       GROUP BY 1, 2
     ), df AS (
-      SELECT term, count(*) AS df FROM tf GROUP BY term
+      SELECT term, count(*) AS df FROM tf GROUP BY term"""
+
+
+@query(
+    "q_llm_ndcg",
+    oracle=f"""
+{_sql_bm25_tf()}
     ), scored AS (
       SELECT tf.term, tf.doc_id,
              round(ln(1.0 + (s.n_docs - df.df + 0.5) / (df.df + 0.5))

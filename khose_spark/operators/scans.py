@@ -18,7 +18,7 @@ from pyspark.sql import types as T
 from khose_spark import memo
 from khose_spark.memo import checkpoint, scratch
 from khose_spark.registry import query
-from khose_spark.sqlutil import cents, dec_sum, sql_dec_sum
+from khose_spark.sqlutil import cents, dec_sum, sql_cents, sql_dec_sum
 from khose_spark.tables import EVENTS_SCHEMA, t
 
 
@@ -568,15 +568,15 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_lake_snapshot_diff",
-    oracle="""
+    oracle=f"""
     WITH v1 AS (
       SELECT c_custkey,
-             CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('c_acctbal')}
                  AS bal
       FROM customer WHERE c_custkey % 10 <> 0
     ), v2 AS (
       SELECT c_custkey,
-             CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('c_acctbal')}
                + CASE WHEN c_custkey % 7 = 0 THEN 100 ELSE 0 END AS bal
       FROM customer
     ), diff AS (
@@ -621,7 +621,7 @@ def q_lake_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = t(spark, sf_dir, "customer").select(
         "c_custkey",
         F.expr(
-            "CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("c_acctbal")
         ).alias("bal"),
     )
     commit_snapshot(

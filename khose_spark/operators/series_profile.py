@@ -19,15 +19,24 @@ from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
+from khose_spark.sqlutil import sql_cents
 from khose_spark.tables import t
 
-_DAILY_CENTS_SQL = """
+_DAILY_CENTS_SQL = f"""
       SELECT CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100
-                  AS BIGINT)) AS BIGINT) AS cents
+             CAST(sum({sql_cents('value')}) AS BIGINT) AS cents
       FROM events WHERE event_type = 'purchase'
       GROUP BY 1
 """
+
+# The daily series numbered by observed day (day_no from 1): the
+# ``daily`` and ``numbered`` CTEs, the last left open.
+_NUMBERED_DAILY_SQL = f"""
+    WITH daily AS ({_DAILY_CENTS_SQL}
+    ), numbered AS (
+      SELECT cents,
+             CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS day_no
+      FROM daily"""
 
 
 def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,7 +48,7 @@ def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(
             F.to_date("ts").alias("d"),
             F.expr(
-                "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+                sql_cents("value")
             ).alias("c"),
         )
         .groupBy("d")
@@ -164,11 +173,7 @@ _MP_EXCL = 3  # trivial-match exclusion zone: |a - b| >= 3 (> w/2)
 @query(
     "q_ts_sad_profile",
     oracle=f"""
-    WITH daily AS ({_DAILY_CENTS_SQL}
-    ), numbered AS (
-      SELECT cents,
-             CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS day_no
-      FROM daily
+{_NUMBERED_DAILY_SQL}
     ), win AS (
       SELECT day_no AS a,
              cents AS v0,
@@ -265,11 +270,7 @@ _PAA_SEGS = 6  # segments (first 30 observed days)
 @query(
     "q_ts_paa_sax",
     oracle=f"""
-    WITH daily AS ({_DAILY_CENTS_SQL}
-    ), numbered AS (
-      SELECT cents,
-             CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS day_no
-      FROM daily
+{_NUMBERED_DAILY_SQL}
     ), seg AS (
       SELECT 1 + (day_no - 1) // {_PAA_SEG_DAYS} AS segment_no,
              CAST(min(day_no) AS BIGINT) AS start_day_no,
@@ -372,11 +373,7 @@ def q_ts_paa_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ts_theta_forecast",
     oracle=f"""
-    WITH daily AS ({_DAILY_CENTS_SQL}
-    ), numbered AS (
-      SELECT cents,
-             CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS day_no
-      FROM daily
+{_NUMBERED_DAILY_SQL}
     ), ols AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
              CAST(sum(day_no) AS BIGINT) AS st,
@@ -527,11 +524,7 @@ def q_ts_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ts_mase_eval",
     oracle=f"""
-    WITH daily AS ({_DAILY_CENTS_SQL}
-    ), numbered AS (
-      SELECT cents,
-             CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS day_no
-      FROM daily
+{_NUMBERED_DAILY_SQL}
     ), lagged AS (
       SELECT day_no, cents,
              lag(cents, 1) OVER (ORDER BY day_no) AS l1,

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
-from khose_spark.operators.llm import doc_shingles, shingles
+from khose_spark.operators.llm import _sql_shingles, doc_shingles, shingles
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -92,17 +92,7 @@ def _oracle_sql() -> str:
         for k in range(4)
     )
     return f"""
-    WITH words AS (
-      SELECT doc_id, string_split(text, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingle
-        FROM words
-      ) WHERE len(string_split(shingle, ' ')) = 3
-    ), hx AS (
+    WITH {_sql_shingles()}, hx AS (
       SELECT doc_id, {hex_vals} FROM sh
     ), sig AS (
       SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM hx GROUP BY doc_id

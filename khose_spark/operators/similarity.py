@@ -172,6 +172,61 @@ def _ivf_top3(base: DataFrame, cent: DataFrame) -> DataFrame:
     return _top3(cell_sims)
 
 
+def _sql_cell_rank(
+    outer: str, inner: str, cent: str = "cent", where: str = "",
+    keep: str = "rn = 1",
+) -> str:
+    """SQL twin of the assign step of :func:`_ivf_top3`: each ``base``
+    vector's cells of ``cent`` ranked by round(cos, 6), cid tiebreak."""
+    return f"""
+      SELECT {outer} FROM (
+        SELECT {inner}, c.cid,
+               row_number() OVER (
+                 PARTITION BY b.vec_id
+                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC, c.cid ASC
+               ) AS rn
+        FROM base b CROSS JOIN {cent} c
+        {where}
+      ) WHERE {keep}"""
+
+
+# Probe 1: each query vec_id < 10 searches only its own cell.
+_SQL_IVF_PROBE1 = """
+      SELECT b.vec_id AS qid, b.v AS qv, a.cid
+      FROM base b JOIN assign a ON a.vec_id = b.vec_id
+      WHERE b.vec_id < 10"""
+
+
+def _sql_ivf_head(cent: str, probe: str) -> str:
+    """SQL twin of :func:`_ivf_top3`'s routing: the ``base``, ``cent``,
+    ``assign`` and ``probe`` CTEs, the last left open."""
+    return f"""
+    WITH base AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ), cent AS (
+{cent}
+    ), assign AS ({_sql_cell_rank("vec_id, cid", "b.vec_id")}
+    ), probe AS ({probe}"""
+
+
+# SQL twin of the rerank in :func:`_ivf_top3` and :func:`_top3`.
+_SQL_IVF_TOP3 = """
+    ), cell_sims AS (
+      SELECT p.qid, b.vec_id,
+             round(list_cosine_similarity(p.qv, b.v), 4) AS sim
+      FROM probe p
+      JOIN assign a ON a.cid = p.cid
+      JOIN base b ON b.vec_id = a.vec_id
+      WHERE b.vec_id <> p.qid
+    )
+    SELECT qid, vec_id AS neighbor_id, sim, rn AS rank FROM (
+      SELECT qid, vec_id, sim,
+             row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rn
+      FROM cell_sims
+    ) WHERE rn <= 3
+    """
+
+
 def _centroid_audit(stats: DataFrame, cent: DataFrame) -> DataFrame:
     """k-means audit rows: ``stats`` per cid joined with the first four
     centroid coordinates, each rounded to 6 decimals."""
@@ -227,40 +282,42 @@ def _semdedup_audit(assign: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "q_llm_ann_ivf",
-    oracle="""
-    WITH base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent AS (
-      SELECT vec_id AS cid, v AS cv FROM base WHERE vec_id % 50 = 0
-    ), assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT b.vec_id, c.cid,
+# Nearest centroid of ``cent`` per ``base`` vector by round(L2², 6),
+# cid tiebreak, keeping the vector: the semdedup routing.
+_SQL_L2_ASSIGN = """
+      SELECT vec_id, v, cid FROM (
+        SELECT b.vec_id, b.v, c.cid,
                row_number() OVER (
                  PARTITION BY b.vec_id
-                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC, c.cid ASC
+                 ORDER BY round(list_sum(list_transform(range(1, 65),
+                           i -> (b.v[i] - c.cv[i]) ^ 2)), 6) ASC, c.cid ASC
                ) AS rn
         FROM base b CROSS JOIN cent c
-      ) WHERE rn = 1
-    ), probe AS (
-      SELECT b.vec_id AS qid, b.v AS qv, a.cid
-      FROM base b JOIN assign a ON a.vec_id = b.vec_id
-      WHERE b.vec_id < 10
-    ), cell_sims AS (
-      SELECT p.qid, b.vec_id,
-             round(list_cosine_similarity(p.qv, b.v), 4) AS sim
-      FROM probe p
-      JOIN assign a ON a.cid = p.cid
-      JOIN base b ON b.vec_id = a.vec_id
-      WHERE b.vec_id <> p.qid
+      ) WHERE rn = 1"""
+
+# SQL twin of :func:`_semdedup_audit` over ``assign`` and ``pairs``.
+_SQL_SEMDEDUP_AUDIT = """    ), members AS (
+      SELECT cid, count(*) AS n_members FROM assign GROUP BY cid
+    ), pstats AS (
+      SELECT cid, count(*) AS n_dup_pairs,
+             count(DISTINCT id_b) AS n_dropped
+      FROM pairs GROUP BY cid
     )
-    SELECT qid, vec_id AS neighbor_id, sim, rn AS rank FROM (
-      SELECT qid, vec_id, sim,
-             row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rn
-      FROM cell_sims
-    ) WHERE rn <= 3
-    """,
+    SELECT m.cid AS cluster_id, n_members,
+           COALESCE(n_dup_pairs, 0) AS n_dup_pairs,
+           COALESCE(n_dropped, 0) AS n_dropped,
+           n_members - COALESCE(n_dropped, 0) AS n_kept
+    FROM members m LEFT JOIN pstats p ON m.cid = p.cid
+    """
+
+
+@query(
+    "q_llm_ann_ivf",
+    oracle=_sql_ivf_head(
+        "SELECT vec_id AS cid, v AS cv FROM base WHERE vec_id % 50 = 0",
+        _SQL_IVF_PROBE1,
+    )
+    + _SQL_IVF_TOP3,
 )
 def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) approximate nearest neighbors: every vector is
@@ -403,17 +460,22 @@ def _srp_planes(n_planes: int = 16, dim: int = 64) -> list[list[float]]:
     ]
 
 
-def _srp_oracle() -> str:
-    return """
-    WITH base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), planes AS (
+# SQL twin of :func:`_srp_planes`: the planes CTE body, 16 md5-derived
+# hyperplanes.
+_SQL_SRP_PLANES = """
       SELECT p, list_transform(range(1, 65),
                d -> (instr('0123456789abcdef',
                            substr(md5(concat(CAST(p AS VARCHAR), '_',
                                              CAST(d AS VARCHAR))), 1, 1))
                      - 1 - 7.5) / 7.5) AS hp
-      FROM range(0, 16) t(p)
+      FROM range(0, 16) t(p)"""
+
+
+def _srp_oracle() -> str:
+    return f"""
+    WITH base AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ), planes AS ({_SQL_SRP_PLANES}
     ), bits AS (
       SELECT vec_id, p,
              CASE WHEN round(list_dot_product(v, hp), 6) > 0 THEN 1 ELSE 0 END AS bit
@@ -581,6 +643,17 @@ def q_llm_vec_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 8          # subspaces
 _PQ_DIM = 8        # dims per subspace (64-d vectors)
 
+# The ADC scan over every encoded vector; similarity_fixedk swaps it
+# for its probed-cell form by string surgery.
+_ADC_FULL = """), adc AS (      -- asymmetric distance: sum of 8 LUT lookups
+      SELECT l.qid, a.vec_id,
+             round(sum(l.pdist), 4) AS approx_dist
+      FROM assign a
+      JOIN lut l ON l.sub_id = a.sub_id AND l.code = a.code
+      WHERE a.vec_id <> l.qid
+      GROUP BY l.qid, a.vec_id
+    )"""
+
 _PQ_ORACLE = f"""
     WITH base AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -608,14 +681,7 @@ _PQ_ORACLE = f"""
                    i -> (q.sv[i] - cb.cv[i]) ^ 2)), 6) AS pdist
       FROM sub q JOIN cb ON q.sub_id = cb.sub_id
       WHERE q.vec_id < 10
-    ), adc AS (      -- asymmetric distance: sum of 8 LUT lookups
-      SELECT l.qid, a.vec_id,
-             round(sum(l.pdist), 4) AS approx_dist
-      FROM assign a
-      JOIN lut l ON l.sub_id = a.sub_id AND l.code = a.code
-      WHERE a.vec_id <> l.qid
-      GROUP BY l.qid, a.vec_id
-    )
+    {_ADC_FULL}
     SELECT qid, vec_id AS neighbor_id, approx_dist, rn AS rank FROM (
       SELECT qid, vec_id, approx_dist,
              row_number() OVER (PARTITION BY qid
@@ -1301,34 +1367,13 @@ _SEMDEDUP_THRESH = 0.3  # fixture-scaled (random 64-d cosines ~N(0, .12))
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), cent AS (
       SELECT vec_id // 50 AS cid, v AS cv FROM base WHERE vec_id % 50 = 0
-    ), assign AS (
-      SELECT vec_id, v, cid FROM (
-        SELECT b.vec_id, b.v, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_sum(list_transform(range(1, 65),
-                           i -> (b.v[i] - c.cv[i]) ^ 2)), 6) ASC, c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cent c
-      ) WHERE rn = 1
+    ), assign AS ({_SQL_L2_ASSIGN}
     ), pairs AS (
       SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b
       FROM assign a JOIN assign b
         ON a.cid = b.cid AND a.vec_id < b.vec_id
       WHERE round(list_cosine_similarity(a.v, b.v), 4) >= {_SEMDEDUP_THRESH}
-    ), members AS (
-      SELECT cid, count(*) AS n_members FROM assign GROUP BY cid
-    ), pstats AS (
-      SELECT cid, count(*) AS n_dup_pairs,
-             count(DISTINCT id_b) AS n_dropped
-      FROM pairs GROUP BY cid
-    )
-    SELECT m.cid AS cluster_id, n_members,
-           COALESCE(n_dup_pairs, 0) AS n_dup_pairs,
-           COALESCE(n_dropped, 0) AS n_dropped,
-           n_members - COALESCE(n_dropped, 0) AS n_kept
-    FROM members m LEFT JOIN pstats p ON m.cid = p.cid
-    """,
+{_SQL_SEMDEDUP_AUDIT}""",
 )
 def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (cluster-then-prune; the published

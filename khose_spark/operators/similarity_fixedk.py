@@ -40,11 +40,17 @@ from pyspark.sql import functions as F
 from khose_spark import memo
 from khose_spark.memo import checkpoint
 from khose_spark.operators.similarity import (
+    _ADC_FULL,
     _KM_ITERS,
     _PQ_ORACLE,
     _PQ_RERANK_ORACLE,
     _PQ_RERANK_R,
     _SEMDEDUP_THRESH,
+    _SQL_IVF_PROBE1,
+    _SQL_IVF_TOP3,
+    _SQL_L2_ASSIGN,
+    _SQL_SEMDEDUP_AUDIT,
+    _SQL_SRP_PLANES,
     _centroid_audit,
     _cos,
     _dbl_base,
@@ -60,6 +66,8 @@ from khose_spark.operators.similarity import (
     _semdedup_audit,
     _silhouette_oracle,
     _silhouette_rollup,
+    _sql_cell_rank,
+    _sql_ivf_head,
     _srp_planes,
     _top3,
     build_pq_index,
@@ -195,38 +203,7 @@ def _assign_max_cos_vec(e: DataFrame, cents) -> DataFrame:
 
 @query(
     "q_llm_ann_ivf_fixedk",
-    oracle=f"""
-    WITH base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent AS (
-{_FK_CENT_SQL}
-    ), assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC, c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cent c
-      ) WHERE rn = 1
-    ), probe AS (
-      SELECT b.vec_id AS qid, b.v AS qv, a.cid
-      FROM base b JOIN assign a ON a.vec_id = b.vec_id
-      WHERE b.vec_id < 10
-    ), cell_sims AS (
-      SELECT p.qid, b.vec_id,
-             round(list_cosine_similarity(p.qv, b.v), 4) AS sim
-      FROM probe p
-      JOIN assign a ON a.cid = p.cid
-      JOIN base b ON b.vec_id = a.vec_id
-      WHERE b.vec_id <> p.qid
-    )
-    SELECT qid, vec_id AS neighbor_id, sim, rn AS rank FROM (
-      SELECT qid, vec_id, sim,
-             row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rn
-      FROM cell_sims
-    ) WHERE rn <= 3
-    """,
+    oracle=_sql_ivf_head(_FK_CENT_SQL, _SQL_IVF_PROBE1) + _SQL_IVF_TOP3,
 )
 def q_llm_ann_ivf_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbors over the FIXED 64-seed
@@ -294,15 +271,6 @@ def _pq_fixed_codebook(sub: DataFrame) -> DataFrame:
     return sub.join(F.broadcast(coded), "vec_id").select(
         "code", "sub_id", F.col("sv").alias("cv")
     )
-
-
-def _pq_fixed_assign(sub: DataFrame, cb: DataFrame) -> DataFrame:
-    """PQ encoding against the fixed codebook — same argmin contract as
-    similarity._pq_assign (round(L2²,6), code tiebreak); re-stated here
-    so the twins share the oracle chain, not the sampled plan object."""
-    from khose_spark.operators.similarity import _pq_assign
-
-    return _pq_assign(sub, cb)
 
 
 def _collect_pq_cb(cb: DataFrame):
@@ -632,19 +600,6 @@ def q_ml_silhouette_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SD_BAND_BITS = 8  # 2 bands × 8 bits from the 16 SRP planes
 
 
-def _srp_planes_sql() -> str:
-    """planes CTE body (16 md5-derived hyperplanes) — the q_llm_lsh_srp
-    oracle's construction verbatim."""
-    return """
-      SELECT p, list_transform(range(1, 65),
-               d -> (instr('0123456789abcdef',
-                           substr(md5(concat(CAST(p AS VARCHAR), '_',
-                                             CAST(d AS VARCHAR))), 1, 1))
-                     - 1 - 7.5) / 7.5) AS hp
-      FROM range(0, 16) t(p)
-    """
-
-
 @query(
     "q_llm_semdedup_fixedk",
     oracle=f"""
@@ -652,17 +607,8 @@ def _srp_planes_sql() -> str:
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), cent AS (
 {_FK_CENT_SQL}
-    ), assign AS (
-      SELECT vec_id, v, cid FROM (
-        SELECT b.vec_id, b.v, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_sum(list_transform(range(1, 65),
-                           i -> (b.v[i] - c.cv[i]) ^ 2)), 6) ASC, c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cent c
-      ) WHERE rn = 1
-    ), planes AS ({_srp_planes_sql()}
+    ), assign AS ({_SQL_L2_ASSIGN}
+    ), planes AS ({_SQL_SRP_PLANES}
     ), bits AS (
       SELECT vec_id, p,
              CASE WHEN round(list_dot_product(v, hp), 6) > 0
@@ -688,19 +634,7 @@ def _srp_planes_sql() -> str:
       JOIN base vb ON vb.vec_id = c.id_b
       WHERE round(list_cosine_similarity(va.v, vb.v), 4)
             >= {_SEMDEDUP_THRESH}
-    ), members AS (
-      SELECT cid, count(*) AS n_members FROM assign GROUP BY cid
-    ), pstats AS (
-      SELECT cid, count(*) AS n_dup_pairs,
-             count(DISTINCT id_b) AS n_dropped
-      FROM pairs GROUP BY cid
-    )
-    SELECT m.cid AS cluster_id, n_members,
-           COALESCE(n_dup_pairs, 0) AS n_dup_pairs,
-           COALESCE(n_dropped, 0) AS n_dropped,
-           n_members - COALESCE(n_dropped, 0) AS n_kept
-    FROM members m LEFT JOIN pstats p ON m.cid = p.cid
-    """,
+{_SQL_SEMDEDUP_AUDIT}""",
 )
 def q_llm_semdedup_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with FIXED 64-cell routing and an in-cluster SRP-LSH
@@ -841,46 +775,19 @@ def q_llm_semdedup_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_PROBES = 8  # cells inspected per query (of the 64 fixed cells)
 
 
+def _sql_probe(outer: str, inner: str, cent: str = "cent") -> str:
+    """Each query vec_id < 10 routed to its _IVF_PROBES nearest cells."""
+    return _sql_cell_rank(
+        outer, inner, cent, "WHERE b.vec_id < 10", f"rn <= {_IVF_PROBES}"
+    )
+
+
 @query(
     "q_llm_ann_ivf_probed",
-    oracle=f"""
-    WITH base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent AS (
-{_FK_CENT_SQL}
-    ), assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC, c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cent c
-      ) WHERE rn = 1
-    ), probe AS (
-      SELECT vec_id AS qid, v AS qv, cid FROM (
-        SELECT b.vec_id, b.v, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC, c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cent c
-        WHERE b.vec_id < 10
-      ) WHERE rn <= {_IVF_PROBES}
-    ), cell_sims AS (
-      SELECT p.qid, b.vec_id,
-             round(list_cosine_similarity(p.qv, b.v), 4) AS sim
-      FROM probe p
-      JOIN assign a ON a.cid = p.cid
-      JOIN base b ON b.vec_id = a.vec_id
-      WHERE b.vec_id <> p.qid
+    oracle=_sql_ivf_head(
+        _FK_CENT_SQL, _sql_probe("vec_id AS qid, v AS qv, cid", "b.vec_id, b.v")
     )
-    SELECT qid, vec_id AS neighbor_id, sim, rn AS rank FROM (
-      SELECT qid, vec_id, sim,
-             row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id ASC) AS rn
-      FROM cell_sims
-    ) WHERE rn <= 3
-    """,
+    + _SQL_IVF_TOP3,
 )
 def q_llm_ann_ivf_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe IVF over the fixed 64-seed codebook (VERDICT r09
@@ -1071,43 +978,17 @@ def _scaled_rerank(adc: DataFrame, base: DataFrame) -> DataFrame:
 # after `base` and (b) the ADC stage restricted to probed-cell members.
 # Exact string surgery with existence assertions (the fixedk precedent)
 # so drift in the shared chain can never silently fork this twin.
+_CELL_ASSIGN = _sql_cell_rank("vec_id, cid", "b.vec_id", "cellcent")
+_CELL_PROBE = _sql_probe("vec_id AS qid, cid", "b.vec_id", "cellcent")
 _CELL_CTES = f"""    ), cellcent AS (
 {_FK_CENT_SQL}
-    ), cellassign AS (   -- corpus vector -> its ONE nearest cell
-      SELECT vec_id, cid FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC,
-                          c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cellcent c
-      ) WHERE rn = 1
-    ), cellprobe AS (    -- query -> its {_IVF_PROBES} nearest cells
-      SELECT vec_id AS qid, cid FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC,
-                          c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cellcent c
-        WHERE b.vec_id < 10
-      ) WHERE rn <= {_IVF_PROBES}
+    ), cellassign AS (   -- corpus vector -> its ONE nearest cell{_CELL_ASSIGN}
+    ), cellprobe AS (    -- query -> its {_IVF_PROBES} nearest cells{_CELL_PROBE}
     ), sub AS ("""
 
 _BASE_CTE = """    WITH base AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), sub AS ("""
-
-_ADC_FULL = """), adc AS (      -- asymmetric distance: sum of 8 LUT lookups
-      SELECT l.qid, a.vec_id,
-             round(sum(l.pdist), 4) AS approx_dist
-      FROM assign a
-      JOIN lut l ON l.sub_id = a.sub_id AND l.code = a.code
-      WHERE a.vec_id <> l.qid
-      GROUP BY l.qid, a.vec_id
-    )"""
 
 _ADC_PROBED = """), adc AS (    -- ADC restricted to probed-cell members
       SELECT l.qid, a.vec_id,
@@ -1431,30 +1312,8 @@ def q_llm_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_llm_ann_probe_audit",
-    oracle=f"""
-    WITH base AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cent AS (
-{_FK_CENT_SQL}
-    ), assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC, c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cent c
-      ) WHERE rn = 1
-    ), probe AS (
-      SELECT vec_id AS qid, cid FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (
-                 PARTITION BY b.vec_id
-                 ORDER BY round(list_cosine_similarity(b.v, c.cv), 6) DESC, c.cid ASC
-               ) AS rn
-        FROM base b CROSS JOIN cent c
-        WHERE b.vec_id < 10
-      ) WHERE rn <= {_IVF_PROBES}
+    oracle=_sql_ivf_head(_FK_CENT_SQL, _sql_probe("vec_id AS qid, cid", "b.vec_id"))
+    + """
     ), occ AS (
       SELECT cid, CAST(count(*) AS BIGINT) AS n_codes
       FROM assign GROUP BY cid

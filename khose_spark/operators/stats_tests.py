@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.registry import query
+from khose_spark.sqlutil import sql_cents
 from khose_spark.tables import t
 
 # Asymptotic 5% critical values (pinned literals, house precedent):
@@ -37,7 +38,7 @@ _Z_5PCT_ONESIDED = "1.6449"  # one-sided normal 5% — Page trend
     oracle=f"""
     WITH x AS (
       SELECT o_orderpriority AS grp,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                AS cents,
              o_orderkey
       FROM orders
@@ -110,7 +111,7 @@ def q_ml_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = o.select(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("o_totalprice")
         ).alias("cents"),
         "o_orderkey",
     )
@@ -334,7 +335,7 @@ _PAGE_WEEKS = 4  # ordered conditions: Jan weeks 1-4 (days 1-28)
     WITH spend AS (
       SELECT user_id,
              1 + (CAST(ts AS DATE) - DATE '2024-01-01') // 7 AS wk,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('value')}
                AS cents
       FROM events
       WHERE event_type = 'purchase'
@@ -402,7 +403,7 @@ def q_ml_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             " DIV 7 AS BIGINT)"
         ).alias("wk"),
         F.expr(
-            "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("value")
         ).alias("cents"),
     )
     per_wk = spend.groupBy("user_id", "wk").agg(

@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from khose_spark import memo
 from khose_spark.memo import checkpoint
-from khose_spark.operators.llm import shingle_array
+from khose_spark.operators.llm import _sql_shingles, shingle_array
+from khose_spark.operators.quality_rules import _sql_bm25_tf
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -33,20 +34,7 @@ _BM25_TERMS = ("join", "filter", "window")
 @query(
     "q_llm_bm25",
     oracle=f"""
-    WITH docs AS (
-      SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
-    ), dl AS (
-      SELECT doc_id, lang, len(w) AS dl FROM docs
-    ), stats AS (
-      SELECT count(*) AS n_docs, avg(CAST(dl AS DOUBLE)) AS avgdl FROM dl
-    ), toks AS (
-      SELECT doc_id, unnest(w) AS term FROM docs
-    ), tf AS (
-      SELECT doc_id, term, count(*) AS tf FROM toks
-      WHERE term IN ('join', 'filter', 'window')
-      GROUP BY 1, 2
-    ), df AS (
-      SELECT term, count(*) AS df FROM tf GROUP BY term
+{_sql_bm25_tf("doc_id, lang")}
     ), scored AS (
       SELECT tf.doc_id,
              sum(ln(1.0 + (s.n_docs - df.df + 0.5) / (df.df + 0.5))
@@ -428,18 +416,8 @@ def bpe_merge_rounds(stream: DataFrame, rounds: int) -> DataFrame:
 
 @query(
     "q_llm_ngram_novelty",
-    oracle="""
-    WITH words AS (
-      SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id, lang, shingle FROM (
-        SELECT doc_id, lang,
-               unnest(list_transform(
-                 range(1, greatest(len(w) - 1, 1)),
-                 i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS shingle
-        FROM words
-      ) WHERE len(string_split(shingle, ' ')) = 3
-    ), firsts AS (
+    oracle=f"""
+    WITH {_sql_shingles("doc_id, lang")}, firsts AS (
       SELECT shingle, min(doc_id) AS first_doc FROM sh GROUP BY shingle
     ), per_doc AS (
       SELECT s.doc_id, s.lang, count(*) AS n_shingles,

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
+from khose_spark.operators.quality_rules import _SQL_LANG_UNIGRAMS
 from khose_spark.registry import query
 from khose_spark.tables import t
 
@@ -228,14 +229,8 @@ def q_llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_llm_surprisal",
-    oracle="""
-    WITH tok AS (
-      SELECT doc_id, lang, unnest(string_split(text, ' ')) AS term
-      FROM documents
-    ), vocab AS (
-      SELECT lang, term, count(*) AS n FROM tok GROUP BY 1, 2
-    ), totals AS (
-      SELECT lang, count(*) AS tot FROM tok GROUP BY 1
+    oracle=f"""
+{_SQL_LANG_UNIGRAMS}
     )
     SELECT t.doc_id, t.lang, count(*) AS n_tokens,
            round(avg(ln(CAST(s.tot AS DOUBLE) / v.n)), 4) AS avg_surprisal

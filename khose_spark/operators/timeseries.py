@@ -26,7 +26,13 @@ from pyspark.sql import functions as F
 
 from khose_spark.memo import checkpoint
 from khose_spark.registry import query
-from khose_spark.sqlutil import cents, dec_round, dec_sum, sql_dec_sum
+from khose_spark.sqlutil import (
+    cents,
+    dec_round,
+    dec_sum,
+    sql_cents,
+    sql_dec_sum,
+)
 from khose_spark.tables import t
 
 _DEC = "decimal(28,2)"
@@ -62,6 +68,32 @@ def _orders_daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(cents(F.col("o_totalprice"))).alias("cents"))
     )
+
+
+# SQL twin of _day_idx().
+_SQL_DAY_IDX = "CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT)"
+
+
+def _sql_events_daily_cents(day: str, alias: str = "d") -> str:
+    """SQL twin of :func:`_events_daily_cents`: a ``daily`` CTE body
+    grouped by event type and ``day`` (named ``alias``)."""
+    return f"""
+      SELECT event_type, {day} AS {alias},
+             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
+               AS cents
+      FROM events GROUP BY 1, 2"""
+
+
+def _sql_indexed_daily(shift: str = "") -> str:
+    """SQL twin of :func:`_indexed_daily`: the ``daily`` and ``idxd``
+    CTEs, the last left open; ``shift`` " - 1" makes the index 0-based."""
+    return f"""
+    WITH daily AS ({_sql_events_daily_cents("CAST(ts AS DATE)")}
+    ), idxd AS (
+      SELECT event_type, cents,
+             row_number() OVER (PARTITION BY event_type ORDER BY d){shift}
+               AS i
+      FROM daily"""
 
 
 def _indexed_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,10 +227,10 @@ def q_ts_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_twa",
-    oracle="""
+    oracle=f"""
     WITH seg AS (
       SELECT user_id,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+             {sql_cents('value')} AS cents,
              epoch_us(lead(ts) OVER w) // 1000000
                - epoch_us(ts) // 1000000 AS dt
       FROM events
@@ -1084,13 +1116,8 @@ def q_ts_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_theil_sen",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS x,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-                 AS cents
-      FROM events GROUP BY 1, 2
+    oracle=f"""
+    WITH daily AS ({_sql_events_daily_cents(_SQL_DAY_IDX, "x")}
     ), slopes AS (
       SELECT a.event_type,
              CAST(b.cents - a.cents AS DOUBLE) / (b.x - a.x) AS slope,
@@ -1607,13 +1634,8 @@ def q_ts_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_ar1",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-                 AS cents
-      FROM events GROUP BY 1, 2
+    oracle=f"""
+    WITH daily AS ({_sql_events_daily_cents(_SQL_DAY_IDX)}
     ), lagged AS (
       SELECT event_type, cents AS y,
              lag(cents) OVER (PARTITION BY event_type ORDER BY d) AS x,
@@ -1707,13 +1729,8 @@ def q_ts_ar1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_sax",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-                 AS cents
-      FROM events GROUP BY 1, 2
+    oracle=f"""
+    WITH daily AS ({_sql_events_daily_cents(_SQL_DAY_IDX)}
     ), lettered AS (
       SELECT event_type, d,
              chr(CAST(96 + ntile(4) OVER (PARTITION BY event_type
@@ -1788,13 +1805,8 @@ def q_ts_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_forecast_eval",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-                 AS cents
-      FROM events GROUP BY 1, 2
+    oracle=f"""
+    WITH daily AS ({_sql_events_daily_cents(_SQL_DAY_IDX)}
     ), lagged AS (
       SELECT event_type, d, cents,
              lag(cents, 1) OVER w AS naive_hat,
@@ -2150,11 +2162,11 @@ def q_ts_intraday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_seasonal_index",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
       SELECT ((CAST(CAST(o_orderdate AS DATE) - DATE '1992-01-01'
                AS BIGINT) + 2) % 7) + 1 AS iso_dow,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+             {sql_cents('o_totalprice')}
                  AS cents
       FROM orders
     ), per_dow AS (
@@ -2195,7 +2207,7 @@ def q_ts_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             + 1
         ).alias("iso_dow"),
         F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
+            sql_cents("o_totalprice")
         ).alias("cents"),
     )
     per_dow = keyed.groupBy("iso_dow").agg(
@@ -2342,7 +2354,7 @@ def q_ts_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # index without trusting calendar contiguity. Day id d is the epoch-day
 # offset from the fixture's 2024-01-01 origin; absent (type, day) cells
 # zero-fill (the q_ts_burstiness spine discipline). All-integer.
-_SPINE_DAILY_SQL = """
+_SPINE_DAILY_SQL = f"""
     days AS (
       SELECT DISTINCT CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT)
                AS d
@@ -2352,7 +2364,7 @@ _SPINE_DAILY_SQL = """
     ), daily_raw AS (
       SELECT event_type,
              CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS d,
-             CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
+             CAST(sum({sql_cents('value')})
                   AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     ), spine AS (
@@ -2634,12 +2646,8 @@ def q_ts_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_bollinger",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
+    oracle=f"""
+    WITH daily AS ({_sql_events_daily_cents("CAST(ts AS DATE)")}
     ), framed AS (
       SELECT event_type, d, cents,
              CAST(count(*) OVER w AS BIGINT) AS n,
@@ -2783,19 +2791,11 @@ def _acf_rho(
     )
 
 
-@query(
-    "q_ts_ljung_box",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
-    ), idxd AS (
-      SELECT event_type, cents,
-             row_number() OVER (PARTITION BY event_type ORDER BY d)
-               AS i
-      FROM daily
+
+def _sql_acf_rho(lags: tuple[int, ...]) -> str:
+    """SQL twin of :func:`_acf_rho`: the CTEs from ``daily`` to ``rho``,
+    the last left open."""
+    return f"""{_sql_indexed_daily()}
     ), stats2 AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(cents) AS BIGINT) AS s
@@ -2818,11 +2818,16 @@ def _acf_rho(
                / CAST(max(d.ssu) AS DOUBLE) AS r,
              max(a.n) AS n
       FROM centered a
-      JOIN (SELECT unnest([1, 2, 3]) AS lag) g ON true
+      JOIN (SELECT unnest([{", ".join(map(str, lags))}]) AS lag) g ON true
       JOIN centered b ON b.event_type = a.event_type
                      AND b.i = a.i + g.lag
       JOIN denom d ON d.event_type = a.event_type
-      GROUP BY a.event_type, g.lag
+      GROUP BY a.event_type, g.lag"""
+
+@query(
+    "q_ts_ljung_box",
+    oracle=f"""
+{_sql_acf_rho((1, 2, 3))}
     ), wide AS (
       SELECT event_type, CAST(max(n) AS BIGINT) AS n,
              max(CASE WHEN lag = 1 THEN r END) AS r1,
@@ -2887,13 +2892,8 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_realized_vol",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-                 AS cents
-      FROM events GROUP BY 1, 2
+    oracle=f"""
+    WITH daily AS ({_sql_events_daily_cents(_SQL_DAY_IDX)}
     ), lagged AS (
       SELECT event_type, cents,
              lag(cents) OVER (PARTITION BY event_type ORDER BY d)
@@ -2966,43 +2966,8 @@ def q_ts_realized_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_pacf2",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
-    ), idxd AS (
-      SELECT event_type, cents,
-             row_number() OVER (PARTITION BY event_type ORDER BY d)
-               AS i
-      FROM daily
-    ), stats2 AS (
-      SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(cents) AS BIGINT) AS s
-      FROM idxd GROUP BY event_type
-    ), centered AS (
-      -- u_i = n*x_i - S, exact int64; the n^2 scale cancels in rho
-      SELECT i.event_type, i.i,
-             CAST(s.n * i.cents - s.s AS BIGINT) AS u, s.n
-      FROM idxd i JOIN stats2 s ON i.event_type = s.event_type
-    ), denom AS (
-      SELECT event_type,
-             sum(CAST(u AS DECIMAL(19,0)) * CAST(u AS DECIMAL(19,0)))
-               AS ssu
-      FROM centered GROUP BY 1
-    ), rho AS (
-      SELECT a.event_type, g.lag,
-             CAST(sum(CAST(a.u AS DECIMAL(19,0))
-                      * CAST(b.u AS DECIMAL(19,0))) AS DOUBLE)
-               / CAST(max(d.ssu) AS DOUBLE) AS r,
-             max(a.n) AS n
-      FROM centered a
-      JOIN (SELECT unnest([1, 2]) AS lag) g ON true
-      JOIN centered b ON b.event_type = a.event_type
-                     AND b.i = a.i + g.lag
-      JOIN denom d ON d.event_type = a.event_type
-      GROUP BY a.event_type, g.lag
+    oracle=f"""
+{_sql_acf_rho((1, 2))}
     ), wide AS (
       SELECT event_type, CAST(max(n) AS BIGINT) AS n_days,
              max(CASE WHEN lag = 1 THEN r END) AS r1,
@@ -3088,16 +3053,7 @@ def _dft7_dot(prefix: str, table: dict) -> str:
 @query(
     "q_ts_dft_power",
     oracle=f"""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-                 AS cents
-      FROM events GROUP BY 1, 2
-    ), idxd AS (
-      SELECT event_type, cents,
-             row_number() OVER (PARTITION BY event_type ORDER BY d) - 1
-               AS i
-      FROM daily
+{_sql_indexed_daily(" - 1")}
     ), stats2 AS (
       SELECT event_type, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(cents) AS BIGINT) AS s
@@ -3226,17 +3182,8 @@ def q_ts_dft_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_spc_rules",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
-    ), idxd AS (
-      SELECT event_type, cents,
-             row_number() OVER (PARTITION BY event_type ORDER BY d)
-               AS i
-      FROM daily
+    oracle=f"""
+{_sql_indexed_daily()}
     ), base AS (
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS nb,
@@ -3426,16 +3373,7 @@ def _stl_seasonal_ss(prefix_s: str, prefix_n: str) -> str:
 @query(
     "q_ts_stl_strength",
     oracle=f"""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
-    ), idxd AS (
-      SELECT event_type, cents,
-             row_number() OVER (PARTITION BY event_type ORDER BY d)
-               AS i
-      FROM daily
+{_sql_indexed_daily()}
     ), trended AS (
       SELECT event_type, i, cents,
              sum(cents) OVER w AS t7,
@@ -3630,11 +3568,7 @@ def _pe_entropy_sql() -> str:
 @query(
     "q_ts_permutation_entropy",
     oracle=f"""
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
+    WITH daily AS ({_sql_events_daily_cents("CAST(ts AS DATE)")}
     ), laged AS (
       SELECT event_type, cents AS x0,
              lead(cents, 1) OVER w AS x1,
@@ -3727,12 +3661,8 @@ def q_ts_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_kendall_tau",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type, date_trunc('day', ts) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
+    oracle=f"""
+    WITH daily AS ({_sql_events_daily_cents("date_trunc('day', ts)")}
     ), paired AS (
       SELECT a.event_type AS type_a, b.event_type AS type_b, a.d,
              a.cents AS x, b.cents AS y
@@ -3869,12 +3799,8 @@ def q_ml_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ts_page_hinkley",
-    oracle="""
-    WITH daily AS (
-      SELECT event_type, date_trunc('day', ts) AS d,
-             CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
-      FROM events GROUP BY 1, 2
+    oracle=f"""
+    WITH daily AS ({_sql_events_daily_cents("date_trunc('day', ts)")}
     ), idx AS (
       SELECT event_type, d, cents,
              CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)

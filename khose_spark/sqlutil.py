@@ -48,3 +48,8 @@ def sql_dec_round(expr: str, dec_in: int = 4, dec_out: int = 2) -> str:
 def sql_dec_sum(expr: str, dec_in: int = 4, dec_out: int = 2) -> str:
     """DuckDB twin of :func:`dec_sum`."""
     return f"CAST(round(sum(CAST({expr} AS DECIMAL(28,{dec_in}))), {dec_out}) AS DOUBLE)"
+
+
+def sql_cents(expr: str) -> str:
+    """DuckDB/Spark SQL twin of :func:`cents`."""
+    return f"CAST(CAST({expr} AS DECIMAL(18,2)) * 100 AS BIGINT)"

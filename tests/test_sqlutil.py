@@ -6,6 +6,7 @@ import ast
 import glob
 import inspect
 import os
+import re
 
 from khose_spark import sqlutil
 
@@ -55,3 +56,34 @@ def test_only_sqlutil_cents_builds_cents():
     outside = [r for r in refs if r[0] != "sqlutil.py" or r[1] not in helper]
     assert not outside, f"call sqlutil.cents instead at {outside}"
     assert len(refs) == 1, refs
+
+
+_SQL_CENTS_FORM = re.compile(
+    r"CAST\(\s*CAST\(\s*[\w.]+\s+AS\s+DECIMAL\(18,\s*2\)\s*\)"
+    r"\s*\*\s*100\s+AS\s+BIGINT\s*\)"
+)
+
+
+def test_only_sqlutil_sql_cents_writes_sql_cents():
+    """Money to integer cents in SQL text, oracle or ``F.expr``, is
+    ``sqlutil.sql_cents(expr)``. A string constant anywhere else in
+    khose_spark that spells the law out is a second home for it."""
+    pkg = os.path.dirname(os.path.abspath(sqlutil.__file__))
+    refs = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == "sqlutil.py":
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and _SQL_CENTS_FORM.search(node.value)
+            ):
+                refs.append((rel, node.lineno))
+    assert not refs, f"call sqlutil.sql_cents instead at {refs}"
+    assert sqlutil.sql_cents("value") == (
+        "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+    )
