@@ -31,7 +31,6 @@ from khose_spark.operators.llm import (
     doc_shingles,
     jaccard,
     shingle_array,
-    shingles,
     sized_pairs,
 )
 from khose_spark.registry import query

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from khose_spark.registry import query
-from khose_spark.sqlutil import dec_round, sql_cents, sql_dec_round
+from khose_spark.sqlutil import dec_round, sql_cents
 from khose_spark.tables import t
 
 

@@ -57,8 +57,6 @@ from khose_spark.operators.similarity import (
     _exact_rerank,
     _ivf_top3,
     _km_oracle,
-    _l2sq,
-    _lloyd,
     _pq_lut,
     _pq_search,
     _pq_subvectors,

@@ -7,7 +7,7 @@ the assertion of order. Tiebreakers make every ordering total.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from khose_spark.registry import query

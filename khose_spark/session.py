@@ -29,15 +29,32 @@ _RUNTIME_CONFS = {
     "spark.sql.shuffle.partitions": os.environ.get("KHOSE_SHUFFLE_PARTITIONS", "32"),
 }
 
+# Entries of Spark's JVM-wide cache of compiled generated classes
+# (static: read once per JVM, at its first compile). Spark's default of
+# 100 holds less than one pass of the board: a perfbench pass compiles
+# 108 distinct classes for the relational keys and about 190 for
+# curation, and a sweep of all 463 keys at sf0.001 compiles 5,673. At
+# 100 every warm pass evicts and recompiles what the pass before it
+# compiled: a second sweep in one JVM compiled 8,195 classes at 100 and
+# 205 at this size, for 45 MB more metaspace and 187 MB more heap after
+# GC. The cache holds only what a session compiles, so a smaller
+# working set pays less.
+_CODEGEN_CACHE_MAX_ENTRIES = 8192
+
 
 def get_spark(app_name: str = "khose-spark") -> SparkSession:
-    """Create (or get) a local SparkSession with the engine's defaults."""
+    """Create (or get) a local SparkSession with the engine's defaults.
+
+    Static confs, such as the codegen cache size, apply only when this
+    call creates the JVM's first session; ``prep_session`` cannot set
+    them on a session someone else created."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("KHOSE_MASTER", f"local[{cpus}]"))
         .config("spark.driver.memory", os.environ.get("KHOSE_DRIVER_MEMORY", "16g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.ui.enabled", "false")
     )
     for k, v in _RUNTIME_CONFS.items():
@@ -58,6 +75,10 @@ _CRITICAL_CONFS = (
 
 def prep_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable determinism/perf confs to an existing session.
+
+    Static confs are out of its reach: a driver-owned session keeps its
+    own codegen cache size (``_CODEGEN_CACHE_MAX_ENTRIES`` applies only
+    to sessions ``get_spark`` creates).
 
     After applying, read the determinism-critical keys back and warn
     loudly if the effective value diverges (e.g. a driver-provided
