@@ -33,11 +33,11 @@ _RUNTIME_CONFS = {
 # (static: read once per JVM, at its first compile). Spark's default of
 # 100 holds less than one pass of the board: a perfbench pass compiles
 # 108 distinct classes for the relational keys and about 190 for
-# curation, and a sweep of all 463 keys at sf0.001 compiles 5,673. At
-# 100 every warm pass evicts and recompiles what the pass before it
+# curation, and a sweep of all 463 keys at sf0.001 compiles about 5,700.
+# At 100 every warm pass evicts and recompiles what the pass before it
 # compiled: a second sweep in one JVM compiled 8,195 classes at 100 and
-# 205 at this size, for 45 MB more metaspace and 187 MB more heap after
-# GC. The cache holds only what a session compiles, so a smaller
+# 135-205 at this size, for 45 MB more metaspace and 187 MB more heap
+# after GC. The cache holds only what a session compiles, so a smaller
 # working set pays less.
 _CODEGEN_CACHE_MAX_ENTRIES = 8192
 
